@@ -111,6 +111,13 @@ object Bench {
           ref.get(n).exists(r => r > 0 && w > factor * r) =>
         (n, w, ref(n), w / ref(n))
     }.sortBy(-_._4)
+
+  /** `x` with `digits` decimals under `Locale.ROOT`: a comma-decimal
+    * default locale must not turn 0.5 into "0,5" in the JSON line.
+    */
+  private[graft] def num(x: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(x))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -157,7 +164,7 @@ object Bench {
     // µs resolution is far below the board's run-to-run noise. -1
     // failure markers render exactly.
     def timesJson(sel: ((String, Double, Double)) => Double): String =
-      results.map(r => s"\"" + r._1 + "\":" + f"${sel(r)}%.6f")
+      results.map(r => s"\"" + r._1 + "\":" + num(sel(r), 6))
         .mkString("{", ",", "}")
     val failed = results.collect { case (k, c, w) if c < 0 || w < 0 => "\"" + k + "\"" }
     val coldTotal = results.map(_._2).filter(_ >= 0).sum
@@ -167,8 +174,8 @@ object Bench {
       val warm = rs.map(_._3).filter(_ >= 0).sum
       val n = rs.count(_._2 >= 0)
       val per = if (n == 0) 0.0 else warm / n
-      s""""$name":{"n":$n,"cold":${f"$cold%.3f"},"warm":${f"$warm%.3f"},""" +
-        s""""warm_per_query":${f"$per%.4f"}}"""
+      s""""$name":{"n":$n,"cold":${num(cold, 3)},"warm":${num(warm, 3)},""" +
+        s""""warm_per_query":${num(per, 4)}}"""
     }
     val (life, parity) = results.partition(r => isLifecycle(r._1))
     // drift gate (see driftOutliers): warm medians vs the committed
@@ -208,8 +215,8 @@ object Bench {
         if (rerun < 0) "error"
         else if (rerun <= fac * r) "contention"
         else "regression"
-      s"""{"q":"$n","tier":"$tier","warm":${f"$w%.3f"},"ref":${f"$r%.3f"},""" +
-        s""""ratio":${f"$ratio%.2f"},"rerun":${f"$rerun%.3f"},""" +
+      s"""{"q":"$n","tier":"$tier","warm":${num(w, 3)},"ref":${num(r, 3)},""" +
+        s""""ratio":${num(ratio, 2)},"rerun":${num(rerun, 3)},""" +
         s""""verdict":"$verdict"}""" }.mkString("[", ",", "]")
     // Field order is truncation-armor (r14's round-over-round comparison
     // was lost to a capture that cut the line's tail): EVERY compact

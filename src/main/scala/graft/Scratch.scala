@@ -49,10 +49,7 @@ object Scratch {
         new org.apache.spark.scheduler.SparkListener {
           override def onJobStart(
               j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobLog.add(Option(
-              j.properties.getProperty("spark.job.description"))
-              .orElse(Option(j.properties.getProperty("callSite.short")))
-              .getOrElse("?"))
+            jobLog.add(jobName(j))
         })
     // optional stage-level work attribution (SCRATCH_STAGE_DEBUG=1):
     // summed executor run time per stage, heaviest first, after each run
@@ -77,9 +74,7 @@ object Scratch {
             // AQE stage futures inherit the execution's thread locals, so
             // the job description attributes every stage to the engine
             // call that scheduled it (guide §1.5)
-            val d = Option(j.properties.getProperty("spark.job.description"))
-              .orElse(Option(j.properties.getProperty("callSite.short")))
-              .getOrElse("?")
+            val d = jobName(j)
             j.stageIds.foreach(sid => stNm.merge(sid, d, (a, b) => b + " " + a))
           }
         })
@@ -110,6 +105,16 @@ object Scratch {
     if (args.length > 1 && args(1) == "explain") fn(spark, sfDir).explain("formatted")
     spark.stop()
   }
+
+  /** A job's description, else its call site, else "?" — `properties`
+    * is nullable per SparkListenerJobStart's contract.
+    */
+  private def jobName(
+      j: org.apache.spark.scheduler.SparkListenerJobStart): String =
+    Option(j.properties).flatMap(p =>
+      Option(p.getProperty("spark.job.description"))
+        .orElse(Option(p.getProperty("callSite.short"))))
+      .getOrElse("?")
 
   /** q_corpus_export stage breakdown. Legs are CUMULATIVE pipelines
     * (funnel ⊂ rewrite ⊂ write), so leg deltas attribute time to the

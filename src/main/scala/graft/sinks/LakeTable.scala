@@ -1,7 +1,11 @@
 package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, DateType,
   NumericType, StringType, StructType, TimestampType}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -266,16 +270,32 @@ object LakeTable {
       keys == m.keys && numBuckets == m.numBuckets
   }
 
-  /** One probe job: the distinct bucket ids `source`'s key tuples hash to
-    * under (`keys`, `numBuckets`) — the collect [[rewriteTouched]] runs
-    * when no [[TouchedHint]] is supplied, exposed so callers holding the
-    * layout can run it ONCE and share the result across the commit's
-    * read and write sides.
+  /** The distinct bucket ids `source`'s key tuples hash to under
+    * (`keys`, `numBuckets`) — the collect [[rewriteTouched]] and
+    * [[lookup]] run when no [[TouchedHint]] is supplied, exposed so
+    * callers holding the layout can run it ONCE and share the result
+    * across the commit's read and write sides. One probe job for a
+    * distributed source; NO job for a driver-resident one (see
+    * [[localRows]]): the optimizer folds the bucket hash into its
+    * `LocalRelation`, so the collect just reads the folded rows.
     */
   private[graft] def touchedBuckets(source: DataFrame, keys: Seq[String],
-      numBuckets: Int): Set[Int] =
-    source.select(bucketOf(keys, numBuckets).alias("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+      numBuckets: Int): Set[Int] = {
+    val b = source.select(bucketOf(keys, numBuckets).alias("__b"))
+    (if (localRows(b).isDefined) b else b.distinct())
+      .collect().map(_.getInt(0)).toSet
+  }
+
+  /** `df`'s rows when its optimized plan is a `LocalRelation` — they are
+    * already on the driver (a `Seq(...).toDF`, a client's point read, a
+    * projection the optimizer folded into one), so reading them schedules
+    * no job. None for every distributed plan.
+    */
+  private def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case _ => None
+    }
 
   /** NULL-safe key-membership join (semi/anti): both sides' key tuples
     * wrap in a STRUCT, whose equality treats NULL fields as equal (the
@@ -939,7 +959,6 @@ object LakeTable {
     val bloomAggs = {
       import org.apache.spark.sql.catalyst.expressions.Literal
       import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-      import org.apache.spark.sql.graftbridge.GraftSqlBridge
       m.bloomCols.map { c =>
         val agg = new BloomFilterAggregate(
           GraftSqlBridge.expression(xxhash64(col(c))),
@@ -2833,8 +2852,7 @@ object LakeTable {
       case Some(h) if h.matches(m) => h.buckets
       case _ => graft.JobLabel(spark,
           s"lake:touched ${new Path(root).getName}") {
-        source.select(bucketOf(m.keys, m.numBuckets).alias("__b"))
-          .distinct().collect().map(_.getInt(0)).toSet
+        touchedBuckets(source, m.keys, m.numBuckets)
       }
     }
     // hot side only: resolve JUST the refs covering the touched buckets —
@@ -3222,9 +3240,18 @@ object LakeTable {
 
   // ---- pruned reads ----------------------------------------------------
 
-  /** Point lookup: read ONLY the buckets the probe keys hash to (a bounded
-    * driver collect of ≤ numBuckets ints), then semi-join the probes. For
-    * k probe keys against a 100 TB table this opens ≤ k buckets' files.
+  /** Point lookup: read ONLY the buckets the probe keys hash to, then
+    * keep the rows whose key tuple is a probe's (NULL-safe: a NULL key
+    * part matches a NULL key part). For k probe keys against a 100 TB
+    * table this opens ≤ k buckets' files.
+    *
+    * A driver-resident probe (its optimized plan is a `LocalRelation`: a
+    * `Seq(...).toDF`, a client's point read) whose key types are the
+    * table's is resolved on the driver: its bucket ids fold without a
+    * job and its distinct key tuples become one `InSet` filter over the
+    * key struct, so the whole read is ONE job (the scan). Any other probe
+    * costs a bucket-id probe and a deduplicated broadcast semi-join on
+    * top of the scan.
     */
   def lookup(spark: SparkSession, root: String, probes: DataFrame,
       version: Option[Long] = None): DataFrame =
@@ -3238,17 +3265,31 @@ object LakeTable {
       probes: DataFrame, version: Option[Long],
       hint: Option[TouchedHint]): DataFrame = {
     val m = manifest(spark, root, version)
-    val p = probes.select(m.keys.map(col): _*).dropDuplicates(m.keys)
+    val keyed = probes.select(m.keys.map(col): _*)
+    // the InSet values are compared as the table's key struct, so the
+    // driver path needs the probe's key types to BE the table's
+    val schema = StructType.fromDDL(m.schemaDdl)
+    val local = localRows(keyed).filter(_ =>
+      keyed.schema.map(_.dataType) == m.keys.map(schema(_).dataType))
+    val p = if (local.isDefined) keyed else keyed.dropDuplicates(m.keys)
     val touched = hint match {
       case Some(h) if h.matches(m) => h.buckets
-      case _ => p.select(bucketOf(m.keys, m.numBuckets).alias("__b"))
-        .distinct().collect().map(_.getInt(0)).toSet
+      case _ => touchedBuckets(p, m.keys, m.numBuckets)
     }
-    keyMembershipJoin(applyDv(spark, root, m,
+    val live = applyDv(spark, root, m,
       readFiles(spark, root, m,
         filesInBuckets(spark, root, m, touched).map(_._1)),
-      m.dvFiles.filter(f => touched(f._2))),
-      p, m.keys, "left_semi", bcast = true)
+      m.dvFiles.filter(f => touched(f._2)))
+    local match {
+      case Some(rows) =>
+        // InSet on a struct compares under the interpreted ordering, whose
+        // field equality treats NULL = NULL — the struct join's semantics
+        live.filter(GraftSqlBridge.column(InSet(
+          GraftSqlBridge.expression(struct(m.keys.map(col): _*)),
+          rows.toSet)))
+      case None =>
+        keyMembershipJoin(live, p, m.keys, "left_semi", bcast = true)
+    }
   }
 
   /** Compare two sidecar-stringified stat values in the COLUMN's own
@@ -3397,7 +3438,6 @@ object LakeTable {
   private final class SidecarFileIndex(spark: SparkSession, root: String,
       m: Manifest)
       extends org.apache.spark.sql.execution.datasources.FileIndex {
-    import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.{expressions => ce}
     import org.apache.spark.sql.execution.datasources.PartitionDirectory
 

@@ -54,4 +54,14 @@ class BenchDriftSpec extends AnyFunSuite with Matchers {
       Seq(("q_big", 0.5, Bench.DriftAbsFloorSec + 0.2)), ref, 2.5)
       .map(_._1) shouldBe Seq("q_big")
   }
+
+  test("numbers render with a decimal point under a comma-decimal locale") {
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      Bench.num(0.1234564, 6) shouldBe "0.123456"
+      Bench.num(-1.0, 3) shouldBe "-1.000"
+      Bench.num(1234.5, 2) shouldBe "1234.50"
+    } finally java.util.Locale.setDefault(prev)
+  }
 }

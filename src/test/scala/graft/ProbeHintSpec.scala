@@ -36,7 +36,8 @@ class ProbeHintSpec extends SparkTestBase {
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val d = Option(j.properties.getProperty("spark.job.description"))
+        val d = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse("")
         if (d.startsWith("lake:touched")) probes.add(d)
       }
@@ -96,7 +97,8 @@ class ProbeHintSpec extends SparkTestBase {
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val d = Option(j.properties.getProperty("spark.job.description"))
+        val d = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse("")
         if (d.startsWith("lake:touched") || d == "mv:touched") probes.add(d)
       }
