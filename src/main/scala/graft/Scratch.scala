@@ -270,10 +270,10 @@ object Scratch {
     }
     leg("zorder") { LakeTable.optimizeZOrder(spark, root, Seq("l_partkey", "l_suppkey")) }
     leg("readbox") {
-      LakeTable.readBox(spark, root,
-        Seq(("l_partkey", "100", "300"), ("l_suppkey", "1", "10"))).count()
+      LakeTable.scan(spark, root).filter(col("l_partkey").between(100, 300) &&
+        col("l_suppkey").between(1, 10)).count()
     }
-    println(s"[scratch] zorder box scan ${LakeTable.lastBoxScan}")
+    println(s"[scratch] zorder box scan ${LakeTable.lastIndexScan}")
   }
 
   /** Incremental vs full OPTIMIZE ZORDER on the same state: a 64-bucket

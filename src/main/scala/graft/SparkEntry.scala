@@ -1382,7 +1382,7 @@ object SparkEntry {
     // unpruned-scan weak spot is gone. Reserve exhaustion (a delivery
     // deleting a group's k extrema) falls back to a recompute restricted
     // to those groups and pruned via the base's sidecars
-    // (LakeTable.eqPrunedPaths); LakeCdfSpec pins both the no-job and the
+    // (an InSet over LakeTable.scan); LakeCdfSpec pins both the no-job and the
     // pruned-file-count contracts. The oracle recomputes count / sum /
     // min / max from the final table content from scratch, so the check
     // proves incremental == full recompute across both paths.
@@ -1754,7 +1754,7 @@ object SparkEntry {
     // the lineitem slice is first laid out sorted on l_partkey ALONE,
     // then rewritten in Morton-interleaved (l_partkey, l_suppkey) order —
     // the Delta OPTIMIZE ZORDER maintenance pass — and a two-predicate
-    // box probe (readBox) reads through the zone-map intersection. The
+    // box filter over scan() reads through the zone-map intersection. The
     // oracle is the plain conjunctive filter on the logical content;
     // LakeTableSpec pins the physical contract (the box opens fewer
     // files than the single-sort layout needed, on BOTH columns). Eight
@@ -1782,8 +1782,9 @@ object SparkEntry {
         maxRecordsPerFile = 16384L)
       graft.sinks.LakeTable.optimizeZOrder(s, root,
         Seq("l_partkey", "l_suppkey"))
-      graft.sinks.LakeTable.readBox(s, root,
-          Seq(("l_partkey", "100", "300"), ("l_suppkey", "1", "10")))
+      graft.sinks.LakeTable.scan(s, root)
+        .filter(col("l_partkey").between(100, 300) &&
+          col("l_suppkey").between(1, 10))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           col("l_suppkey"), col("l_quantity").cast("double").alias("qty"))
         .orderBy("l_orderkey", "l_linenumber")
@@ -1826,8 +1827,9 @@ object SparkEntry {
         li.filter(col("l_orderkey") % 97 === 0)
           .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"))
       graft.sinks.LakeTable.optimizeZOrderIncremental(s, root)
-      graft.sinks.LakeTable.readBox(s, root,
-          Seq(("l_partkey", "100", "300"), ("l_suppkey", "1", "10")))
+      graft.sinks.LakeTable.scan(s, root)
+        .filter(col("l_partkey").between(100, 300) &&
+          col("l_suppkey").between(1, 10))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           col("l_suppkey"), col("l_quantity").cast("double").alias("qty"))
         .orderBy("l_orderkey", "l_linenumber")
@@ -1835,8 +1837,9 @@ object SparkEntry {
 
     // Indexing evolution (sinks/LakeTable.scala alterIndexing): a table
     // initialized WITHOUT zone maps gains statsCols after the fact — one
-    // metadata publish plus a stats pass, zero data rewritten — and the
-    // range scan immediately prunes through the fresh sidecar. The
+    // metadata publish plus a stats pass, zero data rewritten — and a
+    // range filter over scan() immediately prunes through the fresh
+    // sidecar. The
     // oracle is the plain range filter; the spec pins files-kept <
     // files-live and the stale-sidecar-never-carried rule.
     "q_lake_alter_index" -> ((s, dir) => {
@@ -1851,8 +1854,10 @@ object SparkEntry {
         maxRecordsPerFile = 4096L)
       graft.sinks.LakeTable.alterIndexing(s, root,
         statsCols = Seq("o_orderdate"))
-      graft.sinks.LakeTable.readRange(s, root, "o_orderdate",
-          "1996-01-01 00:00:00", "1996-12-31 23:59:59")
+      val d = orders.schema("o_orderdate").dataType
+      graft.sinks.LakeTable.scan(s, root)
+        .filter(col("o_orderdate").between(
+          lit("1996-01-01 00:00:00").cast(d), lit("1996-12-31 23:59:59").cast(d)))
         .select(col("o_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").alias("d"),
           round(col("o_totalprice"), 2).alias("price"))
@@ -2397,8 +2402,8 @@ object SparkEntry {
     // scan): the zone maps answer the PLANNER's pushed dataFilters instead
     // of a bespoke entry point — scan() returns a FileIndex-backed
     // relation, so this query's ordinary DataFrame date-range filter
-    // prunes files inside Catalyst exactly as readRange would have, with
-    // the oracle checking no row was lost to a wrong prune.
+    // prunes files inside Catalyst, with the oracle checking no row was
+    // lost to a wrong prune.
     "q_lake_scan_pushdown" -> ((s, dir) => {
       val root = System.getProperty("java.io.tmpdir") + "/graft_lake_scanpd"
       val fs = new org.apache.hadoop.fs.Path(root)
@@ -2466,13 +2471,12 @@ object SparkEntry {
         .orderBy("o_orderkey")
     }),
 
-    // Zone-map range scan (sinks/LakeTable.scala prunedPaths/readRange):
+    // Zone-map range scan (sinks/LakeTable.scala scan/SidecarFileIndex):
     // the table is written clustered on o_orderdate (sortCols +
     // maxRecordsPerFile roll each bucket into date-ranged files; statsCols
-    // records per-file min/max in the _stats sidecar), so the one-year 1996 range
-    // prunes most files DRIVER-side before any read. The exact predicate
-    // re-applies after the pruned scan; the oracle is the plain range
-    // filter.
+    // records per-file min/max in the segment sidecar), so the one-year
+    // 1996 range filter prunes most files at plan time, before any read.
+    // The filter itself is exact; the oracle is the plain range filter.
     "q_lake_zonemap" -> ((s, dir) => {
       val root = System.getProperty("java.io.tmpdir") + "/graft_lake_zonemap"
       val fs = new org.apache.hadoop.fs.Path(root)
@@ -2483,23 +2487,24 @@ object SparkEntry {
       graft.sinks.LakeTable.init(orders, root, Seq("o_orderkey"),
         numBuckets = 8, sortCols = Seq("o_orderdate"),
         statsCols = Seq("o_orderdate"), maxRecordsPerFile = 4096L)
-      graft.sinks.LakeTable.readRange(s, root, "o_orderdate",
-          "1996-01-01 00:00:00", "1996-12-31 23:59:59")
+      val d = orders.schema("o_orderdate").dataType
+      graft.sinks.LakeTable.scan(s, root)
+        .filter(col("o_orderdate").between(
+          lit("1996-01-01 00:00:00").cast(d), lit("1996-12-31 23:59:59").cast(d)))
         .select(col("o_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").alias("d"),
           round(col("o_totalprice"), 2).alias("price"))
         .orderBy("o_orderkey")
     }),
 
-    // Bloom-pruned equality scan (sinks/LakeTable.scala bloomCols/readEq):
+    // Bloom-pruned equality scan (sinks/LakeTable.scala bloomCols/scan):
     // the table is keyed on o_orderkey but probed on o_custkey — a non-key,
     // non-clustered column no zone map helps with (custkeys scatter across
-    // every file). Each rolled file carries an 8 KB-scale bloom in the
-    // `_bloom` sidecar; the probe tests blooms DRIVER-side and opens only
-    // the files that might contain the value — at 100 TB, a handful of
-    // files instead of the table. The exact predicate re-applies after the
-    // pruned read (bloom = superset filter), so the oracle is the plain
-    // equality scan.
+    // every file). Each rolled file carries an 8 KB-scale bloom in its
+    // segment sidecar; the scan's equality filter tests blooms DRIVER-side
+    // and opens only the files that might contain the value — at 100 TB,
+    // a handful of files instead of the table. The filter itself is exact
+    // (bloom = superset filter), so the oracle is the plain equality scan.
     "q_lake_bloom" -> ((s, dir) => {
       val root = System.getProperty("java.io.tmpdir") + "/graft_lake_bloom"
       val fs = new org.apache.hadoop.fs.Path(root)
@@ -2510,19 +2515,19 @@ object SparkEntry {
       graft.sinks.LakeTable.init(orders, root, Seq("o_orderkey"),
         numBuckets = 8, maxRecordsPerFile = 4096L,
         bloomCols = Seq("o_custkey"))
-      graft.sinks.LakeTable.readEq(s, root, "o_custkey", "37")
+      graft.sinks.LakeTable.scan(s, root).filter(col("o_custkey") === 37)
         .select(col("o_orderkey"), col("o_custkey"),
           round(col("o_totalprice"), 2).alias("price"))
         .orderBy("o_orderkey")
     }),
 
-    // Multi-value pruned equality scan (sinks/LakeTable.scala readEqAny):
-    // the r9 bounded-IN answer — the union of files that might hold ANY of
-    // the probe values, decided driver-side from BOTH sidecars (zone maps
-    // on the clustered o_orderdate, blooms on o_custkey would be the
-    // point-probe twin), exact disjunction re-applied after the pruned
-    // read. This is the retraction-recompute read path of the min/max
-    // materialized view, surfaced as its own oracle-checked contract.
+    // Multi-value pruned equality scan (sinks/LakeTable.scala scan): an
+    // IN filter keeps the union of files that might hold ANY of the probe
+    // values, decided driver-side from the sidecars (zone maps on the
+    // clustered o_orderpriority here; a bloom column would veto too). The
+    // min/max materialized view's retraction recompute reads its base the
+    // same way, so this is that read path as its own oracle-checked
+    // contract.
     "q_lake_eq_any" -> ((s, dir) => {
       val root = System.getProperty("java.io.tmpdir") + "/graft_lake_eqany"
       val fs = new org.apache.hadoop.fs.Path(root)
@@ -2533,8 +2538,8 @@ object SparkEntry {
       graft.sinks.LakeTable.init(orders, root, Seq("o_orderkey"),
         numBuckets = 8, sortCols = Seq("o_orderpriority"),
         statsCols = Seq("o_orderpriority"), maxRecordsPerFile = 4096L)
-      graft.sinks.LakeTable.readEqAny(s, root, "o_orderpriority",
-          Seq("1-URGENT", "5-LOW"))
+      graft.sinks.LakeTable.scan(s, root)
+        .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         .select(col("o_orderkey"), col("o_orderpriority"),
           round(col("o_totalprice"), 2).alias("price"))
         .orderBy("o_orderkey")

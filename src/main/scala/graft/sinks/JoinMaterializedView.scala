@@ -33,11 +33,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *   - `F_old ⋈ ΔD`: the dangerous leg — every old fact row matching a
   *     changed dim key. The changed pks are delivery-sized, so the scan
   *     routes through [[LakeTable.dynamicPrunedScan]] on the join column
-  *     at the fact's PINNED old version: zone maps ∩ blooms open only the
-  *     files that can hold those keys (a fact clustered on fk opens a
-  *     sliver), degrading to a full scan past `maxDimDeltaKeys` — never a
-  *     wrong prune. A quiet dim (the usual delivery) skips the leg
-  *     entirely.
+  *     at the fact's PINNED old version: an `InSet` over those keys on
+  *     [[LakeTable.scan]], whose zone maps ∩ blooms open only the files
+  *     that can hold them (a fact clustered on fk opens a sliver),
+  *     degrading to a full scan past `maxDimDeltaKeys` — never a wrong
+  *     prune. A quiet dim (the usual delivery) skips the leg entirely.
   *   - The signed union aggregates to ≤ touched-group rows; the view
   *     update reads only the buckets holding touched groups
   *     ([[LakeTable.lookup]] + pinned [[LakeTable.applyChanges]]).
@@ -62,12 +62,6 @@ object JoinMaterializedView {
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val SumType = "decimal(38,6)"
-
-  /** (files opened, live files) of the last dim-delta fact scan this JVM
-    * ran — None when the last refresh had no dim changes (leg skipped) or
-    * pruning wasn't possible. Test pin; not part of the public API.
-    */
-  private[graft] var lastDimLegScan: Option[(Int, Int)] = None
 
   private def writeSync(spark: SparkSession, mvRoot: String, s: Sync): Unit = {
     val fs = hfs(spark, mvRoot)
@@ -234,14 +228,13 @@ object JoinMaterializedView {
     // leg 2: F_old ⋈ ΔD — old fact rows re-attributed under the dim's
     // changes, fact files pruned by the delivery's changed pks
     val leg2: Option[DataFrame] =
-      if (dv2 == sync.dimVersion) { lastDimLegScan = None; None }
+      if (dv2 == sync.dimVersion) None
       else {
         val dd = LakeTable.changes(spark, dimRoot, sync.dimVersion, dv2)
           .withColumn("__sign", sign).drop("_change_type")
         val factOld = LakeTable.dynamicPrunedScan(spark, factRoot,
           factKeyCol, dd.select(col(dimKey)), maxDimDeltaKeys,
           Some(sync.factVersion))
-        lastDimLegScan = LakeTable.lastDfpScan
         Some(factOld.join(dd, factOld(factKeyCol) === dd(dimKey), "inner")
           .select((groupCols.map(col) :+ col("__sign")) ++
             sumCols.map(col): _*))

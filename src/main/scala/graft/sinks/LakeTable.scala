@@ -1,13 +1,13 @@
 package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Cast, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, DateType,
-  NumericType, StringType, StructType, TimestampType}
+  NumericType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Keyed lake table with copy-on-write merge — the file-level construction
@@ -58,7 +58,7 @@ object LakeTable {
     * sorted by `sortCols` within each bucket and rolled into files of at
     * most `maxRecordsPerFile` rows, and every write records per-FILE
     * min/max for `statsCols` in a `_stats/<version>.json` sidecar — the
-    * zone maps [[prunedPaths]]/[[readRange]] prune with. All three are
+    * zone maps [[scan]] prunes with. All three are
     * carried in the manifest so merges preserve the layout.
     */
   /** `dvFiles` are merge-on-read deletion vectors: key-only parquet files
@@ -68,8 +68,9 @@ object LakeTable {
     */
   /** `bloomCols` opt into per-FILE bloom filters for equality probes on
     * non-key, non-clustered columns (the Delta/Iceberg bloom-index design
-    * point): [[readEq]] tests each file's bloom driver-side and opens only
-    * the files that MIGHT contain the probe value.
+    * point): an equality or IN filter over [[scan]] tests each file's
+    * bloom driver-side and opens only the files that MIGHT contain a
+    * probe value.
     */
   /** `cdfRecord` opts the table into COMMIT-TIME change-feed recording
     * (the Delta `_change_data` design point): every copy-on-write commit
@@ -1491,218 +1492,6 @@ object LakeTable {
     }
   }
 
-  /** The live files whose bloom MIGHT contain `value` for `colName` —
-    * files without a bloom entry are conservatively kept (a LEGACY
-    * inline-list table keeps ALL files until its first copy-on-write
-    * commit builds the segment plane — see [[eqPrunedPaths]]).
-    * Driver-side: no file is opened to decide. The probe hashes exactly
-    * as the build did (`xxhash64` of the value cast to the column's
-    * stored type).
-    */
-  def bloomPrunedPaths(spark: SparkSession, root: String, colName: String,
-      value: String, version: Option[Long] = None): Seq[String] = {
-    val m = manifest(spark, root, version)
-    require(m.bloomCols.contains(colName),
-      s"$colName is not a bloom column (have ${m.bloomCols})")
-    // the single-value case of [[eqPrunedPaths]] (which also folds in the
-    // zone maps when the column declares them, and dismisses whole refs
-    // through the manifest summaries) — one pruning kernel, not two
-    eqPrunedPaths(spark, root, colName, Seq(value), version)
-      .getOrElse(m.files.map(_._1))
-  }
-
-  /** Equality scan through the bloom sidecar: open only the files that
-    * might contain `value`, then apply the exact predicate (the bloom is
-    * a superset filter — a false positive costs a file read, never a
-    * wrong row). The point-lookup answer for selective non-key columns a
-    * table is NOT clustered on.
-    */
-  def readEq(spark: SparkSession, root: String, colName: String,
-      value: String, version: Option[Long] = None): DataFrame = {
-    val m = manifest(spark, root, version)
-    val df = applyDv(spark, root, m,
-      readFiles(spark, root, m,
-        bloomPrunedPaths(spark, root, colName, value, version)),
-      m.dvFiles)
-    df.filter(col(colName) === lit(value).cast(df.schema(colName).dataType))
-  }
-
-  /** The live files that might contain ANY of `values` for `colName`,
-    * decided DRIVER-side from whichever sidecars the manifest declares:
-    * zone maps keep a file when some value lies inside its `[min,max]`;
-    * blooms keep a file when some value might be a member; a column in
-    * both sidecars prunes by the intersection. Returns None when neither
-    * sidecar covers the column — callers fall back to a full scan rather
-    * than a silently-unpruned one. `values` is expected bounded (callers
-    * cap it); each value is the `CAST(x AS STRING)` form, matching how
-    * [[computeStats]] stringifies and how [[publishBlooms]] hashed.
-    *
-    * LEGACY tables (pre-segment inline file list): the declared sidecar
-    * columns exist but their payloads have no segment to live in, so the
-    * answer is a conservative KEEP-ALL (`Some(all live files)`, exact but
-    * unpruned — [[lastPruneRefs]] reads None, the no-prune signal) until
-    * the table's first copy-on-write commit measures its files into the
-    * segment plane and pruning resumes. Same contract as [[prunedPaths]].
-    */
-  def eqPrunedPaths(spark: SparkSession, root: String, colName: String,
-      values: Seq[String], version: Option[Long] = None): Option[Seq[String]] = {
-    val m = manifest(spark, root, version)
-    val si = m.statsCols.indexOf(colName)
-    val bi = m.bloomCols.indexOf(colName)
-    if (si < 0 && bi < 0) return None
-    if (values.isEmpty) return Some(Nil)
-    val colType = StructType.fromDDL(m.schemaDdl)(colName).dataType
-    // hash exactly as the bloom build did: xxhash64 of the value cast to
-    // the column's stored type — evaluated DRIVER-side with the same
-    // catalyst expressions (Cast under the session timezone, then
-    // XxHash64). The values are already a bounded driver-local list, so
-    // scheduling a Spark job to hash ≤ 10⁴ of them paid a scheduler
-    // round-trip per prune call for microseconds of CPU. The bloom veto
-    // has no sorted structure to search, so a probe costs O(V) per entry
-    // that survives the zone check — above this cap the veto is SKIPPED
-    // (blooms are an optional tightener; skipping keeps a superset,
-    // never drops a file) so a dense probe set can't turn the
-    // driver-side prune into an O(V·E) stall. Zone checks have no such
-    // cap: they cost O(log V) per entry whatever V is.
-    val bloomProbeCap = 10000
-    val hs: Seq[Long] =
-      if (bi < 0 || values.size > bloomProbeCap) Nil
-      else {
-        import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
-        val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
-        values.map { v =>
-          val litV =
-            if (v == null) Literal(null, org.apache.spark.sql.types.StringType)
-            else Literal(org.apache.spark.unsafe.types.UTF8String.fromString(v),
-              org.apache.spark.sql.types.StringType)
-          XxHash64(Seq(Cast(litV, colType, tz)), 42L) // xxhash64()'s seed
-            .eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-            .asInstanceOf[Long]
-        }
-      }
-    // "any value inside [mn, mx]?" — answered per entry/ref by BINARY
-    // SEARCH over the probe set sorted ONCE (first value ≥ mn, hit iff
-    // it is ≤ mx): O(V log V) setup + O(log V) per zone check, instead
-    // of the O(V) statCmp re-parse per entry the naive exists pays —
-    // the difference between a 10⁵-key dim delta pruning a 10⁵-file
-    // fact in milliseconds and an O(V·E) driver stall. Soundness needs
-    // a total order CONSISTENT with statCmp: doubles give exactly
-    // statCmp's numeric compare (beyond-double ties collapse to equal
-    // on both paths — conservative keeps, never a wrong dismissal);
-    // everything else is statCmp's lexicographic branch verbatim. A
-    // numeric column with an unparsable stringified value (defensive —
-    // CAST(x AS STRING) output always re-parses) keeps the exists scan,
-    // because statCmp's mixed-parse fallback is not a consistent order
-    // to sort by.
-    val rangeHit: (String, String) => Boolean = {
-      def existsScan(mn: String, mx: String): Boolean =
-        values.exists(v => statCmp(colType, v, mn) >= 0 &&
-          statCmp(colType, v, mx) <= 0)
-      colType match {
-        case _: NumericType =>
-          val parsed = values.map(_.toDoubleOption)
-          if (parsed.exists(_.isEmpty)) existsScan
-          else {
-            val sorted = parsed.flatten.toArray
-            java.util.Arrays.sort(sorted) // NaN sorts greatest, like compare
-            (mn, mx) => (mn.toDoubleOption, mx.toDoubleOption) match {
-              case (Some(lo), Some(hi)) =>
-                var a = 0; var b = sorted.length
-                while (a < b) { // first index with sorted(i) >= lo
-                  val mid = (a + b) >>> 1
-                  if (java.lang.Double.compare(sorted(mid), lo) < 0) a = mid + 1
-                  else b = mid
-                }
-                a < sorted.length &&
-                  java.lang.Double.compare(sorted(a), hi) <= 0
-              case _ => existsScan(mn, mx)
-            }
-          }
-        case _ =>
-          val sorted = values.toArray
-          java.util.Arrays.sort(sorted, Ordering.String)
-          (mn, mx) => {
-            var a = 0; var b = sorted.length
-            while (a < b) { // first index with sorted(i) >= mn
-              val mid = (a + b) >>> 1
-              if (sorted(mid).compareTo(mn) < 0) a = mid + 1
-              else b = mid
-            }
-            a < sorted.length && sorted(a).compareTo(mx) <= 0
-          }
-      }
-    }
-    def entryKeep(e: SegEntry): Boolean = {
-      val zoneKeep = si < 0 || e.rows < 0 ||
-        ((e.mins.lift(si).flatten, e.maxs.lift(si).flatten) match {
-          case (Some(mn), Some(mx)) => rangeHit(mn, mx)
-          case _ => true
-        })
-      def bloomKeep = bi < 0 || hs.isEmpty || e.rows < 0 ||
-        (e.blooms.lift(bi).flatten match {
-          case Some(enc) =>
-            val bf = org.apache.spark.util.sketch.BloomFilter
-              .readFrom(new java.io.ByteArrayInputStream(b64(enc)))
-            hs.exists(bf.mightContainLong)
-          case None => true
-        })
-      zoneKeep && bloomKeep
-    }
-    if (m.segments.isEmpty) {
-      // legacy inline list: no sidecar payloads — conservative keep-all,
-      // signalled the same way [[prunedPaths]] signals it
-      lastPruneRefs = None
-      Some(m.files.map(_._1))
-    } else {
-      var resolved = 0; var dismissed = 0
-      val kept = m.segments.flatMap { ref =>
-        // manifest-level dismissal through the ref's zone summary (a
-        // conservative superset — a summary miss proves an entry miss);
-        // blooms are per-entry payloads, so they only veto after resolve
-        val summaryHit = si < 0 ||
-          ((ref.mins.lift(si).flatten, ref.maxs.lift(si).flatten) match {
-            case (Some(mn), Some(mx)) => rangeHit(mn, mx)
-            case _ => true
-          })
-        if (!summaryHit) { dismissed += 1; Nil }
-        else {
-          resolved += 1
-          val seg = loadSegment(spark, root, ref.path)
-          if (seg.statsCols != m.statsCols || seg.bloomCols != m.bloomCols)
-            liveEntries(ref, seg).map(_.path) // defensive keep-all
-          else liveEntries(ref, seg).filter(entryKeep).map(_.path)
-        }
-      }
-      lastPruneRefs = Some((resolved, dismissed))
-      Some(kept)
-    }
-  }
-
-  /** Multi-value equality scan through [[eqPrunedPaths]]: open only the
-    * files that might hold one of `values`, then apply the exact
-    * disjunction (sidecars are superset filters — a false positive costs
-    * a file read, never a wrong row). Falls back to a full scan when the
-    * column has no sidecar. The retraction-recompute read for
-    * [[MaterializedView]] min/max views, and the general bounded-IN
-    * answer for selective non-key columns.
-    */
-  def readEqAny(spark: SparkSession, root: String, colName: String,
-      values: Seq[String], version: Option[Long] = None): DataFrame = {
-    val m = manifest(spark, root, version)
-    val paths = eqPrunedPaths(spark, root, colName, values, version)
-      .getOrElse(m.files.map(_._1))
-    val df = applyDv(spark, root, m, readFiles(spark, root, m, paths),
-      m.dvFiles)
-    val t = df.schema(colName).dataType
-    if (values.isEmpty) df.filter(lit(false))
-    // a FLAT In (→ InSet after optimization), not a reduce(_ || _) Or
-    // chain: a dense value set (10⁴+) built as a binary tree of Ors
-    // overflows the converter's recursion and defeats the In/InSet
-    // fast path; each literal still casts to the column's stored type,
-    // so comparison semantics are unchanged
-    else df.filter(col(colName).isin(values.map(v => lit(v).cast(t)): _*))
-  }
-
   /** Create the table at `root` (version 0) from `df`, keyed and bucketed.
     * Keys must uniquely identify rows for merge semantics to be sane;
     * incoming duplicates are resolved by [[Merge.upsert]]'s tiebreak.
@@ -2387,38 +2176,6 @@ object LakeTable {
     }
   }
 
-  /** (files opened, live files) of the last [[readBox]] this JVM ran.
-    * Test pin; not part of the public API. */
-  private[graft] var lastBoxScan: Option[(Int, Int)] = None
-
-  /** Multi-predicate range scan: open only the files whose zone maps
-    * overlap EVERY predicate's `[lo, hi]` (set intersection of the
-    * per-column prunes, decided driver-side), then apply the exact
-    * conjunction. Under a [[optimizeZOrder]] layout the intersection
-    * prunes multiplicatively — each file is a small hyper-rectangle —
-    * where a single-sort layout bounds only its leading column. Values
-    * are `CAST(x AS STRING)` forms, as everywhere in the sidecar API.
-    */
-  def readBox(spark: SparkSession, root: String,
-      preds: Seq[(String, String, String)],
-      version: Option[Long] = None): DataFrame = {
-    require(preds.nonEmpty, "readBox needs at least one (col, lo, hi)")
-    val m = manifest(spark, root, version)
-    val keep = preds.map { case (c, lo, hi) =>
-      prunedPaths(spark, root, c, lo, hi, version).toSet }
-      .reduce(_ intersect _)
-    // the intersection IS the scan list — re-filtering m.files would
-    // resolve every segment and undo the per-column summary dismissal
-    lastBoxScan = Some((keep.size, m.fileCount))
-    val df = applyDv(spark, root, m,
-      readFiles(spark, root, m, keep.toSeq.sorted),
-      m.dvFiles)
-    preds.foldLeft(df) { case (d, (c, lo, hi)) =>
-      val t = d.schema(c).dataType
-      d.filter(col(c) >= lit(lo).cast(t) && col(c) <= lit(hi).cast(t))
-    }
-  }
-
   /** Declare (or change) the stats/bloom indexing of an EXISTING table
     * without rewriting data: publishes the next version with the same
     * file list and the new column sets, then measures both sidecars from
@@ -2426,7 +2183,7 @@ object LakeTable {
     * a sidecar written under a different column list is never carried —
     * a stale carry would misalign zones and mis-prune (wrong rows, not
     * just wrong scan width). One metadata publish plus one stats pass
-    * over the data: the onboarding path for [[readRange]] /
+    * over the data: the onboarding path for pruned [[scan]] filters /
     * [[dynamicPrunedScan]] / [[fastMinMax]] on a table initialized
     * without zone maps, at the cost of a scan, not a rewrite.
     */
@@ -2619,28 +2376,22 @@ object LakeTable {
     }
   }
 
-  /** (files opened, live files) of the last [[dynamicPrunedScan]] this
-    * JVM ran — None when the key bound forced the full-scan fallback.
-    * Test pin for the pruning contract; not part of the public API.
-    */
-  private[graft] var lastDfpScan: Option[(Int, Int)] = None
-
   /** Dynamic file pruning for a dim ⋈ fact join on a lake fact table —
     * the runtime analog of Spark's dynamic partition pruning, decided
     * against this format's own sidecars: collect the (already filtered)
     * build side's distinct join keys driver-side, bounded by `maxKeys`,
-    * and open only the fact files whose zone map / bloom might hold one
-    * of them ([[eqPrunedPaths]]). Returns a SUPERSET scan — the rows of
-    * the surviving files, dv-applied — and the caller's join supplies
-    * the exact predicate, exactly as a pruned scan under a join does in
-    * any table format. Past the key bound (or with no sidecar on
-    * `factCol`) it degrades to the full scan, never a wrong prune: at
-    * 100 TB, a dim filtered to thousands of keys skips every fact file
-    * outside those keys' zones without a shuffle or a data-file read to
-    * decide. The bound sizes the driver collect only (100k keys ≈ a few
-    * MB): the zone check is a binary search over the sorted probe set
-    * (O(log V) per file — [[eqPrunedPaths]]), so a large SELECTIVE key
-    * set still prunes; the bloom veto self-caps above 10k values.
+    * and return `scan(version)` filtered by ONE `InSet` over them, so
+    * [[SidecarFileIndex]] opens only the fact files whose zone map /
+    * bloom might hold a key and the rows returned are exactly those
+    * whose `factCol` is a (non-NULL) build key. The caller's join still
+    * supplies the join predicate. Past the key bound it degrades to the
+    * unfiltered scan, never a wrong prune: at 100 TB, a dim filtered to
+    * thousands of keys skips every fact file outside those keys' zones
+    * without a shuffle or a data-file read to decide. The bound sizes
+    * the driver collect only (100k keys ≈ a few MB): the index renders
+    * the set once per listing and answers each zone by binary search,
+    * so a large SELECTIVE key set still prunes; its bloom veto self-caps
+    * above 10k values.
     */
   def dynamicPrunedScan(spark: SparkSession, root: String, factCol: String,
       dimKeys: DataFrame, maxKeys: Int = 100000,
@@ -2649,20 +2400,22 @@ object LakeTable {
       s"dimKeys must be a single key column, got ${dimKeys.columns.toSeq}")
     val m = manifest(spark, root, version)
     val colType = StructType.fromDDL(m.schemaDdl)(factCol).dataType
-    val keys = dimKeys
-      .select(col(dimKeys.columns.head).cast(colType).cast("string"))
-      .na.drop().distinct().limit(maxKeys + 1)
-      .collect().map(_.getString(0)).toSeq
-    val paths =
-      if (keys.size > maxKeys) None
-      else eqPrunedPaths(spark, root, factCol, keys, version)
-    // fileCount sums the refs (O(refs)): the pin's denominator must not
-    // force full live-list resolution — that would parse every segment
-    // on the pruned fast path, the exact cost the prune exists to skip
-    lastDfpScan = paths.map(p => (p.size, m.fileCount))
-    applyDv(spark, root, m,
-      readFiles(spark, root, m, paths.getOrElse(m.files.map(_._1))),
-      m.dvFiles)
+    val keys = dimKeys.select(col(dimKeys.columns.head).cast(colType))
+      .na.drop().distinct().limit(maxKeys + 1).collect().map(_.get(0))
+    val fact = scan(spark, root, Some(m.version))
+    if (keys.length > maxKeys) fact
+    else fact.filter(inSet(factCol, colType, keys.toSeq))
+  }
+
+  /** `c IN values` as ONE Catalyst `InSet` over `values` (external Scala
+    * values of type `dt`, converted once) — a flat set the scan index
+    * renders once per listing, where `isin` builds one literal child per
+    * value for the analyzer and optimizer to walk.
+    */
+  private[graft] def inSet(c: String, dt: DataType, values: Seq[Any]): Column = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    GraftSqlBridge.column(InSet(GraftSqlBridge.expression(col(c)),
+      values.map(toCatalyst).toSet))
   }
 
   /** Timestamp time travel: the newest version whose manifest was
@@ -3245,9 +2998,10 @@ object LakeTable {
     * part matches a NULL key part). For k probe keys against a 100 TB
     * table this opens ≤ k buckets' files.
     *
+    * Probe keys are up-cast to the table's key types (`int` on a
+    * `bigint` key); a probe key that does not up-cast is refused.
     * A driver-resident probe (its optimized plan is a `LocalRelation`: a
-    * `Seq(...).toDF`, a client's point read) whose key types are the
-    * table's is resolved on the driver: its bucket ids fold without a
+    * `Seq(...).toDF`, a client's point read) is resolved on the driver: its bucket ids fold without a
     * job and its distinct key tuples become one `InSet` filter over the
     * key struct, so the whole read is ONE job (the scan). Any other probe
     * costs a bucket-id probe and a deduplicated broadcast semi-join on
@@ -3265,12 +3019,19 @@ object LakeTable {
       probes: DataFrame, version: Option[Long],
       hint: Option[TouchedHint]): DataFrame = {
     val m = manifest(spark, root, version)
-    val keyed = probes.select(m.keys.map(col): _*)
-    // the InSet values are compared as the table's key struct, so the
-    // driver path needs the probe's key types to BE the table's
+    // bucket ids hash the key VALUES under their types, and the InSet
+    // compares the table's key struct: every probe key takes the table's
+    // key type first (an int probe on a bigint key up-casts losslessly;
+    // anything narrowing is refused rather than silently misrouted)
     val schema = StructType.fromDDL(m.schemaDdl)
-    val local = localRows(keyed).filter(_ =>
-      keyed.schema.map(_.dataType) == m.keys.map(schema(_).dataType))
+    val raw = probes.select(m.keys.map(col): _*)
+    val keyed = raw.select(m.keys.zip(raw.schema).map { case (k, f) =>
+      val to = schema(k).dataType
+      require(Cast.canUpCast(f.dataType, to),
+        s"lookup probe key $k is ${f.dataType.sql}, the table's is ${to.sql}")
+      if (f.dataType == to) col(k) else col(k).cast(to).alias(k)
+    }: _*)
+    val local = localRows(keyed)
     val p = if (local.isDefined) keyed else keyed.dropDuplicates(m.keys)
     val touched = hint match {
       case Some(h) if h.matches(m) => h.buckets
@@ -3303,7 +3064,7 @@ object LakeTable {
     * wrong for STRING columns holding digit strings: a file with values
     * {"2","10"} records min="10"/max="2" under STRING ordering, and a
     * numeric 10>2 read of that zone dropped files that contain the probe
-    * — wrong rows out of [[readEqAny]], not just scan width.
+    * — wrong rows out of a pruned scan, not just scan width.
     */
   private def statCmp(dt: DataType, a: String, b: String): Int = dt match {
     case _: NumericType =>
@@ -3314,78 +3075,6 @@ object LakeTable {
     case _ => a.compareTo(b)
   }
 
-  /** (refs resolved, refs dismissed whole) of the last ref-summary-aware
-    * prune ([[prunedPaths]]/[[eqPrunedPaths]]) this JVM ran — spec pin;
-    * not part of the public API.
-    */
-  private[graft] var lastPruneRefs: Option[(Int, Int)] = None
-
-  /** The live files whose `[min,max]` zone for `colName` overlaps
-    * `[lo, hi]` — files without a stats entry (or an all-NULL zone) are
-    * conservatively kept. Driver-side pruning over the sidecar: no file
-    * is opened to decide — and whole refs whose MANIFEST-resident zone
-    * summary misses the range are dismissed without their segment file
-    * ever being parsed (summaries are conservative supersets after
-    * shrink, so a summary miss proves an entry miss), the same
-    * manifest-level skip the planner's [[scan]] index applies.
-    */
-  def prunedPaths(spark: SparkSession, root: String, colName: String,
-      lo: String, hi: String, version: Option[Long] = None): Seq[String] = {
-    val m = manifest(spark, root, version)
-    val i = m.statsCols.indexOf(colName)
-    require(i >= 0, s"$colName is not a stats column (have ${m.statsCols})")
-    val colType = StructType.fromDDL(m.schemaDdl)(colName).dataType
-    def entryKeep(e: SegEntry): Boolean =
-      if (e.rows < 0) true
-      else (e.mins.lift(i).flatten, e.maxs.lift(i).flatten) match {
-        case (Some(mn), Some(mx)) =>
-          statCmp(colType, mx, lo) >= 0 && statCmp(colType, mn, hi) <= 0
-        case _ => true
-      }
-    if (m.segments.isEmpty) {
-      // legacy inline list: no sidecar — conservative keep-all
-      lastPruneRefs = None
-      m.files.map(_._1)
-    } else {
-      var resolved = 0; var dismissed = 0
-      val kept = m.segments.flatMap { ref =>
-        val summaryHit = (ref.mins.lift(i).flatten,
-            ref.maxs.lift(i).flatten) match {
-          case (Some(mn), Some(mx)) =>
-            statCmp(colType, mx, lo) >= 0 && statCmp(colType, mn, hi) <= 0
-          case _ => true // no summary never dismisses
-        }
-        if (!summaryHit) { dismissed += 1; Nil }
-        else {
-          resolved += 1
-          val seg = loadSegment(spark, root, ref.path)
-          // defensive: a cols-mismatched segment can't serve payloads —
-          // conservative keep (unreachable at a published head)
-          if (seg.statsCols != m.statsCols)
-            liveEntries(ref, seg).map(_.path)
-          else liveEntries(ref, seg).filter(entryKeep).map(_.path)
-        }
-      }
-      lastPruneRefs = Some((resolved, dismissed))
-      kept
-    }
-  }
-
-  /** Range scan through the zone maps: read only the overlapping files,
-    * then apply the exact predicate (the zone map is a superset filter).
-    * With `sortCols` clustering on `colName`, a narrow range touches a
-    * small fraction of each bucket's rolled files.
-    */
-  def readRange(spark: SparkSession, root: String, colName: String,
-      lo: String, hi: String, version: Option[Long] = None): DataFrame = {
-    val m = manifest(spark, root, version)
-    val df = applyDv(spark, root, m,
-      readFiles(spark, root, m, prunedPaths(spark, root, colName, lo, hi, version)),
-      m.dvFiles)
-    val t = df.schema(colName).dataType
-    df.filter(col(colName) >= lit(lo).cast(t) && col(colName) <= lit(hi).cast(t))
-  }
-
   // ---- plan-time sidecar pruning: the FileIndex-backed declarative scan
 
   /** (files listed, live files) of the last [[SidecarFileIndex]] listing
@@ -3394,20 +3083,85 @@ object LakeTable {
     */
   private[graft] var lastIndexScan: Option[(Int, Int)] = None
 
+  /** (segments kept, total segments) of the last listing with data
+    * filters — spec pin for the manifest-level (ref summary) dismissal;
+    * not part of the public API.
+    */
+  private[graft] var lastIndexSegments: Option[(Int, Int)] = None
+
+  /** How far a TIMESTAMP literal is widened before it meets a zone. A
+    * zone holds its values rendered under the session zone of the
+    * COMMIT; the reader's zone may differ. Two zones' wall clocks differ
+    * by at most 26 h (UTC+14 against UTC-12), plus an hour of DST, so a
+    * 2-day widening keeps every file that can hold the value: a zone
+    * change between commit and read may keep an extra file, never drop
+    * a row.
+    */
+  private val TimestampSlackMicros = 2L * 24 * 3600 * 1000 * 1000
+
+  /** Above this many values an equality probe skips the bloom veto: a
+    * bloom has no sorted structure to search, so the veto costs O(V) per
+    * file that survives the zones. Skipping keeps a superset, never
+    * drops a file; zone checks have no cap (O(log V) per zone).
+    */
+  private val BloomProbeCap = 10000
+
+  /** "Does any of these closed intervals meet `[mn, mx]`?" for one
+    * column's stat ordering ([[statCmp]]), with the intervals sorted
+    * ONCE: a binary search finds the last interval starting at or below
+    * `mx`, and a prefix maximum of the interval ends answers whether any
+    * of those ends at or above `mn`. O(log V) per zone, where an exists
+    * scan costs O(V): the difference between a 10⁵-key probe pruning a
+    * 10⁵-file table in milliseconds and an O(V·E) driver stall. Numeric
+    * columns search the parsed doubles (statCmp's numeric compare); a
+    * bound that does not parse keeps. Every other type searches the
+    * strings.
+    */
+  private def intervalProbe(dt: DataType,
+      ivs: Seq[(String, String)]): (String, String) => Boolean = {
+    def sorted[K: scala.reflect.ClassTag](xs: Seq[(K, K)],
+        key: String => Option[K])(implicit ord: Ordering[K]) = {
+      val s = xs.sortBy(_._1).toArray
+      val los = s.map(_._1)
+      val maxHis = s.map(_._2)
+      for (i <- 1 until maxHis.length)
+        maxHis(i) = ord.max(maxHis(i), maxHis(i - 1))
+      (mn: String, mx: String) => (key(mn), key(mx)) match {
+        case (Some(a), Some(b)) =>
+          var lo = 0; var hi = los.length
+          while (lo < hi) { // first index whose interval starts above b
+            val mid = (lo + hi) >>> 1
+            if (ord.lteq(los(mid), b)) lo = mid + 1 else hi = mid
+          }
+          lo > 0 && ord.gteq(maxHis(lo - 1), a)
+        case _ => true
+      }
+    }
+    dt match {
+      case _: NumericType =>
+        val parsed = ivs.map { case (a, b) => (a.toDoubleOption, b.toDoubleOption) }
+        if (parsed.exists { case (a, b) => a.isEmpty || b.isEmpty }) (_, _) => true
+        else sorted(parsed.map { case (a, b) => (a.get, b.get) },
+          _.toDoubleOption)(implicitly, Ordering.Double.TotalOrdering)
+      case _ => sorted(ivs, Some(_))
+    }
+  }
+
   /** A snapshot's live files as a Catalyst
     * [[org.apache.spark.sql.execution.datasources.FileIndex]] whose
     * `listFiles` answers the planner's `dataFilters` from the zone-map and
     * bloom sidecars — the Delta `TahoeFileIndex` design point, original
-    * implementation. [[readEq]]/[[readRange]]/[[readBox]] prune for
-    * callers who name the probe explicitly; this moves the SAME
-    * driver-side decisions behind the planner's own pushdown, so ANY
-    * predicate — DataFrame `.filter`, SQL text over a temp view, a
-    * conjunct Catalyst pushed through a join — skips files without the
-    * caller knowing the sidecars exist. Everything stays metadata-only:
-    * the verdicts read the in-memory snapshot this index captured at
-    * construction; no data file is opened to decide, and no Spark job
-    * runs at plan time (bloom probes hash the literal with the same
-    * `xxhash64` expression the build side used, evaluated driver-side).
+    * implementation, and the ONLY code that decides sidecar pruning: ANY
+    * predicate over [[scan]] — DataFrame `.filter`, SQL text over a temp
+    * view, a conjunct Catalyst pushed through a join, the `InSet` of
+    * [[dynamicPrunedScan]] — skips files without the caller knowing the
+    * sidecars exist. Everything stays metadata-only: the verdicts read
+    * the in-memory snapshot this index captured at construction; no
+    * data file is opened to decide, and no Spark job runs at plan time
+    * (bloom probes hash the literal with the same `xxhash64` expression
+    * the build side used, evaluated driver-side). Each pushed conjunct is
+    * compiled ONCE per listing: its literals are rendered, sorted and
+    * hashed once, then judged against every segment summary and file.
     *
     * Exactness discipline (a wrong prune loses rows; a kept file only
     * costs a read):
@@ -3417,24 +3171,19 @@ object LakeTable {
     *     that differ beyond double precision, so `max > v` as a keep
     *     test could wrongly drop a file where `max = v` under collapse;
     *     `max >= v` can only over-keep.
-    *   - Literals render through `CAST(x AS STRING)` (same session zone)
-    *     — exactly [[computeStats]]' rendering. TIMESTAMP literals don't
-    *     prune (session-tz rendering has no stable string form — the
-    *     same exemption [[axesDrifted]] documents); numeric, string,
-    *     date and boolean do.
+    *   - Literals render through `CAST(x AS STRING)` (session zone) —
+    *     exactly [[measureEntries]]' rendering. TIMESTAMP literals are
+    *     widened by [[TimestampSlackMicros]] on each side first, because
+    *     the commit may have rendered under another zone.
     *   - An all-NULL zone (`min`/`max` absent with the entry present)
     *     admits no comparison or `IS NOT NULL` match — those predicates
     *     prune the file EXACTLY, not conservatively.
+    *   - A segment measured under other `statsCols`/`bloomCols` than the
+    *     manifest's has misaligned payloads: its files keep.
     *   - Anything unrecognized — casts over the column, UDFs, columns
     *     without sidecars, `IS NULL` (zones carry no null counts) —
     *     keeps the file.
     */
-  /** (segments kept, total segments) of the last listing with data
-    * filters — spec pin for the manifest-level (ref summary) dismissal;
-    * not part of the public API.
-    */
-  private[graft] var lastIndexSegments: Option[(Int, Int)] = None
-
   private final class SidecarFileIndex(spark: SparkSession, root: String,
       m: Manifest)
       extends org.apache.spark.sql.execution.datasources.FileIndex {
@@ -3444,14 +3193,15 @@ object LakeTable {
     private val colTypes: Map[String, DataType] = StructType
       .fromDDL(m.schemaDdl).fields.map(f => f.name -> f.dataType).toMap
     private val conf = spark.sparkContext.hadoopConfiguration
+    private val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
 
     /** One prunable unit: a segment's ref — zone summary, file count and
       * byte total straight from the manifest — plus its lazily-loaded
       * live entries. A whole part a predicate dismisses through the
-      * summary never has its segment file parsed ([[segMayKeep]]); a
-      * legacy manifest (inline file list) synthesizes one summary-less
-      * part whose entries carry no payloads — conservative keep-all with
-      * sizes from a directory listing.
+      * summary never has its segment file parsed; a legacy manifest
+      * (inline file list) synthesizes one summary-less part whose
+      * entries carry no payloads — conservative keep-all with sizes from
+      * a directory listing.
       */
     private final class Part(val summaryMins: Seq[Option[String]],
         val summaryMaxs: Seq[Option[String]], val count: Int,
@@ -3462,8 +3212,13 @@ object LakeTable {
     private val parts: Seq[Part] =
       if (m.segments.nonEmpty || m.filesEager == null)
         m.segments.map { r =>
-          new Part(r.mins, r.maxs, r.files, r.bytes,
-            () => liveEntries(r, loadSegment(spark, root, r.path)))
+          new Part(r.mins, r.maxs, r.files, r.bytes, () => {
+            val seg = loadSegment(spark, root, r.path)
+            val es = liveEntries(r, seg)
+            if (seg.statsCols == m.statsCols && seg.bloomCols == m.bloomCols) es
+            else es.map(_.copy(mins = IndexedSeq.empty,
+              maxs = IndexedSeq.empty, blooms = IndexedSeq.empty))
+          })
         }
       else Seq(new Part(Nil, Nil, m.filesEager.size, -1L, () => {
         val none = IndexedSeq.empty[Option[String]]
@@ -3508,215 +3263,162 @@ object LakeTable {
             .readFrom(new java.io.ByteArrayInputStream(b64(enc)))))
     }
 
-    /** `CAST(lit AS STRING)` under the session zone — [[measureEntries]]'
-      * rendering; None = this literal can't be compared against zones.
+    /** One pushed conjunct, compiled: `part` judges a whole segment from
+      * its manifest zone summary (false = dismissed without its segment
+      * file ever being parsed — the Iceberg manifest-list skip), `file`
+      * judges one live entry. false = provably no row can match.
       */
-    private def render(l: ce.Literal): Option[String] =
-      if (l.value == null) None
-      else l.dataType match {
-        case TimestampType => None
-        case _: NumericType | StringType | DateType | BooleanType =>
-          Option(ce.Cast(l, StringType,
-              Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(null))
-            .map(_.toString)
+    private final class Verdict(val part: Part => Boolean,
+        val file: SegEntry => Boolean) {
+      def &&(o: Verdict) =
+        new Verdict(p => part(p) && o.part(p), e => file(e) && o.file(e))
+      def ||(o: Verdict) =
+        new Verdict(p => part(p) || o.part(p), e => file(e) || o.file(e))
+    }
+    private val Keep = new Verdict(_ => true, _ => true)
+    private val Never = new Verdict(_ => false, _ => false)
+
+    /** The `[lo, hi]` range of `CAST(l AS STRING)` renderings the commit
+      * may have stored for literal `l`: one string for numeric, string,
+      * date, TIMESTAMP_NTZ and boolean literals (no zone enters their
+      * rendering), the [[TimestampSlackMicros]]-widened rendering for
+      * TIMESTAMP ones. None = no zone verdict.
+      */
+    private def bounds(l: ce.Literal): Option[(String, String)] = {
+      def str(x: ce.Literal) =
+        Option(ce.Cast(x, StringType, tz).eval(null)).map(_.toString)
+      (l.dataType, l.value) match {
+        case (_, null) => None
+        case (TimestampType, t: Long) if t > Long.MinValue +
+            TimestampSlackMicros && t < Long.MaxValue - TimestampSlackMicros =>
+          for {
+            lo <- str(ce.Literal(t - TimestampSlackMicros, TimestampType))
+            hi <- str(ce.Literal(t + TimestampSlackMicros, TimestampType))
+          } yield (lo, hi)
+        case (_: NumericType | StringType | DateType | TimestampNTZType |
+            BooleanType, _) => str(l).map(v => (v, v))
         case _ => None
       }
+    }
 
-    /** The file's zone for `name`: None = no verdict possible (column not
-      * in statsCols, or the entry was never measured); Some((None, None))
-      * = the column is all-NULL in the file (min/max of zero non-null
-      * values).
+    /** A verdict answered by `name`'s zone alone, `hit(min, max)`, at
+      * both levels. A missing summary or an unmeasured entry keeps; an
+      * all-NULL file zone admits no non-null value.
       */
-    private def zone(e: SegEntry,
-        name: String): Option[(Option[String], Option[String])] = {
+    private def zoneVerdict(name: String)(
+        hit: (String, String) => Boolean): Verdict = {
       val si = m.statsCols.indexOf(name)
-      if (si < 0 || e.rows < 0) None
-      else (e.mins.lift(si), e.maxs.lift(si)) match {
-        case (Some(mn), Some(mx)) => Some((mn, mx))
-        case _ => None
-      }
+      if (si < 0) Keep
+      else new Verdict(
+        p => (p.summaryMins.lift(si).flatten,
+            p.summaryMaxs.lift(si).flatten) match {
+          case (Some(mn), Some(mx)) => hit(mn, mx)
+          case _ => true
+        },
+        e => e.rows < 0 || ((e.mins.lift(si), e.maxs.lift(si)) match {
+          case (Some(Some(mn)), Some(Some(mx))) => hit(mn, mx)
+          case (Some(_), Some(_)) => false // all-NULL zone
+          case _ => true
+        }))
     }
 
-    /** May any row of file `e` satisfy `name <op> v`? Strict ops are
-      * widened to non-strict (see class doc).
+    /** `name >= l` (`ge`) or `name <= l`; strict ops arrive here widened
+      * to non-strict (see class doc).
       */
-    private def cmpKeep(e: SegEntry, name: String, v: String,
-        op: String): Boolean = {
+    private def cmpVerdict(name: String, l: ce.Literal,
+        ge: Boolean): Verdict = {
       val dt = colTypes(name)
-      zone(e, name) match {
-        case None => true
-        case Some((Some(mn), Some(mx))) => op match {
-          case "=" => statCmp(dt, v, mn) >= 0 && statCmp(dt, v, mx) <= 0
-          case ">=" => statCmp(dt, mx, v) >= 0
-          case "<=" => statCmp(dt, mn, v) <= 0
-        }
-        case _ => false // all-NULL zone: no non-null value to compare
+      bounds(l) match {
+        case None => Keep
+        case Some((lo, _)) if ge => zoneVerdict(name)((_, mx) => statCmp(dt, mx, lo) >= 0)
+        case Some((_, hi)) => zoneVerdict(name)((mn, _) => statCmp(dt, mn, hi) <= 0)
       }
     }
 
-    private def bloomKeep(e: SegEntry, name: String,
-        lits: Seq[ce.Literal]): Boolean = {
-      val bi = m.bloomCols.indexOf(name)
-      if (bi < 0) true
-      else bloomOf(e, bi) match {
-        case None => true
-        case Some(bf) => lits.exists { l =>
-          if (l.value == null) false
-          // the build side hashed the column's stored type; a literal of
-          // any other type hashes differently — no verdict
-          else if (l.dataType != colTypes(name)) true
-          else bf.mightContainLong(
-            ce.XxHash64(Seq(l), 42L).eval(null).asInstanceOf[Long])
-        }
-      }
-    }
-
-    /** May any row of `e` have `name` equal to one of `lits`? Zones and
-      * blooms each veto independently; NULL literals never match
-      * (`c = NULL` is never true), so an all-NULL list prunes exactly.
+    /** May `name` equal one of `lits`? The zones answer through one
+      * [[intervalProbe]] over every literal's bounds; the blooms veto per
+      * file with every literal hashed once, up to [[BloomProbeCap]]
+      * values. NULL literals never match (`c = NULL` is never true), so
+      * an all-NULL list prunes exactly.
       */
-    private def eqAnyKeep(e: SegEntry, name: String,
-        lits0: Seq[ce.Literal]): Boolean = {
+    private def eqAnyVerdict(name: String, lits0: Seq[ce.Literal]): Verdict = {
       val lits = lits0.filter(_.value != null)
-      if (lits.isEmpty) return false
-      val zoneAny = lits.exists { l =>
-        render(l) match {
-          case Some(v) => cmpKeep(e, name, v, "=")
-          case None => true
-        }
+      val dt = colTypes(name)
+      if (lits.isEmpty) Never
+      else {
+        val zones =
+          if (!m.statsCols.contains(name)) Keep
+          else {
+            val bs = lits.map(bounds)
+            if (bs.exists(_.isEmpty)) Keep
+            else zoneVerdict(name)(intervalProbe(dt, bs.flatten))
+          }
+        val bi = m.bloomCols.indexOf(name)
+        // the build side hashed the column's stored type; a literal of
+        // any other type hashes differently — no verdict
+        val blooms =
+          if (bi < 0 || lits.size > BloomProbeCap ||
+              lits.exists(_.dataType != dt)) Keep
+          else {
+            val hs = lits.map(l =>
+              ce.XxHash64(Seq(l), 42L).eval(null).asInstanceOf[Long]).toArray
+            new Verdict(_ => true,
+              e => bloomOf(e, bi).forall(bf => hs.exists(bf.mightContainLong)))
+          }
+        zones && blooms
       }
-      zoneAny && bloomKeep(e, name, lits)
     }
 
-    private def rangeKeep(e: SegEntry, name: String, l: ce.Literal,
-        op: String): Boolean =
-      render(l) match {
-        case Some(v) => cmpKeep(e, name, v, op)
-        case None => true
-      }
-
-    /** May any row of file `e` satisfy conjunct `x`? (false = provably
-      * no row can — the file is skipped for this scan.)
-      */
-    private def mayKeep(e: SegEntry)(x: ce.Expression): Boolean = x match {
-      case ce.And(a, b) => mayKeep(e)(a) && mayKeep(e)(b)
-      case ce.Or(a, b) => mayKeep(e)(a) || mayKeep(e)(b)
+    /** Compile one conjunct; anything unrecognized keeps. */
+    private def compile(x: ce.Expression): Verdict = x match {
+      case ce.And(a, b) => compile(a) && compile(b)
+      case ce.Or(a, b) => compile(a) || compile(b)
       case ce.EqualTo(a: ce.AttributeReference, l: ce.Literal) =>
-        eqAnyKeep(e, a.name, Seq(l))
+        eqAnyVerdict(a.name, Seq(l))
       case ce.EqualTo(l: ce.Literal, a: ce.AttributeReference) =>
-        eqAnyKeep(e, a.name, Seq(l))
+        eqAnyVerdict(a.name, Seq(l))
       case ce.EqualNullSafe(a: ce.AttributeReference, l: ce.Literal)
-          if l.value != null => eqAnyKeep(e, a.name, Seq(l))
+          if l.value != null => eqAnyVerdict(a.name, Seq(l))
       case ce.EqualNullSafe(l: ce.Literal, a: ce.AttributeReference)
-          if l.value != null => eqAnyKeep(e, a.name, Seq(l))
+          if l.value != null => eqAnyVerdict(a.name, Seq(l))
       case ce.GreaterThan(a: ce.AttributeReference, l: ce.Literal) =>
-        rangeKeep(e, a.name, l, ">=")
+        cmpVerdict(a.name, l, ge = true)
       case ce.GreaterThanOrEqual(a: ce.AttributeReference, l: ce.Literal) =>
-        rangeKeep(e, a.name, l, ">=")
+        cmpVerdict(a.name, l, ge = true)
       case ce.LessThan(a: ce.AttributeReference, l: ce.Literal) =>
-        rangeKeep(e, a.name, l, "<=")
+        cmpVerdict(a.name, l, ge = false)
       case ce.LessThanOrEqual(a: ce.AttributeReference, l: ce.Literal) =>
-        rangeKeep(e, a.name, l, "<=")
+        cmpVerdict(a.name, l, ge = false)
       // literal-on-the-left comparisons flip the operator
       case ce.GreaterThan(l: ce.Literal, a: ce.AttributeReference) =>
-        rangeKeep(e, a.name, l, "<=")
+        cmpVerdict(a.name, l, ge = false)
       case ce.GreaterThanOrEqual(l: ce.Literal, a: ce.AttributeReference) =>
-        rangeKeep(e, a.name, l, "<=")
+        cmpVerdict(a.name, l, ge = false)
       case ce.LessThan(l: ce.Literal, a: ce.AttributeReference) =>
-        rangeKeep(e, a.name, l, ">=")
+        cmpVerdict(a.name, l, ge = true)
       case ce.LessThanOrEqual(l: ce.Literal, a: ce.AttributeReference) =>
-        rangeKeep(e, a.name, l, ">=")
+        cmpVerdict(a.name, l, ge = true)
       case ce.In(a: ce.AttributeReference, vs)
           if vs.nonEmpty && vs.forall(_.isInstanceOf[ce.Literal]) =>
-        eqAnyKeep(e, a.name, vs.map(_.asInstanceOf[ce.Literal]))
+        eqAnyVerdict(a.name, vs.map(_.asInstanceOf[ce.Literal]))
       case ce.InSet(a: ce.AttributeReference, set) =>
-        eqAnyKeep(e, a.name,
+        eqAnyVerdict(a.name,
           set.toSeq.filter(_ != null).map(v => ce.Literal(v, a.dataType)))
       case ce.IsNotNull(a: ce.AttributeReference) =>
         val si = m.statsCols.indexOf(a.name)
-        si < 0 || e.rows < 0 || e.mins.lift(si).forall(_.nonEmpty)
+        if (si < 0) Keep
+        else new Verdict(_ => true,
+          e => e.rows < 0 || e.mins.lift(si).forall(_.nonEmpty))
       case ce.StartsWith(a: ce.AttributeReference, l: ce.Literal)
-          if l.value != null && colTypes.get(a.name).contains(StringType) =>
+          if l.value != null && l.value.toString.nonEmpty &&
+            colTypes.get(a.name).contains(StringType) =>
         val prefix = l.value.toString
-        zone(e, a.name) match {
-          case Some((Some(mn), Some(mx))) if prefix.nonEmpty =>
-            // any s with this prefix has s >= prefix, and when the last
-            // char is incrementable, s < prefix-with-last-char-bumped
-            val okHi = mx.compareTo(prefix) >= 0
-            val okLo = prefix.last == Char.MaxValue ||
-              mn.compareTo(prefix.init + (prefix.last + 1).toChar) < 0
-            okHi && okLo
-          case Some((None, _)) | Some((_, None)) => false
-          case _ => true
-        }
-      case _ => true
-    }
-
-    /** May any row of the WHOLE part satisfy conjunct `x`, judged from
-      * the ref's zone summary alone — the manifest-resident min/max over
-      * the segment's files? false = the part is dismissed without its
-      * segment file ever being parsed (the Iceberg manifest-list skip).
-      * Summaries stay conservative supersets after bucket shrink, a None
-      * summary never dismisses, and blooms/null-accounting are per-file
-      * payloads — only range/equality verdicts apply at this level.
-      */
-    private def segMayKeep(part: Part)(x: ce.Expression): Boolean = {
-      def zoneOf(name: String): Option[(String, String)] = {
-        val si = m.statsCols.indexOf(name)
-        if (si < 0) None
-        else (part.summaryMins.lift(si).flatten,
-            part.summaryMaxs.lift(si).flatten) match {
-          case (Some(mn), Some(mx)) => Some((mn, mx))
-          case _ => None
-        }
-      }
-      def cmp(name: String, l: ce.Literal, op: String): Boolean =
-        (render(l), zoneOf(name)) match {
-          case (Some(v), Some((mn, mx))) =>
-            val dt = colTypes(name)
-            op match {
-              case "=" => statCmp(dt, v, mn) >= 0 && statCmp(dt, v, mx) <= 0
-              case ">=" => statCmp(dt, mx, v) >= 0
-              case "<=" => statCmp(dt, mn, v) <= 0
-            }
-          case _ => true
-        }
-      def eqAny(name: String, lits: Seq[ce.Literal]): Boolean =
-        lits.filter(_.value != null) match {
-          case Seq() => false
-          case ls => ls.exists(l => cmp(name, l, "="))
-        }
-      x match {
-        case ce.And(a, b) => segMayKeep(part)(a) && segMayKeep(part)(b)
-        case ce.Or(a, b) => segMayKeep(part)(a) || segMayKeep(part)(b)
-        case ce.EqualTo(a: ce.AttributeReference, l: ce.Literal) =>
-          eqAny(a.name, Seq(l))
-        case ce.EqualTo(l: ce.Literal, a: ce.AttributeReference) =>
-          eqAny(a.name, Seq(l))
-        case ce.GreaterThan(a: ce.AttributeReference, l: ce.Literal) =>
-          cmp(a.name, l, ">=")
-        case ce.GreaterThanOrEqual(a: ce.AttributeReference, l: ce.Literal) =>
-          cmp(a.name, l, ">=")
-        case ce.LessThan(a: ce.AttributeReference, l: ce.Literal) =>
-          cmp(a.name, l, "<=")
-        case ce.LessThanOrEqual(a: ce.AttributeReference, l: ce.Literal) =>
-          cmp(a.name, l, "<=")
-        case ce.GreaterThan(l: ce.Literal, a: ce.AttributeReference) =>
-          cmp(a.name, l, "<=")
-        case ce.GreaterThanOrEqual(l: ce.Literal, a: ce.AttributeReference) =>
-          cmp(a.name, l, "<=")
-        case ce.LessThan(l: ce.Literal, a: ce.AttributeReference) =>
-          cmp(a.name, l, ">=")
-        case ce.LessThanOrEqual(l: ce.Literal, a: ce.AttributeReference) =>
-          cmp(a.name, l, ">=")
-        case ce.In(a: ce.AttributeReference, vs)
-            if vs.nonEmpty && vs.forall(_.isInstanceOf[ce.Literal]) =>
-          eqAny(a.name, vs.map(_.asInstanceOf[ce.Literal]))
-        case ce.InSet(a: ce.AttributeReference, set) =>
-          eqAny(a.name,
-            set.toSeq.filter(_ != null).map(v => ce.Literal(v, a.dataType)))
-        case _ => true
-      }
+        // any s with this prefix has s >= prefix, and when the last char
+        // is incrementable, s < prefix-with-last-char-bumped
+        zoneVerdict(a.name)((mn, mx) => mx.compareTo(prefix) >= 0 &&
+          (prefix.last == Char.MaxValue ||
+            mn.compareTo(prefix.init + (prefix.last + 1).toChar) < 0))
+      case _ => Keep
     }
 
     override def rootPaths: Seq[Path] = Seq(new Path(root))
@@ -3730,12 +3432,9 @@ object LakeTable {
 
     override def listFiles(partitionFilters: Seq[ce.Expression],
         dataFilters: Seq[ce.Expression]): Seq[PartitionDirectory] = {
-      val alive = if (dataFilters.isEmpty) parts
-        else parts.filter(p => dataFilters.forall(segMayKeep(p)))
-      val kept = alive.flatMap { part =>
-        if (dataFilters.isEmpty) part.entries
-        else part.entries.filter(e => dataFilters.forall(mayKeep(e)))
-      }
+      val v = dataFilters.map(compile).foldLeft(Keep)(_ && _)
+      val alive = parts.filter(v.part)
+      val kept = alive.flatMap(_.entries.filter(v.file))
       if (dataFilters.nonEmpty) {
         lastIndexScan = Some((kept.size, parts.map(_.count).sum))
         lastIndexSegments = Some((alive.size, parts.size))

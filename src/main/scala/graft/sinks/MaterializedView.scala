@@ -53,10 +53,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * group's reserve (deletes its k extrema, or more deletions reach into
   * the reserve range than the refresh collected) does the group fall back
   * to a recompute from the base's new snapshot — and that recompute is
-  * restricted to the exhausted groups and routed through the base's own
-  * sidecar pruning ([[LakeTable.eqPrunedPaths]]) when a group column is
-  * declared in `statsCols`/`bloomCols`, so even the fallback opens only
-  * the files that can hold those groups rather than scanning the table.
+  * restricted to the exhausted groups and, when a group column is
+  * declared in `statsCols`/`bloomCols`, read as [[LakeTable.scan]]
+  * filtered by an `InSet` over those groups' values, so even the fallback
+  * opens only the files that can hold those groups rather than scanning
+  * the table.
   * The reserves double as a served aggregate: [[read]] exposes them as
   * `lowk_<c>`/`topk_<c>` — incremental bottom-k/top-k per group, the
   * true sorted prefix at its current length (see [[servedBase]]).
@@ -139,14 +140,6 @@ object MaterializedView {
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val SumType = "decimal(38,6)"
-
-  /** Diagnostics for the last retraction-recompute leg this JVM ran:
-    * (files opened, live files in the base manifest). None when the last
-    * refresh had no exhausted groups (the common case — no recompute job
-    * at all) or pruning wasn't possible. Test pin for the pruned-scan
-    * contract; not part of the public API.
-    */
-  private[graft] var lastRecomputeScan: Option[(Int, Int)] = None
 
   /** Diagnostics: how many exhausted prune-values (or a 1 sentinel when
     * unprunable) the last refresh recomputed — 0 means the reserve
@@ -650,7 +643,6 @@ object MaterializedView {
       // fold — the touched view buckets are read once inside the commit
       // instead of lookup + full-outer + checkpoint + applyChanges
       // reading them twice ([[LakeTable.foldGroupedDelta]])
-      lastRecomputeScan = None
       lastExhausted = 0
       val mvVersion =
         try LakeTable.foldGroupedDelta(spark, mvRoot, delta,
@@ -755,19 +747,19 @@ object MaterializedView {
       Seq(col(s"__exlo_$c"), col(s"__exhi_$c"))) ++
       ndCols.map(c => col(s"__exnd_$c"))).reduce(_ || _)
     val exhausted = merged0.filter(exhAny && col("cnt") > 0)
-    // bounded driver collect: the prune-column values (stringified by
-    // Spark's own CAST so the probe matches the sidecar's
-    // stringification exactly) that drive eqPrunedPaths. Cap + null
-    // guard; either degrades to the full-scan semi-join, never to a
-    // wrong prune.
+    // bounded driver collect: the exhausted groups' prune-column values,
+    // in the base column's type, for one InSet over the base's scan().
+    // Cap + null guard; either degrades to the full-scan semi-join,
+    // never to a wrong prune.
     val baseM = LakeTable.manifest(spark, tableRoot, Some(tv))
     val pruneCol = groupCols.find(c =>
       baseM.statsCols.contains(c) || baseM.bloomCols.contains(c))
-    val exhVals: Array[String] = graft.JobLabel(spark, "mv:exhaust-probe") {
+    val pruneType = pruneCol.map(StructType.fromDDL(baseM.schemaDdl)(_).dataType)
+    val exhVals: Array[Any] = graft.JobLabel(spark, "mv:exhaust-probe") {
       pruneCol match {
-        case Some(pc) => exhausted.select(col(pc).cast("string"))
+        case Some(pc) => exhausted.select(col(pc).cast(pruneType.get))
           .distinct().limit(maxRecomputeGroups + 1).collect()
-          .map(_.getString(0))
+          .map(_.get(0))
         case None =>
           if (exhausted.isEmpty) Array.empty else Array("__unprunable__")
       }
@@ -775,24 +767,14 @@ object MaterializedView {
 
     lastExhausted = exhVals.length
     val merged =
-      if (exhVals.isEmpty) { lastRecomputeScan = None; merged0 }
+      if (exhVals.isEmpty) merged0
       else {
         val baseNew =
           if (exhVals.length > maxRecomputeGroups || pruneCol.isEmpty ||
-              exhVals.contains(null)) {
-            lastRecomputeScan = None
+              exhVals.contains(null))
             LakeTable.read(spark, tableRoot, Some(tv))
-          } else {
-            val pc = pruneCol.get
-            val casted = exhVals.toSeq
-            val paths = LakeTable.eqPrunedPaths(spark, tableRoot, pc,
-              casted, Some(tv))
-            // fileCount folds the refs — the pin's denominator must not
-            // resolve the full live list on the pruned fast path
-            lastRecomputeScan =
-              paths.map(p => (p.size, baseM.fileCount))
-            LakeTable.readEqAny(spark, tableRoot, pc, casted, Some(tv))
-          }
+          else LakeTable.scan(spark, tableRoot, Some(tv)).filter(
+            LakeTable.inSet(pruneCol.get, pruneType.get, exhVals.toSeq))
         val exhG = exhausted.select(groupCols.map(col): _*)
         val restricted = LakeTable.keyMembershipJoin(baseNew, exhG,
           groupCols, "left_semi", bcast = true)

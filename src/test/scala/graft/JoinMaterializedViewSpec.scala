@@ -54,8 +54,9 @@ class JoinMaterializedViewSpec extends SparkTestBase {
     // dim leg is skipped entirely
     LakeTable.merge(spark, factRoot,
       factDf((6L, 20L, 16.0), (1L, 10L, 1.5)))
+    LakeTable.lastIndexScan = None
     JoinMaterializedView.refresh(spark, factRoot, dimRoot, mvRoot)
-    JoinMaterializedView.lastDimLegScan shouldBe None
+    LakeTable.lastIndexScan shouldBe None // the dim leg planned no fact scan
     served(mvRoot) shouldBe recomputed(factRoot, dimRoot)
     served(mvRoot)("A") shouldBe ((4L, BigDecimal("23.500000")))
 
@@ -157,10 +158,11 @@ class JoinMaterializedViewSpec extends SparkTestBase {
       "custkey", Seq("segment"), Seq("amount"), numBuckets = 2)
 
     LakeTable.merge(spark, dimRoot, dimDf((3L, "B")))
+    LakeTable.lastIndexScan = None
     JoinMaterializedView.refresh(spark, factRoot, dimRoot, mvRoot)
     served(mvRoot) shouldBe recomputed(factRoot, dimRoot)
     // the dim leg opened a strict subset of the fact's live files
-    val (opened, live) = JoinMaterializedView.lastDimLegScan.get
+    val (opened, live) = LakeTable.lastIndexScan.get
     live should be > 1
     opened should be < live
   }

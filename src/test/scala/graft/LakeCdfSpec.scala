@@ -215,11 +215,10 @@ class LakeCdfSpec extends SparkTestBase {
     val all = LakeTable.manifest(spark, root).files.map(_._1)
     all.size should be > 8 // maxRecordsPerFile rolled multiple files/bucket
 
-    val hit = LakeTable.prunedPaths(spark, root, "score", "100.0", "150.0")
-    hit.size should be < all.size / 2 // the zone map actually prunes
+    val narrow = LakeTable.scan(spark, root).filter($"score".between(100.0, 150.0))
+    keptFiles(narrow).size should be < all.size / 2 // the zone map actually prunes
 
-    val got = LakeTable.readRange(spark, root, "score", "100.0", "150.0")
-      .select($"id").as[Long].collect().toSet
+    val got = narrow.select($"id").as[Long].collect().toSet
     got shouldBe (100L to 150L).toSet
   }
 
@@ -387,11 +386,12 @@ class LakeCdfSpec extends SparkTestBase {
     // every live file has a zone entry after the merge
     m.files.map(_._1).toSet shouldBe stats.keySet
     // and the updated row is only found in the fresh high range
-    val got = LakeTable.readRange(spark, root, "score", "9000.0", "10000.0")
+    val got = LakeTable.scan(spark, root).filter($"score".between(9000.0, 10000.0))
       .select($"id").as[Long].collect().toSet
     got shouldBe Set(42L)
     // the stale zone (42's old position) no longer returns it
-    LakeTable.readRange(spark, root, "score", "41.5", "42.5").count() shouldBe 0L
+    LakeTable.scan(spark, root).filter($"score".between(41.5, 42.5))
+      .count() shouldBe 0L
   }
 
   test("optimistic concurrency: two interleaved writers both land, the loser retries") {
@@ -431,7 +431,7 @@ class LakeCdfSpec extends SparkTestBase {
     // regression (r10 advice): a file holding {"2","10"} records
     // min="10"/max="2" under STRING ordering; the old both-parse-numeric
     // compare evaluated 10 > 2 and PRUNED the file for probe "2" —
-    // wrong rows out of readEqAny, not just scan width.
+    // wrong rows out of a pruned IN scan, not just scan width.
     val root = newRoot()
     val rows = Seq((1L, "2", 1.0), (2L, "10", 2.0), (3L, "aa", 3.0),
       (4L, "zz", 4.0)).toDF("id", "grp", "score")
@@ -439,15 +439,13 @@ class LakeCdfSpec extends SparkTestBase {
       sortCols = Seq("grp"), statsCols = Seq("grp"), maxRecordsPerFile = 2L)
     // both digit-string probes hit their file; the zone still prunes the
     // {"aa","zz"} file, so the fix didn't degrade to keep-all
-    LakeTable.readEqAny(spark, root, "grp", Seq("2"))
-      .select($"id").as[Long].collect() shouldBe Array(1L)
-    LakeTable.readEqAny(spark, root, "grp", Seq("10"))
-      .select($"id").as[Long].collect() shouldBe Array(2L)
-    val pruned = LakeTable.eqPrunedPaths(spark, root, "grp", Seq("2")).get
-    pruned.size shouldBe 1
+    def byGrp(g: String) = LakeTable.scan(spark, root).filter($"grp".isin(g))
+    byGrp("2").select($"id").as[Long].collect() shouldBe Array(1L)
+    byGrp("10").select($"id").as[Long].collect() shouldBe Array(2L)
+    keptFiles(byGrp("2")).size shouldBe 1
     // range scan over the same string column agrees with its exact
     // filter's string comparison ("10" <= "2" lexicographically)
-    LakeTable.readRange(spark, root, "grp", "10", "2")
+    LakeTable.scan(spark, root).filter($"grp".between("10", "2"))
       .select($"id").as[Long].collect().sorted shouldBe Array(1L, 2L)
   }
 
@@ -589,9 +587,10 @@ class LakeCdfSpec extends SparkTestBase {
     // delete odd grp's min AND max in one wave — classic forced-recompute
     // shape, but the reserve knows the successors
     LakeTable.delete(spark, tRoot, Seq(1L, 7L).toDF("id"))
+    LakeTable.lastIndexScan = None
     MaterializedView.refresh(spark, tRoot, mvRoot, reserveDepth = 8)
     MaterializedView.lastExhausted shouldBe 0
-    MaterializedView.lastRecomputeScan shouldBe None
+    LakeTable.lastIndexScan shouldBe None // no recompute scan was planned
     val got = MaterializedView.read(spark, mvRoot)
       .select($"grp", $"min_score", $"max_score")
       .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
@@ -611,13 +610,14 @@ class LakeCdfSpec extends SparkTestBase {
     MaterializedView.init(spark, tRoot, mvRoot, Seq("grp"), Seq("score"),
       minMaxCols = Seq("score"), reserveDepth = 1)
     LakeTable.delete(spark, tRoot, Seq(1L).toDF("id")) // grp "1" min (1.0)
+    LakeTable.lastIndexScan = None
     MaterializedView.refresh(spark, tRoot, mvRoot, reserveDepth = 1)
 
     MaterializedView.lastExhausted shouldBe 1
     // the recompute leg opened strictly fewer files than the manifest
     // holds (file-count pin): zone maps on grp exclude files whose grp
     // range can't contain "1"
-    val (opened, total) = MaterializedView.lastRecomputeScan.get
+    val (opened, total) = LakeTable.lastIndexScan.get
     opened should be < total
     opened should be > 0
 
@@ -903,20 +903,19 @@ class LakeCdfSpec extends SparkTestBase {
       .toDF("id", "k", "v")
     LakeTable.init(rows, root, Seq("id"), numBuckets = 2,
       sortCols = Seq("k"), maxRecordsPerFile = 128L)
-    // no statsCols at init: range pruning is unavailable
-    intercept[IllegalArgumentException] {
-      LakeTable.prunedPaths(spark, root, "k", "3", "3")
-    }
+    def k3 = LakeTable.scan(spark, root).filter($"k".between(3, 3))
+    // no statsCols at init: range pruning is unavailable, every file kept
+    keptFiles(k3).size shouldBe LakeTable.manifest(spark, root).files.size
     val v = LakeTable.alterIndexing(spark, root, statsCols = Seq("k"),
       bloomCols = Seq("k"))
     val m = LakeTable.manifest(spark, root, Some(v))
     // same files, new indexing contract
     m.files shouldBe LakeTable.manifest(spark, root, Some(v - 1)).files
     m.statsCols shouldBe Seq("k")
-    val pruned = LakeTable.prunedPaths(spark, root, "k", "3", "3")
+    val pruned = keptFiles(k3)
     assert(pruned.size < m.files.size,
       s"expected zone pruning, kept ${pruned.size}/${m.files.size}")
-    LakeTable.readRange(spark, root, "k", "3", "3").count() shouldBe 40
+    k3.count() shouldBe 40
     LakeTable.fastMinMax(spark, root, "k") shouldBe
       Some((Some("0"), Some("49")))
   }
@@ -931,7 +930,8 @@ class LakeCdfSpec extends SparkTestBase {
     val dim = Seq(3L, 17L).toDF("k")
 
     val pruned = LakeTable.dynamicPrunedScan(spark, root, "k", dim)
-    val (opened, total) = LakeTable.lastDfpScan.get
+    val opened = keptFiles(pruned).size
+    val (_, total) = LakeTable.lastIndexScan.get
     assert(opened < total, s"expected a pruned scan, opened $opened/$total")
     val got = pruned.join(dim.withColumnRenamed("k", "dk"),
         $"k" === $"dk")
@@ -939,11 +939,13 @@ class LakeCdfSpec extends SparkTestBase {
     // k=3: Σ(3+40j)/2 = 99150; k=17: Σ(17+40j)/2 = 99850 (j = 0..99)
     (got.getLong(0), got.getDouble(1)) shouldBe ((200L, 199000.0))
 
-    // past the key bound: full scan (diagnostic None), same join answer
+    // past the key bound: full scan (no filter reaches the index)
     val wide = (0L until 40L).toDF("k")
     val full = LakeTable.dynamicPrunedScan(spark, root, "k", wide,
       maxKeys = 10)
-    LakeTable.lastDfpScan shouldBe None
+    LakeTable.lastIndexScan = None
+    keptFiles(full).size shouldBe total
+    LakeTable.lastIndexScan shouldBe None
     full.count() shouldBe 4000L
   }
 }

@@ -134,16 +134,16 @@ class LakeDagSpec extends SparkTestBase {
     runDay(conf1)
     // day 1 bootstrapped the layout: a two-predicate box probe answers
     // exactly through the zone-map intersection
-    LakeTable.readBox(spark, conf1.tableRoot,
-        Seq(("o_orderkey", "1", "16"), ("o_totalprice", "1", "8")))
+    LakeTable.scan(spark, conf1.tableRoot)
+      .filter($"o_orderkey".between(1, 16) && $"o_totalprice".between(1, 8))
       .collect().map(_.getLong(0)).toSet shouldBe (1L to 8L).toSet
     // day 2: inserts + a tombstone; the incremental pass keeps the layout
     val conf2 = conf1.copy(ds = "2026-08-14")
     writeUpserts(conf2.upsertsDir, (65L to 96L).map(i => (i, "LOW", i.toDouble)))
     Seq(10L).toDF("o_orderkey").write.mode("overwrite").parquet(conf2.deletesDir)
     runDay(conf2)
-    LakeTable.readBox(spark, conf2.tableRoot,
-        Seq(("o_orderkey", "1", "16"), ("o_totalprice", "1", "16")))
+    LakeTable.scan(spark, conf2.tableRoot)
+      .filter($"o_orderkey".between(1, 16) && $"o_totalprice".between(1, 16))
       .collect().map(_.getLong(0)).toSet shouldBe ((1L to 16L).toSet - 10L)
     val r2 = spark.read.parquet(conf2.reportDir)
       .select("consistent", "integrity_ok").head()

@@ -141,6 +141,22 @@ class LakeLookupSpec extends SparkTestBase {
     jobs shouldBe 1
   }
 
+  test("int probes on a bigint key up-cast on both paths") {
+    val root = tmp("lookup_upcast")
+    LakeTable.init((1L to 200L).map(i => (i, s"v$i")).toDF("id", "v"), root,
+      Seq("id"), numBuckets = 8)
+    val probe = Seq(3, 17, 64, 150, 999).toDF("id")
+    val want = Seq(3L, 17L, 64L, 150L)
+    val (got, jobs) = twinLookup(root, probe)
+    got.map(_.getLong(0)).sorted shouldBe want
+    jobs shouldBe 1
+    rowsOf(LakeTable.lookup(spark, root, probe.repartition(2)))
+      .map(_.getLong(0)).sorted shouldBe want
+    // a key type that does not up-cast is refused, not misrouted
+    an[IllegalArgumentException] should be thrownBy
+      LakeTable.lookup(spark, root, Seq("3").toDF("id"))
+  }
+
   test("touchedBuckets over a local source runs no job and matches the " +
       "distributed probe") {
     val src = probeDf(Seq((Some("r1"), Some(1L)), (None, Some(7L)),

@@ -170,17 +170,65 @@ class LakeScanIndexSpec extends SparkTestBase {
     LakeTable.scan(spark, root).filter(pred).count() shouldBe 1L
   }
 
-  test("timestamp predicates never prune (conservative), results exact") {
-    val root = Files.createTempDirectory("graft-scanidx-ts").toString
+  /** 300 hourly rows from 2025-01-01T00:00:00Z, clustered on ts and
+    * zoned on ts (TIMESTAMP) and on its UTC wall clock ntz
+    * (TIMESTAMP_NTZ), committed under the tests' UTC session zone.
+    */
+  private def mkHourly(name: String, buckets: Int, perFile: Long): String = {
+    val root = Files.createTempDirectory(name).toString
     val df = spark.range(300).select(
       col("id").alias("k"),
-      // 2025-01-01T00:00:00Z + id hours (session tz is UTC in tests)
       timestamp_seconds(lit(1735689600L) + col("id") * 3600L).alias("ts"))
-    LakeTable.init(df, root, Seq("k"), numBuckets = 2,
-      sortCols = Seq("ts"), statsCols = Seq("ts"), maxRecordsPerFile = 64L)
+      .withColumn("ntz", col("ts").cast("timestamp_ntz"))
+    LakeTable.init(df, root, Seq("k"), numBuckets = buckets,
+      sortCols = Seq("ts"), statsCols = Seq("ts", "ntz"),
+      maxRecordsPerFile = perFile)
+    root
+  }
+
+  test("timestamp ranges prune with a 2-day slack, results exact") {
+    val root = mkHourly("graft-scanidx-ts", buckets = 2, perFile = 64L)
     val pred = col("ts") >= lit("2025-01-05 00:00:00").cast("timestamp")
     sameRows(LakeTable.scan(spark, root).filter(pred),
       LakeTable.read(spark, root).filter(pred))
+    // each bucket's first file ends ~5 days in: a bound before day 3,
+    // widened by 2 days, still skips every later file
+    LakeTable.lastIndexScan = None
+    val early = col("ts") < lit("2025-01-03 00:00:00").cast("timestamp")
+    sameRows(LakeTable.scan(spark, root).filter(early),
+      LakeTable.read(spark, root).filter(early))
+    val (kept, live) = lastScan
+    assert(kept < live, s"expected a timestamp prune, scanned $kept of $live")
+  }
+
+  test("session zone changes never drop timestamp rows") {
+    // 8-hour files: every 14 h shift between wall clocks crosses a file
+    // boundary, so an unwidened compare would drop a file somewhere here
+    val root = mkHourly("graft-scanidx-tz", buckets = 1, perFile = 8L)
+    val conf = spark.conf
+    val zone0 = conf.get("spark.sql.session.timeZone")
+    def ts(s: String) = lit(s).cast("timestamp")
+    def ntz(s: String) = lit(s).cast("timestamp_ntz")
+    try {
+      for (zone <- Seq("Pacific/Kiritimati", "Etc/GMT+12")) {
+        conf.set("spark.sql.session.timeZone", zone)
+        for (pred <- Seq(
+            // no zone enters a TIMESTAMP_NTZ rendering: exact bounds
+            col("ntz").between(ntz("2025-01-04 10:00:00"), ntz("2025-01-04 12:00:00")),
+            col("ntz").isin(ntz("2025-01-02 13:00:00"), ntz("2025-01-11 23:00:00")),
+            col("ts") >= ts("2025-01-05 03:00:00"),
+            col("ts") <= ts("2025-01-07 21:00:00"),
+            col("ts").between(ts("2025-01-04 10:00:00"), ts("2025-01-04 12:00:00")),
+            col("ts") === ts("2025-01-06 05:00:00"),
+            col("ts").isin(ts("2025-01-02 13:00:00"), ts("2025-01-11 23:00:00")))) {
+          LakeTable.lastIndexScan = None
+          val got = LakeTable.scan(spark, root).filter(pred)
+          got.count() should be > 0L
+          sameRows(got, LakeTable.read(spark, root).filter(pred))
+          assert(lastScan._1 < lastScan._2, s"$zone $pred should still prune")
+        }
+      }
+    } finally conf.set("spark.sql.session.timeZone", zone0)
   }
 
   test("merge-on-read deletion vectors subtract through scan") {

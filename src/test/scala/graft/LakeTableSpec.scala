@@ -2,6 +2,7 @@ package graft
 
 import graft.sinks.LakeTable
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.types.{LongType, StringType}
 
 class LakeTableSpec extends SparkTestBase {
   import spark.implicits._
@@ -277,7 +278,7 @@ class LakeTableSpec extends SparkTestBase {
       LakeTable.versionAsOf(spark, root, 0L)
   }
 
-  test("bloom sidecar: readEq answers exactly and opens a strict subset of files") {
+  test("bloom sidecar: scan equality is exact and opens fewer files") {
     import org.apache.spark.sql.functions.{col, concat, lit}
     val root = newRoot()
     // 4k rows, 8 buckets × rolled files; `name` is a non-key, non-clustered
@@ -288,11 +289,12 @@ class LakeTableSpec extends SparkTestBase {
     LakeTable.init(big, root, Seq("id"), numBuckets = 8,
       maxRecordsPerFile = 256L, bloomCols = Seq("name"))
     val m = LakeTable.manifest(spark, root)
-    val pruned = LakeTable.bloomPrunedPaths(spark, root, "name", "user-123")
+    def byName(v: String) = LakeTable.scan(spark, root).filter(col("name") === v)
+    val pruned = keptFiles(byName("user-123"))
     // ~16 of 4096/256=16+ files can contain 8 rows of one value; the bloom
     // must keep all true-positive files and skip most of the rest
     pruned.size should be < m.files.size
-    val got = LakeTable.readEq(spark, root, "name", "user-123")
+    val got = byName("user-123")
       .select("id").collect().map(_.getLong(0)).toSet
     got shouldBe (0L until 4096L).filter(_ % 500 == 123).toSet
 
@@ -300,14 +302,14 @@ class LakeTableSpec extends SparkTestBase {
     // keep their blooms, and the probe stays exact across the delivery
     LakeTable.merge(spark, root,
       Seq((123L, "fresh-value", 0.0)).toDF("id", "name", "score"))
-    LakeTable.readEq(spark, root, "name", "fresh-value")
+    byName("fresh-value")
       .select("id").collect().map(_.getLong(0)).toSet shouldBe Set(123L)
-    val after = LakeTable.readEq(spark, root, "name", "user-123")
+    val after = byName("user-123")
       .select("id").collect().map(_.getLong(0)).toSet
     after shouldBe ((0L until 4096L).filter(_ % 500 == 123).toSet - 123L)
 
     // a value that never existed prunes everything (no false-positive rows)
-    LakeTable.readEq(spark, root, "name", "user-99999").count() shouldBe 0L
+    byName("user-99999").count() shouldBe 0L
   }
 
   test("fsck: clean table ok; missing referenced file flagged; orphan debris found then vacuumed") {
@@ -350,7 +352,7 @@ class LakeTableSpec extends SparkTestBase {
     broken.missingFiles should contain(victim)
   }
 
-  test("readEqAny: multi-value scan through the sidecar union; None when uncovered") {
+  test("IN filters prune by the sidecar union; uncovered keeps all") {
     import org.apache.spark.sql.functions.{col, concat, lit}
     val root = newRoot()
     val big = spark.range(4096).select(col("id"),
@@ -359,24 +361,26 @@ class LakeTableSpec extends SparkTestBase {
     LakeTable.init(big, root, Seq("id"), numBuckets = 8,
       maxRecordsPerFile = 256L, bloomCols = Seq("name"))
     val m = LakeTable.manifest(spark, root)
+    def byNames(vs: Seq[String]) =
+      LakeTable.scan(spark, root).filter(col("name").isin(vs: _*))
     val vals = Seq("user-123", "user-7", "user-99999")
     // pruned union keeps every true-positive file, skips most others
-    val pruned = LakeTable.eqPrunedPaths(spark, root, "name", vals).get
+    val pruned = keptFiles(byNames(vals))
     pruned.size should be < m.files.size
     vals.take(2).foreach { v =>
-      LakeTable.bloomPrunedPaths(spark, root, "name", v)
-        .foreach(p => pruned should contain(p))
+      keptFiles(byNames(Seq(v))).foreach(p => pruned should contain(p))
     }
-    val got = LakeTable.readEqAny(spark, root, "name", vals)
+    val got = byNames(vals)
       .select("id").collect().map(_.getLong(0)).toSet
     got shouldBe (0L until 4096L)
       .filter(i => i % 500 == 123 || i % 500 == 7).toSet
     // empty probe set: zero files, zero rows
-    LakeTable.eqPrunedPaths(spark, root, "name", Nil).get shouldBe empty
-    LakeTable.readEqAny(spark, root, "name", Nil).count() shouldBe 0L
-    // a column with no sidecar coverage answers None — callers must fall
-    // back EXPLICITLY to a full scan, never get a silently-unpruned one
-    LakeTable.eqPrunedPaths(spark, root, "score", Seq("1.5")) shouldBe None
+    keptFiles(byNames(Nil)) shouldBe empty
+    byNames(Nil).count() shouldBe 0L
+    // a column with no sidecar coverage keeps every live file: the
+    // filter stays exact, only unpruned
+    keptFiles(LakeTable.scan(spark, root).filter(col("score") === 1.5))
+      .size shouldBe m.files.size
   }
 
   test("optimizeZOrder: box probes prune on EVERY z column; content and history intact") {
@@ -393,14 +397,15 @@ class LakeTableSpec extends SparkTestBase {
       maxRecordsPerFile = 256L)
     val live = LakeTable.manifest(spark, root).files.size
     live shouldBe 16
-    val box = Seq(("x", "0", "15"), ("y", "0", "15"))
-    def boxRows() = LakeTable.readBox(spark, root, box)
+    def boxScan() = LakeTable.scan(spark, root)
+      .filter(col("x").between(0, 15) && col("y").between(0, 15))
+    def boxRows() = boxScan()
       .select("id").collect().map(_.getLong(0)).toSet
     val want = (0L until 4096L)
       .filter(i => i % 64 <= 15 && i / 64 <= 15).toSet
     boxRows() shouldBe want
     // x-sorted layout: the y predicate prunes nothing beyond x's files
-    val xOnly = LakeTable.lastBoxScan.get._1
+    val xOnly = keptFiles(boxScan()).size
 
     val v = LakeTable.optimizeZOrder(spark, root, Seq("x", "y"))
     // content identical, old layout still readable via time travel
@@ -410,14 +415,15 @@ class LakeTableSpec extends SparkTestBase {
     // the box now opens a small corner of the z space — strictly fewer
     // files than the x-sorted layout needed, and far under the live set
     boxRows() shouldBe want
-    val (opened, total) = LakeTable.lastBoxScan.get
+    keptFiles(boxScan())
+    val (opened, total) = LakeTable.lastIndexScan.get
     total shouldBe LakeTable.manifest(spark, root).files.size
     opened should be < xOnly
     opened.toDouble should be <= total / 2.0
     // a y-ONLY slice also prunes now (impossible under the x sort)
-    LakeTable.readBox(spark, root, Seq(("y", "0", "7")))
-      .count() shouldBe 512L
-    LakeTable.lastBoxScan.get._1 should be < total
+    val ySlice = LakeTable.scan(spark, root).filter(col("y").between(0, 7))
+    ySlice.count() shouldBe 512L
+    keptFiles(ySlice).size should be < total
     // misuse fails loudly: z columns must have zone maps to prune by
     an[IllegalArgumentException] should be thrownBy
       LakeTable.optimizeZOrder(spark, root, Seq("x", "id"))
@@ -468,10 +474,11 @@ class LakeTableSpec extends SparkTestBase {
     LakeTable.read(spark, root).select("id").collect()
       .map(_.getLong(0)).toSet shouldBe want
     // box probes still prune through the maintained zone maps
-    LakeTable.readBox(spark, root, Seq(("x", "0", "15"), ("y", "0", "15")))
-      .select("id").collect().map(_.getLong(0)).toSet shouldBe
+    val box = LakeTable.scan(spark, root)
+      .filter(col("x").between(0, 15) && col("y").between(0, 15))
+    box.select("id").collect().map(_.getLong(0)).toSet shouldBe
       want.filter(i => i % 64 <= 15 && (i >> 6) <= 15)
-    LakeTable.lastBoxScan.get._1 should be < m2.files.size
+    keptFiles(box).size should be < m2.files.size
     // tight again: no-op
     LakeTable.optimizeZOrderIncremental(spark, root) shouldBe v2
     // the marker chain head survives vacuum even when ITS version leaves
@@ -519,12 +526,12 @@ class LakeTableSpec extends SparkTestBase {
     m1.files.toSet.intersect(m2.files.toSet) shouldBe empty
     // the refreshed axes serve the widened space: a box over the far end
     // answers exactly and still prunes
-    val far = LakeTable.readBox(spark, root,
-      Seq(("x", "3000", "6300"), ("y", "128", "129")))
+    val far = LakeTable.scan(spark, root)
+      .filter(col("x").between(3000, 6300) && col("y").between(128, 129))
     far.collect().map(_.getLong(0)).toSet shouldBe
       (8192L until 8256L).filter(i => i % 64 * 100 >= 3000 &&
         (i >> 6) >= 128 && (i >> 6) <= 129).toSet
-    LakeTable.lastBoxScan.get._1 should be < m2.files.size
+    keptFiles(far).size should be < m2.files.size
     // and auto is back on the incremental path under the new axes
     LakeTable.optimizeZOrderAuto(spark, root, Seq("x", "y")) shouldBe
       m2.version
@@ -552,10 +559,11 @@ class LakeTableSpec extends SparkTestBase {
     val v1 = LakeTable.optimizeZOrder(spark, root, Seq("x", "y"))
     killMarker(v1)
     val want0 = (0L until 4096L).toSet
-    LakeTable.readBox(spark, root, Seq(("x", "0", "15"), ("y", "0", "15")))
-      .select("id").collect().map(_.getLong(0)).toSet shouldBe
+    val box = LakeTable.scan(spark, root)
+      .filter(col("x").between(0, 15) && col("y").between(0, 15))
+    box.select("id").collect().map(_.getLong(0)).toSet shouldBe
       want0.filter(i => i % 64 <= 15 && (i >> 6) <= 15)
-    LakeTable.lastBoxScan.get._1 should be <
+    keptFiles(box).size should be <
       LakeTable.manifest(spark, root).files.size
     val v2 = LakeTable.optimizeZOrderAuto(spark, root, Seq("x", "y"))
     v2 should be > v1
@@ -746,12 +754,13 @@ class LakeTableSpec extends SparkTestBase {
     val m2 = LakeTable.manifest(spark, root)
     m1.files.toSet.intersect(m2.files.toSet) shouldBe empty
     // the refreshed axes serve the widened window exactly, with pruning
-    val far = LakeTable.readBox(spark, root,
-      Seq(("d", "2024-12-01", "2026-01-01"), ("y", "128", "129")))
+    val far = LakeTable.scan(spark, root).filter(
+      col("d").between(lit("2024-12-01").cast("date"),
+        lit("2026-01-01").cast("date")) && col("y").between(128, 129))
     far.select("id").collect().map(_.getLong(0)).toSet shouldBe
       (8192L until 8256L).filter(i => (i >> 6) >= 128 && (i >> 6) <= 129)
         .toSet
-    LakeTable.lastBoxScan.get._1 should be < m2.files.size
+    keptFiles(far).size should be < m2.files.size
     // and auto is back on the incremental path under the new axes
     LakeTable.optimizeZOrderAuto(spark, root, Seq("d", "y")) shouldBe
       m2.version
@@ -944,7 +953,7 @@ class LakeTableSpec extends SparkTestBase {
     } finally LakeTable.maxSegmentEntriesOverride = None
   }
 
-  test("eqPrunedPaths dense probe sets: sorted-probe zones still prune, bloom veto self-caps conservatively") {
+  test("dense IN probe sets: zones still prune, bloom veto self-caps") {
     import org.apache.spark.sql.functions.{col, concat, lit}
     val root = newRoot()
     val wide = spark.range(0, 20000).select(col("id"),
@@ -960,49 +969,50 @@ class LakeTableSpec extends SparkTestBase {
     // range: the zone check binary-searches the sorted set, so files
     // outside [0, 11999] are still dismissed — large V must not force
     // keep-all on a zone-covered column
-    val vals = (0L until 12000L).map(_.toString)
-    val kept = LakeTable.eqPrunedPaths(spark, root, "id", vals).get
-    kept.size should be < m.files.size
+    val byIds = LakeTable.scan(spark, root).filter(
+      LakeTable.inSet("id", LongType, 0L until 12000L))
+    keptFiles(byIds).size should be < m.files.size
     // and never a wrong dismissal: the exact scan over the kept files
     // returns every probed row
-    LakeTable.readEqAny(spark, root, "id", vals).count() shouldBe 12000L
+    byIds.count() shouldBe 12000L
     // a bloom-ONLY column above the probe cap keeps ALL files (the veto
     // is an optional tightener; skipping it is conservative, and the
     // caller's exact predicate still runs)
     val names = (0L until 12000L).map(i => s"n$i")
-    LakeTable.eqPrunedPaths(spark, root, "name", names)
-      .get.size shouldBe m.files.size
+    keptFiles(LakeTable.scan(spark, root).filter(
+      LakeTable.inSet("name", StringType, names))).size shouldBe m.files.size
     // below the cap the bloom veto still prunes the bloom-only column
-    LakeTable.eqPrunedPaths(spark, root, "name", Seq("n17"))
-      .get.size should be < m.files.size
+    keptFiles(LakeTable.scan(spark, root).filter(col("name").isin("n17")))
+      .size should be < m.files.size
   }
 
-  test("prunedPaths/eqPrunedPaths dismiss whole delivery segments through manifest summaries") {
+  test("filters dismiss whole segments through manifest summaries") {
+    import org.apache.spark.sql.functions.col
     val root = newRoot()
     // delivery-correlated values: each commit's segment carries a tight
     // zone SUMMARY in the manifest, so a range probe can dismiss other
     // deliveries' refs without parsing their segment files — the same
-    // manifest-level skip the planner's scan() index applies, now on the
-    // explicit pruning entry points (the MV-retraction read path)
+    // manifest-level skip, for range and equality filters alike (the
+    // MV-retraction read path)
     LakeTable.init((1L to 20L).map(i => (i, s"n$i", i.toDouble))
       .toDF("id", "name", "score"), root, Seq("id"), numBuckets = 4,
       statsCols = Seq("score"))
     LakeTable.merge(spark, root, Seq((100L, "a", 100.0)).toDF("id", "name", "score"))
     LakeTable.merge(spark, root, Seq((200L, "b", 200.0)).toDF("id", "name", "score"))
     LakeTable.manifest(spark, root).segments.size shouldBe 3
-    val hit = LakeTable.prunedPaths(spark, root, "score", "150.0", "300.0")
+    val byRange = LakeTable.scan(spark, root)
+      .filter(col("score").between(150.0, 300.0))
+    val hit = keptFiles(byRange)
     // only the third delivery's ref resolved; the init ref ([1,20]) and
     // the first delivery's ([...,100]) dismissed through their summaries
-    LakeTable.lastPruneRefs shouldBe Some((1, 2))
-    LakeTable.readRange(spark, root, "score", "150.0", "300.0")
-      .collect().map(_.getLong(0)).toSeq shouldBe Seq(200L)
+    LakeTable.lastIndexSegments shouldBe Some((1, 3))
+    byRange.collect().map(_.getLong(0)).toSeq shouldBe Seq(200L)
     hit should not be empty
-    // equality probes dismiss the same way (zone part of eqPrunedPaths)
-    LakeTable.eqPrunedPaths(spark, root, "score", Seq("200.0")).get should
-      not be empty
-    LakeTable.lastPruneRefs shouldBe Some((1, 2))
-    LakeTable.readEqAny(spark, root, "score", Seq("200.0"))
-      .collect().map(_.getLong(0)).toSeq shouldBe Seq(200L)
+    // equality probes dismiss the same way
+    val byEq = LakeTable.scan(spark, root).filter(col("score").isin(200.0))
+    keptFiles(byEq) should not be empty
+    LakeTable.lastIndexSegments shouldBe Some((1, 3))
+    byEq.collect().map(_.getLong(0)).toSeq shouldBe Seq(200L)
   }
 
   test("vacuum reads O(keep window) manifests, not O(all versions)") {

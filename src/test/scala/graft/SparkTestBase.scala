@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -12,6 +13,19 @@ trait SparkTestBase extends AnyFunSuite with Matchers {
   def fixture(rel: String): String =
     java.nio.file.Paths.get(
       getClass.getClassLoader.getResource(s"fixtures/$rel").toURI).toString
+
+  /** The files a lake `scan()` index keeps for the filters pushed into
+    * `df`, asked of the planned scan itself (no job runs). When a filter
+    * was pushed, `LakeTable.lastIndexScan` then holds this listing's
+    * (files kept, live files).
+    */
+  def keptFiles(df: DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec
+          if f.relation.options.contains("graft.lake.root") =>
+        f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
+          .flatMap(_.files.map(_.getPath.toString))
+    }.flatten
 }
 
 object SparkTestBase {
