@@ -560,10 +560,9 @@ object Scratch {
       }
     }
     def run(): Unit = {
-      val q = (if (three)
-        graft.streaming.LakeStreaming.mirrorTxnGroup(s,
-          Seq((fSrc, fTgt), (dSrc, dTgt), (nSrc, nTgt)))
-      else graft.streaming.LakeStreaming.mirrorTxn(s, fSrc, fTgt, dSrc, dTgt))
+      val legs = Seq((fSrc, fTgt), (dSrc, dTgt)) ++
+        (if (three) Seq((nSrc, nTgt)) else Nil)
+      val q = graft.streaming.LakeStreaming.mirrorTxnGroup(s, legs)
         .option("checkpointLocation", cp)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()

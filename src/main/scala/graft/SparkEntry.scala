@@ -2157,12 +2157,13 @@ object SparkEntry {
           lit(v1Rows).cast("bigint").alias("v1_rows"))
     }),
 
-    // Streaming CDC mirror (streaming/LakeCdfSource.scala + LakeStreaming
-    // .mirror): the source table's versions are the stream's offsets; a
-    // subscriber bootstraps from the snapshot-as-inserts batch and then
-    // rides O(delta) change-feed batches, applying them with idempotent
-    // merge/deleteMor — exactly-once replication with no offset ledger
-    // beyond the checkpoint. Lifecycle: init (evens) → mirror → merge
+    // Streaming CDC mirror (streaming/LakeCdfSource.scala with one root +
+    // LakeStreaming.mirror): the source table's versions are the stream's
+    // offsets; a subscriber bootstraps from the snapshot-as-inserts batch
+    // and then rides O(delta) change-feed batches, applying them through
+    // the one mirror batch applier (idempotent merge/deleteMor) —
+    // exactly-once replication with no offset ledger beyond the
+    // checkpoint. Lifecycle: init (evens) → mirror → merge
     // (multiples of 3, price bumped) + MoR-delete (multiples of 10) →
     // mirror again; the oracle recomputes the replicated end state from
     // the raw table.
@@ -2242,11 +2243,11 @@ object SparkEntry {
     }),
 
     // Transaction-consistent CDC mirroring of a table PAIR (streaming/
-    // LakeTxnCdfPairSource + LakeStreaming.mirrorTxn): two tables that
-    // commit together via LakeTxn flip visibility with one outcome-file
-    // create, and the pair stream's composite offset is a CONSISTENT CUT
-    // — no batch ever carries one half of a transaction without the
-    // other, so the replica pair is never torn. Lifecycle: init fact+dim
+    // LakeCdfSource with two roots + LakeStreaming.mirrorTxnGroup): two
+    // tables that commit together via LakeTxn flip visibility with one
+    // outcome-file create, and the group stream's vector offset is a
+    // CONSISTENT CUT — no batch ever carries one half of a transaction
+    // without the other, so the replica pair is never torn. Lifecycle: init fact+dim
     // sources and empty targets → bootstrap mirror → txn1 commits a fact
     // price bump + dim segment move together → txn2 stages POISON into
     // both and aborts → a crashed in-flight txn is left on the fact →
@@ -2277,8 +2278,8 @@ object SparkEntry {
       graft.sinks.LakeTable.init(customer.filter(lit(false)), dTgt,
         Seq("c_custkey"), numBuckets = 4)
       def run(): Unit = {
-        val q = graft.streaming.LakeStreaming.mirrorTxn(s, fSrc, fTgt,
-          dSrc, dTgt)
+        val q = graft.streaming.LakeStreaming.mirrorTxnGroup(s,
+          Seq((fSrc, fTgt), (dSrc, dTgt)))
           .option("checkpointLocation", cp)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
@@ -2312,18 +2313,17 @@ object SparkEntry {
         .orderBy("seg")
     }),
 
-    // N-table transaction-consistent mirroring (streaming/
-    // LakeTxnCdfGroupSource + LakeStreaming.mirrorTxnGroup): the pair
-    // source generalized to a ROOT VECTOR — a LakeTxn spanning fact +
-    // dim + bridge (three tables) commits atomically, and the group
-    // stream's vector offset is a consistent cut across all three, so no
-    // mirror ever serves a partial transaction. Lifecycle mirrors the
-    // pair query's with a THIRD member: txn1 commits a fact price bump +
-    // dim segment move + nation rename together; txn2 stages POISON into
-    // all three and aborts; a crashed in-flight txn is left on the DIM.
-    // The oracle recomputes the 3-way join from init + txn1 alone, READ
-    // FROM THE MIRRORS: a leaked poison row, a missing third of txn1, or
-    // a torn batch on any member all break the hash.
+    // N-table transaction-consistent mirroring (streaming/LakeCdfSource
+    // with three roots + LakeStreaming.mirrorTxnGroup): a LakeTxn
+    // spanning fact + dim + bridge (three tables) commits atomically, and
+    // the group stream's vector offset is a consistent cut across all
+    // three, so no mirror ever serves a partial transaction. Lifecycle
+    // mirrors the pair query's with a THIRD member: txn1 commits a fact
+    // price bump + dim segment move + nation rename together; txn2
+    // stages POISON into all three and aborts; a crashed in-flight txn is
+    // left on the DIM. The oracle recomputes the 3-way join from init +
+    // txn1 alone, READ FROM THE MIRRORS: a leaked poison row, a missing
+    // third of txn1, or a torn batch on any member all break the hash.
     "q_lake_txn_mirror3" -> ((s, dir) => {
       val base = System.getProperty("java.io.tmpdir")
       val fSrc = base + "/graft_lake_txnmir3_fsrc"

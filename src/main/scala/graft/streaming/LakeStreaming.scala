@@ -74,100 +74,43 @@ object LakeStreaming {
     }
 
   /** CDC table replication: subscribe to `sourceRoot`'s change feed
-    * ([[LakeCdfSource]]) and keep `targetRoot` — a pre-initialized lake
-    * table with the same keys — converged to it. The consumer half of the
-    * streaming lakehouse loop: the producer's commits become the stream's
-    * offsets, so the mirror is EXACTLY-ONCE by construction (checkpoint
-    * recovery replays a deterministic version span; merge and deleteMor
-    * are idempotent on identical rows, so even a replayed batch
-    * converges instead of double-applying). The first batch bootstraps
-    * from the source's snapshot-as-inserts; after that every trigger
-    * costs O(span delta), never O(table) — the cross-region /
-    * dev-fanout replication shape at 100 TB.
-    *
-    * Apply order inside a batch: upserts (insert + update_postimage) then
-    * deletes — the feed NETS per key within a span, so one key never
-    * carries both an upsert and a delete in the same batch and the order
-    * is a non-issue; preimages are informational and skipped. Start the
-    * returned writer with a checkpointLocation and a trigger.
+    * ([[LakeCdfSource]], `graft-lake-cdf`) and keep `targetRoot` — a
+    * pre-initialized lake table with the same keys — converged to it. The
+    * consumer half of the streaming lakehouse loop: the producer's commits
+    * become the stream's offsets, so the mirror is EXACTLY-ONCE by
+    * construction (checkpoint recovery replays a deterministic version
+    * span; merge and deleteMor are idempotent on identical rows, so even a
+    * replayed batch converges instead of double-applying). The first batch
+    * bootstraps from the source's snapshot-as-inserts; after that every
+    * trigger costs O(span delta), never O(table). It is the one-member case
+    * of [[mirrorTxnGroup]]: same batch applier, the stream tagged with its
+    * root as `_table`. Start the returned writer with a checkpointLocation
+    * and a trigger.
     */
   def mirror(spark: org.apache.spark.sql.SparkSession, sourceRoot: String,
-      targetRoot: String): DataStreamWriter[Row] = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    spark.readStream.format("graft-lake-cdf").option("root", sourceRoot)
-      .load()
-      .writeStream.outputMode("append").foreachBatch {
-        (batch: Dataset[Row], _: Long) =>
-          val s = batch.sparkSession
-          val meta = Seq("_change_type", "_from_version", "_to_version")
-          val b = batch.toDF().localCheckpoint()
-          try {
-            // ONE action decides which halves exist AND precomputes the
-            // upsert rows' touched buckets under the target's layout —
-            // the merge then skips its own probe job ([[LakeTable
-            // .TouchedHint]]; bounded collect: ≤ kinds × numBuckets rows)
-            val tm = LakeTable.manifest(s, targetRoot)
-            val probe = b.groupBy(col("_change_type"),
-                LakeTable.bucketExprFor(tm.keys, tm.numBuckets).alias("__b"))
-              .count().collect()
-            val kinds = probe.groupBy(_.getString(0)).view
-              .mapValues(_.map(_.getLong(2)).sum).toMap
-            val upKinds = Set("insert", "update_postimage")
-            val touched = LakeTable.TouchedHint(tm.keys, tm.numBuckets,
-              probe.iterator.filter(r => upKinds(r.getString(0)))
-                .map(_.getInt(1)).toSet)
-            val ups = b.filter(col("_change_type")
-              .isin("insert", "update_postimage")).drop(meta: _*)
-            val dels = b.filter(col("_change_type") === "delete")
-              .drop(meta: _*)
-            if (kinds.getOrElse("insert", 0L) +
-                kinds.getOrElse("update_postimage", 0L) > 0)
-              LakeTable.mergeTagged(s, targetRoot, ups, None, None,
-                Some(touched))
-            if (kinds.getOrElse("delete", 0L) > 0)
-              LakeTable.deleteMor(s, targetRoot, dels)
-          } finally b.unpersist(blocking = false)
-          ()
-      }
-  }
+      targetRoot: String): DataStreamWriter[Row] =
+    applyTxnBatches(spark.readStream.format("graft-lake-cdf")
+      .option("root", sourceRoot).load()
+      .withColumn("_table", org.apache.spark.sql.functions.lit(sourceRoot)),
+      Seq((sourceRoot, targetRoot)))
 
-  /** TRANSACTION-CONSISTENT replication of a table PAIR: one stream over
-    * [[LakeTxnCdfPairSource]] (`graft-lake-cdf-pair`), whose composite
-    * offset is a consistent cut — no batch ever contains one half of a
-    * [[graft.sinks.LakeTxn]] commit without the other — applied to both
-    * targets inside ONE trigger. Between triggers the target pair holds
-    * a cut state too: a reader joining the two mirrors can see a
-    * transaction as not-yet-arrived or as fully-arrived, NEVER torn
-    * (the gap two independent [[mirror]] streams cannot close). The
-    * single-trigger window between the two target applies is the
-    * familiar foreachBatch non-atomicity — crash inside it replays the
-    * batch, and both appliers are idempotent, so convergence holds; a
-    * pair of mirrors that must be externally queryable mid-trigger
-    * should be read through their own [[graft.sinks.LakeTxn]] on the
-    * target side (same machinery, consumer-owned).
-    */
-  def mirrorTxn(spark: org.apache.spark.sql.SparkSession,
-      srcA: String, tgtA: String, srcB: String, tgtB: String,
-      maxVersionsPerTrigger: Option[Long] = None): DataStreamWriter[Row] = {
-    val reader0 = spark.readStream.format("graft-lake-cdf-pair")
-      .option("rootA", srcA).option("rootB", srcB)
-    maxVersionsPerTrigger.foreach(n =>
-      reader0.option("maxVersionsPerTrigger", n.toString))
-    applyTxnBatches(reader0.load(), Seq((srcA, tgtA), (srcB, tgtB)))
-  }
-
-  /** [[mirrorTxn]] for a transaction GROUP of any arity: one stream over
-    * [[LakeTxnCdfGroupSource]] (`graft-lake-cdf-group`) whose vector
-    * offset is a consistent cut across EVERY member — the fact + dim +
-    * bridge shape a pair cannot mirror torn-free. Same batch applier,
-    * same idempotence/convergence arguments; the pair entry point is the
-    * N = 2 instance (on its own source, for checkpoint compatibility).
+  /** TRANSACTION-CONSISTENT replication of a table GROUP (two or more
+    * members): one stream over [[LakeCdfSource]] (`graft-lake-cdf-group`)
+    * whose vector offset is a consistent cut — no batch ever contains part
+    * of a [[graft.sinks.LakeTxn]] commit without the rest — applied to
+    * every target inside ONE trigger. Between triggers the targets hold a
+    * cut state too: a reader joining the mirrors sees a transaction as
+    * not-yet-arrived or as fully-arrived, NEVER torn (the gap independent
+    * [[mirror]] streams cannot close). The single-trigger window between
+    * target applies is the familiar foreachBatch non-atomicity — a crash
+    * inside it replays the batch, and the appliers are idempotent, so
+    * convergence holds; mirrors that must be externally queryable
+    * mid-trigger should be read through their own [[graft.sinks.LakeTxn]]
+    * on the target side.
     */
   def mirrorTxnGroup(spark: org.apache.spark.sql.SparkSession,
       srcToTgt: Seq[(String, String)],
       maxVersionsPerTrigger: Option[Long] = None): DataStreamWriter[Row] = {
-    require(srcToTgt.size >= 2,
-      s"mirrorTxnGroup needs >= 2 (src, tgt) pairs, got $srcToTgt")
     val reader0 = spark.readStream.format("graft-lake-cdf-group")
       .option("roots", srcToTgt.map(_._1).mkString(","))
     maxVersionsPerTrigger.foreach(n =>
@@ -175,6 +118,11 @@ object LakeStreaming {
     applyTxnBatches(reader0.load(), srcToTgt)
   }
 
+  /** The one batch applier of every mirror. Per member: upserts (insert +
+    * update_postimage) then deletes — the feed NETS per key within a
+    * span, so one key never carries both in the same batch; preimages are
+    * informational and skipped.
+    */
   private def applyTxnBatches(stream: DataFrame,
       srcToTgt: Seq[(String, String)]): DataStreamWriter[Row] = {
     import org.apache.spark.sql.functions.{col, lit, when}

@@ -1,17 +1,21 @@
 package graft
 
 import graft.sinks.LakeTable
-import graft.streaming.LakeStreaming
+import graft.streaming.{LakeCdfSource, LakeStreaming}
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Streaming change-feed source (streaming/LakeCdfSource.scala): table
-  * versions are the offsets, batch (start, end] is LakeTable.changes over
-  * exactly that span, and the first batch is the snapshot-as-inserts
-  * bootstrap. Exactly-once falls out of determinism + checkpointing;
-  * LakeStreaming.mirror composes it into CDC table replication.
+/** Streaming change-feed source (streaming/LakeCdfSource.scala), the one
+  * source behind `graft-lake-cdf` (one table) and `graft-lake-cdf-group`
+  * (a transaction group): table versions are the offsets, batch (start,
+  * end] is LakeTable.changes over exactly that span, the first batch is
+  * the snapshot-as-inserts bootstrap, and every offset is a consistent
+  * cut (consistentCutN) that never splits a LakeTxn and never lands on a
+  * dead slot. Exactly-once falls out of determinism + checkpointing;
+  * LakeStreaming.mirror (one table) and mirrorTxnGroup (two or more)
+  * compose it into CDC table replication through one batch applier.
   */
 class LakeCdfStreamSpec extends SparkTestBase {
   import spark.implicits._
@@ -238,7 +242,137 @@ class LakeCdfStreamSpec extends SparkTestBase {
       Seq((3L, "extra"))
   }
 
-  // ---- transaction-consistent pair mirroring (LakeTxnCdfPairSource) ----
+  /** Drain with `maxVersionsPerTrigger = 1` under AvailableNow: every
+    * emitted row and every batch's (from, to) span.
+    */
+  private def drainCapped(root: String, cp: String,
+      startingVersion: Option[Long] = None): (Seq[Row], Set[(Long, Long)]) = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val spans = scala.collection.mutable.Set.empty[(Long, Long)]
+    val reader = spark.readStream.format("graft-lake-cdf")
+      .option("root", root).option("maxVersionsPerTrigger", "1")
+    startingVersion.foreach(v => reader.option("startingVersion", v.toString))
+    val q = reader.load()
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", cp)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val rows = b.collect()
+        buf.synchronized {
+          buf ++= rows
+          spans ++= rows.map(r => (r.getAs[Long]("_from_version"),
+            r.getAs[Long]("_to_version")))
+        }
+        ()
+      }
+      .start()
+    q.awaitTermination()
+    (buf.toSeq, spans.toSet)
+  }
+
+  private def kv(rows: Seq[Row]): Seq[(Long, String, String)] =
+    rows.map(r => (r.getAs[Long]("k"), r.getAs[String]("v"),
+      r.getAs[String]("_change_type"))).sorted
+
+  test("rate-capped stream steps over an aborted slot instead of wedging on it") {
+    val root = initSource(10) // v0
+    val cp = Files.createTempDirectory("graft-cdfsrc-cp9").toString
+    drainCapped(root, cp)._1 should have size 10 // bootstrap at v0
+    intercept[RuntimeException] {
+      graft.sinks.LakeTxn.atomically(spark, root) { t =>
+        t.merge(root, Seq((5L, "POISON")).toDF("k", "v"))
+        sys.error("abort after staging")
+      }
+    }
+    // slot 1 holds the aborted member; the cap-1 candidate lands on it
+    intercept[IllegalArgumentException](
+      LakeTable.manifest(spark, root, Some(1L)))
+    LakeTable.merge(spark, root, Seq((3L, "v3b")).toDF("k", "v")) // v2
+    LakeTable.merge(spark, root, Seq((100L, "v100")).toDF("k", "v")) // v3
+    LakeTable.manifest(spark, root).version shouldBe 3L
+    val (rows, spans) = drainCapped(root, cp)
+    spans shouldBe Set((0L, 2L), (2L, 3L))
+    kv(rows) shouldBe Seq((3L, "v3", "update_preimage"),
+      (3L, "v3b", "update_postimage"), (100L, "v100", "insert"))
+    // a restart from the same checkpoint rides on to the new head
+    LakeTable.merge(spark, root, Seq((101L, "v101")).toDF("k", "v")) // v4
+    val (rows2, spans2) = drainCapped(root, cp)
+    spans2 shouldBe Set((3L, 4L))
+    kv(rows2) shouldBe Seq((101L, "v101", "insert"))
+    // a fresh changes-only stream from v0 crosses the aborted slot too
+    val cp2 = Files.createTempDirectory("graft-cdfsrc-cp10").toString
+    val (rows3, spans3) = drainCapped(root, cp2, startingVersion = Some(0L))
+    spans3 shouldBe Set((0L, 2L), (2L, 3L), (3L, 4L))
+    kv(rows3) shouldBe Seq((3L, "v3", "update_preimage"),
+      (3L, "v3b", "update_postimage"), (100L, "v100", "insert"),
+      (101L, "v101", "insert"))
+    kv(rows3).exists(_._2 == "POISON") shouldBe false
+  }
+
+  test("rate-capped stream serves a one-table multi-member transaction as one span") {
+    val root = initSource(10) // v0
+    val cp = Files.createTempDirectory("graft-cdfsrc-cp11").toString
+    drainCapped(root, cp)._1 should have size 10
+    // one transaction, TWO members on this table: slots 1 and 2
+    graft.sinks.LakeTxn.atomically(spark, root) { t =>
+      t.merge(root, Seq((3L, "t3")).toDF("k", "v"))
+      t.merge(root, Seq((4L, "t4")).toDF("k", "v"))
+    }
+    LakeTable.manifest(spark, root).version shouldBe 2L
+    val (rows, spans) = drainCapped(root, cp)
+    // a cap of one version must not serve half the transaction
+    spans shouldBe Set((0L, 2L))
+    kv(rows).filter(_._3 == "update_postimage") shouldBe
+      Seq((3L, "t3", "update_postimage"), (4L, "t4", "update_postimage"))
+  }
+
+  test("parseOffset reads every checkpointed offset form; only the vector form is rendered") {
+    import LakeCdfSource.{parseOffset, renderOffset}
+    parseOffset("7", 1) shouldBe IndexedSeq(7L)
+    parseOffset("""{"a":3,"b":5}""", 2) shouldBe IndexedSeq(3L, 5L)
+    parseOffset("""{"v":[1,2,3]}""", 3) shouldBe IndexedSeq(1L, 2L, 3L)
+    renderOffset(IndexedSeq(7L)).json shouldBe """{"v":[7]}"""
+    renderOffset(IndexedSeq(3L, 5L)).json shouldBe """{"v":[3,5]}"""
+    parseOffset(renderOffset(IndexedSeq(1L, 2L, 3L)).json, 3) shouldBe
+      IndexedSeq(1L, 2L, 3L)
+    // an arity that differs from the stream's roots is refused
+    intercept[IllegalArgumentException](parseOffset("7", 2))
+    intercept[IllegalArgumentException](parseOffset("""{"a":3,"b":5}""", 3))
+    intercept[IllegalArgumentException](parseOffset("""{"v":[1,2]}""", 1))
+    // malformed input is refused
+    Seq("", "x", "1.5", """{"v":[]}""", """{"v":[1,x]}""", """{"a":3}""",
+      """{"w":[1]}""", """{"a":3,"b":}""").foreach { bad =>
+      intercept[IllegalArgumentException](parseOffset(bad, 1))
+    }
+  }
+
+  test("a checkpoint holding the bare-number offset form resumes exactly once") {
+    val root = initSource(10) // v0
+    val cp = Files.createTempDirectory("graft-cdfsrc-cp12").toString
+    drain(root, cp) should have size 10
+    LakeTable.merge(spark, root, Seq((3L, "v3b")).toDF("k", "v")) // v1
+    drain(root, cp) should have size 2
+    // rewrite the newest offsets/ entry to the single-table form written
+    // before the vector form (and drop its checksum so the log reads it)
+    val dir = new java.io.File(cp, "offsets")
+    val last = dir.listFiles().filter(_.getName.forall(_.isDigit))
+      .maxBy(_.getName.toLong)
+    val lines = Files.readAllLines(last.toPath)
+    lines.get(lines.size - 1) shouldBe """{"v":[1]}"""
+    lines.set(lines.size - 1, "1")
+    Files.write(last.toPath, String.join("\n", lines)
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    new java.io.File(dir, s".${last.getName}.crc").delete()
+    LakeTable.merge(spark, root, Seq((100L, "v100")).toDF("k", "v")) // v2
+    val rows = drain(root, cp)
+    rows.map(_.toSeq).sortBy(_.mkString("|")) shouldBe
+      LakeTable.changes(spark, root, 1L, 2L).collect()
+        .map(_.toSeq).sortBy(_.mkString("|"))
+    kv(rows) shouldBe Seq((100L, "v100", "insert"))
+    drain(root, cp) shouldBe empty
+  }
+
+  // ---- transaction-consistent pair mirroring (mirrorTxnGroup, N = 2) ----
 
   private def initPair(): (String, String) = {
     val a = Files.createTempDirectory("graft-pairA").toString
@@ -253,14 +387,14 @@ class LakeCdfStreamSpec extends SparkTestBase {
 
   private def runMirrorTxn(srcA: String, tgtA: String, srcB: String,
       tgtB: String, cp: String): Unit = {
-    val q = LakeStreaming.mirrorTxn(spark, srcA, tgtA, srcB, tgtB)
+    val q = LakeStreaming.mirrorTxnGroup(spark, Seq((srcA, tgtA), (srcB, tgtB)))
       .option("checkpointLocation", cp)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
   }
 
-  test("mirrorTxn: a cross-table transaction arrives in BOTH mirrors or in NEITHER — never torn") {
+  test("pair mirror: a cross-table transaction arrives in BOTH mirrors or in NEITHER — never torn") {
     val (a, b) = initPair()
     val tgtA = Files.createTempDirectory("graft-pairTgtA").toString
     val tgtB = Files.createTempDirectory("graft-pairTgtB").toString
@@ -299,7 +433,7 @@ class LakeCdfStreamSpec extends SparkTestBase {
     LakeTable.read(spark, tgtB).count() shouldBe 5
   }
 
-  test("mirrorTxn rate limit: a backlog drains as bounded spans, transactions still never split") {
+  test("pair mirror rate limit: a backlog drains as bounded spans, transactions still never split") {
     val (a, b) = initPair()
     val tgtA = Files.createTempDirectory("graft-pairRlTgtA").toString
     val tgtB = Files.createTempDirectory("graft-pairRlTgtB").toString
@@ -311,7 +445,7 @@ class LakeCdfStreamSpec extends SparkTestBase {
     val cp = Files.createTempDirectory("graft-pairRl-cp").toString
     var batches = 0
     def drainCapped(): Unit = {
-      val q = LakeStreaming.mirrorTxn(spark, a, tgtA, b, tgtB,
+      val q = LakeStreaming.mirrorTxnGroup(spark, Seq((a, tgtA), (b, tgtB)),
         maxVersionsPerTrigger = Some(1L))
         .option("checkpointLocation", cp)
         .trigger(Trigger.AvailableNow())
@@ -338,8 +472,10 @@ class LakeCdfStreamSpec extends SparkTestBase {
       .head().getString(1) shouldBe "segX"
   }
 
-  test("consistentCut clamps a candidate that would split a transaction") {
+  test("consistentCutN clamps a 2-root candidate that would split a transaction") {
     val (a, b) = initPair()
+    def cut(prev: IndexedSeq[Long], cand: IndexedSeq[Long]) =
+      LakeCdfSource.consistentCutN(spark, Seq(a, b), prev, cand)
     val headA0 = LakeTable.manifest(spark, a).version
     val headB0 = LakeTable.manifest(spark, b).version
     graft.sinks.LakeTxn.atomically(spark, a) { t =>
@@ -351,22 +487,21 @@ class LakeCdfStreamSpec extends SparkTestBase {
     // the torn candidate a racing commit produces: A's head includes the
     // txn member, B's candidate (polled earlier) does not — the cut must
     // clamp A back below its member
-    graft.streaming.LakeTxnCdfPairSource.consistentCut(spark, a, b,
-      headA0, headB0, vA, vB - 1) shouldBe ((vA - 1, vB - 1))
+    cut(IndexedSeq(headA0, headB0), IndexedSeq(vA, vB - 1)) shouldBe
+      IndexedSeq(vA - 1, vB - 1)
     // symmetric direction
-    graft.streaming.LakeTxnCdfPairSource.consistentCut(spark, a, b,
-      headA0, headB0, vA - 1, vB) shouldBe ((vA - 1, vB - 1))
+    cut(IndexedSeq(headA0, headB0), IndexedSeq(vA - 1, vB)) shouldBe
+      IndexedSeq(vA - 1, vB - 1)
     // both members inside: nothing clamps
-    graft.streaming.LakeTxnCdfPairSource.consistentCut(spark, a, b,
-      headA0, headB0, vA, vB) shouldBe ((vA, vB))
+    cut(IndexedSeq(headA0, headB0), IndexedSeq(vA, vB)) shouldBe
+      IndexedSeq(vA, vB)
     // non-txn commits never clamp
     LakeTable.merge(spark, a, Seq((5L, 50.0)).toDF("fk", "amt"))
     val vA2 = LakeTable.manifest(spark, a).version
-    graft.streaming.LakeTxnCdfPairSource.consistentCut(spark, a, b,
-      vA, vB, vA2, vB) shouldBe ((vA2, vB))
+    cut(IndexedSeq(vA, vB), IndexedSeq(vA2, vB)) shouldBe IndexedSeq(vA2, vB)
   }
 
-  test("consistentCut keeps a same-table multi-member transaction whole") {
+  test("consistentCutN keeps a same-table multi-member transaction whole") {
     val (a, b) = initPair()
     val h0 = LakeTable.manifest(spark, a).version
     val hB = LakeTable.manifest(spark, b).version
@@ -378,11 +513,11 @@ class LakeCdfStreamSpec extends SparkTestBase {
     val vA = LakeTable.manifest(spark, a).version // the second member
     // a candidate covering only the FIRST member must clamp below it —
     // half a chain is a state the source never served
-    graft.streaming.LakeTxnCdfPairSource.consistentCut(spark, a, b,
-      h0, hB, vA - 1, hB) shouldBe ((h0, hB))
+    LakeCdfSource.consistentCutN(spark, Seq(a, b), IndexedSeq(h0, hB),
+      IndexedSeq(vA - 1, hB)) shouldBe IndexedSeq(h0, hB)
     // covering both members passes through unclamped
-    graft.streaming.LakeTxnCdfPairSource.consistentCut(spark, a, b,
-      h0, hB, vA, hB) shouldBe ((vA, hB))
+    LakeCdfSource.consistentCutN(spark, Seq(a, b), IndexedSeq(h0, hB),
+      IndexedSeq(vA, hB)) shouldBe IndexedSeq(vA, hB)
   }
 
   test("mirrorTxnGroup: a THREE-table transaction arrives whole in every mirror or in none") {
@@ -488,8 +623,7 @@ class LakeCdfStreamSpec extends SparkTestBase {
   }
 
   test("group mirror: additive widening on ONE member reaches its replica across a restart, the other two untouched") {
-    // the N-root twin of the pair widening spec above (r14 verdict task
-    // 4): the group source re-derives every member's schema from its
+    // the N-root twin of the pair widening spec above: the group source re-derives every member's schema from its
     // CURRENT manifest at (re)creation, and the vector offsets are
     // schema-independent versions — so a restart replays the widened
     // member's span WITH the new column while the other members' spans
@@ -623,10 +757,9 @@ class LakeCdfStreamSpec extends SparkTestBase {
     }
     val h1 = IndexedSeq(a, b, c).map(r => LakeTable.manifest(spark, r).version)
     def cut(cand: IndexedSeq[Long]) =
-      graft.streaming.LakeTxnCdfGroupSource.consistentCutN(spark,
-        Seq(a, b, c), h0, cand)
+      LakeCdfSource.consistentCutN(spark, Seq(a, b, c), h0, cand)
     // the THIRD member beyond its candidate clamps the other two below
-    // their members — the tear a pair source cannot see
+    // their members — the tear a 2-root cut cannot see
     cut(IndexedSeq(h1(0), h1(1), h1(2) - 1)) shouldBe
       IndexedSeq(h1(0) - 1, h1(1) - 1, h1(2) - 1)
     // middle member behind: same, on the other axes
@@ -634,9 +767,10 @@ class LakeCdfStreamSpec extends SparkTestBase {
       IndexedSeq(h1(0) - 1, h1(1) - 1, h1(2) - 1)
     // all three inside: nothing clamps
     cut(h1) shouldBe h1
-    // the pair cut is literally the N = 2 instance
-    graft.streaming.LakeTxnCdfPairSource.consistentCut(spark, a, b,
-      h0(0), h0(1), h1(0), h1(1)) shouldBe ((h1(0), h1(1)))
+    // the 2-root cut over two of the three members sees no tear: the
+    // third member's table is outside its roots
+    LakeCdfSource.consistentCutN(spark, Seq(a, b), IndexedSeq(h0(0), h0(1)),
+      IndexedSeq(h1(0), h1(1))) shouldBe IndexedSeq(h1(0), h1(1))
   }
 
   test("consistentCutN clamps onto a LIVE slot — never an aborted one getBatch can't serve") {
@@ -661,24 +795,24 @@ class LakeCdfStreamSpec extends SparkTestBase {
     // vA-1 is the ABORTED one: an offset there wedges the stream (the
     // checkpointed cut feeds changes()/read(), which demand liveness).
     // The clamp must walk down to the live slot below.
-    val cut = graft.streaming.LakeTxnCdfGroupSource.consistentCutN(spark,
+    val cut = LakeCdfSource.consistentCutN(spark,
       Seq(a, b), IndexedSeq(h0A, h0B), IndexedSeq(vA, vB - 1))
     cut shouldBe IndexedSeq(h0A, vB - 1)
     noException should be thrownBy
       LakeTable.manifest(spark, a, Some(cut(0)))
     // a rate cap hands the cut RAW slot numbers (prev + n) that can land
     // on the dead slot directly: the initial candidates normalize too
-    graft.streaming.LakeTxnCdfGroupSource.consistentCutN(spark,
+    LakeCdfSource.consistentCutN(spark,
       Seq(a, b), IndexedSeq(h0A - 1, h0B), IndexedSeq(h0A + 1, h0B))
       .shouldBe(IndexedSeq(h0A, h0B))
     // knownLive (r15): a candidate the poller already verified live
     // skips the direct probe — same cut, one less manifest/outcome read
     // per root per poll in the uncapped steady state. A candidate BELOW
     // the known-live head (rate cap) still normalizes via the probe.
-    graft.streaming.LakeTxnCdfGroupSource.consistentCutN(spark,
+    LakeCdfSource.consistentCutN(spark,
       Seq(a, b), IndexedSeq(h0A, h0B), IndexedSeq(vA, vB - 1),
       knownLive = IndexedSeq(vA, vB)) shouldBe IndexedSeq(h0A, vB - 1)
-    graft.streaming.LakeTxnCdfGroupSource.consistentCutN(spark,
+    LakeCdfSource.consistentCutN(spark,
       Seq(a, b), IndexedSeq(h0A - 1, h0B), IndexedSeq(h0A + 1, h0B),
       knownLive = IndexedSeq(vA, vB)) shouldBe IndexedSeq(h0A, h0B)
   }
