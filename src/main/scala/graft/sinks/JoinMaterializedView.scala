@@ -28,13 +28,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Scale shape — the whole point of the two-leg split:
   *   - `ΔF ⋈ D_new`: delivery-sized fact delta against the dim read via
-  *     [[LakeTable.readForJoin]] — a dim under the byte threshold is
-  *     broadcast, so the common leg is a map-side join of a small delta.
+  *     [[LakeTable.readForJoin]] — [[LakeTable.scan]]'s relation, broadcast
+  *     under the byte threshold: a map-side join of a small delta.
   *   - `F_old ⋈ ΔD`: the dangerous leg — every old fact row matching a
   *     changed dim key. The changed pks are delivery-sized, so the scan
   *     routes through [[LakeTable.dynamicPrunedScan]] on the join column
   *     at the fact's PINNED old version: an `InSet` over those keys on
-  *     [[LakeTable.scan]], whose zone maps ∩ blooms open only the files
+  *     that relation, whose zone maps ∩ blooms open only the files
   *     that can hold them (a fact clustered on fk opens a sliver),
   *     degrading to a full scan past `maxDimDeltaKeys` — never a wrong
   *     prune. A quiet dim (the usual delivery) skips the leg entirely.

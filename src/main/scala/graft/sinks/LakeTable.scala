@@ -206,21 +206,6 @@ object LakeTable {
       if (filesEager != null) filesEager.size else segments.map(_.files).sum
   }
 
-  /** The live files of `m` inside the buckets `touched` selects,
-    * resolving ONLY the refs whose bucket set intersects — a delivery
-    * touching k buckets parses O(refs covering k buckets) segments,
-    * never the whole table's. The read half of the O(delta) commit
-    * discipline: [[rewriteTouched]] and friends use this for the hot
-    * side and never materialize the full live-file list.
-    */
-  private def filesInBuckets(spark: SparkSession, root: String, m: Manifest,
-      touched: Int => Boolean): Seq[(String, Int)] =
-    if (m.filesEager != null) m.filesEager.filter { case (_, b) => touched(b) }
-    else m.segments.withFilter(_.buckets.exists(touched)).flatMap { ref =>
-      liveEntries(ref, loadSegment(spark, root, ref.path))
-        .withFilter(e => touched(e.bucket)).map(e => (e.path, e.bucket))
-    }
-
   /** The entries of `seg` still live under `ref`: bucket listed, index
     * not retired.
     */
@@ -926,33 +911,22 @@ object LakeTable {
     * pass over only those files — row count, zone min/max per statsCol,
     * bloom per bloomCol, HLL sketch per ndvCol, grouped on the physical
     * file (the pre-r12 design paid three separate passes). File sizes
-    * come from one directory listing per parent. Tables declaring no
-    * indexed columns skip the scan entirely (rows = -1). A zero-row file
-    * produces no aggregation group and synthesizes an empty entry — its
-    * IDENTITY must survive into the segment (entries ARE the file list).
+    * come from one listing per parent ([[listedPart]]), which the pass
+    * then reads. Tables declaring no indexed columns skip the scan
+    * entirely (rows = -1). A zero-row file produces no aggregation group
+    * and synthesizes an empty entry — its IDENTITY must survive into the
+    * segment (entries ARE the file list).
     */
   private def measureEntries(spark: SparkSession, root: String, m: Manifest,
       paths: Seq[(String, Int)]): Seq[SegEntry] = {
     if (paths.isEmpty) return Nil
-    val conf = spark.sparkContext.hadoopConfiguration
-    val byDir = paths.map(_._1).groupBy(f => new Path(root, f).getParent)
-    val lens: Map[Path, Long] = byDir.keysIterator.flatMap { d =>
-      d.getFileSystem(conf).listStatus(d).iterator
-        .map(st => st.getPath -> st.getLen)
-    }.toMap
-    def lenOf(p: String): Long = {
-      val p0 = new Path(root, p)
-      val fsys = p0.getFileSystem(conf)
-      lens.getOrElse(fsys.makeQualified(p0), fsys.getFileStatus(p0).getLen)
-    }
+    val listed = listedPart(spark, root, paths)
     val nS = m.statsCols.size; val nB = m.bloomCols.size
     val nN = m.ndvCols.size
+    if (nS + nB + nN == 0) return listed.entries
     val noneS = IndexedSeq.fill(nS)(Option.empty[String])
     val noneB = IndexedSeq.fill(nB)(Option.empty[String])
     val noneN = IndexedSeq.fill(nN)(Option.empty[String])
-    if (nS + nB + nN == 0)
-      return paths.map { case (p, b) =>
-        SegEntry(p, b, -1L, lenOf(p), noneS, noneS, noneB, noneN) }
     val keyOf = manifestKeyOf(paths.map(_._1))
     val (items, bits) = bloomShape(m)
     val statAggs = m.statsCols.flatMap(c => Seq(
@@ -974,7 +948,8 @@ object LakeTable {
     val b64enc = java.util.Base64.getEncoder
     val measured: Map[String, SegEntry] =
       graft.JobLabel(spark, s"lake:measure ${new Path(root).getName}") {
-        readFiles(spark, root, m, paths.map(_._1))
+        fileRelation(spark, root, m, StructType.fromDDL(m.schemaDdl),
+          Seq(listed), snapshot = false)
           .groupBy(input_file_name().alias("__f"))
           .agg(aggs.head, aggs.tail: _*)
           .collect()
@@ -991,10 +966,11 @@ object LakeTable {
               .map(b64enc.encodeToString))
           p -> SegEntry(p, -1, r.getLong(1), -1L, mins, maxs, blooms, sks)
         }.toMap
-    paths.map { case (p, b) =>
-      measured.get(p) match {
-        case Some(e) => e.copy(bucket = b, bytes = lenOf(p))
-        case None => SegEntry(p, b, 0L, lenOf(p), noneS, noneS, noneB, noneN)
+    listed.entries.map { l =>
+      measured.get(l.path) match {
+        case Some(e) => e.copy(bucket = l.bucket, bytes = l.bytes)
+        case None => l.copy(rows = 0L, mins = noneS, maxs = noneS,
+          blooms = noneB, sks = noneN)
       }
     }
   }
@@ -1300,35 +1276,16 @@ object LakeTable {
     out.toSeq
   }
 
-  private def readWith(spark: SparkSession, root: String, schema: StructType,
-      paths: Seq[String]): DataFrame =
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
-    else spark.read.schema(schema)
-      .parquet(paths.map(p => new Path(root, p).toString): _*)
-
-  private def readFiles(spark: SparkSession, root: String, m: Manifest,
-      paths: Seq[String]): DataFrame =
-    readWith(spark, root, StructType.fromDDL(m.schemaDdl), paths)
-
-  private def keySchema(m: Manifest): StructType =
-    StructType(StructType.fromDDL(m.schemaDdl).fields
-      .filter(f => m.keys.contains(f.name)))
-
-  /** The deletion-vector keys of `dvPaths` (key-only rows). */
-  private def readDv(spark: SparkSession, root: String, m: Manifest,
-      dvPaths: Seq[String]): DataFrame =
-    readWith(spark, root, keySchema(m), dvPaths)
-
   /** `df` minus the rows whose key appears in the given deletion vectors
-    * — the merge-on-read subtraction every read path applies (NULL-safe:
-    * a NULL-keyed row is deletable like any other).
+    * (key-only files) — the merge-on-read subtraction every read path
+    * applies (NULL-safe: a NULL-keyed row is deletable like any other).
     */
   private def applyDv(spark: SparkSession, root: String, m: Manifest,
       df: DataFrame, dv: Seq[(String, Int)]): DataFrame =
     if (dv.isEmpty) df
-    else keyMembershipJoin(df, readDv(spark, root, m, dv.map(_._1)),
+    else keyMembershipJoin(df, pathRead(spark, root, m, dv.map(_._1),
+      Some(StructType(StructType.fromDDL(m.schemaDdl).fields
+        .filter(f => m.keys.contains(f.name))))),
       m.keys, "left_anti", bcast = false)
 
   // ---- per-file metadata readers (segment-backed) ----------------------
@@ -1634,7 +1591,7 @@ object LakeTable {
       if (foreignF.isEmpty && foreignDv.isEmpty) m.version
       else {
         val rows = applyDv(spark, root, m,
-          readFiles(spark, root, m, foreignF.map(_._1)), m.dvFiles)
+          pathRead(spark, root, m, foreignF.map(_._1)), m.dvFiles)
         // layout-preserving (zSortIfMarked): detached foreign rows write
         // z-sorted under the marker's frozen axes and join the marker —
         // otherwise the detach would silently z-stale everything it
@@ -2029,7 +1986,7 @@ object LakeTable {
       if (hot.isEmpty && m.dvFiles.isEmpty) m.version
       else {
         val cur = applyDv(spark, root, m,
-          readFiles(spark, root, m, hot.map(_._1)), m.dvFiles)
+          pathRead(spark, root, m, hot.map(_._1)), m.dvFiles)
         val nums = mk.zCols.map(c => zNumeric(col(c), schema(c).dataType))
         val ranged = nums.zip(mk.axes).map { case (n, (mn, mx)) =>
           (n, mn, mx) }
@@ -2241,42 +2198,36 @@ object LakeTable {
     }
   }
 
-  /** Read a version (default: newest) as an explicit-file-list DataFrame,
-    * deletion vectors applied.
+  /** Read a version (default: newest), deletion vectors applied: the
+    * [[scan]] relation, planned from the manifest alone.
     */
   def read(spark: SparkSession, root: String,
-      version: Option[Long] = None): DataFrame = {
-    val m = manifest(spark, root, version)
-    applyDv(spark, root, m, readFiles(spark, root, m, m.files.map(_._1)),
-      m.dvFiles)
-  }
+      version: Option[Long] = None): DataFrame = scan(spark, root, version)
 
-  /** Total on-disk bytes of the LIVE data files: manifest listing plus one
-    * `FileStatus` per file — no data file opened. The size statistic the
-    * join planner wants (Spark's own broadcast decision reasons about scan
-    * bytes the same way); deletion vectors only shrink the live rows, so
-    * this is an upper bound under MoR deletes.
+  /** Total on-disk bytes of the LIVE data files, no data file opened —
+    * the `sizeInBytes` [[scan]] plans with, the statistic Spark's own
+    * broadcast decision reasons about; deletion vectors only shrink the
+    * live rows, so this is an upper bound under MoR deletes.
     */
   def tableBytes(spark: SparkSession, root: String,
       version: Option[Long] = None): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val m = manifest(spark, root, version)
     // the refs carry exact live byte totals (file sizes are segment
-    // metadata) — zero filesystem RPCs; refs predating the byte field
-    // (-1) fall back to per-path status, per-path filesystem because a
-    // shallow clone may reference files on the source's scheme
-    if (m.segments.nonEmpty && m.segments.forall(_.bytes >= 0))
-      m.segments.map(_.bytes).sum
-    else m.files.map { f =>
-      val p = new Path(root, f._1)
-      p.getFileSystem(conf).getFileStatus(p).getLen
-    }.sum
+    // metadata) — zero filesystem RPCs; an entry predating the byte
+    // field falls back to its own status, on its own filesystem because
+    // a shallow clone may reference files on the source's scheme
+    segmentParts(spark, root, manifest(spark, root, version), None)
+      .map(_.size { e =>
+        val p = new Path(root, e.path)
+        p.getFileSystem(conf).getFileStatus(p).getLen
+      }).sum
   }
 
   /** [[read]] with a metadata-decided join strategy: tables whose live
     * bytes fit under `thresholdBytes` come back broadcast-hinted, so a
-    * join against them is a broadcast hash join regardless of what the
-    * optimizer could prove about an explicit-file-list scan. The decision
+    * join against them is a broadcast hash join whatever the optimizer's
+    * size estimate of the plan above the scan (a deletion-vector
+    * anti-join, a projection) says. The decision
     * reads ONLY the manifest and file lengths ([[tableBytes]]) — the
     * ANALYZE-driven plan choice at 100 TB: a dim table stays broadcast as
     * it accretes versions until the day it actually outgrows the
@@ -2610,13 +2561,10 @@ object LakeTable {
     }
     // hot side only: resolve JUST the refs covering the touched buckets —
     // the cold live-file list is never materialized (at 10⁷ files that
-    // was the last O(live files) driver step per commit)
-    val hot = filesInBuckets(spark, root, m, touched)
-    // a rewritten bucket folds its deletion vectors in (the rows are
-    // gone from the fresh files, so the vectors retire with the rewrite)
-    val dvHot = m.dvFiles.filter { case (_, b) => touched(b) }
-    val cur = applyDv(spark, root, m,
-      readFiles(spark, root, m, hot.map(_._1)), dvHot)
+    // was the last O(live files) driver step per commit). A rewritten
+    // bucket folds its deletion vectors in (the rows are gone from the
+    // fresh files, so the vectors retire with the rewrite)
+    val cur = bucketRead(spark, root, m, touched)
     val merged = apply(cur, source)
     val fresh = writeFiles(spark, root, merged, m.keys, m.numBuckets,
       m.sortCols, m.maxRecordsPerFile)
@@ -2673,9 +2621,7 @@ object LakeTable {
       if (m.dvFiles.isEmpty) m.version
       else {
         val dvB = m.dvFiles.map(_._2).toSet
-        val hot = filesInBuckets(spark, root, m, dvB)
-        val cur = applyDv(spark, root, m,
-          readFiles(spark, root, m, hot.map(_._1)), m.dvFiles)
+        val cur = bucketRead(spark, root, m, dvB)
         val (mk, zExprs) = zSortIfMarked(spark, root, m)
         val fresh = writeFiles(spark, root, cur, m.keys, m.numBuckets,
           m.sortCols, m.maxRecordsPerFile, sortExprs = zExprs)
@@ -2774,7 +2720,7 @@ object LakeTable {
         else lit(null).cast(schema(c).dataType).alias(c)): _*)
       w.select(keys.map(col) :+ struct(cols.map(col): _*).alias(alias): _*)
     }
-    val post = readFiles(spark, root, next, freshPaths)
+    val post = pathRead(spark, root, next, freshPaths)
     val feed = explodeDiff(nullSafeKeyJoin(
       side(pre, "__pre"), side(post, "__post"), keys, "full_outer")
       .select(col("__pre"), col("__post")))
@@ -2807,10 +2753,11 @@ object LakeTable {
     * re-merged identical rows net to nothing). All plan-side: a grouped
     * min_by/max_by over delivery-sized feed rows; presence rides an
     * explicit flag so a NULL pre/post (insert/delete) survives the
-    * aggregation. Pre-widening step feeds union in by name with NULLs.
+    * aggregation. Pre-widening step feeds union in by name with NULLs;
+    * each reads under its step manifest's schema plus `_change_type`.
     */
   private def recordedFeed(spark: SparkSession, root: String,
-      steps: Seq[(Long, Seq[String])], toSchema: StructType,
+      steps: Seq[(Manifest, Seq[String])], toSchema: StructType,
       keys: Seq[String]): DataFrame = {
     val cols = toSchema.fieldNames.toSeq
     def empty: DataFrame = spark.createDataFrame(
@@ -2821,8 +2768,10 @@ object LakeTable {
         if (d.columns.contains(c)) col(c).cast(toSchema(c).dataType)
         else lit(null).cast(toSchema(c).dataType).alias(c)) :+
         col("_change_type"): _*)
-    val frames = steps.collect { case (v, paths) if paths.nonEmpty =>
-      (v, spark.read.parquet(paths.map(p => s"$root/$p"): _*)) }
+    val frames = steps.collect { case (step, paths) if paths.nonEmpty =>
+      (step.version, pathRead(spark, root, step, paths, Some(
+        StructType.fromDDL(step.schemaDdl).add("_change_type", "string"))))
+    }
     frames match {
       case Seq() => empty
       case Seq((_, one)) => project(one)
@@ -2926,38 +2875,34 @@ object LakeTable {
     // version, a deleteMor, a restore, a crash-lost marker) falls back.
     // COST GATE for multi-step spans: netting aggregates the feed rows,
     // so it only undercuts the snapshot diff when the summed feed bytes
-    // undercut the two snapshot sides (metadata-only FileStatus check —
+    // undercut the two snapshot sides (sizes from segments and one
+    // listing per feed directory —
     // a span of table-scale scattered deliveries carries MORE feed than
     // table and the diff is cheaper; a span of delivery-sized steps is
     // the recorded path's whole point). A single recorded step IS the
     // diff and always serves directly. Both paths are value-identical
     // (CdfRecordedSpec twin-checks), so the choice is purely cost.
-    val recorded: Option[Seq[(Long, Seq[String])]] = {
+    val recorded: Option[Seq[(Manifest, Seq[String])]] = {
       // DEAD transaction slots inside the span contributed nothing to the
       // live chain — exclude them (their feeds, if any were recorded
       // before the abort, describe content that never became visible)
       val span = ((fromVersion + 1) to toVersion)
-        .filter(v => scala.util.Try(manifestAt(spark, root, v)).toOption
-          .exists(liveOf(spark, _))) // missing slot = vacuumed abort
-        .map(v => v -> readCdfMarker(spark, root, v))
+        .flatMap(v => scala.util.Try(manifestAt(spark, root, v)).toOption
+          .filter(liveOf(spark, _))) // missing slot = vacuumed abort
+        .map(m => m -> readCdfMarker(spark, root, m.version))
       if (span.nonEmpty && span.forall(_._2.isDefined))
-        Some(span.map { case (v, p) => (v, p.get) })
+        Some(span.map { case (m, p) => (m, p.get) })
       else None
     }
+    val hot: Int => Boolean =
+      if (mf.numBuckets == mt.numBuckets) changedBuckets(mf, mt)
+      else _ => true // rebucket in the span: full value diff (see doc)
     val serveRecorded = recorded.exists { steps =>
-      val nonEmpty = steps.count(_._2.nonEmpty)
-      if (nonEmpty <= 1) true
-      else {
-        val fsys = hfs(spark, root)
-        def len(p: String) = scala.util.Try(
-          fsys.getFileStatus(new Path(root, p)).getLen).getOrElse(0L)
-        val feedBytes = steps.flatMap(_._2).map(len).sum
-        val hot: Int => Boolean =
-          if (mf.numBuckets == mt.numBuckets) changedBuckets(mf, mt)
-          else _ => true
-        val snapBytes = (filesInBuckets(spark, root, mf, hot) ++
-            filesInBuckets(spark, root, mt, hot))
-          .map(f => len(f._1)).sum
+      steps.count(_._2.nonEmpty) <= 1 || {
+        val feedBytes = listedPart(spark, root,
+          steps.flatMap(_._2).map(_ -> -1)).entries.map(_.bytes).sum
+        val snapBytes = Seq(mf, mt).flatMap(segmentParts(spark, root, _,
+          Some(hot)).flatMap(_.entries)).map(_.bytes max 0L).sum
         feedBytes <= snapBytes
       }
     }
@@ -2966,18 +2911,12 @@ object LakeTable {
     val body = if (serveRecorded)
         recordedFeed(spark, root, recorded.get, toSchema, mt.keys)
       else {
-        val hot: Int => Boolean =
-          if (mf.numBuckets == mt.numBuckets) changedBuckets(mf, mt)
-          else _ => true // rebucket in the span: full value diff (see doc)
         def side(m: Manifest, alias: String): DataFrame = {
           // both sides read with the TO schema: pre-widening files surface
           // the new columns as NULL, exactly what their snapshot
           // contained; each side subtracts ITS OWN deletion vectors (hot
           // buckets only)
-          val df = applyDv(spark, root, m,
-            readFiles(spark, root, mt,
-              filesInBuckets(spark, root, m, hot).map(_._1)),
-            m.dvFiles.filter(f => hot(f._2)))
+          val df = bucketRead(spark, root, m, hot, Some(toSchema))
           df.select(m.keys.map(col) :+
             struct(cols.map(col): _*).alias(alias): _*)
         }
@@ -3037,10 +2976,7 @@ object LakeTable {
       case Some(h) if h.matches(m) => h.buckets
       case _ => touchedBuckets(p, m.keys, m.numBuckets)
     }
-    val live = applyDv(spark, root, m,
-      readFiles(spark, root, m,
-        filesInBuckets(spark, root, m, touched).map(_._1)),
-      m.dvFiles.filter(f => touched(f._2)))
+    val live = bucketRead(spark, root, m, touched)
     local match {
       case Some(rows) =>
         // InSet on a struct compares under the interpreted ordering, whose
@@ -3077,15 +3013,15 @@ object LakeTable {
 
   // ---- plan-time sidecar pruning: the FileIndex-backed declarative scan
 
-  /** (files listed, live files) of the last [[SidecarFileIndex]] listing
-    * this JVM ran with at least one data filter — spec pin for the
+  /** (files listed, live files) of the last [[scan]] listing this JVM
+    * ran with a data filter the sidecars could judge — spec pin for the
     * plan-time pruning contract; not part of the public API.
     */
   private[graft] var lastIndexScan: Option[(Int, Int)] = None
 
-  /** (segments kept, total segments) of the last listing with data
-    * filters — spec pin for the manifest-level (ref summary) dismissal;
-    * not part of the public API.
+  /** (segments kept, total segments) of the same listing — spec pin for
+    * the manifest-level (ref summary) dismissal; not part of the public
+    * API.
     */
   private[graft] var lastIndexSegments: Option[(Int, Int)] = None
 
@@ -3147,11 +3083,119 @@ object LakeTable {
     }
   }
 
-  /** A snapshot's live files as a Catalyst
-    * [[org.apache.spark.sql.execution.datasources.FileIndex]] whose
-    * `listFiles` answers the planner's `dataFilters` from the zone-map and
-    * bloom sidecars — the Delta `TahoeFileIndex` design point, original
-    * implementation, and the ONLY code that decides sidecar pruning: ANY
+  /** One prunable unit of a [[SidecarFileIndex]]: zone summary (empty =
+    * none), file count, byte total (-1 = sum the entries) and the live
+    * entries, loaded only when a listing reaches the part. `size` falls
+    * back to `len` for an entry with no recorded bytes.
+    */
+  private final class IndexPart(val summaryMins: Seq[Option[String]],
+      val summaryMaxs: Seq[Option[String]], val count: Int,
+      bytes: Long, loader: () => Seq[SegEntry]) {
+    lazy val entries: Seq[SegEntry] = loader()
+    def size(len: SegEntry => Long): Long = if (bytes >= 0) bytes
+      else entries.map(e => if (e.bytes >= 0) e.bytes else len(e)).sum
+  }
+
+  /** `m`'s live files, one part per segment ref. Confined to `buckets`,
+    * only the refs covering one resolve — O(touched refs) — each cut to
+    * its entries there, so it sizes as those entries, not the ref total.
+    * A legacy manifest (inline file list) is one [[listedPart]].
+    */
+  private def segmentParts(spark: SparkSession, root: String, m: Manifest,
+      buckets: Option[Int => Boolean]): Seq[IndexPart] = {
+    def payloads(r: SegmentRef): Seq[SegEntry] = {
+      val seg = loadSegment(spark, root, r.path)
+      val es = liveEntries(r, seg)
+      if (seg.statsCols == m.statsCols && seg.bloomCols == m.bloomCols) es
+      else es.map(_.copy(mins = IndexedSeq.empty,
+        maxs = IndexedSeq.empty, blooms = IndexedSeq.empty))
+    }
+    if (m.segments.isEmpty && m.filesEager != null)
+      Seq(listedPart(spark, root, buckets.fold(m.filesEager)(in =>
+        m.filesEager.filter(f => in(f._2)))))
+    else buckets match {
+      case None => m.segments.map(r =>
+        new IndexPart(r.mins, r.maxs, r.files, r.bytes, () => payloads(r)))
+      case Some(in) => m.segments.filter(_.buckets.exists(in)).map { r =>
+        val es = payloads(r).filter(e => in(e.bucket))
+        new IndexPart(r.mins, r.maxs, es.size, -1L, () => es)
+      }
+    }
+  }
+
+  /** `paths` as one summary-less part of payload-less entries (rows -1:
+    * every verdict keeps them) sized by ONE listing per parent directory
+    * — a status call only for a file its directory's listing missed.
+    */
+  private def listedPart(spark: SparkSession, root: String,
+      paths: Seq[(String, Int)]): IndexPart =
+    new IndexPart(Nil, Nil, paths.size, -1L, () => {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val lens: Map[Path, Long] = paths.map(f => new Path(root, f._1))
+        .map(_.getParent).distinct.iterator.flatMap { d =>
+          d.getFileSystem(conf).listStatus(d).iterator
+            .map(st => st.getPath -> st.getLen)
+        }.toMap
+      val none = IndexedSeq.empty[Option[String]]
+      paths.map { case (f, b) =>
+        val p0 = new Path(root, f)
+        val fsys = p0.getFileSystem(conf)
+        SegEntry(f, b, -1L, lens.getOrElse(fsys.makeQualified(p0),
+          fsys.getFileStatus(p0).getLen), none, none, none, none)
+      }
+    })
+
+  /** THE lake file relation: `parts` read as parquet under `schema`
+    * (nullable, like every file read) through a [[SidecarFileIndex]] —
+    * nothing listed or inferred at plan time. Only a `snapshot` (the
+    * whole version [[scan]] reads) carries the tags
+    * [[graft.plans.LakeMetadataAggs]] answers from and writes the
+    * [[lastIndexScan]] pins: a subset must never get a table-wide
+    * COUNT/MIN/MAX.
+    */
+  private def fileRelation(spark: SparkSession, root: String, m: Manifest,
+      schema: StructType, parts: Seq[IndexPart],
+      snapshot: Boolean): DataFrame = {
+    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      new SidecarFileIndex(spark, root, m, schema, parts, snapshot),
+      new StructType(), GraftSqlBridge.asNullable(schema), None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      if (!snapshot) Map.empty
+      else Map("graft.lake.root" -> root,
+        "graft.lake.version" -> m.version.toString))(spark)
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .baseRelationToDataFrame(rel)
+  }
+
+  /** `m`'s live rows in `buckets`, their deletion vectors applied: a
+    * rewrite's hot side, [[lookup]], and each snapshot-diff [[changes]]
+    * side (under the span's TO `schema`).
+    */
+  private def bucketRead(spark: SparkSession, root: String, m: Manifest,
+      buckets: Int => Boolean,
+      schema: Option[StructType] = None): DataFrame =
+    applyDv(spark, root, m,
+      fileRelation(spark, root, m,
+        schema.getOrElse(StructType.fromDDL(m.schemaDdl)),
+        segmentParts(spark, root, m, Some(buckets)), snapshot = false),
+      m.dvFiles.filter(f => buckets(f._2)))
+
+  /** A fixed list of files (root-relative or absolute) under `schema`
+    * (default: `m`'s): fresh commit files, a clone's foreign files, hot
+    * z-order files, deletion vectors, recorded change feeds.
+    */
+  private def pathRead(spark: SparkSession, root: String, m: Manifest,
+      paths: Seq[String], schema: Option[StructType] = None): DataFrame =
+    fileRelation(spark, root, m,
+      schema.getOrElse(StructType.fromDDL(m.schemaDdl)),
+      Seq(listedPart(spark, root, paths.map(_ -> -1))), snapshot = false)
+
+  /** The caller's `parts` as a Catalyst
+    * [[org.apache.spark.sql.execution.datasources.FileIndex]] (the only
+    * one [[fileRelation]] builds) whose `listFiles` answers the planner's
+    * `dataFilters` from the zone-map and bloom sidecars — the Delta
+    * `TahoeFileIndex` design point, original implementation, and the
+    * ONLY code that decides sidecar pruning: ANY
     * predicate over [[scan]] — DataFrame `.filter`, SQL text over a temp
     * view, a conjunct Catalyst pushed through a join, the `InSet` of
     * [[dynamicPrunedScan]] — skips files without the caller knowing the
@@ -3185,58 +3229,16 @@ object LakeTable {
     *     keeps the file.
     */
   private final class SidecarFileIndex(spark: SparkSession, root: String,
-      m: Manifest)
+      m: Manifest, schema: StructType, parts: Seq[IndexPart],
+      snapshot: Boolean)
       extends org.apache.spark.sql.execution.datasources.FileIndex {
     import org.apache.spark.sql.catalyst.{expressions => ce}
     import org.apache.spark.sql.execution.datasources.PartitionDirectory
 
-    private val colTypes: Map[String, DataType] = StructType
-      .fromDDL(m.schemaDdl).fields.map(f => f.name -> f.dataType).toMap
+    private val colTypes: Map[String, DataType] =
+      schema.fields.map(f => f.name -> f.dataType).toMap
     private val conf = spark.sparkContext.hadoopConfiguration
     private val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-
-    /** One prunable unit: a segment's ref — zone summary, file count and
-      * byte total straight from the manifest — plus its lazily-loaded
-      * live entries. A whole part a predicate dismisses through the
-      * summary never has its segment file parsed; a legacy manifest
-      * (inline file list) synthesizes one summary-less part whose
-      * entries carry no payloads — conservative keep-all with sizes from
-      * a directory listing.
-      */
-    private final class Part(val summaryMins: Seq[Option[String]],
-        val summaryMaxs: Seq[Option[String]], val count: Int,
-        val bytes: Long, loader: () => Seq[SegEntry]) {
-      lazy val entries: Seq[SegEntry] = loader()
-    }
-
-    private val parts: Seq[Part] =
-      if (m.segments.nonEmpty || m.filesEager == null)
-        m.segments.map { r =>
-          new Part(r.mins, r.maxs, r.files, r.bytes, () => {
-            val seg = loadSegment(spark, root, r.path)
-            val es = liveEntries(r, seg)
-            if (seg.statsCols == m.statsCols && seg.bloomCols == m.bloomCols) es
-            else es.map(_.copy(mins = IndexedSeq.empty,
-              maxs = IndexedSeq.empty, blooms = IndexedSeq.empty))
-          })
-        }
-      else Seq(new Part(Nil, Nil, m.filesEager.size, -1L, () => {
-        val none = IndexedSeq.empty[Option[String]]
-        val byDir = m.filesEager.map(_._1)
-          .groupBy(f => new Path(root, f).getParent)
-        val lens: Map[Path, Long] = byDir.keysIterator.flatMap { d =>
-          d.getFileSystem(conf).listStatus(d).iterator
-            .map(st => st.getPath -> st.getLen)
-        }.toMap
-        m.filesEager.map { case (f, b) =>
-          val p0 = new Path(root, f)
-          val fsys = p0.getFileSystem(conf)
-          SegEntry(f, b, -1L,
-            lens.getOrElse(fsys.makeQualified(p0),
-              fsys.getFileStatus(p0).getLen),
-            none, none, none, none)
-        }
-      }))
 
     /** FileStatus synthesized from segment metadata: the length is exact
       * (recorded when the file was committed), so NO filesystem RPC runs
@@ -3266,14 +3268,18 @@ object LakeTable {
     /** One pushed conjunct, compiled: `part` judges a whole segment from
       * its manifest zone summary (false = dismissed without its segment
       * file ever being parsed — the Iceberg manifest-list skip), `file`
-      * judges one live entry. false = provably no row can match.
+      * judges one live entry. false = provably no row can match. A
+      * conjunct no sidecar can judge compiles to the one [[Keep]], which
+      * the combinators preserve.
       */
-    private final class Verdict(val part: Part => Boolean,
+    private final class Verdict(val part: IndexPart => Boolean,
         val file: SegEntry => Boolean) {
       def &&(o: Verdict) =
-        new Verdict(p => part(p) && o.part(p), e => file(e) && o.file(e))
+        if (this eq Keep) o else if (o eq Keep) this
+        else new Verdict(p => part(p) && o.part(p), e => file(e) && o.file(e))
       def ||(o: Verdict) =
-        new Verdict(p => part(p) || o.part(p), e => file(e) || o.file(e))
+        if ((this eq Keep) || (o eq Keep)) Keep
+        else new Verdict(p => part(p) || o.part(p), e => file(e) || o.file(e))
     }
     private val Keep = new Verdict(_ => true, _ => true)
     private val Never = new Verdict(_ => false, _ => false)
@@ -3426,16 +3432,14 @@ object LakeTable {
     override def inputFiles: Array[String] =
       parts.flatMap(_.entries.map(e => statusOf(e).getPath.toString)).toArray
     override def refresh(): Unit = () // immutable snapshot
-    override def sizeInBytes: Long =
-      parts.map(p => if (p.bytes >= 0) p.bytes
-        else p.entries.map(statusOf(_).getLen).sum).sum
+    override def sizeInBytes: Long = parts.map(_.size(statusOf(_).getLen)).sum
 
     override def listFiles(partitionFilters: Seq[ce.Expression],
         dataFilters: Seq[ce.Expression]): Seq[PartitionDirectory] = {
       val v = dataFilters.map(compile).foldLeft(Keep)(_ && _)
       val alive = parts.filter(v.part)
       val kept = alive.flatMap(_.entries.filter(v.file))
-      if (dataFilters.nonEmpty) {
+      if (snapshot && (v ne Keep)) {
         lastIndexScan = Some((kept.size, parts.map(_.count).sum))
         lastIndexSegments = Some((alive.size, parts.size))
       }
@@ -3444,36 +3448,28 @@ object LakeTable {
   }
 
   /** Read a version (default: newest) as a [[SidecarFileIndex]]-backed
-    * relation, deletion vectors applied — the front-door read for
-    * declarative consumers: predicates written over THIS DataFrame (or
-    * over a temp view of it in SQL) reach `listFiles` as Catalyst
+    * relation, deletion vectors applied — the snapshot read behind
+    * [[read]], [[readAsOf]] and [[readForJoin]]: predicates over THIS
+    * DataFrame (or a temp view of it in SQL) reach `listFiles` as
     * `dataFilters` and prune files through the zone-map/bloom sidecars at
-    * plan time, with no bespoke entry point named. Parquet row-group
-    * pushdown, column pruning and file-splitting behave exactly as a
-    * path-list scan; MoR deletion vectors subtract through the same
-    * anti-join as [[read]] (user predicates push through its left side).
-    * At 100 TB this is the difference between "the engine can prune if
-    * you call the right method" and "every query prunes".
+    * plan time. Schema and file lengths come from the manifest, so
+    * planning lists nothing and infers nothing; row-group pushdown and
+    * file splitting are Spark's own. MoR deletion vectors subtract
+    * through a NULL-safe anti-join (user predicates push through its
+    * left side). At 100 TB this is the difference between "the engine
+    * can prune if you call the right method" and "every query prunes".
     */
   def scan(spark: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
     val m = manifest(spark, root, version)
+    graft.plans.LakeMetadataAggs.register(spark)
     // no payload is loaded here: the index resolves segments lazily and
     // a predicate that dismisses a whole segment through the manifest's
     // ref summary never parses that segment file at all
-    val index = new SidecarFileIndex(spark, root, m)
-    // tag root + PINNED VERSION for graft.plans.LakeMetadataAggs — the
-    // metadata-aggregate rewrite must answer for this snapshot, not for
-    // whatever the head is at optimize time
-    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      index, new StructType(), StructType.fromDDL(m.schemaDdl), None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      Map("graft.lake.root" -> root,
-        "graft.lake.version" -> m.version.toString))(spark)
-    graft.plans.LakeMetadataAggs.register(spark)
-    val df = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .baseRelationToDataFrame(rel)
-    applyDv(spark, root, m, df, m.dvFiles)
+    applyDv(spark, root, m,
+      fileRelation(spark, root, m, StructType.fromDDL(m.schemaDdl),
+        segmentParts(spark, root, m, None), snapshot = true),
+      m.dvFiles)
   }
 
   /** One [[history]] row: a SLOT's operational state, metadata-only. */
@@ -3596,10 +3592,7 @@ object LakeTable {
       val fat = counts.filter(_._2 > maxFilesPerBucket).keys.toSet
       if (fat.isEmpty) m.version
       else {
-        val hot = filesInBuckets(spark, root, m, fat)
-        val dvHot = m.dvFiles.filter { case (_, b) => fat(b) }
-        val cur = applyDv(spark, root, m,
-          readFiles(spark, root, m, hot.map(_._1)), dvHot)
+        val cur = bucketRead(spark, root, m, fat)
         val (mk, zExprs) = zSortIfMarked(spark, root, m)
         val fresh = writeFiles(spark, root, cur, m.keys, m.numBuckets,
           m.sortCols, m.maxRecordsPerFile, sortExprs = zExprs)

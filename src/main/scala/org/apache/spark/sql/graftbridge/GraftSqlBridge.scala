@@ -14,6 +14,10 @@ object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `s` with every field nullable, as Spark's file sources read. */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** Re-tag a batch plan as a STREAMING DataFrame — what a v1 streaming
     * `Source.getBatch` must return (MicroBatchExecution asserts
     * `isStreaming`), built exactly the way Spark's own v1 sources do it:

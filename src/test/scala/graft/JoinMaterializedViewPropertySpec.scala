@@ -86,8 +86,8 @@ class JoinMaterializedViewPropertySpec extends SparkTestBase {
         }
         val got = snapshot(JoinMaterializedView.read(spark, mvRoot)
           .select($"seg", $"cnt", $"sum_amount"))
-        val f = LakeTable.read(spark, factRoot)
-        val d = LakeTable.read(spark, dimRoot)
+        val f = referenceRead(factRoot)
+        val d = referenceRead(dimRoot)
         val want = snapshot(
           f.join(d, f("fk") === d("pk"), "inner")
             .groupBy($"seg")

@@ -22,8 +22,8 @@ class JoinMaterializedViewSpec extends SparkTestBase {
 
   private def recomputed(factRoot: String,
       dimRoot: String): Map[String, (Long, BigDecimal)] = {
-    val f = LakeTable.read(spark, factRoot)
-    val d = LakeTable.read(spark, dimRoot)
+    val f = referenceRead(factRoot)
+    val d = referenceRead(dimRoot)
     f.join(d, f("custkey") === d("custkey"), "inner")
       .groupBy(col("segment"))
       .agg(count(lit(1)).alias("cnt"),

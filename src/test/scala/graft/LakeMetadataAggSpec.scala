@@ -60,7 +60,7 @@ class LakeMetadataAggSpec extends SparkTestBase {
       .agg(count(lit(1)).alias("n"), min(col("k")).alias("mnk"),
         max(col("k")).alias("mxk"), min(col("allnull")).alias("mnn"))
     scansIn(via) shouldBe 0
-    val direct = LakeTable.read(spark, root)
+    val direct = referenceRead(root)
       .agg(count(lit(1)), min(col("k")), max(col("k")), min(col("allnull")))
     via.collect().head.toSeq shouldBe direct.collect().head.toSeq
   }
@@ -71,7 +71,7 @@ class LakeMetadataAggSpec extends SparkTestBase {
     val q = spark.sql("SELECT COUNT(*) AS n FROM md_t2 WHERE x > 30")
     scansIn(q) should be > 0
     q.collect().head.getLong(0) shouldBe
-      LakeTable.read(spark, root).filter($"x" > 30).count()
+      referenceRead(root).filter($"x" > 30).count()
   }
 
   test("declines under deletion vectors, without stats, and for unsupported aggregates") {

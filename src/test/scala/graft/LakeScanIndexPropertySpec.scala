@@ -75,7 +75,7 @@ class LakeScanIndexPropertySpec extends SparkTestBase {
       1 -> genPred(depth - 1).map(p => !p))
 
   test("property: any predicate through scan() returns exactly read()'s rows") {
-    val base = LakeTable.read(spark, root)
+    val base = referenceRead(root)
     val scanned = LakeTable.scan(spark, root)
     val prop = Prop.forAll(genPred(2)) { pred =>
       val want = base.filter(pred).collect()
@@ -108,7 +108,7 @@ class LakeScanIndexPropertySpec extends SparkTestBase {
       val exprs = picked.toSeq
       val got = LakeTable.scan(spark, root)
         .agg(exprs.head, exprs.tail: _*).collect().head.toSeq
-      val want = LakeTable.read(spark, root)
+      val want = referenceRead(root)
         .agg(exprs.head, exprs.tail: _*).collect().head.toSeq
       got == want
     }

@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * disjunctions — reach the FileIndex as Catalyst dataFilters and skip
   * files through the zone-map + bloom sidecars, with results identical to
   * the unpruned read. A wrong prune loses rows, so every pruning case
-  * here twin-checks against `read().filter(...)`.
+  * here twin-checks against `referenceRead(...).filter(...)`: Spark's own
+  * reader over the manifest's files, independent of `read`, which serves
+  * the same relation as `scan`.
   */
 class LakeScanIndexSpec extends SparkTestBase {
   import spark.implicits._
@@ -48,7 +50,7 @@ class LakeScanIndexSpec extends SparkTestBase {
 
   test("scan with no filter lists every live file and equals read") {
     val root = mkTable(600)
-    sameRows(LakeTable.scan(spark, root), LakeTable.read(spark, root))
+    sameRows(LakeTable.scan(spark, root), referenceRead(root))
   }
 
   test("date-range filter prunes files at plan time, result exact") {
@@ -57,7 +59,7 @@ class LakeScanIndexSpec extends SparkTestBase {
     val pred = col("d") >= lit("2025-02-01").cast("date") &&
       col("d") <= lit("2025-02-28").cast("date")
     val got = LakeTable.scan(spark, root).filter(pred)
-    sameRows(got, LakeTable.read(spark, root).filter(pred))
+    sameRows(got, referenceRead(root).filter(pred))
     val (kept, live) = lastScan
     assert(kept < live, s"expected a prune, scanned $kept of $live")
   }
@@ -86,7 +88,7 @@ class LakeScanIndexSpec extends SparkTestBase {
       "SELECT k, d FROM scan_t WHERE d BETWEEN DATE'2025-03-01' AND DATE'2025-03-10'")
     val pred = col("d").between(lit("2025-03-01").cast("date"),
       lit("2025-03-10").cast("date"))
-    sameRows(got, LakeTable.read(spark, root).filter(pred).select("k", "d"))
+    sameRows(got, referenceRead(root).filter(pred).select("k", "d"))
     val (kept, live) = lastScan
     assert(kept < live)
   }
@@ -96,13 +98,13 @@ class LakeScanIndexSpec extends SparkTestBase {
     // k is a stats column (monotone with file order inside each bucket)
     LakeTable.lastIndexScan = None
     val byKey = LakeTable.scan(spark, root).filter(col("k") === 777L)
-    sameRows(byKey, LakeTable.read(spark, root).filter(col("k") === 777L))
+    sameRows(byKey, referenceRead(root).filter(col("k") === 777L))
     val (k1, l1) = lastScan
     assert(k1 < l1, s"zone prune expected: $k1 of $l1")
     // tag is bloom-only: hash-scattered value, zones useless, bloom prunes
     LakeTable.lastIndexScan = None
     val byTag = LakeTable.scan(spark, root).filter(col("tag") === "tag777")
-    sameRows(byTag, LakeTable.read(spark, root).filter(col("tag") === "tag777"))
+    sameRows(byTag, referenceRead(root).filter(col("tag") === "tag777"))
     val (k2, l2) = lastScan
     assert(k2 < l2, s"bloom prune expected: $k2 of $l2")
   }
@@ -112,14 +114,14 @@ class LakeScanIndexSpec extends SparkTestBase {
     LakeTable.lastIndexScan = None
     val inPred = col("k").isin(3L, 500L, 1100L)
     sameRows(LakeTable.scan(spark, root).filter(inPred),
-      LakeTable.read(spark, root).filter(inPred))
+      referenceRead(root).filter(inPred))
     val (k1, l1) = lastScan
     assert(k1 < l1)
     LakeTable.lastIndexScan = None
     val orPred = (col("d") < lit("2025-01-05").cast("date")) ||
       (col("d") > lit("2028-01-01").cast("date"))
     sameRows(LakeTable.scan(spark, root).filter(orPred),
-      LakeTable.read(spark, root).filter(orPred))
+      referenceRead(root).filter(orPred))
     val (k2, l2) = lastScan
     assert(k2 < l2)
   }
@@ -146,15 +148,15 @@ class LakeScanIndexSpec extends SparkTestBase {
       sortCols = Seq("x"), statsCols = Seq("x"), maxRecordsPerFile = 100L)
     val notNull = col("x").isNotNull
     sameRows(LakeTable.scan(spark, root).filter(notNull),
-      LakeTable.read(spark, root).filter(notNull))
+      referenceRead(root).filter(notNull))
     val (k1, l1) = lastScan
     assert(k1 < l1, s"all-NULL files should be skipped: $k1 of $l1")
     val eq = col("x") === 250.0
     sameRows(LakeTable.scan(spark, root).filter(eq),
-      LakeTable.read(spark, root).filter(eq))
+      referenceRead(root).filter(eq))
     val isNull = col("x").isNull
     sameRows(LakeTable.scan(spark, root).filter(isNull),
-      LakeTable.read(spark, root).filter(isNull))
+      referenceRead(root).filter(isNull))
   }
 
   test("STRING zones holding digit strings keep their native ordering (no numeric mis-prune)") {
@@ -166,7 +168,7 @@ class LakeScanIndexSpec extends SparkTestBase {
     // prune the file that holds it
     val pred = col("s") === "2"
     sameRows(LakeTable.scan(spark, root).filter(pred),
-      LakeTable.read(spark, root).filter(pred))
+      referenceRead(root).filter(pred))
     LakeTable.scan(spark, root).filter(pred).count() shouldBe 1L
   }
 
@@ -190,13 +192,13 @@ class LakeScanIndexSpec extends SparkTestBase {
     val root = mkHourly("graft-scanidx-ts", buckets = 2, perFile = 64L)
     val pred = col("ts") >= lit("2025-01-05 00:00:00").cast("timestamp")
     sameRows(LakeTable.scan(spark, root).filter(pred),
-      LakeTable.read(spark, root).filter(pred))
+      referenceRead(root).filter(pred))
     // each bucket's first file ends ~5 days in: a bound before day 3,
     // widened by 2 days, still skips every later file
     LakeTable.lastIndexScan = None
     val early = col("ts") < lit("2025-01-03 00:00:00").cast("timestamp")
     sameRows(LakeTable.scan(spark, root).filter(early),
-      LakeTable.read(spark, root).filter(early))
+      referenceRead(root).filter(early))
     val (kept, live) = lastScan
     assert(kept < live, s"expected a timestamp prune, scanned $kept of $live")
   }
@@ -224,7 +226,7 @@ class LakeScanIndexSpec extends SparkTestBase {
           LakeTable.lastIndexScan = None
           val got = LakeTable.scan(spark, root).filter(pred)
           got.count() should be > 0L
-          sameRows(got, LakeTable.read(spark, root).filter(pred))
+          sameRows(got, referenceRead(root).filter(pred))
           assert(lastScan._1 < lastScan._2, s"$zone $pred should still prune")
         }
       }
@@ -239,7 +241,7 @@ class LakeScanIndexSpec extends SparkTestBase {
       .filter(col("d") < lit("2025-12-31").cast("date"))
     got.filter(col("k").between(100, 199)).count() shouldBe 0L
     sameRows(got.select("k"),
-      LakeTable.read(spark, root)
+      referenceRead(root)
         .filter(col("d") < lit("2025-12-31").cast("date")).select("k"))
   }
 
@@ -255,14 +257,14 @@ class LakeScanIndexSpec extends SparkTestBase {
     val got = LakeTable.scan(spark, root)
     got.schema.fieldNames should contain("src")
     got.filter(col("src").isNull).count() shouldBe 300L
-    sameRows(got, LakeTable.read(spark, root))
+    sameRows(got, referenceRead(root))
   }
 
   test("unrecognized predicates (exprs over the column) keep every file, results exact") {
     val root = mkTable(600)
     val pred = expr("length(tag) = 6")
     sameRows(LakeTable.scan(spark, root).filter(pred),
-      LakeTable.read(spark, root).filter(pred))
+      referenceRead(root).filter(pred))
   }
 
   test("startsWith prunes string zones") {
@@ -274,7 +276,7 @@ class LakeScanIndexSpec extends SparkTestBase {
     LakeTable.lastIndexScan = None
     val pred = col("s").startsWith("m")
     sameRows(LakeTable.scan(spark, root).filter(pred),
-      LakeTable.read(spark, root).filter(pred))
+      referenceRead(root).filter(pred))
     val (kept, live) = lastScan
     assert(kept < live)
   }
@@ -291,6 +293,44 @@ class LakeScanIndexSpec extends SparkTestBase {
       s"expected a broadcast join off the index's sizeInBytes, got:\n$plan")
   }
 
+  test("sizes and tags: scan() sizes as tableBytes and carries the tags; a " +
+      "bucket-confined read sizes as its own files and counts only them") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val root = mkTable(600)
+    def relations(df: DataFrame): Seq[HadoopFsRelation] =
+      df.queryExecution.optimizedPlan.collect {
+        case l: LogicalRelation => l.relation
+      }.collect { case r: HadoopFsRelation => r }
+    val whole = LakeTable.scan(spark, root)
+    whole.queryExecution.optimizedPlan.stats.sizeInBytes shouldBe
+      BigInt(LakeTable.tableBytes(spark, root))
+    relations(whole).map(_.options.keySet) shouldBe
+      Seq(Set("graft.lake.root", "graft.lake.version"))
+
+    // a lookup reads only the probe's bucket: its relation is a subset
+    val Seq(sub) = relations(LakeTable.lookup(spark, root, Seq(7L).toDF("k")))
+    sub.options shouldBe empty
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = sub.location.inputFiles.toSeq
+    val fileBytes = files.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(conf).getFileStatus(p).getLen
+    }.sum
+    sub.sizeInBytes shouldBe fileBytes
+    assert(fileBytes < LakeTable.tableBytes(spark, root),
+      s"a one-bucket read should be smaller than the table: $fileBytes")
+
+    // COUNT over the bare subset relation counts its rows; the metadata
+    // rewrite (which would answer the table's 600) must not fire on it
+    val bucket = pmod(hash(col("k")), lit(4))
+    val probeBucket = Seq(7L).toDF("k").select(bucket).as[Int].head()
+    val want = referenceRead(root).filter(bucket === probeBucket).count()
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .baseRelationToDataFrame(sub).count() shouldBe want
+    assert(want < 600L)
+  }
+
   test("a shallow clone's absolute foreign paths scan and prune like local ones") {
     val src = mkTable(600)
     val cloneRoot = Files.createTempDirectory("graft-scanidx-clone").toString
@@ -300,7 +340,7 @@ class LakeScanIndexSpec extends SparkTestBase {
     val pred = col("d").between(lit("2025-02-01").cast("date"),
       lit("2025-02-28").cast("date"))
     sameRows(LakeTable.scan(spark, cloneRoot).filter(pred),
-      LakeTable.read(spark, cloneRoot).filter(pred))
+      referenceRead(cloneRoot).filter(pred))
     val (kept, live) = lastScan
     assert(kept < live, s"clone scan should prune: $kept of $live")
   }
@@ -343,7 +383,7 @@ class LakeScanIndexSpec extends SparkTestBase {
     LakeTable.lastIndexSegments = None
     val pred = col("d") >= lit("2027-01-01").cast("date")
     val got = LakeTable.scan(spark, root).filter(pred)
-    sameRows(got, LakeTable.read(spark, root).filter(pred))
+    sameRows(got, referenceRead(root).filter(pred))
     LakeTable.lastIndexSegments shouldBe defined
     val (aliveSegs, totalSegs) = LakeTable.lastIndexSegments.get
     totalSegs shouldBe 2

@@ -26,6 +26,33 @@ trait SparkTestBase extends AnyFunSuite with Matchers {
         f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
           .flatMap(_.files.map(_.getPath.toString))
     }.flatten
+
+  /** A lake table version's rows the plain way, independent of the
+    * engine's read path: Spark's own parquet reader over the manifest's
+    * file list under its schema, minus the deletion-vector keys (a
+    * NULL-safe anti-join, key by key). The oracle for anything built on
+    * `LakeTable.scan`/`read`.
+    */
+  def referenceRead(root: String, version: Option[Long] = None): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.StructType
+    val m = graft.sinks.LakeTable.manifest(spark, root, version)
+    val schema = StructType.fromDDL(m.schemaDdl)
+    def files(paths: Seq[(String, Int)], s: StructType): DataFrame =
+      if (paths.isEmpty) spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
+      else spark.read.schema(s).parquet(paths.map(p =>
+        new org.apache.hadoop.fs.Path(root, p._1).toString): _*)
+    val data = files(m.files, schema)
+    if (m.dvFiles.isEmpty) data
+    else {
+      val dv = files(m.dvFiles,
+        StructType(schema.filter(f => m.keys.contains(f.name))))
+        .select(m.keys.map(k => col(k).alias(s"__dv_$k")): _*)
+      data.join(dv, m.keys.map(k => data(k) <=> dv(s"__dv_$k"))
+        .reduce(_ && _), "left_anti")
+    }
+  }
 }
 
 object SparkTestBase {
