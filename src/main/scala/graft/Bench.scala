@@ -20,7 +20,15 @@ import org.apache.spark.sql.SparkSession
   * `SPARK_GRAFT_BENCH_FILTER` (comma-separated name substrings) restricts
   * the set for local iteration; the driver runs unfiltered.
   *
-  * TIERS: the JSON reports two per-tier rollups beside the grand totals.
+  * WORK: the first warm run of each query is profiled by [[QueryProfile]]
+  * (the listener bus drains after the timed region). `queries_work` holds
+  * its jobs, stages, tasks, task seconds, shuffle/spill/input bytes,
+  * `nojob_s` (wall inside no Spark job) and `labels` — `[jobs, job
+  * seconds]` per engine phase ([[QueryProfile.phase]]). Those counts are
+  * deterministic for a fixed plan, where the wall times are not.
+  *
+  * TIERS: the JSON reports two per-tier rollups beside the grand totals,
+  * by each query's declared `lifecycle` flag in [[SparkEntry.registry]].
   * `lifecycle` queries build or publish PERSISTED multi-delivery state per
   * run — lake-table init+merge+delete chains, on-disk index build/append
   * lifecycles, file exports with read-back contracts — so their cost is
@@ -30,7 +38,8 @@ import org.apache.spark.sql.SparkSession
   * per-query time is comparable to the early-round recordings (those
   * rounds had no lifecycle contracts). One 2× bar over the blended
   * average stopped meaning anything once 50+ lifecycle contracts joined;
-  * the tiers keep both signals honest.
+  * the tiers keep both signals honest. Each tier also sums its profiled
+  * run's `jobs`, `tasks`, `task_s` and `nojob_s`.
   *
   * DRIFT: each query's warm median is compared against the committed
   * same-SF recording (`bench_ref.json`, override with
@@ -50,19 +59,6 @@ import org.apache.spark.sql.SparkSession
   * driver or local run can never clobber it.
   */
 object Bench {
-
-  /** Name predicate for the lifecycle tier (see class doc). */
-  private[graft] def isLifecycle(name: String): Boolean =
-    name.startsWith("q_lake_") || name.startsWith("q_mv_") ||
-    name.startsWith("q_dedup_incremental") ||
-    name == "q_media_dedup_incremental" ||
-    name == "q_ann_ivfpq_append" || name == "q_ann_ivfpq_indexed" ||
-    name == "q_bm25_index_append" || name == "q_bm25_indexed" ||
-    name == "q_phrase_search" || name == "q_proximity_search" ||
-    name == "q_corpus_export" || name == "q_epoch_export" ||
-    name == "q_insert_ignore" || name == "q_upsert_merge" ||
-    name == "q_freshness_gate" || name == "q_orc_roundtrip" ||
-    name == "q_zorder_layout"
 
   /** Parse `queries_warm` out of a committed bench recording, but ONLY
     * when its `sf` basename matches the current run's — cross-SF ratios
@@ -123,12 +119,6 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val warmRuns = sys.env.get("SPARK_GRAFT_BENCH_WARM_RUNS").map(_.toInt).getOrElse(3)
-    val nameFilter: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_FILTER") match {
-      case Some(subs) =>
-        val pats = subs.split(",").toSeq
-        name => pats.exists(name.contains)
-      case None => _ => true
-    }
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -149,35 +139,50 @@ object Bench {
       else if (s.length % 2 == 1) s(s.length / 2)
       else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
-    val queries = SparkEntry.queries.toSeq.filter(kv => nameFilter(kv._1)).sortBy(_._1)
-    val results = queries.map { case (name, fn) =>
-      val cold = try time(fn)
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); -1.0 }
-      val warm = if (cold < 0) -1.0 else
-        try median((1 to warmRuns).map(_ => time(fn)))
-        catch { case e: Throwable => System.err.println(s"[bench] $name warm failed: $e"); -1.0 }
-      (name, cold, warm)
+    final case class Result(q: SparkEntry.Query, cold: Double, warm: Double,
+        work: Option[QueryProfile.Profile])
+    val results = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_FILTER")).map { q =>
+      val cold = try time(q.run)
+        catch { case e: Throwable => System.err.println(s"[bench] ${q.name} failed: $e"); -1.0 }
+      val (warm, work) = if (cold < 0) (-1.0, None) else
+        try {
+          val (first, p) = QueryProfile.measure(spark)(time(q.run))
+          (median(first +: (2 to warmRuns).map(_ => time(q.run))), Some(p))
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] ${q.name} warm failed: $e"); (-1.0, None) }
+      Result(q, cold, warm, work)
     }
     // 6-decimal (µs) rendering halves the two 232-entry maps' bytes vs
     // full double digits — the stdout line has been tail-truncated by log
     // capture twice (rounds 5 and 14); a smaller line truncates less, and
     // µs resolution is far below the board's run-to-run noise. -1
     // failure markers render exactly.
-    def timesJson(sel: ((String, Double, Double)) => Double): String =
-      results.map(r => s"\"" + r._1 + "\":" + num(sel(r), 6))
+    def timesJson(sel: Result => Double): String =
+      results.map(r => s"\"" + r.q.name + "\":" + num(sel(r), 6))
         .mkString("{", ",", "}")
-    val failed = results.collect { case (k, c, w) if c < 0 || w < 0 => "\"" + k + "\"" }
-    val coldTotal = results.map(_._2).filter(_ >= 0).sum
-    val warmTotal = results.map(_._3).filter(_ >= 0).sum
-    def tierJson(name: String, rs: Seq[(String, Double, Double)]): String = {
-      val cold = rs.map(_._2).filter(_ >= 0).sum
-      val warm = rs.map(_._3).filter(_ >= 0).sum
-      val n = rs.count(_._2 >= 0)
+    def workJson(p: QueryProfile.Profile): String =
+      s"""{"jobs":${p.jobs.size},"stages":${p.stages},"tasks":${p.tasks},""" +
+        s""""task_s":${num(p.taskMs / 1e3, 3)},"shuffle_read":${p.shuffleRead},""" +
+        s""""shuffle_write":${p.shuffleWrite},"spill":${p.spill},""" +
+        s""""input":${p.inputBytes},"nojob_s":${num(p.nojobS, 3)},"labels":""" +
+        p.byLabel.map { case (l, n, sec) => s"${Verify.str(l)}:[$n,${num(sec, 3)}]" }
+          .mkString("{", ",", "}}")
+    val failed = results.collect { case r if r.cold < 0 || r.warm < 0 => "\"" + r.q.name + "\"" }
+    val coldTotal = results.map(_.cold).filter(_ >= 0).sum
+    val warmTotal = results.map(_.warm).filter(_ >= 0).sum
+    def tierJson(name: String, rs: Seq[Result]): String = {
+      val cold = rs.map(_.cold).filter(_ >= 0).sum
+      val warm = rs.map(_.warm).filter(_ >= 0).sum
+      val n = rs.count(_.cold >= 0)
       val per = if (n == 0) 0.0 else warm / n
+      val ws = rs.flatMap(_.work)
       s""""$name":{"n":$n,"cold":${num(cold, 3)},"warm":${num(warm, 3)},""" +
-        s""""warm_per_query":${num(per, 4)}}"""
+        s""""warm_per_query":${num(per, 4)},"jobs":${ws.map(_.jobs.size).sum},""" +
+        s""""tasks":${ws.map(_.tasks.toLong).sum},""" +
+        s""""task_s":${num(ws.map(_.taskMs).sum / 1e3, 3)},""" +
+        s""""nojob_s":${num(ws.map(_.nojobS).sum, 3)}}"""
     }
-    val (life, parity) = results.partition(r => isLifecycle(r._1))
+    val (life, parity) = results.partition(_.q.lifecycle)
     // drift gate (see driftOutliers): warm medians vs the committed
     // same-SF recording at bench_ref.json — BOTH tiers. Lifecycle queries
     // are exactly the expensive multi-publish contracts, so they get the
@@ -197,10 +202,11 @@ object Bench {
     val refWarm = try refWarmTimes(java.nio.file.Files.readString(
         java.nio.file.Paths.get(refPath)), sfDir)
       catch { case _: Exception => Map.empty[String, Double] }
+    def times(rs: Seq[Result]) = rs.map(r => (r.q.name, r.cold, r.warm))
     val drift =
-      driftOutliers(parity, refWarm, driftFactor)
+      driftOutliers(times(parity), refWarm, driftFactor)
         .map(d => (d, "parity", driftFactor)) ++
-      driftOutliers(life, refWarm, lifeFactor)
+      driftOutliers(times(life), refWarm, lifeFactor)
         .map(d => (d, "lifecycle", lifeFactor))
     // SELF-ATTRIBUTION: a flag produced while the whole board was running
     // may be box contention, not a plan change. Each flagged query is
@@ -208,9 +214,8 @@ object Bench {
     // a rerun back under the threshold is attributed `contention`, one
     // that persists is a real `regression` the round must fix. The
     // artifact carries both numbers so no reader has to adjudicate.
-    val byName = queries.toMap
     val driftJson = drift.map { case ((n, w, r, ratio), tier, fac) =>
-      val rerun = try time(byName(n)) catch { case _: Throwable => -1.0 }
+      val rerun = try time(SparkEntry.byName(n).run) catch { case _: Throwable => -1.0 }
       val verdict =
         if (rerun < 0) "error"
         else if (rerun <= fac * r) "contention"
@@ -221,7 +226,7 @@ object Bench {
     // Field order is truncation-armor (r14's round-over-round comparison
     // was lost to a capture that cut the line's tail): EVERY compact
     // summary field — totals, validity, tiers, drift, failures, sf —
-    // precedes the two 232-entry per-query maps, so a tail-truncated
+    // precedes the three 232-entry per-query maps, so a tail-truncated
     // capture still carries the whole verdict-grade summary and only the
     // per-query detail degrades. The maps stay in the SAME line (the
     // driver contract is one JSON line, and `bench_out.json` holds the
@@ -234,8 +239,10 @@ object Bench {
         s""""drift_factor_lifecycle":$lifeFactor,""" +
         s""""drift_ref_queries":${refWarm.size},""" +
         s""""failures":[${failed.mkString(",")}],"sf":"$sfDir",""" +
-        s""""queries":${timesJson(_._2)},""" +
-        s""""queries_warm":${timesJson(_._3)}}"""
+        s""""queries":${timesJson(_.cold)},""" +
+        s""""queries_warm":${timesJson(_.warm)},""" +
+        s""""queries_work":${results.map(r => Verify.str(r.q.name) + ":" +
+          r.work.fold("null")(workJson)).mkString("{", ",", "}")}}"""
     // File first, stdout second: if log capture truncates the line, the
     // artifact already exists on disk.
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Job labelling (optimization guide §1.5): engine-internal phases set a
-  * job description so the UI — and the stage-attribution tooling in
-  * [[Scratch]] — can tell which engine call scheduled which stage. The
+  * job description so the UI — and [[QueryProfile]]'s per-phase job split
+  * — can tell which engine call scheduled which stage. The
   * description is THREAD-LOCAL and would otherwise leak onto whatever
   * job the caller runs next, so every use is scoped save/restore.
   * Zero-cost beyond a local-properties write; no behavior change.

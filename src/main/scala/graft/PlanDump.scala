@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` output for registry queries to files —
   * the optimization rounds' plan evidence (`plans/rNN/<query>_before.txt`
-  * / `_after.txt`). Unlike [[PlanAudit]] (grep-style skeleton to stdout),
-  * this writes the COMPLETE formatted plan so Exchange counts, join
-  * strategies, PushedFilters and ReadSchema are reviewable offline.
+  * / `_after.txt`): the COMPLETE formatted plan, so Exchange counts, join
+  * strategies, PushedFilters and ReadSchema are reviewable offline (a
+  * `grep` over the files gives the join/exchange/scan skeleton).
   *
   *   runMain graft.PlanDump <sfDir> <outDir> [suffix] [querySubstr,...]
   *
@@ -20,29 +20,21 @@ object PlanDump {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("plans/r15")
     val suffix = args.lift(2).getOrElse("")
-    val nameFilter: String => Boolean = args.lift(3) match {
-      case Some(subs) =>
-        val pats = subs.split(",").toSeq
-        name => pats.exists(name.contains)
-      case None => _ => true
-    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
-        val txt = try {
-          val df = fn(spark, dir)
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        } catch { case e: Exception => s"[plan failed] $e" }
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/$name$suffix.txt"), txt)
-        println(s"[plandump] $name -> $outDir/$name$suffix.txt")
-      }
+    SparkEntry.select(args.lift(3)).foreach { q =>
+      val txt = try {
+        q.run(spark, dir).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      } catch { case e: Exception => s"[plan failed] $e" }
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$outDir/${q.name}$suffix.txt"), txt)
+      println(s"[plandump] ${q.name} -> $outDir/${q.name}$suffix.txt")
+    }
     spark.stop()
   }
 }

@@ -70,7 +70,7 @@ object ScaleProof {
     }
 
   /** Deliberately superlinear toy queries, runnable ONLY through the
-    * scale proof (never registered in [[SparkEntry.queries]], so the
+    * scale proof (never registered in [[SparkEntry.registry]], so the
     * correctness driver and bench never see them). `toy_quadratic` is an
     * all-pairs theta self-join over documents — O(n²) by construction —
     * kept as the demonstration that the gate actually fails a
@@ -144,7 +144,7 @@ object ScaleProof {
 
     generate(spark, srcDir, sf1Dir, copies)
 
-    val allQueries = SparkEntry.queries ++ toyQueries
+    val allQueries = SparkEntry.byName.map { case (n, q) => n -> q.run } ++ toyQueries
     def time(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
       allQueries(name)(spark, dir).count()

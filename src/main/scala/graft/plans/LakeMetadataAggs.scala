@@ -68,19 +68,18 @@ case class LakeMetadataAggs(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** Evaluate one aggregate from metadata; None = can't answer exactly. */
-  private def answer(root: String, version: Long,
-      e: AggregateExpression): Option[Any] = {
+  /** Evaluate one aggregate from metadata; None = can't answer exactly.
+    * `minMax` answers a column's (min, max) pair, once per column.
+    */
+  private def answer(e: AggregateExpression, count: => Option[Long],
+      minMax: String => Option[(Option[String], Option[String])]): Option[Any] = {
     if (e.isDistinct || e.filter.isDefined) return None
     e.aggregateFunction match {
-      case Count(Seq(Literal(v, _))) if v != null =>
-        LakeTable.fastCount(spark, root, Some(version))
+      case Count(Seq(Literal(v, _))) if v != null => count
       case Min(a: AttributeReference) if roundTrips(a.dataType) =>
-        LakeTable.fastMinMax(spark, root, a.name, Some(version))
-          .map(mm => back(mm._1, a.dataType))
+        minMax(a.name).map(mm => back(mm._1, a.dataType))
       case Max(a: AttributeReference) if roundTrips(a.dataType) =>
-        LakeTable.fastMinMax(spark, root, a.name, Some(version))
-          .map(mm => back(mm._2, a.dataType))
+        minMax(a.name).map(mm => back(mm._2, a.dataType))
       case _ => None
     }
   }
@@ -97,6 +96,13 @@ case class LakeMetadataAggs(spark: SparkSession) extends Rule[LogicalPlan] {
     case agg @ Aggregate(Nil, aggExprs, child, _) =>
       lakeTag(child) match {
         case Some((root, version)) =>
+          // one snapshot resolution serves every aggregate of the node
+          lazy val m = LakeTable.manifest(spark, root, Some(version))
+          lazy val count = LakeTable.fastCount(spark, root, m)
+          val minMax = scala.collection.mutable.Map
+            .empty[String, Option[(Option[String], Option[String])]]
+          def minMaxOf(c: String) =
+            minMax.getOrElseUpdate(c, LakeTable.fastMinMax(spark, root, m, c))
           // every output must be answerable (an Alias over ONE aggregate,
           // or a literal) or the whole rewrite is off
           val answered: Option[Seq[Any]] =
@@ -104,7 +110,7 @@ case class LakeMetadataAggs(spark: SparkSession) extends Rule[LogicalPlan] {
               case (None, _) => None
               case (Some(acc), ne) => ne match {
                 case Alias(ae: AggregateExpression, _) =>
-                  answer(root, version, ae).map(acc :+ _)
+                  answer(ae, count, minMaxOf).map(acc :+ _)
                 case Alias(l: Literal, _) => Some(acc :+ l.value)
                 case _ => None
               }

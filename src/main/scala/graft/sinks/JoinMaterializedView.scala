@@ -213,10 +213,12 @@ object JoinMaterializedView {
     val sign = when(col("_change_type").isin("insert", "update_postimage"),
       lit(1L)).otherwise(lit(-1L))
 
+    // every phase's jobs carry an `mvjoin:*` label (inner lake labels
+    // such as `lake:write` take over inside the fold's commit)
     // leg 1: ΔF ⋈ D_new — delta-sized, dim broadcast when small
     val leg1: Option[DataFrame] =
       if (fv2 == sync.factVersion) None
-      else {
+      else graft.JobLabel(spark, "mvjoin:fact-leg") {
         val df = LakeTable.changes(spark, factRoot, sync.factVersion, fv2)
           .withColumn("__sign", sign).drop("_change_type")
         val dim = LakeTable.readForJoin(spark, dimRoot, version = Some(dv2))
@@ -229,7 +231,7 @@ object JoinMaterializedView {
     // changes, fact files pruned by the delivery's changed pks
     val leg2: Option[DataFrame] =
       if (dv2 == sync.dimVersion) None
-      else {
+      else graft.JobLabel(spark, "mvjoin:dim-leg") {
         val dd = LakeTable.changes(spark, dimRoot, sync.dimVersion, dv2)
           .withColumn("__sign", sign).drop("_change_type")
         val factOld = LakeTable.dynamicPrunedScan(spark, factRoot,
@@ -241,12 +243,14 @@ object JoinMaterializedView {
       }
 
     // at least one leg exists — both-unchanged already returned above
-    val delta = (leg1.toSeq ++ leg2.toSeq).reduce(_.unionByName(_))
-      .groupBy(groupCols.map(col): _*)
-      .agg(sum(col("__sign")).alias("d_cnt"),
-        sumCols.map(c => sum(col(c).cast(SumType) * col("__sign"))
-          .cast(SumType).alias(s"d_sum_$c")): _*)
-      .localCheckpoint()
+    val delta = graft.JobLabel(spark, "mvjoin:delta") {
+      (leg1.toSeq ++ leg2.toSeq).reduce(_.unionByName(_))
+        .groupBy(groupCols.map(col): _*)
+        .agg(sum(col("__sign")).alias("d_cnt"),
+          sumCols.map(c => sum(col(c).cast(SumType) * col("__sign"))
+            .cast(SumType).alias(s"d_sum_$c")): _*)
+        .localCheckpoint()
+    }
 
     // one-pass fold: the touched view buckets are read ONCE inside the
     // copy-on-write commit; the NULL-safe full-outer (a NULL dim
@@ -256,16 +260,18 @@ object JoinMaterializedView {
     // untouched groups of the bucket pass through on the cur side, and
     // dead groups (cnt ≤ 0) simply aren't re-emitted
     val mvVersion =
-      try LakeTable.foldGroupedDelta(spark, mvRoot, delta,
-        Some(sync.mvVersion)) { (cur, d) =>
-        LakeTable.nullSafeKeyJoin(d, cur, groupCols, "full_outer")
-          .select(groupCols.map(col) ++ Seq(
-            (coalesce(col("cnt"), lit(0L)) + coalesce(col("d_cnt"), lit(0L)))
-              .alias("cnt")) ++ sumCols.map(c =>
-            (coalesce(col(s"sum_$c"), lit(0).cast(SumType)) +
-              coalesce(col(s"d_sum_$c"), lit(0).cast(SumType)))
-              .cast(SumType).alias(s"sum_$c")): _*)
-          .filter(col("cnt") > 0)
+      try graft.JobLabel(spark, "mvjoin:fold") {
+        LakeTable.foldGroupedDelta(spark, mvRoot, delta,
+          Some(sync.mvVersion)) { (cur, d) =>
+          LakeTable.nullSafeKeyJoin(d, cur, groupCols, "full_outer")
+            .select(groupCols.map(col) ++ Seq(
+              (coalesce(col("cnt"), lit(0L)) + coalesce(col("d_cnt"), lit(0L)))
+                .alias("cnt")) ++ sumCols.map(c =>
+              (coalesce(col(s"sum_$c"), lit(0).cast(SumType)) +
+                coalesce(col(s"d_sum_$c"), lit(0).cast(SumType)))
+                .cast(SumType).alias(s"sum_$c")): _*)
+            .filter(col("cnt") > 0)
+        }
       }
       finally delta.unpersist(blocking = false)
     writeSync(spark, mvRoot, Sync(fv2, dv2, mvVersion))

@@ -907,27 +907,30 @@ object LakeTable {
     fs.rename(staged, dst)
   }
 
-  /** Measure the complete per-file metadata of `paths` in ONE aggregation
+  /** Measure the complete per-file metadata of `files` in ONE aggregation
     * pass over only those files — row count, zone min/max per statsCol,
     * bloom per bloomCol, HLL sketch per ndvCol, grouped on the physical
-    * file (the pre-r12 design paid three separate passes). File sizes
-    * come from one listing per parent ([[listedPart]]), which the pass
-    * then reads. Tables declaring no indexed columns skip the scan
-    * entirely (rows = -1). A zero-row file produces no aggregation group
-    * and synthesizes an empty entry — its IDENTITY must survive into the
-    * segment (entries ARE the file list).
+    * file (the pre-r12 design paid three separate passes). A file's size
+    * is its writer's listing ([[writeFiles]]), else (bytes -1) one
+    * listing per parent ([[listedPart]]). Tables declaring no indexed
+    * columns skip the scan entirely (rows = -1). A zero-row file produces
+    * no aggregation group and synthesizes an empty entry — its IDENTITY
+    * must survive into the segment (entries ARE the file list).
     */
   private def measureEntries(spark: SparkSession, root: String, m: Manifest,
-      paths: Seq[(String, Int)]): Seq[SegEntry] = {
-    if (paths.isEmpty) return Nil
-    val listed = listedPart(spark, root, paths)
+      files: Seq[SegEntry]): Seq[SegEntry] = {
+    if (files.isEmpty) return Nil
+    val lens = listedPart(spark, root, files.collect {
+      case e if e.bytes < 0 => (e.path, e.bucket) }).entries
+      .map(e => e.path -> e).toMap
+    val sized = files.map(e => lens.getOrElse(e.path, e))
     val nS = m.statsCols.size; val nB = m.bloomCols.size
     val nN = m.ndvCols.size
-    if (nS + nB + nN == 0) return listed.entries
+    if (nS + nB + nN == 0) return sized
     val noneS = IndexedSeq.fill(nS)(Option.empty[String])
     val noneB = IndexedSeq.fill(nB)(Option.empty[String])
     val noneN = IndexedSeq.fill(nN)(Option.empty[String])
-    val keyOf = manifestKeyOf(paths.map(_._1))
+    val keyOf = manifestKeyOf(files.map(_.path))
     val (items, bits) = bloomShape(m)
     val statAggs = m.statsCols.flatMap(c => Seq(
       min(col(c)).cast("string"), max(col(c)).cast("string")))
@@ -949,7 +952,8 @@ object LakeTable {
     val measured: Map[String, SegEntry] =
       graft.JobLabel(spark, s"lake:measure ${new Path(root).getName}") {
         fileRelation(spark, root, m, StructType.fromDDL(m.schemaDdl),
-          Seq(listed), snapshot = false)
+          Seq(new IndexPart(Nil, Nil, sized.size, -1L, () => sized)),
+          snapshot = false)
           .groupBy(input_file_name().alias("__f"))
           .agg(aggs.head, aggs.tail: _*)
           .collect()
@@ -966,7 +970,7 @@ object LakeTable {
               .map(b64enc.encodeToString))
           p -> SegEntry(p, -1, r.getLong(1), -1L, mins, maxs, blooms, sks)
         }.toMap
-    listed.entries.map { l =>
+    sized.map { l =>
       measured.get(l.path) match {
         case Some(e) => e.copy(bucket = l.bucket, bytes = l.bytes)
         case None => l.copy(rows = 0L, mins = noneS, maxs = noneS,
@@ -1115,7 +1119,7 @@ object LakeTable {
     * wholly-tight ref through a no-op shrink scan.
     */
   private def commitDelta(spark: SparkSession, root: String,
-      next: Manifest, replaced: Set[Int], fresh: Seq[(String, Int)],
+      next: Manifest, replaced: Set[Int], fresh: Seq[SegEntry],
       dead: Seq[(String, Int)] = Nil, waitTxn: Boolean = true,
       selfTxn: Option[String] = None,
       known: Map[String, SegEntry] = Map.empty,
@@ -1173,11 +1177,11 @@ object LakeTable {
       if (next.segments.isEmpty && next.filesEager != null)
         next.filesEager.filterNot(f => replaced(f._2) || deadPaths(f._1))
       else Nil
-    val freshAll = fresh ++ demoted ++ legacyCarry
+    val freshAll = fresh ++ (demoted ++ legacyCarry).map(bareEntry(_))
     val (knownFresh, toMeasure) =
-      freshAll.partition(f => known.contains(f._1))
+      freshAll.partition(f => known.contains(f.path))
     val entries0 =
-      knownFresh.map { case (p, b) => known(p).copy(path = p, bucket = b) } ++
+      knownFresh.map(f => known(f.path).copy(path = f.path, bucket = f.bucket)) ++
         measureEntries(spark, root, next, toMeasure)
     // only the caller's own FRESH files stamp: demoted/legacy carries
     // were not written by this pass's z sort — they stay -1 and the next
@@ -1189,7 +1193,7 @@ object LakeTable {
       val stamped =
         if (zGen < 0) entries0
         else {
-          val freshSet = fresh.map(_._1).toSet
+          val freshSet = fresh.map(_.path).toSet
           entries0.map(e => if (freshSet(e.path)) e.copy(zg = zGen) else e)
         }
       if (zgKnown.isEmpty) stamped
@@ -1236,14 +1240,15 @@ object LakeTable {
     toPublish
   }
 
-  /** Write `rows` bucketed under a fresh UUID data dir; returns manifest
-    * entries (root-relative path, bucket). Files only become live when a
+  /** Write `rows` bucketed under a fresh UUID data dir; returns its files
+    * as payload-less entries (root-relative path, bucket, on-disk bytes)
+    * from the one listing that finds them. Files only become live when a
     * manifest referencing them is published.
     */
   private def writeFiles(spark: SparkSession, root: String, rows: DataFrame,
       keys: Seq[String], numBuckets: Int,
       sortCols: Seq[String] = Nil, maxRecordsPerFile: Long = 0L,
-      sortExprs: Seq[Column] = Nil): Seq[(String, Int)] = {
+      sortExprs: Seq[Column] = Nil): Seq[SegEntry] = {
     val fs = hfs(spark, root)
     val sub = s"data/${java.util.UUID.randomUUID}"
     val bucketed = rows.withColumn("__bucket", bucketOf(keys, numBuckets))
@@ -1265,13 +1270,14 @@ object LakeTable {
     graft.JobLabel(spark, s"lake:write ${new Path(root).getName}") {
       writer.parquet(new Path(root, sub).toString)
     }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[SegEntry]
     for (d <- fs.listStatus(new Path(root, sub))
          if d.getPath.getName.startsWith("__bucket=")) {
       val b = d.getPath.getName.stripPrefix("__bucket=").toInt
       for (f <- fs.listStatus(d.getPath)
            if f.getPath.getName.endsWith(".parquet"))
-        out += ((s"$sub/${d.getPath.getName}/${f.getPath.getName}", b))
+        out += bareEntry((s"$sub/${d.getPath.getName}/${f.getPath.getName}", b),
+          f.getLen)
     }
     out.toSeq
   }
@@ -1297,7 +1303,7 @@ object LakeTable {
   // documented conservative fallback.
 
   /** Live-entry view of a version: (manifest, its live SegEntry list). */
-  private def liveEntriesOf(spark: SparkSession, root: String,
+  private[graft] def liveEntriesOf(spark: SparkSession, root: String,
       version: Long): (Manifest, Seq[SegEntry]) = {
     val m = manifestAt(spark, root, version)
     (m, m.segments.flatMap { ref =>
@@ -1529,7 +1535,7 @@ object LakeTable {
       dvFiles = m.dvFiles.map { case (p, b) => (abs(p), b) },
       segments = Nil)
     commitDelta(spark, dstRoot, next, Set.empty,
-      fresh = m.files.map { case (p, b) => (abs(p), b) }, known = known)
+      fresh = m.files.map { case (p, b) => bareEntry((abs(p), b)) }, known = known)
     // the z-order marker travels too (z-tightness is a property of the
     // immutable files, so it survives the path rewrite) — without it the
     // branch would silently lose incremental layout maintenance and pay
@@ -1616,7 +1622,7 @@ object LakeTable {
         // is measured
         val next = commitDelta(spark, root, next0, Set.empty, fresh,
           dead = foreignF, zGen = zGenOf(mk))
-        carryZMarker(spark, root, mk, next, fresh.map(_._1))
+        carryZMarker(spark, root, mk, next, fresh.map(_.path))
         if (m.cdfRecord) writeCdfMarker(spark, root, next.version, Nil)
         next.version
       }
@@ -1657,7 +1663,7 @@ object LakeTable {
         txn = None, numBuckets = newNumBuckets, filesEager = null,
         segments = Nil, dvFiles = Nil), Set.empty, files,
         zGen = zGenOf(mk))
-      carryZMarker(spark, root, mk, next, files.map(_._1))
+      carryZMarker(spark, root, mk, next, files.map(_.path))
       if (m.cdfRecord) writeCdfMarker(spark, root, next.version, Nil)
       next.version
     }
@@ -2005,7 +2011,7 @@ object LakeTable {
           val hotSet = hot.map(_._1).toSet
           writeZMarker(spark, root, ZMarker(next.version, mk.zCols,
             mk.axes,
-            (m.files.filterNot(f => hotSet(f._1)) ++ fresh).map(_._1)))
+            m.files.filterNot(f => hotSet(f._1)).map(_._1) ++ fresh.map(_.path)))
         }
         if (m.cdfRecord) writeCdfMarker(spark, root, next.version, Nil)
         next.version
@@ -2167,7 +2173,7 @@ object LakeTable {
       val next = commitDelta(spark, root, m.copy(version = slot,
         txn = None, statsCols = statsCols, bloomCols = bloomCols,
         ndvCols = ndvCols, filesEager = null, segments = Nil),
-        Set.empty, fresh = m.files, zgKnown = zgKnown)
+        Set.empty, fresh = m.files.map(bareEntry(_)), zgKnown = zgKnown)
       if (m.cdfRecord) writeCdfMarker(spark, root, next.version, Nil)
       next.version
     }
@@ -2252,8 +2258,12 @@ object LakeTable {
     * not hit) — callers fall back to `read(...).count()`.
     */
   def fastCount(spark: SparkSession, root: String,
-      version: Option[Long] = None): Option[Long] = {
-    val m = manifest(spark, root, version)
+      version: Option[Long] = None): Option[Long] =
+    fastCount(spark, root, manifest(spark, root, version))
+
+  /** [[fastCount]] over an already-resolved manifest. */
+  private[graft] def fastCount(spark: SparkSession, root: String,
+      m: Manifest): Option[Long] = {
     // rows are measured whenever ANY indexed column is declared (the
     // single metadata pass counts as it measures), so a bloom- or
     // ndv-only table answers too — only a wholly unindexed table, or
@@ -2287,8 +2297,12 @@ object LakeTable {
     * `read(...).agg(min, max)`.
     */
   def fastMinMax(spark: SparkSession, root: String, colName: String,
-      version: Option[Long] = None): Option[(Option[String], Option[String])] = {
-    val m = manifest(spark, root, version)
+      version: Option[Long] = None): Option[(Option[String], Option[String])] =
+    fastMinMax(spark, root, manifest(spark, root, version), colName)
+
+  /** [[fastMinMax]] over an already-resolved manifest. */
+  private[graft] def fastMinMax(spark: SparkSession, root: String,
+      m: Manifest, colName: String): Option[(Option[String], Option[String])] = {
     val i = m.statsCols.indexOf(colName)
     if (m.dvFiles.nonEmpty || i < 0) return None
     val colType = StructType.fromDDL(m.schemaDdl)(colName).dataType
@@ -2579,7 +2593,7 @@ object LakeTable {
     // rows (upsert/delete/fold all guarantee it), so the step diff is the
     // pre/post bucket content restricted to the delivery's keys
     if (m.cdfRecord)
-      publishCdf(spark, root, next, cur, fresh.map(_._1), source, m.keys)
+      publishCdf(spark, root, next, cur, fresh.map(_.path), source, m.keys)
     next.version
   }
 
@@ -2605,7 +2619,8 @@ object LakeTable {
     // deletion vectors ride the manifest, not segments: data files (and
     // every ref) carry verbatim — an O(|keys|) metadata-plus-vectors commit
     val next = commitMetadataOnly(spark, root,
-      m.copy(version = slot, dvFiles = m.dvFiles ++ fresh, txn = txnTag),
+      m.copy(version = slot, dvFiles = m.dvFiles ++ fresh.map(f => (f.path, f.bucket)),
+        txn = txnTag),
       waitTxn = true, selfTxn = txnTag)
     next.version
   }
@@ -2628,7 +2643,7 @@ object LakeTable {
         val next = commitDelta(spark, root, m.copy(version = slot,
           txn = None, dvFiles = Nil), replaced = dvB, fresh = fresh,
           zGen = zGenOf(mk))
-        carryZMarker(spark, root, mk, next, fresh.map(_._1))
+        carryZMarker(spark, root, mk, next, fresh.map(_.path))
         if (m.cdfRecord) writeCdfMarker(spark, root, next.version, Nil)
         next.version
       }
@@ -3136,14 +3151,19 @@ object LakeTable {
           d.getFileSystem(conf).listStatus(d).iterator
             .map(st => st.getPath -> st.getLen)
         }.toMap
-      val none = IndexedSeq.empty[Option[String]]
-      paths.map { case (f, b) =>
-        val p0 = new Path(root, f)
+      paths.map { f =>
+        val p0 = new Path(root, f._1)
         val fsys = p0.getFileSystem(conf)
-        SegEntry(f, b, -1L, lens.getOrElse(fsys.makeQualified(p0),
-          fsys.getFileStatus(p0).getLen), none, none, none, none)
+        bareEntry(f, lens.getOrElse(fsys.makeQualified(p0),
+          fsys.getFileStatus(p0).getLen))
       }
     })
+
+  /** A payload-less entry (rows -1) for `f`, `bytes` long (-1: unknown). */
+  private def bareEntry(f: (String, Int), bytes: Long = -1L): SegEntry = {
+    val none = IndexedSeq.empty[Option[String]]
+    SegEntry(f._1, f._2, -1L, bytes, none, none, none, none)
+  }
 
   /** THE lake file relation: `parts` read as parquet under `schema`
     * (nullable, like every file read) through a [[SidecarFileIndex]] —
@@ -3572,7 +3592,7 @@ object LakeTable {
         // list is the point of this declared-O(live files) metadata op)
         val next = commitDelta(spark, root, m.copy(version = slot,
           txn = None, filesEager = null, segments = Nil),
-          Set.empty, fresh = m.files, known = known)
+          Set.empty, fresh = m.files.map(bareEntry(_)), known = known)
         if (m.cdfRecord) writeCdfMarker(spark, root, next.version, Nil)
         next.version
       }
@@ -3600,7 +3620,7 @@ object LakeTable {
           txn = None,
           dvFiles = m.dvFiles.filterNot { case (_, b) => fat(b) }),
           replaced = fat, fresh = fresh, zGen = zGenOf(mk))
-        carryZMarker(spark, root, mk, next, fresh.map(_._1))
+        carryZMarker(spark, root, mk, next, fresh.map(_.path))
         if (m.cdfRecord) writeCdfMarker(spark, root, next.version, Nil)
         next.version
       }

@@ -4,9 +4,8 @@ import org.apache.spark.SparkContext
 
 /** Core-side bridge (the SQL twin lives in
   * org.apache.spark.sql.graftbridge): `listenerBus` is private[spark],
-  * and [[graft.WorkProfile]] must drain it between queries so a
-  * snapshot's task metrics belong to the query that ran, not to the
-  * previous one's stragglers.
+  * and [[graft.QueryProfile]] must drain it before it reads a body's
+  * jobs and task metrics, so every event the body caused has arrived.
   */
 object GraftCoreBridge {
   def waitListenerBusEmpty(sc: SparkContext): Unit =

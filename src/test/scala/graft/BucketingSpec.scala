@@ -51,7 +51,7 @@ class BucketingSpec extends SparkTestBase {
         scope should include("SortMergeJoin")
         scope.substring(scope.indexOf("SortMergeJoin"))
       }
-      val df = SparkEntry.queries("q_join_bucketed")(spark, sfDir)
+      val df = SparkEntry.byName("q_join_bucketed").run(spark, sfDir)
       val expected = df.collect().toSeq // materialize (first run writes tables)
       expected should not be empty
       joinSubtree(df) should not include "Exchange"
@@ -63,7 +63,7 @@ class BucketingSpec extends SparkTestBase {
       spark.catalog.listTables().collect()
         .map(_.name).filter(n => n.startsWith("cust_bkt_") || n.startsWith("ord_bkt_"))
         .foreach(n => spark.sql(s"DROP TABLE $n"))
-      val again = SparkEntry.queries("q_join_bucketed")(spark, sfDir)
+      val again = SparkEntry.byName("q_join_bucketed").run(spark, sfDir)
       again.collect().toSeq shouldBe expected
       joinSubtree(again) should not include "Exchange"
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

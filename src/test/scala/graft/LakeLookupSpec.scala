@@ -19,30 +19,12 @@ class LakeLookupSpec extends SparkTestBase {
     new java.io.File(p).delete(); p
   }
 
-  /** (result, jobs it scheduled): only jobs carrying this call's tag
-    * count, so a straggler from an earlier test can not leak in.
+  /** (result, jobs it scheduled): only jobs carrying this call's profile
+    * tag count, so a straggler from an earlier test can not leak in.
     */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties)
-            .flatMap(p => Option(p.getProperty("graft.spec.tag")))
-            .contains(tag)) n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    try {
-      val r = body
-      org.apache.spark.graftbridge.GraftCoreBridge.waitListenerBusEmpty(sc)
-      (r, n.get)
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(l)
-    }
+    val (r, p) = QueryProfile.measure(spark)(body)
+    (r, p.jobs.size)
   }
 
   private def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq

@@ -110,4 +110,24 @@ class LakeMetadataAggSpec extends SparkTestBase {
       .agg(count(lit(1)), max(col("k"))).collect().head
     head.toSeq shouldBe Seq(101L, 5000L)
   }
+
+  test("one snapshot resolution per rewrite: five aggregates read the " +
+      "same local-FS bytes at optimize time as one COUNT(*)") {
+    val root = mkTable(300)
+    val scan = LakeTable.scan(spark, root)
+    import scala.jdk.CollectionConverters._
+    def fileBytesRead(): Long = org.apache.hadoop.fs.FileSystem
+      .getAllStatistics.asScala.filter(_.getScheme == "file")
+      .map(_.getBytesRead).sum
+    def optimizeBytes(df: DataFrame): Long = {
+      val before = fileBytesRead()
+      df.queryExecution.optimizedPlan
+      fileBytesRead() - before
+    }
+    val one = optimizeBytes(scan.agg(count(lit(1))))
+    val five = optimizeBytes(scan.agg(count(lit(1)), min(col("k")),
+      max(col("k")), min(col("x")), max(col("x"))))
+    one should be > 0L
+    five shouldBe one
+  }
 }

@@ -32,7 +32,6 @@ class LakeReadPathSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     */
   private def observed(body: => Unit): (Seq[String], Seq[String]) = {
     val indexes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val ql = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         collectWithSubqueries(qe.executedPlan) {
@@ -42,28 +41,13 @@ class LakeReadPathSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       override def onFailure(f: String, qe: QueryExecution,
           e: Exception): Unit = ()
     }
-    val jl = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val d = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs.add((d +: j.stageInfos.flatMap(s => Seq(s.name, s.details)))
-          .mkString("\n"))
-      }
-    }
-    val sc = spark.sparkContext
     spark.listenerManager.register(ql)
-    sc.addSparkListener(jl)
-    try {
-      body
-      org.apache.spark.graftbridge.GraftCoreBridge.waitListenerBusEmpty(sc)
-    } finally {
-      sc.removeSparkListener(jl)
-      spark.listenerManager.unregister(ql)
-    }
+    val (_, p) = try QueryProfile.measure(spark)(body)
+      finally spark.listenerManager.unregister(ql)
     import scala.jdk.CollectionConverters._
-    (indexes.asScala.toSeq, jobs.asScala.toSeq)
+    (indexes.asScala.toSeq,
+      p.jobs.map(j => (j.label +: j.stageNames.zip(j.stageDetails)
+        .flatMap { case (n, d) => Seq(n, d) }).mkString("\n")))
   }
 
   test("every lake read plans through SidecarFileIndex: no InMemoryFileIndex, " +

@@ -789,6 +789,12 @@ class LakeTableSpec extends SparkTestBase {
     val afterMerge = segFiles()
     (afterMerge -- afterInit) should have size 1
     val m1 = LakeTable.manifest(spark, root)
+    // every entry's recorded size is its file's on-disk length (fresh
+    // files are sized by their writer's own listing)
+    val (_, live) = LakeTable.liveEntriesOf(spark, root, m1.version)
+    live should not be empty
+    live.foreach(e => e.bytes shouldBe
+      fs.getFileStatus(new org.apache.hadoop.fs.Path(root, e.path)).getLen)
 
     // a MoR delete is a metadata-only commit: same refs, same segment
     // files, nothing measured

@@ -32,27 +32,14 @@ class ProbeHintSpec extends SparkTestBase {
     val touched = LakeTable.touchedBuckets(delta, Seq("id"), 8)
     touched should not be empty
 
-    val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val d = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        if (d.startsWith("lake:touched")) probes.add(d)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val (_, p) = QueryProfile.measure(spark) {
       LakeTable.mergeTagged(spark, rootA, delta, None, None,
         Some(LakeTable.TouchedHint(Seq("id"), 8, touched)))
       LakeTable.mergeTagged(spark, rootB, delta, None, None, None)
-      org.apache.spark.graftbridge.GraftCoreBridge
-        .waitListenerBusEmpty(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val probes = p.jobs.map(_.label).filter(_.startsWith("lake:touched"))
 
-    import scala.jdk.CollectionConverters._
-    val byRoot = probes.iterator().asScala.toSeq.groupBy(identity)
+    val byRoot = probes.groupBy(identity)
     // hinted commit: no probe; unhinted twin: exactly one
     byRoot.keys.count(_.contains("hint_a")) shouldBe 0
     byRoot.keys.count(_.contains("hint_b")) shouldBe 1
@@ -93,25 +80,11 @@ class ProbeHintSpec extends SparkTestBase {
     LakeTable.delete(spark, base,
       (1 to 60).map(_.toLong).toDF("id"))
 
-    val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val d = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        if (d.startsWith("lake:touched") || d == "mv:touched") probes.add(d)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val (_, p) = QueryProfile.measure(spark) {
       MaterializedView.refresh(spark, base, mv)
-      org.apache.spark.graftbridge.GraftCoreBridge
-        .waitListenerBusEmpty(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-
-    import scala.jdk.CollectionConverters._
-    val ds = probes.iterator().asScala.toSeq
+    }
+    val ds = p.jobs.map(_.label)
+      .filter(d => d.startsWith("lake:touched") || d == "mv:touched")
     val mvName = new java.io.File(mv).getName
     // the view's read AND write ride the one mv:touched probe action
     // (AQE may split that single action into >1 job — the contract is

@@ -62,7 +62,7 @@ class RangeJoinSpec extends SparkTestBase {
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("purchase_id"), col("click_id"))
 
-    val prod = SparkEntry.queries("q_join_asof")(spark, sfDir)
+    val prod = SparkEntry.byName("q_join_asof").run(spark, sfDir)
 
     prod.count() shouldBe joined.count()
     prod.except(joined).count() shouldBe 0

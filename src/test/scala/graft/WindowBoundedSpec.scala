@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LogicalPlan, Wi
   * engine-side window partitions on a real key or an explicit shard
   * column (operators expose a `numShards` knob for the packing layouts);
   * the remaining `OVER (ORDER BY ...)` strings in SparkEntry live in
-  * `oracleSql` and run on DuckDB, not here.
+  * the registry's `oracle` strings and run on DuckDB, not here.
   */
 class WindowBoundedSpec extends SparkTestBase {
   private val sfDir = "/root/testdata/sf0.001"
@@ -20,7 +20,7 @@ class WindowBoundedSpec extends SparkTestBase {
 
   test("q_hybrid_retrieval's only global window sits above a GlobalLimit " +
       "(bounded input — no unbounded single-partition window in the engine)") {
-    val df = SparkEntry.queries("q_hybrid_retrieval")(spark, sfDir)
+    val df = SparkEntry.byName("q_hybrid_retrieval").run(spark, sfDir)
     val wins = globalWindows(df.queryExecution.optimizedPlan)
     wins should not be empty // the site exists — a rewrite that silently
                              // re-partitions it should update this pin

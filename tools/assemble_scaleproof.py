@@ -1,12 +1,15 @@
 #!/usr/bin/env python3
 """Assemble SCALEPROOF_r{N}.json from the isolated per-decade runs plus
-the Scratch leg attributions. Usage:
+per-query work splits. Usage:
   python3 tools/assemble_scaleproof.py SCALEPROOF_r11.json \
       --iso10 /tmp/iso10_r11.json [--iso30 ...] [--iso100 ...] \
       [--note "..."] [--legs name=path.json ...]
-Leg files are free-form JSON dicts (written by hand from Scratch output)
-merged in under their name. The gate verdicts ride in from the iso runs'
-`entries`; assembly fails if any 10x entry failed its gate.
+Leg files are JSON dicts merged in under their name: a query's entry of
+`queries_work` in a `graft.Bench` run's `bench_out.json` (jobs, tasks,
+task time, `nojob_s` and the per-phase `labels` job split), e.g.
+  python3 -c 'import json; print(json.dumps(json.load(open("bench_out.json"))["queries_work"]["q_mv_join"]))' > mv_join.json
+The gate verdicts ride in from the iso runs' `entries`; assembly fails if
+any 10x entry failed its gate.
 """
 import argparse, json, sys
 
