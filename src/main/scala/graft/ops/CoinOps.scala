@@ -145,8 +145,4 @@ object CoinOps {
         throw QualityGateFailure("gold_sla", s"now=$now past deadline=$deadline for ds=$ds")
     }
   }
-
-  /** A3 empty-input guard (reference `:903-904`) — `head(1)`, not `count()`. */
-  def assertNonEmpty(df: DataFrame, what: String): Unit =
-    if (df.head(1).isEmpty) throw QualityGateFailure("non_empty", s"$what is empty")
 }

@@ -5,7 +5,7 @@ import graft.pipeline.CoinPipeline
 import graft.schema.CoinSchemas
 import graft.sinks.{LakeSink, Merge}
 import graft.sources.{CoinSources, HttpCoinMarketsFetcher}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Orchestration twin of the reference's flagship DAG (SURVEY §3 EP1,
@@ -49,10 +49,10 @@ object CoinDag {
   ) {
     def rawFile: String      = s"$rawRoot/coins_$ds.json"
     def bronzeDir: String    = s"$bronzeRoot/coins/dt=$ds"
-    def silverDir: String    = s"$lakeRoot/silver/coins/dt=$ds"
-    def goldDir: String      = s"$lakeRoot/gold/coins_daily/dt=$ds"
-    def dimTable: String     = s"$serveRoot/coin_dimension"
-    def factTable: String    = s"$serveRoot/coin_prices_fact"
+    def silverDir: String    = CoinSources.silver.at(lakeRoot, ds)
+    def goldDir: String      = CoinSources.gold.at(lakeRoot, ds)
+    def dimTable: String     = CoinSources.dimension.at(serveRoot)
+    def factTable: String    = CoinSources.fact.at(serveRoot)
   }
 
   /** The reference chain, in order (`coin_data_pipeline_optimized.py:1243`). */
@@ -116,10 +116,10 @@ object CoinDag {
       }
 
     case "transform_bronze_to_silver" =>
+      // an empty bronze partition fails the publish (`non_empty`)
       val bronze = CoinSources.readBronzeJson(spark, conf.bronzeDir)
-      CoinOps.assertNonEmpty(bronze, s"bronze dt=${conf.ds}")
       LakeSink.publishPartition(spark, CoinOps.bronzeToSilver(bronze), conf.lakeRoot,
-        "silver/coins", conf.ds, CoinSchemas.silverSchemaVersion, conf.bronzeDir)
+        CoinSources.silver.dir, conf.ds, CoinSchemas.silverSchemaVersion, conf.bronzeDir)
 
     case "validate" =>
       // V1 contract + V2 expectations as their OWN retryable task over the
@@ -130,21 +130,22 @@ object CoinDag {
       graft.expectations.Suites.fluentSilverSuite.enforce(silver)
 
     case "load_dim" =>
+      // insert-ignore: the reference's `ON CONFLICT DO NOTHING` loads (S6/S7)
       val silver = CoinSources.readSilver(spark, conf.silverDir)
-      mergeIntoParquet(spark, CoinOps.dimensionRows(silver), conf.dimTable,
-        keys = Seq("coin_id"), update = false)
+      CoinSources.merge(spark, CoinSources.dimension, conf.serveRoot,
+        CoinOps.dimensionRows(silver))(Merge.insertIgnore(_, _, Seq("coin_id")))
 
     case "load_fact" =>
       val silver = CoinSources.readSilver(spark, conf.silverDir)
-      mergeIntoParquet(spark, CoinOps.factRows(silver), conf.factTable,
-        keys = Seq("coin_id", "timestamp"), update = false)
+      CoinSources.merge(spark, CoinSources.fact, conf.serveRoot,
+        CoinOps.factRows(silver))(Merge.insertIgnore(_, _, Seq("coin_id", "timestamp")))
 
     case "build_gold_minio" =>
       val silver = CoinSources.readSilver(spark, conf.silverDir)
       val gold = CoinOps.goldDailyMetrics(silver, conf.ds)
       CoinOps.assertGoldSanity(gold, conf.ds)
       LakeSink.publishPartition(spark, gold.orderBy("coin_id"), conf.lakeRoot,
-        "gold/coins_daily", conf.ds, "v1", conf.silverDir)
+        CoinSources.gold.dir, conf.ds, "v1", conf.silverDir)
 
     case "load_gold_postgres" =>
       val lakeGold = CoinSources.readGold(spark, conf.goldDir)
@@ -153,7 +154,7 @@ object CoinDag {
 
     case "validate_gold_row_count" =>
       val lakeGold = CoinSources.readGold(spark, conf.goldDir)
-      val served = spark.read.parquet(s"${conf.serveRoot}/gold_coin_daily_metrics")
+      val served = CoinSources.readServedGold(spark, conf.serveRoot)
         .filter(col("dt") === conf.ds)
       CoinOps.assertCountsReconcile(lakeGold, served, conf.ds)
 
@@ -172,29 +173,6 @@ object CoinDag {
     case other =>
       throw new IllegalArgumentException(
         s"unknown stage '$other' — expected one of: ${stageChain.mkString(", ")}")
-  }
-
-  /** Key-based insert-ignore (update=false) merge into a parquet warehouse
-    * table, published atomically — the parquet twin of the reference's
-    * `ON CONFLICT DO NOTHING` dim/fact loads (S6/S7), so stage re-runs
-    * converge instead of appending duplicates.
-    */
-  private def mergeIntoParquet(spark: SparkSession, incoming: DataFrame,
-      path: String, keys: Seq[String], update: Boolean): Unit = {
-    val p  = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(p)) {
-        val existing = spark.read.parquet(path)
-        if (update) Merge.upsert(existing, incoming, keys)
-        else Merge.insertIgnore(existing, incoming, keys)
-      } else incoming
-    LakeSink.stageAndSwap(fs, p)(staging =>
-      merged.write.mode("overwrite").parquet(staging.toString))
-    // The swap is a rename, not a Spark write to `path`, so the session's
-    // file-listing cache still holds the replaced part files — readers would
-    // hit FILE_NOT_EXIST. Invalidate explicitly.
-    spark.catalog.refreshByPath(path)
   }
 
   /** Render the Airflow DAG artifact: one `SparkSubmitOperator` per stage,

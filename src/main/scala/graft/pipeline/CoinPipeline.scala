@@ -54,10 +54,12 @@ object CoinPipeline {
       checkpointPath: Option[String] = None
   ): RunResult = {
     val bronzePath = s"$bronzeRoot/coins/dt=$ds"
+    val silverDir  = CoinSources.silver.at(lakeRoot, ds)
+    val goldDir    = CoinSources.gold.at(lakeRoot, ds)
 
-    // Extract + bronze read (S3): schema-on-read of the raw JSON array.
+    // Extract + bronze read (S3): schema-on-read of the raw JSON array. An
+    // empty partition fails the silver publish (`non_empty`).
     val bronze = CoinSources.readBronzeJson(spark, bronzePath)
-    CoinOps.assertNonEmpty(bronze, s"bronze dt=$ds")
 
     // Silver transform (P1-P3) + contract (V1) + expectations (V2).
     val silver = CoinOps.enforcedSilver(CoinOps.bronzeToSilver(bronze))
@@ -65,26 +67,24 @@ object CoinPipeline {
     checkpointPath.foreach(p =>
       graft.expectations.GeCheckpoint.load(spark, p).enforce(silver))
 
-    val silverRows = LakeSink.publishPartition(spark, silver, lakeRoot, "silver/coins", ds,
-      CoinSchemas.silverSchemaVersion, bronzePath)
+    val silverRows = LakeSink.publishPartition(spark, silver, lakeRoot, CoinSources.silver.dir,
+      ds, CoinSchemas.silverSchemaVersion, bronzePath)
 
     // Gold build (A1) from the published silver partition.
-    val publishedSilver = CoinSources.readSilver(spark, s"$lakeRoot/silver/coins/dt=$ds")
-    val gold = CoinOps.goldDailyMetrics(publishedSilver, ds)
+    val gold = CoinOps.goldDailyMetrics(CoinSources.readSilver(spark, silverDir), ds)
     CoinOps.assertGoldSanity(gold, ds)
     val goldRows = LakeSink.publishPartition(spark, gold.orderBy("coin_id"), lakeRoot,
-      "gold/coins_daily", ds, "v1", s"$lakeRoot/silver/coins/dt=$ds")
+      CoinSources.gold.dir, ds, "v1", silverDir)
 
     // Serve: last-writer-wins upsert on (dt, coin_id) — reference S8.
-    val lakeGold  = CoinSources.readGold(spark, s"$lakeRoot/gold/coins_daily/dt=$ds")
-      .withColumn("dt", lit(ds))
-    val served    = upsertServe(spark, lakeGold, serveRoot)
+    val lakeGold = CoinSources.readGold(spark, goldDir).withColumn("dt", lit(ds))
+    upsertServe(spark, lakeGold, serveRoot)
 
     // Quality gates V3-V7.
-    val servedForDs = served.filter(col("dt") === ds)
+    val servedForDs = CoinSources.readServedGold(spark, serveRoot).filter(col("dt") === ds)
     CoinOps.assertCountsReconcile(lakeGold, servedForDs, ds)
     CoinOps.assertGoldQuality(lakeGold, ds)
-    CoinOps.assertFreshness(spark, s"$lakeRoot/gold/coins_daily/dt=$ds")
+    CoinOps.assertFreshness(spark, goldDir)
     CoinOps.assertSla(java.time.LocalDate.parse(ds), now, scheduled)
 
     RunResult(ds, silverRows, goldRows, servedForDs.count())
@@ -99,24 +99,13 @@ object CoinPipeline {
     * sources; here `incoming` is key-unique by construction — it comes out
     * of a groupBy on the key — so the cheap join form is exact.)
     */
-  private[graft] def upsertServe(spark: SparkSession, incoming: DataFrame, serveRoot: String): DataFrame = {
-    val path = s"$serveRoot/gold_coin_daily_metrics"
-    val finalP = new org.apache.hadoop.fs.Path(path)
-    val fs = finalP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(finalP)) {
-        val existing = spark.read.parquet(path).alias("e")
-        val incomingKeys = broadcast(
-          incoming.select(col("dt"), col("coin_id")).dropDuplicates("dt", "coin_id")).alias("i")
-        // null-safe key equality: a null key must still anti-match its twin
-        val keep = existing.join(incomingKeys,
-          col("e.dt") <=> col("i.dt") && col("e.coin_id") <=> col("i.coin_id"), "left_anti")
-        incoming.unionByName(keep)
-      } else incoming
-    LakeSink.stageAndSwap(fs, finalP) { staging =>
-      merged.write.mode("overwrite").parquet(staging.toString)
+  private[graft] def upsertServe(spark: SparkSession, incoming: DataFrame, serveRoot: String): Unit =
+    CoinSources.merge(spark, CoinSources.servedGold, serveRoot, incoming) { (existing, day) =>
+      val incomingKeys = broadcast(
+        day.select(col("dt"), col("coin_id")).dropDuplicates("dt", "coin_id")).alias("i")
+      // null-safe key equality: a null key must still anti-match its twin
+      val keep = existing.alias("e").join(incomingKeys,
+        col("e.dt") <=> col("i.dt") && col("e.coin_id") <=> col("i.coin_id"), "left_anti")
+      day.unionByName(keep)
     }
-    spark.catalog.refreshByPath(path) // rename-swap bypasses Spark's cache invalidation
-    spark.read.parquet(path)
-  }
 }

@@ -12,6 +12,7 @@ import org.apache.spark.sql.types._
   *    (reference `dags/coin_data_pipeline_optimized.py:20-27`)
   *  - gold: daily per-coin aggregates, grain `(dt, coin_id)`
   *    (reference `dags/coin_data_pipeline_optimized.py:795-807`)
+  *  - serving star: coin dimension and price fact
   *
   * Spark treats `nullable = false` as advisory on read; the silver contract is
   * *enforced* by [[graft.contract.SchemaContract]], not by these StructTypes.
@@ -77,15 +78,13 @@ object CoinSchemas {
     StructField("dt", StringType)
   ))
 
-  /** Typed silver row for the `Dataset[SilverCoin]` path. */
-  final case class SilverCoin(
-      coin_id: String,
-      symbol: String,
-      name: String,
-      price_usd: Double,
-      market_cap: Double,
-      timestamp: java.sql.Timestamp
-  )
+  /** Coin dimension, one row per `coin_id` (`CoinOps.dimensionRows`). */
+  val dimension: StructType =
+    StructType.fromDDL("coin_id STRING, name STRING, symbol STRING, category STRING")
+
+  /** Price fact, one row per `(coin_id, timestamp)` (`CoinOps.factRows`). */
+  val fact: StructType = StructType.fromDDL(
+    "coin_id STRING, price_usd DOUBLE, market_cap DOUBLE, timestamp TIMESTAMP_LTZ")
 
   /** Warehouse DDL (star schema) — reference `coin_data_pipeline_optimized.py:87-104`. */
   object WarehouseDdl {

@@ -1,7 +1,11 @@
 package graft.sinks
 
+import graft.ops.QualityGateFailure
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Using
 
 /** Partitioned-lake writer with atomic publish + metadata sidecar
   * (SURVEY §4 P3/P4; reference `dags/coin_data_pipeline_optimized.py:443-479`:
@@ -9,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is named `.metadata.json` (dot-hidden): Spark's file index special-cases
   * any `_metadata*` name as a parquet summary file and would try to parse the
   * JSON as parquet footers — the reference's `_metadata.json` name is a
-  * pandas-only convention that breaks `spark.read.parquet` on the directory.
+  * pandas-only convention that breaks a Spark parquet read of the directory.
   *
   * Spark-native realization: write the partition to a staging directory with
   * the normal committer (task/job atomicity), then a single filesystem
@@ -32,6 +36,8 @@ object LakeSink {
 
   /** Write `df` as the single `dt=<dt>` partition of `<root>/<dataset>`,
     * atomically, and publish the metadata sidecar. Returns the row count.
+    * A zero-row partition is refused before the swap (`non_empty`): the
+    * freshness gate checks only that a partition exists.
     */
   def publishPartition(
       spark: SparkSession,
@@ -45,11 +51,14 @@ object LakeSink {
     val fs       = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val finalDir = new Path(s"$root/$dataset/dt=$dt")
 
-    var rowCount = 0L
-    stageAndSwap(fs, finalDir) { staging =>
+    val rowCount = stageAndSwap(fs, finalDir) { staging =>
       df.write.mode("overwrite").parquet(staging.toString)
-      // Row count from the written files' footers — avoids recomputing the plan.
-      rowCount = spark.read.parquet(staging.toString).count()
+      // Row count from the written files' footers — no job, no pass over the data.
+      val n = fs.listStatus(staging).iterator.filter(_.getPath.getName.endsWith(".parquet"))
+        .map(f => Using.resource(ParquetFileReader.open(HadoopInputFile.fromStatus(f,
+          fs.getConf)))(_.getRecordCount)).sum
+      if (n == 0L) throw QualityGateFailure("non_empty", s"$dataset dt=$dt is empty")
+      n
     }
 
     val meta = PartitionMeta(dataset, schemaVersion, dt, rowCount, sourcePath,
@@ -75,17 +84,6 @@ object LakeSink {
     spark.catalog.refreshByPath(dir) // rename-swap bypasses Spark's cache invalidation
   }
 
-  /** Publish `staging` at `finalDir` without a data-loss window: the live
-    * dir is renamed ASIDE (not deleted) before the staging rename, and
-    * restored if that rename fails — a crash mid-swap leaves either the old
-    * or the new fileset recoverable, never neither. (Plain
-    * delete-then-rename loses the partition if the process dies between the
-    * two calls.)
-    */
-  /** Stage-and-swap with failure cleanup: run `write` against a fresh
-    * staging path, then [[swapIn]]; on ANY failure the staging dir is
-    * removed so repeated failing runs can't accumulate orphaned data.
-    */
   /** Retention for batch-versioned index roots (`v<digits>` dirs, the
     * layout both streaming ingests publish one full index copy per
     * micro-batch into): delete all but the newest `keepLast` versions.
@@ -114,12 +112,18 @@ object LakeSink {
     }
   }
 
-  private[graft] def stageAndSwap(fs: org.apache.hadoop.fs.FileSystem,
-      finalDir: Path)(write: Path => Unit): Unit = {
+  /** Stage-and-swap with failure cleanup: run `write` against a fresh
+    * staging path, then [[swapIn]], and return what `write` returned; on
+    * ANY failure the staging dir is removed so repeated failing runs can't
+    * accumulate orphaned data.
+    */
+  private[graft] def stageAndSwap[T](fs: org.apache.hadoop.fs.FileSystem,
+      finalDir: Path)(write: Path => T): T = {
     val staging = new Path(finalDir.getParent, s".staging-${java.util.UUID.randomUUID}")
     try {
-      write(staging)
+      val out = write(staging)
       swapIn(fs, staging, finalDir)
+      out
     } catch {
       case e: Throwable =>
         try fs.delete(staging, true) catch { case _: Exception => () }
@@ -127,6 +131,13 @@ object LakeSink {
     }
   }
 
+  /** Publish `staging` at `finalDir` without a data-loss window: the live
+    * dir is renamed ASIDE (not deleted) before the staging rename, and
+    * restored if that rename fails — a crash mid-swap leaves either the old
+    * or the new fileset recoverable, never neither. (Plain
+    * delete-then-rename loses the partition if the process dies between the
+    * two calls.)
+    */
   private[graft] def swapIn(fs: org.apache.hadoop.fs.FileSystem,
       staging: Path, finalDir: Path): Unit = {
     val backup = new Path(finalDir.getParent, s".backup-${finalDir.getName}-${java.util.UUID.randomUUID}")

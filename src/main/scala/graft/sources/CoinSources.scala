@@ -1,9 +1,13 @@
 package graft.sources
 
 import graft.schema.CoinSchemas
+import graft.sinks.LakeSink
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Lake readers for the coin medallion layers (SURVEY §2.1 S2-S4).
+/** The coin medallion's table layer (SURVEY §2.1 S2-S4): where each coin
+  * dataset lives, its schema, and how a coin table is read or merged.
   *
   * Bronze is a JSON *array* file per partition (not JSON-lines) whose null
   * `roi` serializes as bare `NaN` — invalid strict JSON (reference writes it
@@ -14,6 +18,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CoinSources {
 
+  /** A coin parquet table: its directory under a root, and its schema. */
+  final case class CoinTable(dir: String, schema: StructType) {
+    def at(root: String): String = s"$root/$dir"
+    def at(root: String, dt: String): String = s"$root/$dir/dt=$dt"
+  }
+  val silver: CoinTable     = CoinTable("silver/coins", CoinSchemas.silverV1)
+  val gold: CoinTable       = CoinTable("gold/coins_daily", CoinSchemas.goldDaily)
+  val dimension: CoinTable  = CoinTable("coin_dimension", CoinSchemas.dimension)
+  val fact: CoinTable       = CoinTable("coin_prices_fact", CoinSchemas.fact)
+  val servedGold: CoinTable = CoinTable("gold_coin_daily_metrics", CoinSchemas.goldDaily)
+
   /** Bronze JSON for one partition dir (or the partitioned root). */
   def readBronzeJson(spark: SparkSession, path: String): DataFrame =
     spark.read
@@ -22,22 +37,40 @@ object CoinSources {
       .option("allowNonNumericNumbers", value = true)
       .json(path)
 
-  /** Raw-zone CSV twin (header, no index column). */
-  def readRawCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(CoinSchemas.bronze)
-      .option("header", value = true)
-      .csv(path)
-
   /** Silver parquet. The checked-in reference fixture was written by pandas as
-    * `timestamp[ns, tz=UTC]`; Spark reads it (truncated to µs) transparently.
+    * `timestamp[ns, tz=UTC]`, which Spark 4 refuses (`PARQUET_TYPE_ILLEGAL
+    * INT64 (TIMESTAMP(NANOS,true))`), under this declared schema too; it is
+    * readable only by an inferring read under
+    * `spark.sql.legacy.parquet.nanosAsLong`, as CoinEtlGoldenSpec reads it.
     */
-  def readSilver(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  def readSilver(spark: SparkSession, path: String): DataFrame = read(spark, silver, path)
 
   /** Gold parquet. */
-  def readGold(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  def readGold(spark: SparkSession, path: String): DataFrame = read(spark, gold, path)
+
+  /** The served gold table. */
+  def readServedGold(spark: SparkSession, serveRoot: String): DataFrame =
+    read(spark, servedGold, servedGold.at(serveRoot))
+
+  /** Replace table `t` under `root` with `combine(existing, incoming)` (or
+    * `incoming` when it does not exist yet), published by stage-and-swap.
+    */
+  def merge(spark: SparkSession, t: CoinTable, root: String, incoming: DataFrame)(
+      combine: (DataFrame, DataFrame) => DataFrame): Unit = {
+    val path = t.at(root)
+    val p    = new Path(path)
+    val fs   = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val merged = if (fs.exists(p)) combine(read(spark, t, path), incoming) else incoming
+    LakeSink.stageAndSwap(fs, p)(staging =>
+      merged.write.mode("overwrite").parquet(staging.toString))
+    // The swap is a rename, not a Spark write to `path`, so the session's
+    // file-listing cache still holds the replaced part files — readers would
+    // hit FILE_NOT_EXIST. Invalidate explicitly.
+    spark.catalog.refreshByPath(path)
+  }
+
+  private def read(spark: SparkSession, t: CoinTable, path: String): DataFrame =
+    spark.read.schema(t.schema).parquet(path)
 }
 
 /** Driver-side ingest source (SURVEY §2.1 S1). The reference fetches
@@ -50,17 +83,6 @@ trait CoinMarketsFetcher {
 
   /** Returns the raw JSON payload (an array of market records). */
   def fetchJson(): String
-
-  /** Parse the fetched payload into a bronze-schema DataFrame. */
-  def fetchDataFrame(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val ds = spark.createDataset(Seq(fetchJson()))
-    spark.read
-      .schema(CoinSchemas.bronze)
-      .option("multiLine", value = true)
-      .option("allowNonNumericNumbers", value = true)
-      .json(ds)
-  }
 }
 
 /** Non-2xx response — the engine's `raise_for_status` twin. */

@@ -2,10 +2,7 @@ package graft
 
 import graft.sinks.{LakeTable, MaterializedView}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One lake file relation: every way the engine turns lake files into a
   * DataFrame — snapshot reads, a merge's hot buckets, deletion vectors,
@@ -15,7 +12,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * a path list through Spark's `InMemoryFileIndex`, lists leaf files or
   * infers a parquet schema.
   */
-class LakeReadPathSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+class LakeReadPathSpec extends SparkTestBase {
   import spark.implicits._
 
   private def newRoot(tag: String) =
@@ -26,29 +23,6 @@ class LakeReadPathSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       concat(lit(tag), col("id")).alias("name"),
       (col("id") % 97).cast("double").alias("score"),
       (col("id") % 5).cast("string").alias("grp"))
-
-  /** Runs `body` and returns (file-index classes of every executed file
-    * scan, every job's description and stage call sites).
-    */
-  private def observed(body: => Unit): (Seq[String], Seq[String]) = {
-    val indexes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val ql = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        collectWithSubqueries(qe.executedPlan) {
-          case s: FileSourceScanExec =>
-            s.relation.location.getClass.getSimpleName
-        }.foreach(indexes.add)
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(ql)
-    val (_, p) = try QueryProfile.measure(spark)(body)
-      finally spark.listenerManager.unregister(ql)
-    import scala.jdk.CollectionConverters._
-    (indexes.asScala.toSeq,
-      p.jobs.map(j => (j.label +: j.stageNames.zip(j.stageDetails)
-        .flatMap { case (n, d) => Seq(n, d) }).mkString("\n")))
-  }
 
   test("every lake read plans through SidecarFileIndex: no InMemoryFileIndex, " +
       "no leaf-file listing, no schema inference") {

@@ -29,6 +29,36 @@ class LakeSinkSpec extends SparkTestBase {
       .filter(_.startsWith(".staging")) shouldBe empty
   }
 
+  test("publishPartition counts rows on its own write: one job") {
+    val root = Files.createTempDirectory("graft-lake-jobs").toString
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+    val (n, p) = QueryProfile.measure(spark) {
+      LakeSink.publishPartition(spark, df, root, "silver/t", "2026-01-01", "v1", "src")
+    }
+    n shouldBe 3
+    p.jobs.size shouldBe 1
+    LakeSink.readSidecar(spark, s"$root/silver/t/dt=2026-01-01").get should
+      include(""""row_count": 3""")
+  }
+
+  test("publishPartition refuses an empty partition before the swap") {
+    val root = Files.createTempDirectory("graft-lake-empty").toString
+    LakeSink.publishPartition(spark, Seq((1L, "old")).toDF("k", "v"), root,
+      "silver/t", "2026-01-01", "v1", "s")
+    val e = intercept[graft.ops.QualityGateFailure] {
+      LakeSink.publishPartition(spark, Seq.empty[(Long, String)].toDF("k", "v"), root,
+        "silver/t", "2026-01-01", "v1", "s")
+    }
+    e.gate shouldBe "non_empty"
+    e.detail shouldBe "silver/t dt=2026-01-01 is empty"
+    // the live partition and its sidecar are untouched, no staging left
+    publishedKeys(root) shouldBe Set(1L)
+    LakeSink.readSidecar(spark, s"$root/silver/t/dt=2026-01-01").get should
+      include(""""row_count": 1""")
+    new java.io.File(s"$root/silver/t").listFiles().map(_.getName)
+      .filter(_.startsWith(".staging")) shouldBe empty
+  }
+
   // ---- fault injection: the tmp→swap→sidecar protocol exists to survive
   // a crash at any point; these three cases kill the publish at each
   // boundary and prove (a) no data-loss window and (b) a re-run converges.

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -53,9 +55,34 @@ trait SparkTestBase extends AnyFunSuite with Matchers {
         .reduce(_ && _), "left_anti")
     }
   }
+
+  /** Runs `body` and returns (file-index classes of every executed file
+    * scan, every job's description and stage call sites).
+    */
+  def observed(body: => Unit): (Seq[String], Seq[String]) = {
+    val indexes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        SparkTestBase.plans.collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec =>
+            s.relation.location.getClass.getSimpleName
+        }.foreach(indexes.add)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(ql)
+    val (_, p) = try QueryProfile.measure(spark)(body)
+      finally spark.listenerManager.unregister(ql)
+    import scala.jdk.CollectionConverters._
+    (indexes.asScala.toSeq,
+      p.jobs.map(j => (j.label +: j.stageNames.zip(j.stageDetails)
+        .flatMap { case (n, d) => Seq(n, d) }).mkString("\n")))
+  }
 }
 
 object SparkTestBase {
+  private object plans extends AdaptiveSparkPlanHelper
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

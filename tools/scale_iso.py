@@ -20,32 +20,35 @@ AFTER all queries have been measured (the report still lands).
 
 Usage: python3 tools/scale_iso.py OUT.json [COPIES] [QUERY...]
   COPIES defaults to 10 (blow-up dir /tmp/graft_sf1); 30 -> graft_sf3,
-  100 -> graft_sf10. With no QUERY args, all heavy queries run.
+  100 -> graft_sf10. With no QUERY args, all heavy queries run: the
+  names in ScaleProof's `heavyAll`, read from its source.
 
 Note on filters: SPARK_GRAFT_SCALE_FILTER is substring-matched, so the
 session for q_tpch_q1 also runs q_tpch_q10 — the merge keeps only each
 session's TARGET query, and heavyAll order runs the target first, so
 its cold/warm numbers are uncontaminated.
 """
-import json, os, subprocess, sys
+import json, os, re, subprocess, sys
 
-HEAVY = ["q_dedup_minhash", "q_corpus_funnel", "q_quality_classifier",
-         "q_embedding_spread", "q_join_asof", "q_tpch_q1", "q_tpch_q3",
-         "q_tpch_q5", "q_tpch_q6", "q_tpch_q10",
-         "q_corpus_export", "q_split_leakage_safe", "q_ann_ivfpq_indexed",
-         "q_epoch_export", "q_dedup_incremental_neardup",
-         "q_lake_cdf", "q_mv_incremental", "q_pagerank",
-         "q_bm25_index_append", "q_mv_minmax",
-         "q_mv_join", "q_ann_binary", "q_lake_analyze",
-         "q_mv_approx_distinct", "q_mv_quantile", "q_mv_variance",
-         "q_lake_clone", "q_lake_zorder", "q_mv_topk",
-         "q_lake_zorder_incr", "q_lake_scan_pushdown", "q_lake_cdf_mirror",
-         "q_lake_txn", "q_lake_txn_mirror", "q_ann_drift_alarm"]
+SCALE_PROOF = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "..", "src", "main", "scala", "graft",
+                           "ScaleProof.scala")
+
+def heavy_all(path=SCALE_PROOF):
+    """The names in ScaleProof's `heavyAll = Seq(...)` literal, in order:
+    the one list of heavy queries, read from its source so no copy can
+    drift from it. Exits non-zero when no name is found."""
+    src = "\n".join(line.split("//")[0] for line in open(path))
+    m = re.search(r"heavyAll\s*=\s*Seq\(([^)]*)\)", src)
+    names = re.findall(r'"([^"]+)"', m.group(1)) if m else []
+    if not names:
+        sys.exit(f"[iso] no heavyAll names found in {path}")
+    return names
 
 def main():
     out_path = sys.argv[1]
     copies = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    queries = sys.argv[3:] or HEAVY
+    queries = sys.argv[3:] or heavy_all()
     sf1_dir = {10: "/tmp/graft_sf1", 30: "/tmp/graft_sf3",
                100: "/tmp/graft_sf10"}.get(copies, f"/tmp/graft_sf_{copies}x")
     small, big, ratio, entries = {}, {}, {}, []
