@@ -10,8 +10,8 @@ final case class QualityGateFailure(gate: String, detail: String)
     extends RuntimeException(s"quality gate '$gate' failed: $detail")
 
 /** The coin-pipeline transform library — one pure `DataFrame => DataFrame`
-  * function per operator in SURVEY §2, composed by
-  * [[graft.pipeline.CoinPipeline]].
+  * function per operator in SURVEY §2, plus the gates, composed stage by
+  * stage by [[graft.orchestration.CoinDag.runStage]].
   *
   * All transforms are declarative (Catalyst prunes columns at the scan and
   * plans the gold aggregate as partial+final hash agg); no collects, no

@@ -1,7 +1,8 @@
 package graft.orchestration
 
+import graft.JobLabel
+import graft.expectations.{GeCheckpoint, Suites}
 import graft.ops.CoinOps
-import graft.pipeline.CoinPipeline
 import graft.schema.CoinSchemas
 import graft.sinks.{LakeSink, Merge}
 import graft.sources.{CoinSources, HttpCoinMarketsFetcher}
@@ -26,10 +27,13 @@ import org.apache.spark.sql.functions._
   *    retry_delay=5 min); the checked-in file is asserted byte-identical to
   *    the generator's output so the artifact can never drift from the code.
   *
-  * [[CoinPipeline.run]] remains the single-session in-process composition of
-  * the same stages (one Spark job chain, gates before publish); this module
-  * is the per-task decomposition for scheduler-driven runs (gates as their
-  * own retryable tasks, matching the reference's task granularity).
+  * [[runStage]] is the only code that runs a coin delivery: tests, the
+  * benchmark and the Airflow artifact all drive this chain. Gates run where
+  * the reference runs them: the V1 silver contract (and an optional
+  * file-configured checkpoint) gates the silver publish on its staged
+  * files, V4 gold sanity gates the gold publish the same way, V2 is the
+  * `validate` task over published silver, and V3-V7 are their own
+  * retryable tasks after the serve load.
   */
 object CoinDag {
 
@@ -45,7 +49,10 @@ object CoinDag {
       serveRoot: String,
       apiUrl: Option[String] = None,
       scheduled: Boolean = false,
-      now: java.time.Instant = java.time.Instant.now
+      now: java.time.Instant = java.time.Instant.now,
+      // file-configured expectations (a Great Expectations suite JSON) that
+      // gate the silver publish next to V1: rules ops change without a deploy
+      checkpointPath: Option[String] = None
   ) {
     def rawFile: String      = s"$rawRoot/coins_$ds.json"
     def bronzeDir: String    = s"$bronzeRoot/coins/dt=$ds"
@@ -80,18 +87,20 @@ object CoinDag {
   /** Execute one task of the chain. Every stage is idempotent: re-running a
     * stage after a crash (or an Airflow retry) converges because lake writes
     * go through the atomic publish and warehouse writes are key-based
-    * insert-ignore/upsert merges.
+    * insert-ignore/upsert merges. Every job a stage runs is labelled
+    * `coin:<stage>`.
     */
-  def runStage(spark: SparkSession, stage: String, conf: StageConf): Unit = stage match {
+  def runStage(spark: SparkSession, stage: String, conf: StageConf): Unit =
+    JobLabel(spark, s"coin:$stage")(dispatch(spark, stage, conf))
+
+  private def dispatch(spark: SparkSession, stage: String, conf: StageConf): Unit = stage match {
     case "create_tables" =>
-      // Parquet serving layout needs no DDL; materialize the warehouse roots
-      // so downstream merges have a stable parent, and surface the star-DDL
-      // (S9) for operators running against a real warehouse.
+      // Parquet serving layout needs no DDL (the star DDL for a real
+      // warehouse is `CoinSchemas.WarehouseDdl`); materialize the warehouse
+      // root so downstream merges have a stable parent.
       val fs = new org.apache.hadoop.fs.Path(conf.serveRoot)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.mkdirs(new org.apache.hadoop.fs.Path(conf.serveRoot))
-      CoinSchemas.WarehouseDdl.all.foreach(ddl => spark.sparkContext.setJobDescription(
-        s"create_tables: ${ddl.linesIterator.next()}"))
 
     case "extract" =>
       // HTTP pull (S1) → LOCAL raw staging file, the reference's extract
@@ -116,18 +125,21 @@ object CoinDag {
       }
 
     case "transform_bronze_to_silver" =>
-      // an empty bronze partition fails the publish (`non_empty`)
+      // One pass over bronze: the publish refuses an empty partition
+      // (`non_empty`), then the V1 contract and the optional checkpoint
+      // gate the staged silver files before the swap (reference `:419-429`).
       val bronze = CoinSources.readBronzeJson(spark, conf.bronzeDir)
       LakeSink.publishPartition(spark, CoinOps.bronzeToSilver(bronze), conf.lakeRoot,
-        CoinSources.silver.dir, conf.ds, CoinSchemas.silverSchemaVersion, conf.bronzeDir)
+        CoinSources.silver.dir, conf.ds, CoinSchemas.silverSchemaVersion, conf.bronzeDir,
+        check = { staged =>
+          CoinOps.enforcedSilver(staged)
+          conf.checkpointPath.foreach(GeCheckpoint.load(spark, _).enforce(staged))
+        })
 
     case "validate" =>
-      // V1 contract + V2 expectations as their OWN retryable task over the
-      // published silver (the reference's task granularity; the in-process
-      // EP1 gates before publish instead).
-      val silver = CoinSources.readSilver(spark, conf.silverDir)
-      CoinOps.enforcedSilver(silver)
-      graft.expectations.Suites.fluentSilverSuite.enforce(silver)
+      // V2 expectations as their own retryable task over published silver
+      // (the reference's `validate_data`).
+      Suites.fluentSilverSuite.enforce(CoinSources.readSilver(spark, conf.silverDir))
 
     case "load_dim" =>
       // insert-ignore: the reference's `ON CONFLICT DO NOTHING` loads (S6/S7)
@@ -141,16 +153,28 @@ object CoinDag {
         CoinOps.factRows(silver))(Merge.insertIgnore(_, _, Seq("coin_id", "timestamp")))
 
     case "build_gold_minio" =>
+      // V4 sanity gates the publish on the staged gold rows
       val silver = CoinSources.readSilver(spark, conf.silverDir)
-      val gold = CoinOps.goldDailyMetrics(silver, conf.ds)
-      CoinOps.assertGoldSanity(gold, conf.ds)
-      LakeSink.publishPartition(spark, gold.orderBy("coin_id"), conf.lakeRoot,
-        CoinSources.gold.dir, conf.ds, "v1", conf.silverDir)
+      LakeSink.publishPartition(spark, CoinOps.goldDailyMetrics(silver, conf.ds).orderBy("coin_id"),
+        conf.lakeRoot, CoinSources.gold.dir, conf.ds, "v1", conf.silverDir,
+        check = CoinOps.assertGoldSanity(_, conf.ds))
 
     case "load_gold_postgres" =>
+      // `ON CONFLICT (dt, coin_id) DO UPDATE` on parquet (reference S8):
+      // `day ∪ (existing ⟕anti day)`, source-wins on the keys. The growing
+      // table streams through one broadcast left-anti join against the
+      // ~100-row day and never shuffles; the day is key-unique (one gold
+      // row per coin), so the join form is exact.
       val lakeGold = CoinSources.readGold(spark, conf.goldDir)
         .withColumn("dt", lit(conf.ds))
-      CoinPipeline.upsertServe(spark, lakeGold, conf.serveRoot)
+      CoinSources.merge(spark, CoinSources.servedGold, conf.serveRoot, lakeGold) { (existing, day) =>
+        val dayKeys = broadcast(
+          day.select(col("dt"), col("coin_id")).dropDuplicates("dt", "coin_id")).alias("i")
+        // null-safe key equality: a null key must still anti-match its twin
+        val keep = existing.alias("e").join(dayKeys,
+          col("e.dt") <=> col("i.dt") && col("e.coin_id") <=> col("i.coin_id"), "left_anti")
+        day.unionByName(keep)
+      }
 
     case "validate_gold_row_count" =>
       val lakeGold = CoinSources.readGold(spark, conf.goldDir)

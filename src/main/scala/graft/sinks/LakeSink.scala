@@ -37,7 +37,10 @@ object LakeSink {
   /** Write `df` as the single `dt=<dt>` partition of `<root>/<dataset>`,
     * atomically, and publish the metadata sidecar. Returns the row count.
     * A zero-row partition is refused before the swap (`non_empty`): the
-    * freshness gate checks only that a partition exists.
+    * freshness gate checks only that a partition exists. `check` then
+    * gates the staged files, read under `df`'s schema (no inference, no
+    * second pass over `df`'s inputs): if it throws, the staging directory
+    * is removed and nothing is published.
     */
   def publishPartition(
       spark: SparkSession,
@@ -46,7 +49,8 @@ object LakeSink {
       dataset: String,
       dt: String,
       schemaVersion: String,
-      sourcePath: String
+      sourcePath: String,
+      check: DataFrame => Unit = _ => ()
   ): Long = {
     val fs       = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val finalDir = new Path(s"$root/$dataset/dt=$dt")
@@ -58,6 +62,7 @@ object LakeSink {
         .map(f => Using.resource(ParquetFileReader.open(HadoopInputFile.fromStatus(f,
           fs.getConf)))(_.getRecordCount)).sum
       if (n == 0L) throw QualityGateFailure("non_empty", s"$dataset dt=$dt is empty")
+      check(spark.read.schema(df.schema).parquet(staging.toString))
       n
     }
 

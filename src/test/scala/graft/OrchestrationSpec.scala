@@ -1,13 +1,15 @@
 package graft
 
+import graft.ops.CoinOps
 import graft.orchestration.{CoinDag, CoinStageRunner}
-import graft.pipeline.CoinPipeline
+import graft.sources.CoinSources
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions.col
 
 /** The orchestration twin must stay honest three ways: the chain matches
   * the reference DAG task-for-task, the checked-in Airflow artifact matches
-  * the generator byte-for-byte, and the per-stage decomposition replays the
-  * full pipeline to the same final state as the in-process composition.
+  * the generator byte-for-byte, and the per-stage decomposition replays a
+  * delivery to the state the `CoinOps` kernels compute from the fixture.
   */
 class OrchestrationSpec extends SparkTestBase {
 
@@ -42,42 +44,25 @@ class OrchestrationSpec extends SparkTestBase {
     }
   }
 
-  test("stage-by-stage replay converges to the same state as the in-process run") {
-    val work  = Files.createTempDirectory("graft-orch").toString
-    val conf = CoinDag.StageConf(
-      ds = dt,
-      rawRoot = s"$work/raw",
-      bronzeRoot = s"$work/bronze",
-      lakeRoot = s"$work/lake",
-      serveRoot = s"$work/serve",
-      // manual backfill long after the day: the SLA gate must not fire
-      scheduled = false)
+  test("stage-by-stage replay converges to the state the CoinOps kernels compute") {
+    // a manual backfill long after the day (the SLA gate must not fire);
+    // the offline twin of `extract` stages the reference fixture as raw
+    val conf = coinConf(Files.createTempDirectory("graft-orch").toString, dt)
+    deliverCoins(conf, coinFixtureJson(dt))
 
-    // offline twin of `extract`: stage the reference fixture as the raw file
-    Files.createDirectories(Paths.get(conf.rawRoot))
-    Files.copy(
-      Paths.get(fixture(s"crypto-lake/bronze/coins/dt=$dt/coin_raw.json")),
-      Paths.get(conf.rawFile))
+    // final state equals the kernels applied to the same fixture
+    val silverRef = CoinOps.enforcedSilver(CoinOps.bronzeToSilver(CoinSources.readBronzeJson(
+      spark, fixture(s"crypto-lake/bronze/coins/dt=$dt"))))
+    val goldRef = CoinOps.goldDailyMetrics(silverRef, dt)
 
-    CoinDag.stageChain.filterNot(_ == "extract").foreach { stage =>
-      withClue(s"stage $stage: ") {
-        noException should be thrownBy CoinDag.runStage(spark, stage, conf)
-      }
-    }
-
-    // final state equals the in-process EP1 run over the same fixture
-    val lake2 = Files.createTempDirectory("graft-orch-ref").toString
-    val serve2 = Files.createTempDirectory("graft-orch-ref-serve").toString
-    val ref = CoinPipeline.run(spark, dt, fixture("crypto-lake/bronze"), lake2, serve2)
-
-    spark.read.parquet(s"${conf.lakeRoot}/silver/coins/dt=$dt").count() shouldBe ref.silverRows
-    spark.read.parquet(s"${conf.goldDir}").count() shouldBe ref.goldRows
-    val served    = spark.read.parquet(s"${conf.serveRoot}/gold_coin_daily_metrics")
-    val servedRef = spark.read.parquet(s"$serve2/gold_coin_daily_metrics")
-    served.count() shouldBe servedRef.count()
+    spark.read.parquet(conf.silverDir).count() shouldBe silverRef.count()
+    spark.read.parquet(conf.goldDir).count() shouldBe goldRef.count()
+    val served = spark.read.parquet(s"${conf.serveRoot}/gold_coin_daily_metrics")
+      .select(goldRef.columns.map(col): _*)
+    served.count() shouldBe goldRef.count()
     // row-level agreement on the served gold table
-    served.exceptAll(servedRef).count() shouldBe 0L
-    servedRef.exceptAll(served).count() shouldBe 0L
+    served.exceptAll(goldRef).count() shouldBe 0L
+    goldRef.exceptAll(served).count() shouldBe 0L
 
     // warehouse dim/fact tables exist with key-unique rows
     val dim = spark.read.parquet(conf.dimTable)

@@ -1,13 +1,15 @@
 package graft
 
 import graft.ops.QualityGateFailure
-import graft.pipeline.CoinPipeline
+import graft.orchestration.CoinDag
 import graft.sinks.LakeSink
+import graft.sources.CoinSources
 import java.nio.file.Files
+import org.apache.spark.sql.functions.col
 
 /** End-to-end pipeline over the reference's own bronze fixture: replays the
-  * flagship DAG (EP1) into a temp lake and asserts outputs, gates, sidecars,
-  * and re-run idempotency.
+  * flagship DAG (EP1) stage by stage into a temp lake and asserts outputs,
+  * gates, sidecars, and re-run idempotency.
   */
 class PipelineSpec extends SparkTestBase {
 
@@ -16,59 +18,55 @@ class PipelineSpec extends SparkTestBase {
   private def tmpDir(): String =
     Files.createTempDirectory("graft-pipe").toString
 
-  private def bronzeRoot: String = {
-    // fixture path ends at .../crypto-lake/bronze/coins/dt=...; the pipeline
-    // expects <bronzeRoot>/coins/dt=<ds>.
-    fixture("crypto-lake/bronze")
-  }
+  /** Served gold rows for the conf's day. */
+  private def served(c: CoinDag.StageConf): Long =
+    CoinSources.readServedGold(spark, c.serveRoot).filter(col("dt") === c.ds).count()
 
   test("full run publishes silver + gold, passes all gates") {
-    val lake  = tmpDir(); val serve = tmpDir()
-    val r = CoinPipeline.run(spark, dt, bronzeRoot, lake, serve)
-    r.silverRows shouldBe 100
-    r.goldRows shouldBe 100
-    r.servedGoldRows shouldBe 100
+    val c = coinConf(tmpDir(), dt)
+    deliverCoins(c, coinFixtureJson(dt))
+    // 100 silver, 100 gold and 100 served rows, by sidecar and by table
+    Seq(c.silverDir, c.goldDir).foreach { dir =>
+      LakeSink.readSidecar(spark, dir).get should include(""""row_count": 100""")
+      spark.read.parquet(dir).count() shouldBe 100
+    }
+    served(c) shouldBe 100
 
-    val silver = spark.read.parquet(s"$lake/silver/coins/dt=$dt")
-    silver.count() shouldBe 100
-    val gold = spark.read.parquet(s"$lake/gold/coins_daily/dt=$dt")
+    val gold = spark.read.parquet(c.goldDir)
     gold.columns should contain allOf ("coin_id", "avg_price_usd", "min_price_usd",
       "max_price_usd", "avg_market_cap")
-
-    val sidecar = LakeSink.readSidecar(spark, s"$lake/silver/coins/dt=$dt")
-    sidecar.isDefined shouldBe true
-    sidecar.get should include(""""row_count": 100""")
-    sidecar.get should include(""""schema_version": "v1"""")
+    LakeSink.readSidecar(spark, c.silverDir).get should include(""""schema_version": "v1"""")
   }
 
   test("optional file-configured checkpoint gates silver in the flagship run") {
-    val lake = tmpDir(); val serve = tmpDir()
     // a silver-compatible suite passes the run end to end
-    val ok = CoinPipeline.run(spark, dt, bronzeRoot, lake, serve,
-      checkpointPath = Some(fixture("checkpoints/silver_checkpoint.json")))
-    ok.silverRows shouldBe 100
+    val ok = coinConf(tmpDir(), dt)
+      .copy(checkpointPath = Some(fixture("checkpoints/silver_checkpoint.json")))
+    deliverCoins(ok, coinFixtureJson(dt))
+    LakeSink.readSidecar(spark, ok.silverDir).get should include(""""row_count": 100""")
     // the day-10 COIN checkpoint expects market_cap int — silver carries
     // double, so the file-configured gate must block the publish
-    val lake2 = tmpDir(); val serve2 = tmpDir()
+    val bad = coinConf(tmpDir(), dt)
+      .copy(checkpointPath = Some(fixture("checkpoints/coin_checkpoint.json")))
     an[graft.expectations.SuiteFailure] should be thrownBy
-      CoinPipeline.run(spark, dt, bronzeRoot, lake2, serve2,
-        checkpointPath = Some(fixture("checkpoints/coin_checkpoint.json")))
-    new java.io.File(s"$lake2/silver/coins/dt=$dt").exists() shouldBe false
+      deliverCoins(bad, coinFixtureJson(dt))
+    new java.io.File(bad.silverDir).exists() shouldBe false
   }
 
   test("re-running the same day is idempotent (upsert, not append)") {
-    val lake  = tmpDir(); val serve = tmpDir()
-    val r1 = CoinPipeline.run(spark, dt, bronzeRoot, lake, serve)
-    val r2 = CoinPipeline.run(spark, dt, bronzeRoot, lake, serve)
-    r2.servedGoldRows shouldBe r1.servedGoldRows
-    spark.read.parquet(s"$serve/gold_coin_daily_metrics").count() shouldBe 100
+    val c = coinConf(tmpDir(), dt)
+    deliverCoins(c, coinFixtureJson(dt))
+    val first = served(c)
+    deliverCoins(c, coinFixtureJson(dt))
+    served(c) shouldBe first
+    spark.read.parquet(s"${c.serveRoot}/gold_coin_daily_metrics").count() shouldBe 100
   }
 
   test("two days accumulate in the serving table on distinct (dt, coin_id)") {
-    val lake  = tmpDir(); val serve = tmpDir()
-    CoinPipeline.run(spark, "2026-01-13", bronzeRoot, lake, serve)
-    CoinPipeline.run(spark, "2026-01-10", bronzeRoot, lake, serve)
-    spark.read.parquet(s"$serve/gold_coin_daily_metrics").count() shouldBe 200
+    val work = tmpDir()
+    Seq("2026-01-13", "2026-01-10").foreach(ds => deliverCoins(coinConf(work, ds),
+      coinFixtureJson(ds)))
+    spark.read.parquet(s"$work/serve/gold_coin_daily_metrics").count() shouldBe 200
   }
 
   test("SLA gate: scheduled run past the deadline fails; manual run skips") {

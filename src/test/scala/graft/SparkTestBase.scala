@@ -1,5 +1,7 @@
 package graft
 
+import graft.orchestration.CoinDag
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -54,6 +56,27 @@ trait SparkTestBase extends AnyFunSuite with Matchers {
       data.join(dv, m.keys.map(k => data(k) <=> dv(s"__dv_$k"))
         .reduce(_ && _), "left_anti")
     }
+  }
+
+  /** A coin delivery's stage settings, every root under `work`. */
+  def coinConf(work: String, ds: String): CoinDag.StageConf =
+    CoinDag.StageConf(ds, s"$work/raw", s"$work/bronze", s"$work/lake", s"$work/serve")
+
+  /** The reference bronze fixture's raw JSON for `ds`. */
+  def coinFixtureJson(ds: String): String =
+    Files.readString(Paths.get(fixture(s"crypto-lake/bronze/coins/dt=$ds/coin_raw.json")))
+
+  /** Every stage of the coin chain but `extract`, which needs the network. */
+  val offlineCoinStages: Seq[String] = CoinDag.stageChain.filterNot(_ == "extract")
+
+  /** One coin delivery: stage `json` as `c`'s raw file, then run `stages`
+    * in order (by default the whole offline chain).
+    */
+  def deliverCoins(c: CoinDag.StageConf, json: String,
+      stages: Seq[String] = offlineCoinStages): Unit = {
+    Files.createDirectories(Paths.get(c.rawRoot))
+    Files.writeString(Paths.get(c.rawFile), json)
+    stages.foreach(CoinDag.runStage(spark, _, c))
   }
 
   /** Runs `body` and returns (file-index classes of every executed file
