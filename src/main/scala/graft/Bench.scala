@@ -1,5 +1,7 @@
 package graft
+import graft.sinks.MetaFile
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Driver-run benchmark: times every registered query at
   * `SPARK_GRAFT_SF_DIR`, printing ONE JSON line AND writing the same JSON to
@@ -62,23 +64,16 @@ object Bench {
 
   /** Parse `queries_warm` out of a committed bench recording, but ONLY
     * when its `sf` basename matches the current run's — cross-SF ratios
-    * are meaningless. Hand-rolled parse of our own render, like every
-    * sidecar in this repo.
+    * are meaningless.
     */
   private[graft] def refWarmTimes(refJson: String, sfDir: String): Map[String, Double] = {
-    val sameSf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(refJson).exists(m =>
-      new java.io.File(m.group(1)).getName == new java.io.File(sfDir).getName)
+    val o = MetaFile.parse(refJson)
+    val sameSf = MetaFile.optStr(o, "sf").exists(sf =>
+      new java.io.File(sf).getName == new java.io.File(sfDir).getName)
     if (!sameSf) Map.empty
-    else {
-      val tag = "\"queries_warm\":{"
-      val at = refJson.indexOf(tag)
-      if (at < 0) Map.empty
-      else {
-        val body = refJson.substring(at + tag.length, refJson.indexOf('}', at))
-        "\"([^\"]+)\":(-?[0-9.eE+]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }
+    else o.path("queries_warm").properties.asScala.collect {
+      case e if e.getValue.isNumber => e.getKey -> e.getValue.doubleValue
+    }.toMap
   }
 
   /** Warm-median regression gate: the (name, warm, ref, ratio) rows whose

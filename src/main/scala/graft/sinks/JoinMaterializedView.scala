@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Incremental materialized view over a fact ⋈ dim JOIN — the denormalized
@@ -55,7 +56,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 object JoinMaterializedView {
 
-  private final case class Sync(factVersion: Long, dimVersion: Long,
+  private[graft] final case class Sync(factVersion: Long, dimVersion: Long,
       mvVersion: Long)
 
   private def hfs(spark: SparkSession, root: String): FileSystem =
@@ -63,33 +64,21 @@ object JoinMaterializedView {
 
   private val SumType = "decimal(38,6)"
 
-  private def writeSync(spark: SparkSession, mvRoot: String, s: Sync): Unit = {
-    val fs = hfs(spark, mvRoot)
-    val dir = new Path(mvRoot, "_sync")
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val body =
-      s"""{"fact_version":${s.factVersion},"dim_version":${s.dimVersion},""" +
-        s""""mv_version":${s.mvVersion}}"""
-    val staged = new Path(dir, s".staging-${java.util.UUID.randomUUID}")
-    val out = fs.create(staged, false)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // the FILESYSTEM's scheme decides the claim mechanism (a bare local
-    // path's own URI has NO scheme — testing the path would silently
-    // skip the hard-link branch everywhere it matters); losing the claim
-    // is benign: the winner applied the same feeds on the same pinned
-    // view base, so the marker contents are value-identical
-    val dst = new Path(dir, s"${s.factVersion}_${s.dimVersion}.json")
-    if ("file" == Option(fs.getUri).map(_.getScheme).orNull) {
-      try java.nio.file.Files.createLink(
-        java.nio.file.Paths.get(dst.toUri.getPath),
-        java.nio.file.Paths.get(staged.toUri.getPath))
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      fs.delete(staged, false)
-    } else {
-      if (fs.exists(dst) || !fs.rename(staged, dst)) fs.delete(staged, false)
-    }
-  }
+  private[graft] def renderSync(s: Sync): String =
+    s"""{"fact_version":${s.factVersion},"dim_version":${s.dimVersion},""" +
+      s""""mv_version":${s.mvVersion}}"""
+
+  private[graft] def parseSync(o: JsonNode): Sync =
+    Sync(MetaFile.reqNum(o, "fact_version"), MetaFile.reqNum(o, "dim_version"),
+      MetaFile.reqNum(o, "mv_version"))
+
+  /** Claim the `<factV>_<dimV>.json` marker ([[MetaFile.claim]]); losing
+    * the claim is benign: the winner applied the same feeds on the same
+    * pinned view base, so the marker contents are value-identical.
+    */
+  private def writeSync(spark: SparkSession, mvRoot: String, s: Sync): Unit =
+    MetaFile.claim(hfs(spark, mvRoot), new Path(mvRoot,
+      s"_sync/${s.factVersion}_${s.dimVersion}.json"), renderSync(s))
 
   private def readSync(spark: SparkSession, mvRoot: String): Sync = {
     val fs = hfs(spark, mvRoot)
@@ -101,35 +90,21 @@ object JoinMaterializedView {
         val Array(f, d) = n.dropRight(5).split("_")
         (f.toLong, d.toLong)
       }.toSeq.maxBy(identity)
-    val in = fs.open(new Path(dir, s"${newest._1}_${newest._2}.json"))
-    val s = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    def field(name: String): Long = {
-      val at = s.indexOf("\"" + name + "\":")
-      require(at >= 0, s"sync marker: missing $name")
-      s.drop(at + name.length + 3).takeWhile(_.isDigit).toLong
-    }
-    Sync(field("fact_version"), field("dim_version"), field("mv_version"))
+    parseSync(MetaFile.read(fs,
+      new Path(dir, s"${newest._1}_${newest._2}.json")))
   }
+
+  private[graft] def renderJoinMeta(factKeyCol: String): String =
+    s"""{"fact_key_col":${MetaFile.jq(factKeyCol)}}"""
 
   private def writeJoinMeta(spark: SparkSession, mvRoot: String,
-      factKeyCol: String): Unit = {
-    val fs = hfs(spark, mvRoot)
-    val out = fs.create(new Path(mvRoot, "_join.json"), false)
-    try out.write(s"""{"fact_key_col":"$factKeyCol"}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      factKeyCol: String): Unit =
+    MetaFile.write(hfs(spark, mvRoot), new Path(mvRoot, "_join.json"),
+      renderJoinMeta(factKeyCol))
 
-  private def readJoinMeta(spark: SparkSession, mvRoot: String): String = {
-    val fs = hfs(spark, mvRoot)
-    val in = fs.open(new Path(mvRoot, "_join.json"))
-    val s = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    val m = "\"fact_key_col\":\"([^\"]+)\"".r.findFirstMatchIn(s)
-    require(m.isDefined, s"malformed _join.json at $mvRoot")
-    m.get.group(1)
-  }
+  private def readJoinMeta(spark: SparkSession, mvRoot: String): String =
+    MetaFile.str(MetaFile.read(hfs(spark, mvRoot),
+      new Path(mvRoot, "_join.json")), "fact_key_col")
 
   private def dimKeyOf(spark: SparkSession, dimRoot: String): String = {
     val keys = LakeTable.manifest(spark, dimRoot).keys

@@ -158,25 +158,18 @@ object LakeSink {
 
   private def writeSidecar(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
       m: PartitionMeta): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    import MetaFile.jq
     val json =
-      s"""{"dataset": ${q(m.dataset)}, "schema_version": ${q(m.schemaVersion)}, """ +
-        s""""execution_date": ${q(m.executionDate)}, "row_count": ${m.rowCount}, """ +
-        s""""source_path": ${q(m.sourcePath)}, "created_at": ${q(m.createdAt)}}"""
-    val out = fs.create(new Path(dir, ".metadata.json"), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+      s"""{"dataset": ${jq(m.dataset)}, "schema_version": ${jq(m.schemaVersion)}, """ +
+        s""""execution_date": ${jq(m.executionDate)}, "row_count": ${m.rowCount}, """ +
+        s""""source_path": ${jq(m.sourcePath)}, "created_at": ${jq(m.createdAt)}}"""
+    MetaFile.write(fs, new Path(dir, ".metadata.json"), json)
   }
 
   /** Read a partition's sidecar back (for reconciliation / freshness gates). */
   def readSidecar(spark: SparkSession, partitionDir: String): Option[String] = {
     val p  = new Path(partitionDir, ".metadata.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
+    if (!fs.exists(p)) None else Some(MetaFile.text(fs, p))
   }
 }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, DateType,
   NumericType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import com.fasterxml.jackson.databind.JsonNode
+import graft.sinks.MetaFile.jq
 
 /** Keyed lake table with copy-on-write merge — the file-level construction
   * behind every gold table at 100 TB. [[Merge]] gives the ROW semantics
@@ -316,120 +318,15 @@ object LakeTable {
       j.columns.filterNot(_ == "__nsk").map(col): _*)
   }
 
-  // ---- manifest codec (hand-rolled JSON, mirrors Verify's escaping) ----
-
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  // ---- tiny JSON reader -------------------------------------------------
-  // Escape-exact recursive descent over the fixed grammars this file's
-  // render* methods emit (no JSON library in the dependency budget). The
-  // pre-r12 regex extraction broke on stat strings containing ']' inside
-  // nested arrays; the segment plane nests arrays-in-objects-in-arrays,
-  // so it parses properly.
-  private sealed trait JVal
-  private final case class JStr(s: String) extends JVal
-  private final case class JNum(s: String) extends JVal
-  private final case class JBool(b: Boolean) extends JVal
-  private case object JNull extends JVal
-  private final case class JArr(xs: Vector[JVal]) extends JVal
-  private final case class JObj(fields: Map[String, JVal]) extends JVal
-
-  private object Json {
-    def parse(s: String): JVal = {
-      val p = new P(s); val v = p.value(); p.ws()
-      require(p.i >= s.length, s"json: trailing content at ${p.i}")
-      v
-    }
-    private final class P(s: String) {
-      var i = 0
-      def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-      def value(): JVal = { ws(); s(i) match {
-        case '{' => obj()
-        case '[' => arr()
-        case '"' => JStr(str())
-        case 't' => i += 4; JBool(true)
-        case 'f' => i += 5; JBool(false)
-        case 'n' => i += 4; JNull
-        case _ =>
-          val j = i
-          while (i < s.length && (s(i).isDigit || "+-.eE".contains(s(i)))) i += 1
-          JNum(s.substring(j, i))
-      } }
-      def obj(): JObj = {
-        i += 1; ws()
-        val b = Map.newBuilder[String, JVal]
-        if (s(i) == '}') { i += 1; return JObj(b.result()) }
-        var go = true
-        while (go) {
-          ws(); val k = str(); ws()
-          require(s(i) == ':', s"json: expected ':' at $i"); i += 1
-          b += k -> value(); ws()
-          if (s(i) == ',') i += 1 else { require(s(i) == '}'); i += 1; go = false }
-        }
-        JObj(b.result())
-      }
-      def arr(): JArr = {
-        i += 1; ws()
-        val b = Vector.newBuilder[JVal]
-        if (s(i) == ']') { i += 1; return JArr(b.result()) }
-        var go = true
-        while (go) {
-          b += value(); ws()
-          if (s(i) == ',') i += 1 else { require(s(i) == ']'); i += 1; go = false }
-        }
-        JArr(b.result())
-      }
-      def str(): String = {
-        require(s(i) == '"', s"json: expected string at $i"); i += 1
-        val sb = new StringBuilder
-        while (s(i) != '"') {
-          if (s(i) == '\\') { i += 1; s(i) match {
-            case 'n' => sb.append('\n')
-            case 'u' =>
-              sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar)
-              i += 4
-            case c => sb.append(c)
-          } } else sb.append(s(i))
-          i += 1
-        }
-        i += 1
-        sb.toString
-      }
-    }
-    // typed accessors over the fixed grammar — a missing optional field
-    // defaults; a malformed one fails loudly
-    def str(o: JObj, k: String): String =
-      o.fields(k).asInstanceOf[JStr].s
-    def optStr(o: JObj, k: String): Option[String] =
-      o.fields.get(k).collect { case JStr(x) => x }
-    def num(o: JObj, k: String, default: Long = 0L): Long =
-      o.fields.get(k) match {
-        case Some(JNum(x)) => x.toLong
-        case _ => default
-      }
-    def arr(o: JObj, k: String): Vector[JVal] =
-      o.fields.get(k) match {
-        case Some(JArr(xs)) => xs
-        case _ => Vector.empty
-      }
-    def strSeq(o: JObj, k: String): Seq[String] =
-      arr(o, k).map(_.asInstanceOf[JStr].s)
-    def optStrSeq(o: JObj, k: String): IndexedSeq[Option[String]] =
-      arr(o, k).map { case JStr(x) => Some(x); case _ => None }
-  }
+  // ---- manifest codec: render* write each format's exact bytes (quoting
+  // through MetaFile.jq); the parse* readers walk MetaFile's JSON tree ----
 
   private def jOptStr(v: Option[String]): String =
     v.map(jq).getOrElse("null")
 
   // ---- segment files (`_segments/<uuid>.json`) --------------------------
 
-  private def renderSegment(statsCols: Seq[String], bloomCols: Seq[String],
+  private[graft] def renderSegment(statsCols: Seq[String], bloomCols: Seq[String],
       ndvCols: Seq[String], entries: Seq[SegEntry]): String =
     s"""{"stats_cols":[${statsCols.map(jq).mkString(",")}],""" +
       s""""bloom_cols":[${bloomCols.map(jq).mkString(",")}],""" +
@@ -444,19 +341,16 @@ object LakeTable {
           s""""sk":[${e.sks.map(jOptStr).mkString(",")}]}"""
       }.mkString(",")}]}"""
 
-  private def parseSegment(s: String): Segment = {
-    val o = Json.parse(s).asInstanceOf[JObj]
-    Segment(Json.strSeq(o, "stats_cols"), Json.strSeq(o, "bloom_cols"),
-      Json.strSeq(o, "ndv_cols"),
-      Json.arr(o, "files").map { f =>
-        val fo = f.asInstanceOf[JObj]
-        SegEntry(Json.str(fo, "path"), Json.num(fo, "bucket").toInt,
-          Json.num(fo, "rows", -1L), Json.num(fo, "bytes", -1L),
-          Json.optStrSeq(fo, "min"), Json.optStrSeq(fo, "max"),
-          Json.optStrSeq(fo, "bloom"), Json.optStrSeq(fo, "sk"),
-          Json.num(fo, "zg", -1L))
-      })
-  }
+  private[graft] def parseSegment(o: JsonNode): Segment =
+    Segment(MetaFile.strSeq(o, "stats_cols"), MetaFile.strSeq(o, "bloom_cols"),
+      MetaFile.strSeq(o, "ndv_cols"),
+      MetaFile.arr(o, "files").map { fo =>
+        SegEntry(MetaFile.str(fo, "path"), MetaFile.num(fo, "bucket").toInt,
+          MetaFile.num(fo, "rows", -1L), MetaFile.num(fo, "bytes", -1L),
+          MetaFile.optStrSeq(fo, "min"), MetaFile.optStrSeq(fo, "max"),
+          MetaFile.optStrSeq(fo, "bloom"), MetaFile.optStrSeq(fo, "sk"),
+          MetaFile.num(fo, "zg", -1L))
+      }.toVector)
 
   /** Per-JVM cache of parsed segment files, keyed by qualified path.
     * Segments are IMMUTABLE (written once under a UUID name before their
@@ -499,10 +393,7 @@ object LakeTable {
     val key = fs.makeQualified(p0).toString
     val hit = segmentCache.get(key)
     if (hit != null) return hit
-    val in = fs.open(p0)
-    val seg = try parseSegment(new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally in.close()
+    val seg = parseSegment(MetaFile.read(fs, p0))
     if (segmentCache.size > 8192) segmentCache.clear()
     segmentCache.put(key, seg)
     seg
@@ -536,11 +427,12 @@ object LakeTable {
     out.append(']').toString
   }
 
-  private def parseRuns(xs: Vector[JVal]): Seq[Int] = xs.flatMap {
-    case JNum(n) => Seq(n.toInt)
-    case JArr(Vector(JNum(a), JNum(b))) => a.toInt to b.toInt
-    case other => sys.error(s"bad run entry $other")
-  }
+  private def parseRuns(o: JsonNode, k: String): Seq[Int] =
+    MetaFile.arr(o, k).flatMap {
+      case n if n.isArray && n.size == 2 =>
+        MetaFile.long(n.get(0), k).toInt to MetaFile.long(n.get(1), k).toInt
+      case n => Seq(MetaFile.long(n, k).toInt)
+    }
 
   private def renderRef(r: SegmentRef): String =
     s"""{"path":${jq(r.path)},"buckets":${renderRuns(r.buckets)},""" +
@@ -553,7 +445,7 @@ object LakeTable {
       s""""min":[${r.mins.map(jOptStr).mkString(",")}],""" +
       s""""max":[${r.maxs.map(jOptStr).mkString(",")}]}"""
 
-  private def render(m: Manifest): String =
+  private[graft] def render(m: Manifest): String =
     s"""{"ts":${System.currentTimeMillis},""" +
       s""""version":${m.version},"keys":[${m.keys.map(jq).mkString(",")}],""" +
       s""""num_buckets":${m.numBuckets},"schema_ddl":${jq(m.schemaDdl)},""" +
@@ -581,31 +473,27 @@ object LakeTable {
     * `files` array instead of `segments` — those parse to an eager file
     * list with no refs (every read path handles both forms).
     */
-  private def parse(s: String): Manifest = {
-    val o = Json.parse(s).asInstanceOf[JObj]
+  private[graft] def parse(o: JsonNode): Manifest = {
     def files(k: String): Seq[(String, Int)] =
-      Json.arr(o, k).map { f =>
-        val fo = f.asInstanceOf[JObj]
-        (Json.str(fo, "path"), Json.num(fo, "bucket").toInt)
+      MetaFile.arr(o, k).map { fo =>
+        (MetaFile.str(fo, "path"), MetaFile.num(fo, "bucket").toInt)
       }
-    val refs = Json.arr(o, "segments").map { r =>
-      val ro = r.asInstanceOf[JObj]
-      SegmentRef(Json.str(ro, "path"),
-        parseRuns(Json.arr(ro, "buckets")),
-        parseRuns(Json.arr(ro, "dead")),
-        Json.num(ro, "files").toInt, Json.num(ro, "rows", -1L),
-        Json.num(ro, "bytes", -1L),
-        Json.optStrSeq(ro, "min"), Json.optStrSeq(ro, "max"),
-        Json.num(ro, "xs") == 1L, Json.num(ro, "zg", -1L),
-        Json.optStrSeq(ro, "sk"))
+    val refs = MetaFile.arr(o, "segments").map { ro =>
+      SegmentRef(MetaFile.str(ro, "path"),
+        parseRuns(ro, "buckets"), parseRuns(ro, "dead"),
+        MetaFile.num(ro, "files").toInt, MetaFile.num(ro, "rows", -1L),
+        MetaFile.num(ro, "bytes", -1L),
+        MetaFile.optStrSeq(ro, "min"), MetaFile.optStrSeq(ro, "max"),
+        MetaFile.num(ro, "xs") == 1L, MetaFile.num(ro, "zg", -1L),
+        MetaFile.optStrSeq(ro, "sk"))
     }
-    Manifest(Json.num(o, "version"), Json.strSeq(o, "keys"),
-      Json.num(o, "num_buckets").toInt, Json.str(o, "schema_ddl"),
-      if (o.fields.contains("files")) files("files") else null,
-      Json.strSeq(o, "sort_cols"), Json.strSeq(o, "stats_cols"),
-      Json.num(o, "max_records"), files("dv_files"),
-      Json.strSeq(o, "bloom_cols"), Json.strSeq(o, "ndv_cols"),
-      Json.num(o, "cdf_record") == 1L, Json.optStr(o, "txn"), refs)
+    Manifest(MetaFile.num(o, "version"), MetaFile.strSeq(o, "keys"),
+      MetaFile.num(o, "num_buckets").toInt, MetaFile.str(o, "schema_ddl"),
+      if (o.has("files")) files("files") else null,
+      MetaFile.strSeq(o, "sort_cols"), MetaFile.strSeq(o, "stats_cols"),
+      MetaFile.num(o, "max_records"), files("dv_files"),
+      MetaFile.strSeq(o, "bloom_cols"), MetaFile.strSeq(o, "ndv_cols"),
+      MetaFile.num(o, "cdf_record") == 1L, MetaFile.optStr(o, "txn"), refs)
   }
 
   /** The newest slot in `vs` that is LIVE — or the writer's own staged
@@ -642,13 +530,17 @@ object LakeTable {
     (liveHeadIn(spark, root, vs, selfTxn), vs.max + 1)
   }
 
-  private[graft] def versions(fs: FileSystem, root: String): Seq[Long] = {
-    val d = new Path(root, "_versions")
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).iterator.map(_.getPath.getName)
-      .collect { case n if n.endsWith(".json") &&
-        n.dropRight(5).forall(_.isDigit) => n.dropRight(5).toLong }
-      .toSeq.sorted
+  private[graft] def versions(fs: FileSystem, root: String): Seq[Long] =
+    MetaFile.numbered(fs, new Path(root, "_versions"))
+
+  /** The manifest file at slot `v`, opened and parsed once, with its
+    * publish stamp `ts` (0 for legacy manifests without one) — the one
+    * manifest read; no segment resolver attached.
+    */
+  private def manifestFile(fs: FileSystem, root: String,
+      v: Long): (Manifest, Long) = {
+    val o = MetaFile.read(fs, new Path(root, s"_versions/$v.json"))
+    (parse(o), MetaFile.num(o, "ts"))
   }
 
   /** Raw manifest at slot `v` — NO transaction-liveness check. For the
@@ -658,11 +550,7 @@ object LakeTable {
     */
   private[graft] def manifestAt(spark: SparkSession, root: String,
       v: Long): Manifest = {
-    val fs = hfs(spark, root)
-    val in = fs.open(new Path(root, s"_versions/$v.json"))
-    val m = try parse(new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally in.close()
+    val (m, _) = manifestFile(hfs(spark, root), root, v)
     // attach the segment resolver: `files` stays lazy, so metadata-only
     // walks (history, liveness, the claim guard) never load a segment
     m.segmentLoader = p => loadSegment(spark, root, p)
@@ -674,15 +562,20 @@ object LakeTable {
     * Outcomes are claimed EXCLUSIVELY ([[claimOutcome]]) so a decided
     * outcome is FINAL — liveness can flip in-flight→decided, never back.
     */
-  private[graft] def txnOutcome(spark: SparkSession,
-      outcomePath: String): Option[Boolean] =
-    txnOutcome2(spark.sparkContext.hadoopConfiguration, outcomePath)
+  private[graft] def txnOutcome(conf: org.apache.hadoop.conf.Configuration,
+      outcomePath: String): Option[Boolean] = {
+    val p = new Path(outcomePath)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) None
+    else Some(MetaFile.optStr(MetaFile.read(fs, p), "outcome").contains("commit"))
+  }
 
   /** Is this manifest visible to readers? Non-txn versions always are;
     * a txn version only once its outcome file records `commit`.
     */
   private[graft] def liveOf(spark: SparkSession, m: Manifest): Boolean =
-    m.txn.forall(p => txnOutcome(spark, p).contains(true))
+    m.txn.forall(p => txnOutcome(spark.sparkContext.hadoopConfiguration, p)
+      .contains(true))
 
   private[graft] def manifest(spark: SparkSession, root: String,
       version: Option[Long] = None): Manifest = {
@@ -723,71 +616,6 @@ object LakeTable {
   private[graft] final class CommitRaceException(msg: String)
     extends java.io.IOException(msg)
 
-  /** Publish `m` as the next version — the one ATOMIC, EXCLUSIVE commit
-    * point of every write path. The manifest is staged as a dot-file
-    * (invisible to [[versions]]) and claimed:
-    *
-    *  - local filesystems: a HARD LINK staged → `<v>.json`. `link(2)`
-    *    fails with EEXIST if the destination exists and the destination
-    *    appears fully written (it IS the staged bytes) — whereas a POSIX
-    *    `rename(2)` silently REPLACES an existing destination, which is
-    *    exactly the last-writer-wins hazard this guards against.
-    *  - filesystems with atomic-and-exclusive rename (HDFS at the
-    *    namenode, ABFS at the blob service): exists-check + `rename`.
-    *
-    * That second branch is check-then-act and leans on the scheme's
-    * rename contract, so it is ALLOWLISTED: object stores whose rename
-    * is copy+delete-with-overwrite (s3a, plain gcs) would silently
-    * degrade the exclusive claim to last-writer-wins — publish fails
-    * fast on such schemes instead of advertising a guarantee it cannot
-    * keep. Single-writer deployments on those stores can opt out via
-    * Hadoop conf `graft.lake.unsafePublish=true` (documented
-    * last-writer-wins) or front the table with an HDFS/ABFS root.
-    *
-    * The loser gets [[CommitRaceException]]; its staged file is cleaned,
-    * its data files become crash-orphans that [[vacuum]] sweeps.
-    */
-  private val exclusiveRenameSchemes =
-    Set("hdfs", "viewfs", "webhdfs", "abfs", "abfss")
-
-  /** Atomically and EXCLUSIVELY create `dir/dstName` holding `bytes`:
-    * true = this caller created it; false = it already existed or a
-    * concurrent creator won. The guts of the manifest claim, shared with
-    * the transaction-outcome claim ([[claimOutcome]]) — same hard-link /
-    * allowlisted-rename discipline and the same `graft.lake.unsafePublish`
-    * escape hatch.
-    */
-  private def exclusiveCreate(fs: FileSystem, dir: Path, dstName: String,
-      bytes: Array[Byte]): Boolean = {
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val staged = new Path(dir, s".staging-${java.util.UUID.randomUUID}")
-    val out = fs.create(staged, false)
-    try out.write(bytes) finally out.close()
-    val dst = new Path(dir, dstName)
-    val local = "file" == Option(fs.getUri).map(_.getScheme).orNull
-    if (local) {
-      val stagedNio = java.nio.file.Paths.get(staged.toUri.getPath)
-      val dstNio = java.nio.file.Paths.get(dst.toUri.getPath)
-      val won =
-        try { java.nio.file.Files.createLink(dstNio, stagedNio); true }
-        catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      fs.delete(staged, false)
-      won
-    } else {
-      val scheme = Option(fs.getUri).map(_.getScheme).getOrElse("unknown")
-      require(exclusiveRenameSchemes.contains(scheme) ||
-        fs.getConf.getBoolean("graft.lake.unsafePublish", false),
-        s"LakeTable publish needs atomic-and-exclusive rename, which " +
-          s"'$scheme' does not guarantee — use an allowlisted scheme " +
-          s"(${exclusiveRenameSchemes.toSeq.sorted.mkString(", ")}) or " +
-          "accept last-writer-wins explicitly with " +
-          "graft.lake.unsafePublish=true for single-writer deployments")
-      if (fs.exists(dst)) { fs.delete(staged, false); false }
-      else if (!fs.rename(staged, dst)) { fs.delete(staged, false); false }
-      else true
-    }
-  }
-
   /** Decide the outcome of the transaction whose outcome file is
     * `outcomePath` — EXCLUSIVE first-writer-wins create, so the outcome
     * is decided exactly once and is final. Returns the decided outcome
@@ -796,20 +624,26 @@ object LakeTable {
     */
   private[graft] def claimOutcome(spark: SparkSession, outcomePath: String,
       commit: Boolean): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(outcomePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val body = s"""{"outcome":"${if (commit) "commit" else "abort"}",""" +
-      s""""ts":${System.currentTimeMillis}}"""
-    exclusiveCreate(fs, p.getParent, p.getName,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    txnOutcome(spark, outcomePath).getOrElse(
+    MetaFile.claim(p.getFileSystem(conf), p,
+      s"""{"outcome":"${if (commit) "commit" else "abort"}",""" +
+        s""""ts":${System.currentTimeMillis}}""")
+    txnOutcome(conf, outcomePath).getOrElse(
       sys.error(s"transaction outcome at $outcomePath unreadable after claim"))
   }
 
   private def publish(fs: FileSystem, root: String, m: Manifest): Unit =
     publish(fs, root, m, waitTxn = true)
 
-  /** See the class doc of [[exclusiveCreate]] for the claim mechanics.
+  /** Publish `m` as the next version — the one ATOMIC, EXCLUSIVE commit
+    * point of every write path: the manifest is staged as a dot-file
+    * (invisible to [[versions]]) and claimed as `<v>.json` through
+    * [[MetaFile.claim]] (hard link on local filesystems, allowlisted
+    * no-overwrite rename elsewhere). The loser gets
+    * [[CommitRaceException]]; its staged file is cleaned, its data files
+    * become crash-orphans that [[vacuum]] sweeps.
+    *
     * `waitTxn` gates the BELOW-SLOT transaction guard: a writer must
     * never claim a slot above an UNDECIDED transaction slot — if the
     * transaction later committed, this writer's base would silently
@@ -825,28 +659,24 @@ object LakeTable {
   private def publish(fs: FileSystem, root: String, m: Manifest,
       waitTxn: Boolean, selfTxn: Option[String] = None): Unit = {
     val dir = new Path(root, "_versions")
-    val below = new Path(dir, s"${m.version - 1}.json")
-    if (waitTxn && m.version > 0 && fs.exists(below)) {
-      val in = fs.open(below)
-      val bm = try parse(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)) finally in.close()
+    if (waitTxn && m.version > 0 &&
+        fs.exists(new Path(dir, s"${m.version - 1}.json"))) {
+      val (bm, _) = manifestFile(fs, root, m.version - 1)
       bm.txn.filterNot(selfTxn.contains) match {
         case Some(outcomePath)
-            if txnOutcome2(fs.getConf, outcomePath).isEmpty =>
+            if txnOutcome(fs.getConf, outcomePath).isEmpty =>
           val waitMs = fs.getConf.getLong("graft.lake.txnWaitMs", 10000L)
           val deadline = System.currentTimeMillis + waitMs
-          while (txnOutcome2(fs.getConf, outcomePath).isEmpty &&
+          while (txnOutcome(fs.getConf, outcomePath).isEmpty &&
               System.currentTimeMillis < deadline)
             Thread.sleep(50)
-          val committed = txnOutcome2(fs.getConf, outcomePath).getOrElse {
+          val committed = txnOutcome(fs.getConf, outcomePath).getOrElse {
             // still undecided past the deadline: force-abort (exclusive —
             // a racing late commit may still win, in which case rebase)
             val p = new Path(outcomePath)
-            val ofs = p.getFileSystem(fs.getConf)
-            exclusiveCreate(ofs, p.getParent, p.getName,
-              """{"outcome":"abort","forced":1}"""
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            txnOutcome2(fs.getConf, outcomePath).getOrElse(true)
+            MetaFile.claim(p.getFileSystem(fs.getConf), p,
+              """{"outcome":"abort","forced":1}""")
+            txnOutcome(fs.getConf, outcomePath).getOrElse(true)
           }
           if (committed)
             throw new CommitRaceException(
@@ -855,25 +685,10 @@ object LakeTable {
         case _ => () // non-txn, decided, or our own transaction
       }
     }
-    if (!exclusiveCreate(fs, dir, s"${m.version}.json",
-        render(m).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    if (!MetaFile.claim(fs, new Path(dir, s"${m.version}.json"), render(m)))
       throw new CommitRaceException(
         s"manifest version ${m.version} was claimed by a concurrent " +
           s"writer at $root — re-read the head and retry")
-  }
-
-  /** [[txnOutcome]] from a Hadoop conf (publish has no SparkSession). */
-  private def txnOutcome2(conf: org.apache.hadoop.conf.Configuration,
-      outcomePath: String): Option[Boolean] = {
-    val p = new Path(outcomePath)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      Some(s.contains("\"outcome\":\"commit\""))
-    }
   }
 
   /** Run `body` (read head → compute → [[publish]]) until its commit
@@ -890,21 +705,6 @@ object LakeTable {
       catch { case e: CommitRaceException => last = e; i += 1 }
     }
     throw last
-  }
-
-  /** Staged write + rename of a small metadata file (UUID-named segment
-    * files and other single-writer sidecars — no exclusive claim needed).
-    */
-  private def writeMetaFile(fs: FileSystem, root: String, rel: String,
-      body: String): Unit = {
-    val dst = new Path(root, rel)
-    val dir = dst.getParent
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val staged = new Path(dir, s".staging-${java.util.UUID.randomUUID}")
-    val out = fs.create(staged, false)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.rename(staged, dst)
   }
 
   /** Measure the complete per-file metadata of `files` in ONE aggregation
@@ -1217,7 +1017,7 @@ object LakeTable {
           // segment BEFORE manifest: a published manifest always
           // resolves; a crash (or race loss) here leaves an orphan
           // segment, never a torn table
-          writeMetaFile(fs, root, segPath,
+          MetaFile.write(fs, new Path(root, segPath),
             renderSegment(next.statsCols, next.bloomCols, next.ndvCols,
               chunk))
           SegmentRef(segPath, chunk.map(_.bucket).distinct.sorted, Nil,
@@ -1717,10 +1517,10 @@ object LakeTable {
     * newest marker to rewrite only what landed since — for gen markers
     * the hot-set derivation is REF-LOCAL (wholly-tight refs never parse).
     */
-  private final case class ZMarker(version: Long, zCols: Seq[String],
+  private[graft] final case class ZMarker(version: Long, zCols: Seq[String],
       axes: Seq[(Double, Double)], files: Seq[String], gen: Long = -1L)
 
-  private def renderZMarker(mk: ZMarker): String =
+  private[graft] def renderZMarker(mk: ZMarker): String =
     s"""{"version":${mk.version},""" +
       (if (mk.gen >= 0) s""""gen":${mk.gen},""" else "") +
       s""""z_cols":[${mk.zCols.map(jq).mkString(",")}],""" +
@@ -1728,61 +1528,30 @@ object LakeTable {
         s"""[$mn,$mx]""" }.mkString(",")}],""" +
       s""""files":[${mk.files.map(jq).mkString(",")}]}"""
 
-  private def parseZMarker(s: String): ZMarker = {
-    // renderZMarker's own fixed grammar; z_cols/files bodies are flat
-    // (column names and manifest paths carry no brackets)
-    def arr(name: String): String = {
-      val at = s.indexOf("\"" + name + "\":[")
-      require(at >= 0, s"zorder marker: missing $name")
-      val from = at + name.length + 4
-      s.substring(from, s.indexOf(']', from))
+  private[graft] def parseZMarker(o: JsonNode): ZMarker = {
+    // the axes are `[min,max]` pairs of doubles, NaN and ±Infinity included
+    val axes = MetaFile.arr(o, "axes").map { a =>
+      require(a.isArray && a.size == 2 && a.get(0).isNumber &&
+        a.get(1).isNumber, s"zorder marker: bad axis $a")
+      (a.get(0).doubleValue, a.get(1).doubleValue)
     }
-    val version = "\"version\":(\\d+)".r.findFirstMatchIn(s).get.group(1).toLong
-    def strings(body: String): Seq[String] =
-      if (body.trim.isEmpty) Seq.empty
-      else "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(body).map(
-        _.group(1).replace("\\\\", "\u0000").replace("\\\"", "\"")
-          .replace("\u0000", "\\")).toSeq
-    val axesBody = {
-      val at = s.indexOf("\"axes\":[")
-      s.substring(at + 8, s.indexOf("]]", at) + 1)
-    }
-    val axes = "\\[([^,\\]]+),([^\\]]+)\\]".r.findAllMatchIn(axesBody)
-      .map(m => (m.group(1).toDouble, m.group(2).toDouble)).toSeq
-    val gen = "\"gen\":(-?\\d+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toLong).getOrElse(-1L)
-    ZMarker(version, strings(arr("z_cols")), axes, strings(arr("files")), gen)
+    require(o.has("z_cols") && o.has("files"),
+      "zorder marker: missing z_cols or files")
+    ZMarker(MetaFile.reqNum(o, "version"), MetaFile.strSeq(o, "z_cols"),
+      axes, MetaFile.strSeq(o, "files"), MetaFile.num(o, "gen", -1L))
   }
 
   private def writeZMarker(spark: SparkSession, root: String,
-      mk: ZMarker): Unit = {
-    val fs = hfs(spark, root)
-    val dir = new Path(root, "_zorder")
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val staged = new Path(dir, s".staging-${java.util.UUID.randomUUID}")
-    val out = fs.create(staged, false)
-    try out.write(renderZMarker(mk)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.rename(staged, new Path(dir, s"${mk.version}.json"))
-  }
+      mk: ZMarker): Unit =
+    MetaFile.write(hfs(spark, root),
+      new Path(root, s"_zorder/${mk.version}.json"), renderZMarker(mk))
 
   /** The newest z-order marker, if any optimize ever ran. */
   private def readZMarker(spark: SparkSession,
       root: String): Option[ZMarker] = {
     val fs = hfs(spark, root)
-    val dir = new Path(root, "_zorder")
-    if (!fs.exists(dir)) return None
-    val vs = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".json")).map(_.stripSuffix(".json"))
-      .flatMap(n => scala.util.Try(n.toLong).toOption)
-    if (vs.isEmpty) None
-    else {
-      val in = fs.open(new Path(dir, s"${vs.max}.json"))
-      try Some(parseZMarker(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)))
-      finally in.close()
-    }
+    MetaFile.numbered(fs, new Path(root, "_zorder")).lastOption.map(v =>
+      parseZMarker(MetaFile.read(fs, new Path(root, s"_zorder/$v.json"))))
   }
 
   /** Maintenance rewrites are LAYOUT-PRESERVING: if the table keeps a z
@@ -2390,13 +2159,10 @@ object LakeTable {
     */
   def versionAsOf(spark: SparkSession, root: String, asOfMillis: Long): Long = {
     val fs = hfs(spark, root)
-    val tsOf = "\"ts\":(\\d+)".r
     val eligible = versions(fs, root).filter { v =>
-      val in = fs.open(new Path(root, s"_versions/$v.json"))
-      val s = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      tsOf.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L) <= asOfMillis &&
-        liveOf(spark, parse(s)) // txn slots resolve as-of only once committed
+      val (m, ts) = manifestFile(fs, root, v)
+      ts <= asOfMillis &&
+        liveOf(spark, m) // txn slots resolve as-of only once committed
     }
     require(eligible.nonEmpty,
       s"no version of $root had been published at epoch-millis $asOfMillis")
@@ -2682,33 +2448,20 @@ object LakeTable {
   // and [[restore]] record nothing by design: deriving their row images
   // would cost the bucket reads the operations exist to avoid.
 
+  private[graft] def renderCdfMarker(paths: Seq[String]): String =
+    s"""{"files":[${paths.map(jq).mkString(",")}]}"""
+
   private def writeCdfMarker(spark: SparkSession, root: String,
-      version: Long, paths: Seq[String]): Unit = {
-    val fs = hfs(spark, root)
-    val dir = new Path(root, "_cdf")
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val staged = new Path(dir, s".staging-${java.util.UUID.randomUUID}")
-    val out = fs.create(staged, false)
-    try out.write(s"""{"files":[${paths.map(jq).mkString(",")}]}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.rename(staged, new Path(dir, s"$version.json"))
-  }
+      version: Long, paths: Seq[String]): Unit =
+    MetaFile.write(hfs(spark, root), new Path(root, s"_cdf/$version.json"),
+      renderCdfMarker(paths))
 
   private[graft] def readCdfMarker(spark: SparkSession, root: String,
       version: Long): Option[Seq[String]] = {
     val fs = hfs(spark, root)
     val p = new Path(root, s"_cdf/$version.json")
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      Some("\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(
-        s.drop(s.indexOf('['))).map(_.group(1)
-          .replace("\\\\", "\u0000").replace("\\\"", "\"")
-          .replace("\u0000", "\\")).toSeq)
-    }
+    else Some(MetaFile.strSeq(MetaFile.read(fs, p), "files"))
   }
 
   /** Record a copy-on-write commit's row diff: pre/post bucket content
@@ -3510,15 +3263,11 @@ object LakeTable {
     */
   def history(spark: SparkSession, root: String): Seq[VersionInfo] = {
     val fs = hfs(spark, root)
-    val tsOf = "\"ts\":(\\d+)".r
     versions(fs, root).sorted.reverse.map { v =>
-      val in = fs.open(new Path(root, s"_versions/$v.json"))
-      val raw = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val m = parse(raw)
+      val (m, ts) = manifestFile(fs, root, v)
       val state = m.txn match {
         case None => "committed"
-        case Some(p) => txnOutcome(spark, p) match {
+        case Some(p) => txnOutcome(fs.getConf, p) match {
           case Some(true) => "committed"
           case Some(false) => "aborted"
           case None => "in-flight"
@@ -3526,9 +3275,7 @@ object LakeTable {
       }
       // fileCount reads the refs' stored counts — no segment file is
       // opened, keeping history() metadata-only at any table size
-      VersionInfo(v,
-        tsOf.findFirstMatchIn(raw).map(_.group(1).toLong).getOrElse(0L),
-        state, m.fileCount, m.dvFiles.size, m.numBuckets, m.txn)
+      VersionInfo(v, ts, state, m.fileCount, m.dvFiles.size, m.numBuckets, m.txn)
     }
   }
 
@@ -3661,7 +3408,6 @@ object LakeTable {
     // exact window. O(window + margin) small reads either way.
     val skewMs = spark.sparkContext.hadoopConfiguration
       .getLong("graft.lake.vacuumClockSkewMs", 300000L)
-    val tsOf = "\"ts\":(\\d+)".r
     // keep down to the DEEPEST margin-or-better slot. The count handed
     // to vacuum is in vacuum's OWN currency — LIVE (committed-visible)
     // slots, its keep-walk classification — so DECIDED-ABORTED in-window
@@ -3681,14 +3427,10 @@ object LakeTable {
     val it = versions(fs, root).sorted.reverseIterator
     var stop = false
     while (it.hasNext && !stop) {
-      val v = it.next()
-      val in = fs.open(new Path(root, s"_versions/$v.json"))
-      val s = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val ts = tsOf.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L)
+      val (m, ts) = manifestFile(fs, root, it.next())
       if (ts >= cutoff - skewMs) {
         val abortedSlot =
-          parse(s).txn.exists(p => txnOutcome(spark, p).contains(false))
+          m.txn.exists(p => txnOutcome(fs.getConf, p).contains(false))
         if (!abortedSlot) retained += 1
       } else stop = true
     }
@@ -3756,7 +3498,7 @@ object LakeTable {
       val v = it.next()
       val m = manifestAt(spark, root, v)
       walked(v) = m
-      m.txn.map(p => txnOutcome(spark, p)) match {
+      m.txn.map(p => txnOutcome(fs.getConf, p)) match {
         case Some(None) => inFlightB += v
         case Some(Some(false)) => () // aborted: droppable (top-slot rule below)
         case _ => keepB += v
@@ -3811,14 +3553,8 @@ object LakeTable {
     // the NEWEST z-order marker is a chain head, not per-version state
     // (live-set intersection keeps it valid whatever content it names),
     // so the sweep spares it even when its version falls out of retention
-    val zHead = {
-      val zd = new Path(root, "_zorder")
-      if (!fs.exists(zd)) -1L
-      else fs.listStatus(zd).map(_.getPath.getName)
-        .filter(_.endsWith(".json")).map(_.stripSuffix(".json"))
-        .flatMap(n => scala.util.Try(n.toLong).toOption)
-        .foldLeft(-1L)(math.max)
-    }
+    val zHead =
+      MetaFile.numbered(fs, new Path(root, "_zorder")).lastOption.getOrElse(-1L)
     drop.foreach { v =>
       fs.delete(new Path(root, s"_versions/$v.json"), false)
       fs.delete(new Path(root, s"_cdf/$v.json"), false)
@@ -3899,7 +3635,7 @@ object LakeTable {
     // reclaim, so auditing them as "referenced" would report phantom
     // missing files after a sweep. In-flight slots audit conservatively.
     val manifests = vs.map(v => manifestAt(spark, root, v))
-      .filter(m => !m.txn.exists(p => txnOutcome(spark, p).contains(false)))
+      .filter(m => !m.txn.exists(p => txnOutcome(fs.getConf, p).contains(false)))
     // segment references audit FIRST: a referenced-but-missing segment
     // file breaks that version's reads exactly like a missing data file,
     // and resolving the file list through it would crash the audit —

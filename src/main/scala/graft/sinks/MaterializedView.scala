@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, NumericType,
   StructType}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Incremental materialized-view maintenance over a [[LakeTable]] — the
@@ -133,7 +134,7 @@ object MaterializedView {
     * deltas under the α init used; the view schema records which columns
     * have quantile state, the marker records how they were bucketed.
     */
-  private final case class Sync(tableVersion: Long, mvVersion: Long,
+  private[graft] final case class Sync(tableVersion: Long, mvVersion: Long,
       ddAlphaMicros: Long = 0L)
 
   private def hfs(spark: SparkSession, root: String): FileSystem =
@@ -147,58 +148,34 @@ object MaterializedView {
     */
   private[graft] var lastExhausted: Int = 0
 
+  private[graft] def renderSync(s: Sync): String =
+    s"""{"table_version":${s.tableVersion},"mv_version":${s.mvVersion}""" +
+      s""","dd_alpha_micros":${s.ddAlphaMicros}}"""
+
+  /** Markers written before quantile state carry no `dd_alpha_micros`. */
+  private[graft] def parseSync(o: JsonNode): Sync =
+    Sync(MetaFile.reqNum(o, "table_version"), MetaFile.reqNum(o, "mv_version"),
+      MetaFile.num(o, "dd_alpha_micros"))
+
   /** Record table version ↔ view version, one marker file per table
-    * version, claimed EXCLUSIVELY (hard-link create on local
-    * filesystems, no-overwrite rename elsewhere — the [[LakeTable]]
-    * publish discipline). Losing the claim is BENIGN, not an error: two
-    * refreshes that raced to the same table version applied the same
-    * change feed on the same pinned view base, so their published view
-    * versions serve identical aggregate state — the winner's marker
-    * stands and the loser's staged file is discarded, rather than a
-    * POSIX rename silently replacing the winner's marker.
+    * version, claimed EXCLUSIVELY through [[MetaFile.claim]] (the
+    * [[LakeTable]] publish discipline). Losing the claim is BENIGN, not
+    * an error: two refreshes that raced to the same table version applied
+    * the same change feed on the same pinned view base, so their
+    * published view versions serve identical aggregate state — the
+    * winner's marker stands and the loser's staged file is discarded,
+    * rather than a POSIX rename silently replacing the winner's marker.
     */
-  private def writeSync(spark: SparkSession, mvRoot: String, s: Sync): Unit = {
-    val fs = hfs(spark, mvRoot)
-    val dir = new Path(mvRoot, "_sync")
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val staged = new Path(dir, s".staging-${java.util.UUID.randomUUID}")
-    val out = fs.create(staged, false)
-    try out.write(
-      (s"""{"table_version":${s.tableVersion},"mv_version":${s.mvVersion}""" +
-        s""","dd_alpha_micros":${s.ddAlphaMicros}}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new Path(dir, s"${s.tableVersion}.json")
-    if ("file" == Option(fs.getUri).map(_.getScheme).orNull) {
-      try java.nio.file.Files.createLink(
-        java.nio.file.Paths.get(dst.toUri.getPath),
-        java.nio.file.Paths.get(staged.toUri.getPath))
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      fs.delete(staged, false)
-    } else {
-      if (fs.exists(dst) || !fs.rename(staged, dst)) fs.delete(staged, false)
-    }
-  }
+  private def writeSync(spark: SparkSession, mvRoot: String, s: Sync): Unit =
+    MetaFile.claim(hfs(spark, mvRoot),
+      new Path(mvRoot, s"_sync/${s.tableVersion}.json"), renderSync(s))
 
   private def readSync(spark: SparkSession, mvRoot: String): Sync = {
     val fs = hfs(spark, mvRoot)
     val dir = new Path(mvRoot, "_sync")
     require(fs.exists(dir), s"no MaterializedView sync state at $mvRoot")
-    val latest = fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collect { case n if n.endsWith(".json") &&
-        n.dropRight(5).forall(_.isDigit) => n.dropRight(5).toLong }
-      .max
-    val in = fs.open(new Path(dir, s"$latest.json"))
-    val body = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    def field(name: String, required: Boolean = true): Long = {
-      val at = body.indexOf("\"" + name + "\":")
-      if (at < 0) { require(!required, s"sync marker: missing $name"); 0L }
-      else body.drop(at + name.length + 3)
-        .takeWhile(c => c.isDigit || c == '-').toLong
-    }
-    Sync(field("table_version"), field("mv_version"),
-      field("dd_alpha_micros", required = false))
+    parseSync(MetaFile.read(fs,
+      new Path(dir, s"${MetaFile.numbered(fs, dir).max}.json")))
   }
 
   /** x² in DECIMAL(38,6): the square evaluates at widened scale, then
@@ -1010,11 +987,7 @@ object MaterializedView {
     val removedFiles =
       LakeTable.vacuum(spark, mvRoot, math.max(keepLast, coveringSync))
     val dir = new Path(mvRoot, "_sync")
-    val markers = fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collect { case n if n.endsWith(".json") &&
-        n.dropRight(5).forall(_.isDigit) => n.dropRight(5).toLong }
-      .toSeq.sorted
-    val drop = markers.dropRight(keepLast)
+    val drop = MetaFile.numbered(fs, dir).dropRight(keepLast)
     drop.foreach(v => fs.delete(new Path(dir, s"$v.json"), false))
     (drop.size, removedFiles)
   }

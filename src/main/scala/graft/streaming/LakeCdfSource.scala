@@ -229,8 +229,9 @@ object LakeCdfSource {
     def txnsIn(root: String, from: Long, to: Long): Seq[(Long, String)] =
       ((from + 1) to to).flatMap { v =>
         scala.util.Try(LakeTable.manifestAt(spark, root, v)).toOption
-          .flatMap(m => m.txn.filter(p =>
-            LakeTable.txnOutcome(spark, p).contains(true)).map(v -> _))
+          .flatMap(m => m.txn.filter(p => LakeTable.txnOutcome(
+            spark.sparkContext.hadoopConfiguration, p).contains(true))
+            .map(v -> _))
       }
     // the first member of outcome path p on `root` above `from`, if any
     // (members below a committed offset are already served); a LATER

@@ -41,6 +41,20 @@ class LakeSinkSpec extends SparkTestBase {
       include(""""row_count": 3""")
   }
 
+  test("the sidecar stays strict JSON when the source path holds a tab and a newline") {
+    val root = Files.createTempDirectory("graft-lake-sidecar").toString
+    val src = "raw/coins\t2026-01-01\n.json"
+    LakeSink.publishPartition(spark, Seq((1L, "a")).toDF("k", "v"), root,
+      "silver/t", "2026-01-01", "v1", src)
+    val raw = LakeSink.readSidecar(spark, s"$root/silver/t/dt=2026-01-01").get
+    raw should include(""""row_count": 1""")
+    // Jackson's default mapper refuses an unescaped control character
+    val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(raw)
+    o.get("source_path").asText shouldBe src
+    o.get("dataset").asText shouldBe "silver/t"
+    o.get("row_count").asLong shouldBe 1L
+  }
+
   test("publishPartition refuses an empty partition before the swap") {
     val root = Files.createTempDirectory("graft-lake-empty").toString
     LakeSink.publishPartition(spark, Seq((1L, "old")).toDF("k", "v"), root,
