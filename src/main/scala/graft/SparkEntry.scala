@@ -4167,7 +4167,7 @@ object SparkEntry {
         schemaVersion = "v1", sourcePath = "verify")
       def fresh(p: String): Boolean =
         try { graft.ops.CoinOps.assertFreshness(s, p); true }
-        catch { case _: graft.ops.QualityGateFailure => false }
+        catch { case _: graft.expectations.QualityGateFailure => false }
       Seq((
         fresh(s"$root/gold_daily/dt=$dt"),
         !fresh(s"$root/gold_daily/dt=2099-01-01"),
@@ -4198,7 +4198,7 @@ object SparkEntry {
           .toInstant(java.time.ZoneOffset.UTC)
         val passed =
           try { graft.ops.CoinOps.assertSla(ds, now, r.getBoolean(1)); true }
-          catch { case _: graft.ops.QualityGateFailure => false }
+          catch { case _: graft.expectations.QualityGateFailure => false }
         passed == (!r.getBoolean(1) || !now.isAfter(java.time.Instant.parse(
           deadline.replace(' ', 'T') + "Z")))
       }

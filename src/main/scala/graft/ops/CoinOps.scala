@@ -1,13 +1,9 @@
 package graft.ops
 
-import graft.contract.SchemaContract
+import graft.expectations.{GreaterThan, NoRowsWhere, NonEmpty, NotNull, QualityGateFailure, Suite}
 import graft.schema.CoinSchemas
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-/** Raised by daily quality gates (SURVEY §2.9 V3-V6). */
-final case class QualityGateFailure(gate: String, detail: String)
-    extends RuntimeException(s"quality gate '$gate' failed: $detail")
 
 /** The coin-pipeline transform library — one pure `DataFrame => DataFrame`
   * function per operator in SURVEY §2, plus the gates, composed stage by
@@ -38,9 +34,17 @@ object CoinOps {
       try_to_timestamp(col("last_updated")).alias("timestamp")
     )
 
-  /** Silver with the SILVER_SCHEMA_V1 contract enforced (V1 — hard fail). */
-  def enforcedSilver(silver: DataFrame): DataFrame =
-    SchemaContract.enforce(silver, CoinSchemas.silverV1)
+  /** V1 — hard fail: the SILVER_SCHEMA_V1 contract as a suite. */
+  val silverContract: Suite = Suite.conforming("silver_schema_v1", CoinSchemas.silverV1)
+
+  /** Silver with [[silverContract]] enforced, conformed to the contract's
+    * types with columns in contract order.
+    */
+  def enforcedSilver(silver: DataFrame): DataFrame = {
+    silverContract.enforce(silver)
+    silver.select(CoinSchemas.silverV1.fields.toSeq
+      .map(f => col(f.name).try_cast(f.dataType).alias(f.name)): _*)
+  }
 
   /** Gold daily metrics (A1 — THE gold query, reference `:795-807`):
     * per-coin avg/min/max price and avg market cap, stamped with the
@@ -73,46 +77,22 @@ object CoinOps {
 
   // ---------------------------------------------------------------- gates
 
-  /** V4 gold sanity: one pass counting rows with null coin_id and rows
-    * violating `avg>0 && min>=0 && max>=min && mktcap>=0`
-    * (reference `validate_gold_sanity` `:1055-1123`).
+  /** V4 gold sanity (reference `validate_gold_sanity` `:1055-1123`): rows
+    * exist, no null coin_id, and no row violates
+    * `avg>0 && min>=0 && max>=min && mktcap>=0`; a NULL metric makes the
+    * predicate NULL, which does not count.
     */
-  def goldSanityViolations(gold: DataFrame): (Long, Long, Long) = {
-    val row = gold.agg(
-      count(lit(1)).alias("n"),
-      sum(when(col("coin_id").isNull, 1L).otherwise(0L)).alias("null_ids"),
-      sum(when(
-        col("avg_price_usd") <= 0d || col("min_price_usd") < 0d ||
-          col("max_price_usd") < col("min_price_usd") || col("avg_market_cap") < 0d,
-        1L).otherwise(0L)).alias("bad_metrics")
-    ).collect()(0)
-    def at(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
-    (at(0), at(1), at(2))
-  }
-
-  def assertGoldSanity(gold: DataFrame, dt: String): Unit = {
-    val (n, nullIds, badMetrics) = goldSanityViolations(gold)
-    if (n == 0L) throw QualityGateFailure("gold_sanity", s"no gold rows for dt=$dt")
-    if (nullIds > 0L) throw QualityGateFailure("gold_sanity", s"$nullIds null coin_id rows")
-    if (badMetrics > 0L)
-      throw QualityGateFailure("gold_sanity",
-        s"$badMetrics rows violate avg>0 / min>=0 / max>=min / mktcap>=0")
-  }
+  val goldSanity: Suite = Suite("gold_sanity", Seq(
+    NonEmpty,
+    NotNull("coin_id"),
+    NoRowsWhere("avg<=0 or min<0 or max<min or mktcap<0",
+      col("avg_price_usd") <= 0d || col("min_price_usd") < 0d ||
+        col("max_price_usd") < col("min_price_usd") || col("avg_market_cap") < 0d)))
 
   /** V5 gold quality (reference `validate_gold_metrics` `:955-989`): rows
     * exist and no null / non-positive average prices.
     */
-  def assertGoldQuality(gold: DataFrame, dt: String): Unit = {
-    val row = gold.agg(
-      count(lit(1)),
-      sum(when(col("avg_price_usd").isNull || col("avg_price_usd") <= 0d, 1L).otherwise(0L))
-    ).collect()(0)
-    val n   = row.getLong(0)
-    val bad = if (row.isNullAt(1)) 0L else row.getLong(1)
-    if (n == 0L) throw QualityGateFailure("gold_quality", s"no gold rows for dt=$dt")
-    if (bad > 0L)
-      throw QualityGateFailure("gold_quality", s"$bad rows with null/non-positive avg_price_usd")
-  }
+  val goldQuality: Suite = Suite("gold_quality", Seq(NonEmpty, GreaterThan("avg_price_usd", 0d)))
 
   /** V3 cross-store row-count reconciliation (reference `:996-1046`). */
   def assertCountsReconcile(lakeGold: DataFrame, warehouseGold: DataFrame, dt: String): Unit = {

@@ -33,7 +33,15 @@ import org.apache.spark.sql.functions._
   * file-configured checkpoint) gates the silver publish on its staged
   * files, V4 gold sanity gates the gold publish the same way, V2 is the
   * `validate` task over published silver, and V3-V7 are their own
-  * retryable tasks after the serve load.
+  * retryable tasks after the serve load. Every row-counting gate (V1, V2,
+  * the checkpoint, V4, V5) is an `expectations.Suite`: one job per
+  * evaluation, failing with `QualityGateFailure` named after the suite.
+  *
+  * `validate_gold_sanity` re-runs V4 over the gold partition
+  * `build_gold_minio` has just gated before its swap, one job per
+  * delivery. It stays: it is the reference's own retryable task
+  * (`validate_gold_sanity`, `:1055-1123`), and run alone it re-checks the
+  * *published* partition, which may have changed since the publish.
   */
 object CoinDag {
 
@@ -157,7 +165,7 @@ object CoinDag {
       val silver = CoinSources.readSilver(spark, conf.silverDir)
       LakeSink.publishPartition(spark, CoinOps.goldDailyMetrics(silver, conf.ds).orderBy("coin_id"),
         conf.lakeRoot, CoinSources.gold.dir, conf.ds, "v1", conf.silverDir,
-        check = CoinOps.assertGoldSanity(_, conf.ds))
+        check = CoinOps.goldSanity.enforce(_))
 
     case "load_gold_postgres" =>
       // `ON CONFLICT (dt, coin_id) DO UPDATE` on parquet (reference S8):
@@ -183,7 +191,7 @@ object CoinDag {
       CoinOps.assertCountsReconcile(lakeGold, served, conf.ds)
 
     case "validate_gold_sanity" =>
-      CoinOps.assertGoldSanity(CoinSources.readGold(spark, conf.goldDir), conf.ds)
+      CoinOps.goldSanity.enforce(CoinSources.readGold(spark, conf.goldDir))
 
     case "validate_gold_freshness" =>
       CoinOps.assertFreshness(spark, conf.goldDir)
@@ -192,7 +200,7 @@ object CoinDag {
       CoinOps.assertSla(java.time.LocalDate.parse(conf.ds), conf.now, conf.scheduled)
 
     case "validate_gold" =>
-      CoinOps.assertGoldQuality(CoinSources.readGold(spark, conf.goldDir), conf.ds)
+      CoinOps.goldQuality.enforce(CoinSources.readGold(spark, conf.goldDir))
 
     case other =>
       throw new IllegalArgumentException(

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   *  - serving star: coin dimension and price fact
   *
   * Spark treats `nullable = false` as advisory on read; the silver contract is
-  * *enforced* by [[graft.contract.SchemaContract]], not by these StructTypes.
+  * *enforced* by the V1 suite `graft.ops.CoinOps.silverContract`, not by these StructTypes.
   */
 object CoinSchemas {
 

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.ops.QualityGateFailure
+import graft.expectations.QualityGateFailure
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile

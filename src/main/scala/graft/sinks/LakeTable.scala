@@ -2155,18 +2155,20 @@ object LakeTable {
   /** Timestamp time travel: the newest version whose manifest was
     * PUBLISHED at or before `asOfMillis` (manifests stamp their publish
     * wall-clock; see [[render]]). Driver-side metadata walk — no data file
-    * is touched to resolve the version.
+    * is touched to resolve the version. Slots are walked newest first: the
+    * first eligible one met from the top is the largest, so only the slots
+    * above it are opened.
     */
   def versionAsOf(spark: SparkSession, root: String, asOfMillis: Long): Long = {
     val fs = hfs(spark, root)
-    val eligible = versions(fs, root).filter { v =>
+    val newest = versions(fs, root).reverseIterator.find { v =>
       val (m, ts) = manifestFile(fs, root, v)
       ts <= asOfMillis &&
         liveOf(spark, m) // txn slots resolve as-of only once committed
     }
-    require(eligible.nonEmpty,
+    require(newest.isDefined,
       s"no version of $root had been published at epoch-millis $asOfMillis")
-    eligible.max
+    newest.get
   }
 
   /** [[read]] pinned to the snapshot live at `asOfMillis` — "the table as

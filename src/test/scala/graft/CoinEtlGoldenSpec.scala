@@ -90,7 +90,7 @@ class CoinEtlGoldenSpec extends SparkTestBase {
     // V4 invariant holds by construction: min <= avg <= max
     gold.filter(col("avg_price_usd") < col("min_price_usd") ||
       col("avg_price_usd") > col("max_price_usd")).count() shouldBe 0
-    CoinOps.assertGoldSanity(gold, dt)
+    CoinOps.goldSanity.enforce(gold).forall(_.passed) shouldBe true
   }
 
   test("second fixture day (dt=2026-01-10) replays silver and gold as well") {

@@ -1,7 +1,6 @@
 package graft
 
-import graft.contract.SchemaContractViolation
-import graft.ops.QualityGateFailure
+import graft.expectations.QualityGateFailure
 import graft.orchestration.CoinDag
 import graft.sources.CoinSources
 import java.nio.file.Files
@@ -92,7 +91,10 @@ class CoinReadPathSpec extends SparkTestBase {
     val c = coinConf(newDir("bad-time"), "2026-01-13")
     val json = coinFixtureJson(c.ds).replaceFirst(
       """"last_updated": "[^"]*"""", """"last_updated": "not-a-time"""")
-    failsAt[SchemaContractViolation](c, json, "transform_bronze_to_silver")
+    val e = failsAt[QualityGateFailure](c, json, "transform_bronze_to_silver")
+    e.gate shouldBe "silver_schema_v1"
+    e.failed.map(r => r.name -> r.violations) shouldBe
+      Seq("expect_column_values_to_not_be_null(timestamp as timestamp)" -> 1L)
     nothingLanded(CoinSources.silver, c.lakeRoot, c.ds)
   }
 

@@ -21,9 +21,15 @@ class ExpectationsSpec extends SparkTestBase {
     val broken = silver
       .withColumn("price_usd", when(col("coin_id") === "bitcoin", lit(-1.0))
         .otherwise(col("price_usd")))
-    val e = intercept[SuiteFailure] { Suites.coinDataSuite.enforce(broken) }
+    val e = intercept[QualityGateFailure] { Suites.coinDataSuite.enforce(broken) }
+    e.gate shouldBe "coin_data_suite"
+    e.getMessage should include("price_usd")
+    e.getMessage should include("(1 bad rows)")
     e.failed.map(_.name).exists(_.contains("price_usd")) shouldBe true
     e.failed.head.violations shouldBe 1L
+    // a table-level expectation counts in the same pass: no rows fails it
+    Suite("t", Seq(NonEmpty, NotNull("coin_id"))).validate(silver.limit(0))
+      .map(_.violations) shouldBe Seq(1L, 0L)
   }
 
   test("schema-level expectations catch missing columns and wrong types") {
@@ -45,6 +51,9 @@ class ExpectationsSpec extends SparkTestBase {
     df.columns.toSeq shouldBe Seq("v0", "v1", "v2")
     val plan = df.queryExecution.optimizedPlan.toString()
     plan.linesIterator.count(_.trim.startsWith("Aggregate")) shouldBe 1
+    // and enforcing the suite schedules exactly one Spark job
+    val (_, p) = QueryProfile.measure(spark)(suite.enforce(silver))
+    p.jobs.map(_.label) should have size 1
   }
 
   test("NULLs violate bound expectations (not vacuously true)") {

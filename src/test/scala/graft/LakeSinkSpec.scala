@@ -59,7 +59,7 @@ class LakeSinkSpec extends SparkTestBase {
     val root = Files.createTempDirectory("graft-lake-empty").toString
     LakeSink.publishPartition(spark, Seq((1L, "old")).toDF("k", "v"), root,
       "silver/t", "2026-01-01", "v1", "s")
-    val e = intercept[graft.ops.QualityGateFailure] {
+    val e = intercept[graft.expectations.QualityGateFailure] {
       LakeSink.publishPartition(spark, Seq.empty[(Long, String)].toDF("k", "v"), root,
         "silver/t", "2026-01-01", "v1", "s")
     }

@@ -278,6 +278,53 @@ class LakeTableSpec extends SparkTestBase {
       LakeTable.versionAsOf(spark, root, 0L)
   }
 
+  test("versionAsOf walks newest first: the same slot as filter-all-then-max over aborted and undecided txn slots") {
+    val root = newRoot()
+    LakeTable.init(base, root, Seq("id"), numBuckets = 2)            // v0
+    LakeTable.merge(spark, root,
+      Seq((11L, "A", 1.0)).toDF("id", "name", "score"))              // v1
+    try graft.sinks.LakeTxn.atomically(spark, root) { t =>
+      t.merge(root, Seq((12L, "P", -1.0)).toDF("id", "name", "score"))
+      sys.error("injected failure before commit")
+    } catch { case _: RuntimeException => () }                       // v2 aborted
+    LakeTable.merge(spark, root,
+      Seq((13L, "C", 3.0)).toDF("id", "name", "score"))              // v3
+    LakeTable.mergeTagged(spark, root,
+      Seq((14L, "G", 4.0)).toDF("id", "name", "score"), None,
+      Some(root + "/_txn/ghost-never-committed.json"))               // v4 undecided
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LakeTable.versions(fs, root) shouldBe Seq(0L, 1L, 2L, 3L, 4L)
+    def stamp(v: Long, ts: Long): Unit = {
+      val p = new Path(root, s"_versions/$v.json")
+      val in = fs.open(p)
+      val s = try new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+      fs.delete(p, false)
+      val out = fs.create(p, false)
+      try out.write(s.replaceAll("\"ts\":\\d+", s""""ts":$ts""")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    val t0 = 1000000L
+    (0L to 4L).foreach(v => stamp(v, t0 + 10 * v))
+    // the reference rule: open every slot, keep the largest eligible one
+    def reference(asOf: Long): Option[Long] = LakeTable.versions(fs, root).filter { v =>
+      val o = graft.sinks.MetaFile.read(fs, new Path(root, s"_versions/$v.json"))
+      graft.sinks.MetaFile.num(o, "ts") <= asOf && LakeTable.liveOf(spark, LakeTable.manifestAt(spark, root, v))
+    }.maxOption
+    reference(t0 + 25) shouldBe Some(1L) // the aborted v2 is skipped
+    reference(t0 + 45) shouldBe Some(3L) // the undecided v4 is skipped
+    (t0 - 1 to t0 + 45).foreach { asOf =>
+      withClue(s"asOf=$asOf: ") {
+        reference(asOf) match {
+          case Some(v) => LakeTable.versionAsOf(spark, root, asOf) shouldBe v
+          case None => an[IllegalArgumentException] should be thrownBy
+              LakeTable.versionAsOf(spark, root, asOf)
+        }
+      }
+    }
+  }
+
   test("bloom sidecar: scan equality is exact and opens fewer files") {
     import org.apache.spark.sql.functions.{col, concat, lit}
     val root = newRoot()

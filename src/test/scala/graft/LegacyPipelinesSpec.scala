@@ -1,6 +1,6 @@
 package graft
 
-import graft.expectations.{GeCheckpoint, SuiteFailure}
+import graft.expectations.{GeCheckpoint, QualityGateFailure}
 import graft.pipeline.{FlatPipeline, WarehousePipeline}
 import org.apache.spark.sql.functions._
 import java.sql.DriverManager
@@ -126,7 +126,10 @@ class LegacyPipelinesSpec extends SparkTestBase {
     // a frame violating not-null fails the checkpoint loudly
     val bad = Seq((null.asInstanceOf[String], 1.0, 5L),
       ("btc", 2.0, 6L)).toDF("coin_id", "price_usd", "market_cap")
-    an[SuiteFailure] should be thrownBy suite.enforce(bad)
+    val e = intercept[QualityGateFailure](suite.enforce(bad))
+    e.gate shouldBe "coin_checkpoint"
+    e.failed.map(r => r.name -> r.violations) should contain(
+      "expect_column_values_to_not_be_null(coin_id)" -> 1L)
 
     // unknown expectation types are an error, not a silent skip
     an[IllegalArgumentException] should be thrownBy GeCheckpoint.parse(

@@ -88,7 +88,7 @@ class OrchestrationSpec extends SparkTestBase {
     val work = Files.createTempDirectory("graft-orch-sla").toString
     val base = CoinDag.StageConf(dt, work, work, work, work,
       now = java.time.Instant.parse("2026-01-14T10:00:00Z"))
-    intercept[graft.ops.QualityGateFailure] {
+    intercept[graft.expectations.QualityGateFailure] {
       CoinDag.runStage(spark, "validate_gold_sla", base.copy(scheduled = true))
     }
     noException should be thrownBy

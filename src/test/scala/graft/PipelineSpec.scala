@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.QualityGateFailure
+import graft.expectations.QualityGateFailure
 import graft.orchestration.CoinDag
 import graft.sinks.LakeSink
 import graft.sources.CoinSources
@@ -48,8 +48,9 @@ class PipelineSpec extends SparkTestBase {
     // double, so the file-configured gate must block the publish
     val bad = coinConf(tmpDir(), dt)
       .copy(checkpointPath = Some(fixture("checkpoints/coin_checkpoint.json")))
-    an[graft.expectations.SuiteFailure] should be thrownBy
-      deliverCoins(bad, coinFixtureJson(dt))
+    val e = intercept[QualityGateFailure](deliverCoins(bad, coinFixtureJson(dt)))
+    e.gate shouldBe "coin_checkpoint"
+    e.failed.map(_.name) should contain("expect_column_values_to_be_of_type(market_cap, bigint)")
     new java.io.File(bad.silverDir).exists() shouldBe false
   }
 
@@ -81,5 +82,26 @@ class PipelineSpec extends SparkTestBase {
     intercept[QualityGateFailure] {
       graft.ops.CoinOps.assertFreshness(spark, s"${tmpDir()}/gold/coins_daily/dt=2099-01-01")
     }
+  }
+
+  test("V4 ignores a NULL average or minimum price (SQL three-valued when); V5 fails on a NULL average") {
+    import spark.implicits._
+    val c = coinConf(tmpDir(), dt)
+    // gold written as-is: no upstream stage can produce these NULL metrics
+    Seq[(String, Option[Double], Option[Double], Double, Double)](
+      ("bitcoin", Some(10.0), Some(9.0), 11.0, 1.0e9),
+      ("ghost", None, None, 5.0, 1.0e6),
+      ("half", None, Some(4.0), 5.0, 1.0e6),
+      ("nomin", Some(5.0), None, 6.0, 1.0e6))
+      .toDF("coin_id", "avg_price_usd", "min_price_usd", "max_price_usd", "avg_market_cap")
+      .withColumn("dt", org.apache.spark.sql.functions.lit(dt))
+      .write.parquet(c.goldDir)
+    noException should be thrownBy CoinDag.runStage(spark, "validate_gold_sanity", c)
+    val e = intercept[QualityGateFailure](CoinDag.runStage(spark, "validate_gold", c))
+    e.gate shouldBe "gold_quality"
+    e.getMessage should include("avg_price_usd")
+    e.getMessage should include regex "\\b2 (bad )?rows"
+    e.failed.map(r => r.name -> r.violations) shouldBe
+      Seq("expect_column_values_to_be_>(avg_price_usd, 0.0)" -> 2L)
   }
 }
