@@ -1,12 +1,12 @@
-# GENERATED by graft.orchestration.CoinDag.renderAirflowDag — do not edit
-# by hand; regenerate via `sbt "runMain graft.orchestration.CoinStageRunner
-# --render-dag orchestration/coin_pipeline_dag.py"`. OrchestrationSpec
-# asserts this file matches the generator output.
+# GENERATED by graft.orchestration.Dag.renderAirflowDag — do not edit
+# by hand. Regenerate with:
+#   sbt "runMain graft.orchestration.CoinStageRunner --render-dag orchestration/coin_pipeline_dag.py"
+# A spec asserts this file matches the generator output.
 #
-# Orchestration twin of the reference 14-task chain
-# (dags/coin_data_pipeline_optimized.py:1243) with its retry policy
-# (:47-48). Each task is one spark-submit of an idempotent stage;
-# state hands off through the lake, so any task can retry alone.
+# Spark-native coin medallion pipeline (graft engine).
+# Each task is one spark-submit of an idempotent stage; state hands off
+# through the lake, so any task can retry alone. Retry policy: the
+# reference's (dags/coin_data_pipeline_optimized.py:47-48).
 from datetime import timedelta
 
 from airflow import DAG

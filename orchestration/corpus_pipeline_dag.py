@@ -1,13 +1,12 @@
-# GENERATED by graft.orchestration.CorpusDag.renderAirflowDag — do not
-# edit by hand; regenerate via `sbt "runMain
-# graft.orchestration.CorpusStageRunner --render-dag
-# orchestration/corpus_pipeline_dag.py"`. CorpusDagSpec asserts this
-# file matches the generator output.
+# GENERATED by graft.orchestration.Dag.renderAirflowDag — do not edit
+# by hand. Regenerate with:
+#   sbt "runMain graft.orchestration.CorpusStageRunner --render-dag orchestration/corpus_pipeline_dag.py"
+# A spec asserts this file matches the generator output.
 #
-# Scheduler twin of the north-star corpus curation funnel: eight
-# idempotent per-delivery stages handing off through the lake; the
-# cross-delivery near-dup state is the persisted signature index,
-# versioned per delivery for replay-safe retries.
+# LLM corpus curation funnel (graft engine).
+# Each task is one spark-submit of an idempotent stage; state hands off
+# through the lake, so any task can retry alone. Retry policy: the
+# reference's (dags/coin_data_pipeline_optimized.py:47-48).
 from datetime import timedelta
 
 from airflow import DAG

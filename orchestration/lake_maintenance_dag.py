@@ -1,13 +1,12 @@
-# GENERATED by graft.orchestration.LakeDag.renderAirflowDag — do not
-# edit by hand; regenerate via `sbt "runMain
-# graft.orchestration.LakeStageRunner --render-dag
-# orchestration/lake_maintenance_dag.py"`. LakeDagSpec asserts this
-# file matches the generator output.
+# GENERATED by graft.orchestration.Dag.renderAirflowDag — do not edit
+# by hand. Regenerate with:
+#   sbt "runMain graft.orchestration.LakeStageRunner --render-dag orchestration/lake_maintenance_dag.py"
+# A spec asserts this file matches the generator output.
 #
-# Scheduler twin of the keyed-lake-table maintenance cycle: ingest
-# the delivery's upserts and tombstones, bound file counts, advance
-# the incremental materialized views off the change feed, enforce
-# version retention, reconcile storage against the served view.
+# Keyed lake table maintenance: ingest, compact, refresh views, retention, audit.
+# Each task is one spark-submit of an idempotent stage; state hands off
+# through the lake, so any task can retry alone. Retry policy: the
+# reference's (dags/coin_data_pipeline_optimized.py:47-48).
 from datetime import timedelta
 
 from airflow import DAG
@@ -27,16 +26,16 @@ default_args = {
     "retries": 2,
     "retry_delay": timedelta(minutes=5),
     "email_on_failure": False,
+    "email_on_retry": False,
 }
 
 dag = DAG(
     dag_id="graft_lake_maintenance",
+    default_args=default_args,
     description="Keyed lake table maintenance: ingest, compact, refresh views, retention, audit",
     schedule_interval="@daily",
     start_date=days_ago(1),
     catchup=False,
-    default_args=default_args,
-    tags=["graft", "lake", "maintenance"],
 )
 
 ingest_upserts = SparkSubmitOperator(

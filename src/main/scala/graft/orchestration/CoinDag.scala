@@ -1,31 +1,20 @@
 package graft.orchestration
 
-import graft.JobLabel
 import graft.expectations.{GeCheckpoint, Suites}
 import graft.ops.CoinOps
 import graft.schema.CoinSchemas
 import graft.sinks.{LakeSink, Merge}
 import graft.sources.{CoinSources, HttpCoinMarketsFetcher}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Orchestration twin of the reference's flagship DAG (SURVEY §3 EP1,
-  * `dags/coin_data_pipeline_optimized.py:1243`): the same 14-task linear
+  * `dags/coin_data_pipeline_optimized.py:1243`): the same linear task
   * chain, re-expressed as idempotent per-stage Spark jobs whose ONLY state
   * handoff is durable lake/warehouse layout — exactly what a scheduler
-  * restarting an individual task requires.
-  *
-  * Three artifacts keep the twin honest:
-  *  - [[stageChain]] — the task ids in reference order (asserted against the
-  *    reference chain by OrchestrationSpec);
-  *  - [[runStage]] — each task id dispatched to its engine implementation
-  *    (the scheduler-facing entry is [[CoinStageRunner]], one spark-submit
-  *    per task);
-  *  - [[renderAirflowDag]] — generates `orchestration/coin_pipeline_dag.py`,
-  *    an Airflow DAG of `SparkSubmitOperator`s with the reference's retry
-  *    policy (`coin_data_pipeline_optimized.py:47-48`: retries=2,
-  *    retry_delay=5 min); the checked-in file is asserted byte-identical to
-  *    the generator's output so the artifact can never drift from the code.
+  * restarting an individual task requires. OrchestrationSpec asserts the
+  * chain against the reference's; [[Dag]] derives the dispatch, the
+  * `coin:<stage>` job labels, the Airflow artifact
+  * `orchestration/coin_pipeline_dag.py` and the [[CoinStageRunner]] entry.
   *
   * [[runStage]] is the only code that runs a coin delivery: tests, the
   * benchmark and the Airflow artifact all drive this chain. Gates run where
@@ -43,7 +32,13 @@ import org.apache.spark.sql.functions._
   * (`validate_gold_sanity`, `:1055-1123`), and run alone it re-checks the
   * *published* partition, which may have changed since the publish.
   */
-object CoinDag {
+object CoinDag extends Dag("coin",
+    dagId = "coin_data_pipeline_graft",
+    description = "Spark-native coin medallion pipeline (graft engine)",
+    artifact = "orchestration/coin_pipeline_dag.py",
+    flags = Seq(Dag.Var("raw-root", "graft_raw_root"), Dag.Var("bronze-root", "graft_bronze_root"),
+      Dag.Var("lake-root", "graft_lake_root"), Dag.Var("serve-root", "graft_serve_root"),
+      Dag.Literal("scheduled", "true"))) {
 
   /** Everything a stage needs to find its inputs/outputs. Stages read ONLY
     * durable state written by their upstreams — any stage can be re-run in
@@ -62,6 +57,7 @@ object CoinDag {
       // gate the silver publish next to V1: rules ops change without a deploy
       checkpointPath: Option[String] = None
   ) {
+    Dag.requireDs(ds)
     def rawFile: String      = s"$rawRoot/coins_$ds.json"
     def bronzeDir: String    = s"$bronzeRoot/coins/dt=$ds"
     def silverDir: String    = CoinSources.silver.at(lakeRoot, ds)
@@ -70,47 +66,24 @@ object CoinDag {
     def factTable: String    = CoinSources.fact.at(serveRoot)
   }
 
-  /** The reference chain, in order (`coin_data_pipeline_optimized.py:1243`). */
-  val stageChain: Seq[String] = Seq(
-    "create_tables",
-    "extract",
-    "upload_raw_to_s3",
-    "transform_bronze_to_silver",
-    "validate",
-    "load_dim",
-    "load_fact",
-    "build_gold_minio",
-    "load_gold_postgres",
-    "validate_gold_row_count",
-    "validate_gold_sanity",
-    "validate_gold_freshness",
-    "validate_gold_sla",
-    "validate_gold"
-  )
+  protected def conf(ds: String, arg: Map[String, String]): StageConf =
+    StageConf(ds, arg("raw-root"), arg("bronze-root"), arg("lake-root"), arg("serve-root"),
+      apiUrl = arg.get("api-url"), scheduled = arg.get("scheduled").exists(_.toBoolean))
 
-  /** Reference retry policy (`coin_data_pipeline_optimized.py:47-48`). */
-  val retries: Int           = 2
-  val retryDelayMinutes: Int = 5
-
-  /** Execute one task of the chain. Every stage is idempotent: re-running a
-    * stage after a crash (or an Airflow retry) converges because lake writes
-    * go through the atomic publish and warehouse writes are key-based
-    * insert-ignore/upsert merges. Every job a stage runs is labelled
-    * `coin:<stage>`.
+  /** The reference chain, in order (`coin_data_pipeline_optimized.py:1243`).
+    * Every stage is idempotent: lake writes go through the atomic publish
+    * and warehouse writes are key-based insert-ignore/upsert merges.
     */
-  def runStage(spark: SparkSession, stage: String, conf: StageConf): Unit =
-    JobLabel(spark, s"coin:$stage")(dispatch(spark, stage, conf))
-
-  private def dispatch(spark: SparkSession, stage: String, conf: StageConf): Unit = stage match {
-    case "create_tables" =>
+  protected val stages: Seq[Stage] = Seq(
+    stage("create_tables") { (spark, conf) =>
       // Parquet serving layout needs no DDL (the star DDL for a real
       // warehouse is `CoinSchemas.WarehouseDdl`); materialize the warehouse
       // root so downstream merges have a stable parent.
       val fs = new org.apache.hadoop.fs.Path(conf.serveRoot)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.mkdirs(new org.apache.hadoop.fs.Path(conf.serveRoot))
-
-    case "extract" =>
+    },
+    stage("extract", Some(Dag.Var("api-url", "graft_api_url"))) { (spark, conf) =>
       // HTTP pull (S1) → LOCAL raw staging file, the reference's extract
       // contract. Requires an endpoint; offline runs stage the raw file by
       // other means (fixture/backfill) and start from upload_raw_to_s3.
@@ -120,8 +93,8 @@ object CoinDag {
       val p = java.nio.file.Paths.get(conf.rawFile)
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p, json)
-
-    case "upload_raw_to_s3" =>
+    },
+    stage("upload_raw_to_s3") { (spark, conf) =>
       // Local raw staging → bronze lake partition, atomically (the
       // reference's tmp→copy→delete protocol, `:443-456`).
       val fs = new org.apache.hadoop.fs.Path(conf.bronzeDir)
@@ -131,8 +104,8 @@ object CoinDag {
         fs.copyFromLocalFile(new org.apache.hadoop.fs.Path(conf.rawFile),
           new org.apache.hadoop.fs.Path(staging, s"coins_${conf.ds}.json"))
       }
-
-    case "transform_bronze_to_silver" =>
+    },
+    stage("transform_bronze_to_silver") { (spark, conf) =>
       // One pass over bronze: the publish refuses an empty partition
       // (`non_empty`), then the V1 contract and the optional checkpoint
       // gate the staged silver files before the swap (reference `:419-429`).
@@ -143,31 +116,31 @@ object CoinDag {
           CoinOps.enforcedSilver(staged)
           conf.checkpointPath.foreach(GeCheckpoint.load(spark, _).enforce(staged))
         })
-
-    case "validate" =>
+    },
+    stage("validate") { (spark, conf) =>
       // V2 expectations as their own retryable task over published silver
       // (the reference's `validate_data`).
       Suites.fluentSilverSuite.enforce(CoinSources.readSilver(spark, conf.silverDir))
-
-    case "load_dim" =>
+    },
+    stage("load_dim") { (spark, conf) =>
       // insert-ignore: the reference's `ON CONFLICT DO NOTHING` loads (S6/S7)
       val silver = CoinSources.readSilver(spark, conf.silverDir)
       CoinSources.merge(spark, CoinSources.dimension, conf.serveRoot,
         CoinOps.dimensionRows(silver))(Merge.insertIgnore(_, _, Seq("coin_id")))
-
-    case "load_fact" =>
+    },
+    stage("load_fact") { (spark, conf) =>
       val silver = CoinSources.readSilver(spark, conf.silverDir)
       CoinSources.merge(spark, CoinSources.fact, conf.serveRoot,
         CoinOps.factRows(silver))(Merge.insertIgnore(_, _, Seq("coin_id", "timestamp")))
-
-    case "build_gold_minio" =>
+    },
+    stage("build_gold_minio") { (spark, conf) =>
       // V4 sanity gates the publish on the staged gold rows
       val silver = CoinSources.readSilver(spark, conf.silverDir)
       LakeSink.publishPartition(spark, CoinOps.goldDailyMetrics(silver, conf.ds).orderBy("coin_id"),
         conf.lakeRoot, CoinSources.gold.dir, conf.ds, "v1", conf.silverDir,
         check = CoinOps.goldSanity.enforce(_))
-
-    case "load_gold_postgres" =>
+    },
+    stage("load_gold_postgres") { (spark, conf) =>
       // `ON CONFLICT (dt, coin_id) DO UPDATE` on parquet (reference S8):
       // `day ∪ (existing ⟕anti day)`, source-wins on the keys. The growing
       // table streams through one broadcast left-anti join against the
@@ -183,102 +156,24 @@ object CoinDag {
           col("e.dt") <=> col("i.dt") && col("e.coin_id") <=> col("i.coin_id"), "left_anti")
         day.unionByName(keep)
       }
-
-    case "validate_gold_row_count" =>
+    },
+    stage("validate_gold_row_count") { (spark, conf) =>
       val lakeGold = CoinSources.readGold(spark, conf.goldDir)
       val served = CoinSources.readServedGold(spark, conf.serveRoot)
         .filter(col("dt") === conf.ds)
       CoinOps.assertCountsReconcile(lakeGold, served, conf.ds)
-
-    case "validate_gold_sanity" =>
+    },
+    stage("validate_gold_sanity") { (spark, conf) =>
       CoinOps.goldSanity.enforce(CoinSources.readGold(spark, conf.goldDir))
-
-    case "validate_gold_freshness" =>
+    },
+    stage("validate_gold_freshness") { (spark, conf) =>
       CoinOps.assertFreshness(spark, conf.goldDir)
-
-    case "validate_gold_sla" =>
+    },
+    stage("validate_gold_sla") { (spark, conf) =>
       CoinOps.assertSla(java.time.LocalDate.parse(conf.ds), conf.now, conf.scheduled)
-
-    case "validate_gold" =>
+    },
+    stage("validate_gold") { (spark, conf) =>
       CoinOps.goldQuality.enforce(CoinSources.readGold(spark, conf.goldDir))
-
-    case other =>
-      throw new IllegalArgumentException(
-        s"unknown stage '$other' — expected one of: ${stageChain.mkString(", ")}")
-  }
-
-  /** Render the Airflow DAG artifact: one `SparkSubmitOperator` per stage,
-    * chained linearly in reference order, with the reference's retry policy.
-    * OrchestrationSpec asserts `orchestration/coin_pipeline_dag.py` equals
-    * this output exactly.
-    */
-  def renderAirflowDag(
-      jarPath: String = "{{ var.value.graft_jar_path }}",
-      mainClass: String = "graft.orchestration.CoinStageRunner"
-  ): String = {
-    val tasks = stageChain.map { stage =>
-      s"""$stage = SparkSubmitOperator(
-         |    task_id="$stage",
-         |    application=JAR_PATH,
-         |    java_class=MAIN_CLASS,
-         |    application_args=[
-         |        "--stage", "$stage",
-         |        "--ds", "{{ ds }}",
-         |        "--raw-root", RAW_ROOT,
-         |        "--bronze-root", BRONZE_ROOT,
-         |        "--lake-root", LAKE_ROOT,
-         |        "--serve-root", SERVE_ROOT,
-         |        "--scheduled", "true",
-         |    ]${if (stage == "extract") """ + ["--api-url", API_URL]""" else ""},
-         |    dag=dag,
-         |)
-         |""".stripMargin
-    }.mkString("\n")
-    s"""# GENERATED by graft.orchestration.CoinDag.renderAirflowDag — do not edit
-       |# by hand; regenerate via `sbt "runMain graft.orchestration.CoinStageRunner
-       |# --render-dag orchestration/coin_pipeline_dag.py"`. OrchestrationSpec
-       |# asserts this file matches the generator output.
-       |#
-       |# Orchestration twin of the reference 14-task chain
-       |# (dags/coin_data_pipeline_optimized.py:1243) with its retry policy
-       |# (:47-48). Each task is one spark-submit of an idempotent stage;
-       |# state hands off through the lake, so any task can retry alone.
-       |from datetime import timedelta
-       |
-       |from airflow import DAG
-       |from airflow.providers.apache.spark.operators.spark_submit import (
-       |    SparkSubmitOperator,
-       |)
-       |from airflow.utils.dates import days_ago
-       |
-       |JAR_PATH = "$jarPath"
-       |MAIN_CLASS = "$mainClass"
-       |RAW_ROOT = "{{ var.value.graft_raw_root }}"
-       |BRONZE_ROOT = "{{ var.value.graft_bronze_root }}"
-       |LAKE_ROOT = "{{ var.value.graft_lake_root }}"
-       |SERVE_ROOT = "{{ var.value.graft_serve_root }}"
-       |API_URL = "{{ var.value.graft_api_url }}"
-       |
-       |default_args = {
-       |    "owner": "data-platform",
-       |    "depends_on_past": False,
-       |    "retries": $retries,
-       |    "retry_delay": timedelta(minutes=$retryDelayMinutes),
-       |    "email_on_failure": False,
-       |    "email_on_retry": False,
-       |}
-       |
-       |dag = DAG(
-       |    dag_id="coin_data_pipeline_graft",
-       |    default_args=default_args,
-       |    description="Spark-native coin medallion pipeline (graft engine)",
-       |    schedule_interval="@daily",
-       |    start_date=days_ago(1),
-       |    catchup=False,
-       |)
-       |
-       |$tasks
-       |${stageChain.mkString(" >> ")}
-       |""".stripMargin
-  }
+    }
+  )
 }

@@ -3,18 +3,17 @@ package graft.orchestration
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, PassageDedup, TextAnalysis}
 import graft.sinks.CorpusJsonl
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Orchestration twin of the NORTH-STAR curation funnel
   * ([[graft.pipeline.CorpusPipeline]]): the daily-delivery decomposition a
-  * scheduler actually runs at 100 TB — seven idempotent per-stage Spark
-  * jobs whose only state handoff is durable lake layout, with the
+  * scheduler actually runs at 100 TB — idempotent per-stage Spark jobs
+  * whose only state handoff is durable lake layout, with the
   * cross-delivery near-dup state carried by the persisted signature index
   * ([[Dedup.persistNearDupIndex]]) exactly as the streaming ingest carries
-  * it. Same three honesty artifacts as [[CoinDag]]: [[stageChain]],
-  * [[runStage]], and [[renderAirflowDag]] → `orchestration/
-  * corpus_pipeline_dag.py` (asserted byte-identical by CorpusDagSpec).
+  * it. [[Dag]] derives its dispatch, the `corpus:<stage>` job labels, the
+  * Airflow artifact `orchestration/corpus_pipeline_dag.py` and the
+  * [[CorpusStageRunner]] entry.
   *
   * Near-dup semantics here are the INCREMENTAL operator's (each delivery
   * curated against everything previously accepted; within-delivery greedy
@@ -23,7 +22,11 @@ import org.apache.spark.sql.functions._
   * daily runs O(delivery), and CorpusDagSpec pins the cross-delivery
   * rejection behavior.
   */
-object CorpusDag {
+object CorpusDag extends Dag("corpus",
+    dagId = "corpus_curation_pipeline_graft",
+    description = "LLM corpus curation funnel (graft engine)",
+    artifact = "orchestration/corpus_pipeline_dag.py",
+    flags = Seq(Dag.Var("input-dir", "graft_corpus_input_dir"), Dag.Var("lake-root", "graft_corpus_lake_root"))) {
 
   /** Durable layout per delivery date; every stage reads only upstream
     * dirs, so any stage can retry alone.
@@ -39,10 +42,8 @@ object CorpusDag {
       keepIndexVersions: Int = 7
   ) {
     // batchVersion ORDERS the replay-safe index lookup — a malformed ds
-    // that happens to parse would silently read the wrong index version,
-    // so a bad scheduler template must fail at conf construction, loudly.
-    require(ds.matches("\\d{4}-\\d{2}-\\d{2}"),
-      s"ds must be a yyyy-MM-dd date, got '$ds'")
+    // that happens to parse would silently read the wrong index version
+    Dag.requireDs(ds)
     /** ds → monotone numeric version (2026-08-13 → 20260813): the near-dup
       * index version this delivery publishes; replays read strictly below.
       */
@@ -57,24 +58,11 @@ object CorpusDag {
     def indexRoot: String    = s"$lakeRoot/neardup_index"
   }
 
-  val stageChain: Seq[String] = Seq(
-    "annotate",
-    "filter_quality_language",
-    "exact_dedup",
-    "near_dedup",
-    "compact_index",
-    "segment_dedup",
-    "export_jsonl",
-    "funnel_report",
-    "vacuum_retention"
-  )
+  protected def conf(ds: String, arg: Map[String, String]): StageConf =
+    StageConf(ds, arg("input-dir"), arg("lake-root"))
 
-  /** Same retry policy as the coin twin (reference `:47-48`). */
-  val retries: Int           = 2
-  val retryDelayMinutes: Int = 5
-
-  def runStage(spark: SparkSession, stage: String, conf: StageConf): Unit = stage match {
-    case "annotate" =>
+  protected val stages: Seq[Stage] = Seq(
+    stage("annotate") { (spark, conf) =>
       // one annotated pass: the two expensive per-row expressions
       spark.read.parquet(conf.inputDir)
         .select(col("doc_id"), col("text"))
@@ -82,19 +70,19 @@ object CorpusDag {
           TextFunctions.qualityScore(col("text"), TextAnalysis.defaultStopwords))
         .withColumn("lang_pred", TextAnalysis.langIdCol(col("text")))
         .write.mode("overwrite").parquet(conf.annotatedDir)
-
-    case "filter_quality_language" =>
+    },
+    stage("filter_quality_language") { (spark, conf) =>
       spark.read.parquet(conf.annotatedDir)
         .filter(col("quality_score") >= conf.minQuality &&
           col("lang_pred").isin(conf.allowedLangs: _*))
         .write.mode("overwrite").parquet(conf.filteredDir)
-
-    case "exact_dedup" =>
+    },
+    stage("exact_dedup") { (spark, conf) =>
       Dedup.exactByContentKeepMin(
           spark.read.parquet(conf.filteredDir), "doc_id")
         .write.mode("overwrite").parquet(conf.exactDir)
-
-    case "near_dedup" =>
+    },
+    stage("near_dedup") { (spark, conf) =>
       // curate against the newest index version STRICTLY BELOW this
       // delivery (replay-safe), publish accepted rows + the compacted
       // index at this delivery's version
@@ -114,8 +102,8 @@ object CorpusDag {
       r.accepted.write.mode("overwrite").parquet(conf.acceptedDir)
       Dedup.persistNearDupIndex(r.updatedIndex,
         s"${conf.indexRoot}/v${conf.batchVersion}")
-
-    case "compact_index" =>
+    },
+    stage("compact_index") { (spark, conf) =>
       // Bound the published index version's file count: near_dedup's write
       // carries whatever partitioning the union lineage had, so a year of
       // daily deliveries would otherwise grow each version's fileset with
@@ -129,20 +117,20 @@ object CorpusDag {
       graft.sinks.Compaction.compact(spark, s"$vdir/sigs")
       graft.sinks.Compaction.compact(spark, s"$vdir/bands",
         sortCols = Seq("__band", "__bucket"))
-
-    case "segment_dedup" =>
+    },
+    stage("segment_dedup") { (spark, conf) =>
       // paragraph-granularity rewrite, envelope columns preserved
       val accepted = spark.read.parquet(conf.acceptedDir)
       val rewritten = PassageDedup.paragraphDedup(
         accepted.select(col("doc_id"), col("text")), "doc_id", "text")
       accepted.drop("text").join(rewritten, Seq("doc_id"))
         .write.mode("overwrite").parquet(conf.segmentedDir)
-
-    case "export_jsonl" =>
+    },
+    stage("export_jsonl") { (spark, conf) =>
       CorpusJsonl.write(spark.read.parquet(conf.segmentedDir),
         conf.corpusDir, conf.jsonlShards)
-
-    case "funnel_report" =>
+    },
+    stage("funnel_report") { (spark, conf) =>
       // counts from the DURABLE stage outputs — the report is derivable
       // from the lake alone, so it is exactly as retryable as any stage
       import spark.implicits._
@@ -152,8 +140,8 @@ object CorpusDag {
         .toDF("ds", "input", "after_filter", "after_exact", "after_neardup")
         .coalesce(1)
         .write.mode("overwrite").parquet(conf.reportDir)
-
-    case "vacuum_retention" =>
+    },
+    stage("vacuum_retention") { (spark, conf) =>
       // each published index version is a FULL snapshot, so versions
       // beyond the replay horizon are pure storage debt — without this
       // the batch-versioned index root grows by one whole-history copy
@@ -161,78 +149,6 @@ object CorpusDag {
       // replay contract (Dedup.vacuumNearDupIndexVersions).
       Dedup.vacuumNearDupIndexVersions(spark, conf.indexRoot,
         conf.keepIndexVersions)
-
-    case other =>
-      throw new IllegalArgumentException(
-        s"unknown stage '$other'; chain = ${stageChain.mkString(", ")}")
-  }
-
-  /** Render the Airflow DAG artifact — one `SparkSubmitOperator` per
-    * stage, the coin twin's retry policy, `@daily` schedule. CorpusDagSpec
-    * asserts `orchestration/corpus_pipeline_dag.py` equals this output.
-    */
-  def renderAirflowDag(
-      jarPath: String = "{{ var.value.graft_jar_path }}",
-      mainClass: String = "graft.orchestration.CorpusStageRunner"
-  ): String = {
-    val tasks = stageChain.map { stage =>
-      s"""$stage = SparkSubmitOperator(
-         |    task_id="$stage",
-         |    application=JAR_PATH,
-         |    java_class=MAIN_CLASS,
-         |    application_args=[
-         |        "--stage", "$stage",
-         |        "--ds", "{{ ds }}",
-         |        "--input-dir", INPUT_DIR,
-         |        "--lake-root", LAKE_ROOT,
-         |    ],
-         |    dag=dag,
-         |)
-         |""".stripMargin
-    }.mkString("\n")
-    s"""# GENERATED by graft.orchestration.CorpusDag.renderAirflowDag — do not
-       |# edit by hand; regenerate via `sbt "runMain
-       |# graft.orchestration.CorpusStageRunner --render-dag
-       |# orchestration/corpus_pipeline_dag.py"`. CorpusDagSpec asserts this
-       |# file matches the generator output.
-       |#
-       |# Scheduler twin of the north-star corpus curation funnel: eight
-       |# idempotent per-delivery stages handing off through the lake; the
-       |# cross-delivery near-dup state is the persisted signature index,
-       |# versioned per delivery for replay-safe retries.
-       |from datetime import timedelta
-       |
-       |from airflow import DAG
-       |from airflow.providers.apache.spark.operators.spark_submit import (
-       |    SparkSubmitOperator,
-       |)
-       |from airflow.utils.dates import days_ago
-       |
-       |JAR_PATH = "$jarPath"
-       |MAIN_CLASS = "$mainClass"
-       |INPUT_DIR = "{{ var.value.graft_corpus_input_dir }}"
-       |LAKE_ROOT = "{{ var.value.graft_corpus_lake_root }}"
-       |
-       |default_args = {
-       |    "owner": "data-platform",
-       |    "depends_on_past": False,
-       |    "retries": $retries,
-       |    "retry_delay": timedelta(minutes=$retryDelayMinutes),
-       |    "email_on_failure": False,
-       |    "email_on_retry": False,
-       |}
-       |
-       |dag = DAG(
-       |    dag_id="corpus_curation_pipeline_graft",
-       |    default_args=default_args,
-       |    description="LLM corpus curation funnel (graft engine)",
-       |    schedule_interval="@daily",
-       |    start_date=days_ago(1),
-       |    catchup=False,
-       |)
-       |
-       |$tasks
-       |${stageChain.mkString(" >> ")}
-       |""".stripMargin
-  }
+    }
+  )
 }

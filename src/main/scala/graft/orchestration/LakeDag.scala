@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * upserts, apply its tombstones, bound the file counts, advance the
   * incremental views, enforce retention, and reconcile. Completes the DAG
   * trilogy ([[CoinDag]] reference parity, [[CorpusDag]] corpus curation,
-  * this one storage maintenance) with the same three honesty artifacts:
-  * [[stageChain]], [[runStage]], [[renderAirflowDag]] →
-  * `orchestration/lake_maintenance_dag.py` (byte-asserted by LakeDagSpec).
+  * this one storage maintenance); [[Dag]] derives its dispatch, the
+  * `lake:<stage>` job labels, the Airflow artifact
+  * `orchestration/lake_maintenance_dag.py` and the [[LakeStageRunner]] entry.
   *
   * Idempotence discipline (retryability stage by stage):
   *  - `ingest_upserts` / `apply_deletes`: content-idempotent — re-merging
@@ -26,7 +26,11 @@ import org.apache.spark.sql.functions._
   *    already-bounded table).
   *  - `audit_report`: derived from durable state only.
   */
-object LakeDag {
+object LakeDag extends Dag("lake",
+    dagId = "graft_lake_maintenance",
+    description = "Keyed lake table maintenance: ingest, compact, refresh views, retention, audit",
+    artifact = "orchestration/lake_maintenance_dag.py",
+    flags = Seq(Dag.Var("input-root", "graft_lake_input_root"), Dag.Var("lake-root", "graft_lake_root"))) {
 
   /** Durable layout per delivery date. The table/view parameters are part
     * of the conf (one DAG instance maintains one gold table).
@@ -57,8 +61,7 @@ object LakeDag {
       // keeps it with the O(delta) incremental pass on every later one
       zOrderCols: Seq[String] = Nil
   ) {
-    require(ds.matches("\\d{4}-\\d{2}-\\d{2}"),
-      s"ds must be a yyyy-MM-dd date, got '$ds'")
+    Dag.requireDs(ds)
     require(zOrderCols.isEmpty || zOrderCols.forall(statsCols.contains),
       s"zOrderCols ($zOrderCols) must be covered by statsCols ($statsCols)" +
         " — the z layout prunes through the zone-map sidecar")
@@ -69,19 +72,8 @@ object LakeDag {
     def reportDir: String  = s"$lakeRoot/report/dt=$ds"
   }
 
-  val stageChain: Seq[String] = Seq(
-    "ingest_upserts",
-    "apply_deletes",
-    "compact_maintenance",
-    "compact_metadata",
-    "refresh_views",
-    "vacuum_retention",
-    "audit_report"
-  )
-
-  /** Same retry policy as the coin twin (reference `:47-48`). */
-  val retries: Int           = 2
-  val retryDelayMinutes: Int = 5
+  protected def conf(ds: String, arg: Map[String, String]): StageConf =
+    StageConf(ds, arg("input-root"), arg("lake-root"))
 
   private def exists(spark: SparkSession, dir: String): Boolean =
     new org.apache.hadoop.fs.Path(dir)
@@ -91,8 +83,8 @@ object LakeDag {
   private def tableExists(spark: SparkSession, root: String): Boolean =
     exists(spark, s"$root/_versions")
 
-  def runStage(spark: SparkSession, stage: String, conf: StageConf): Unit = stage match {
-    case "ingest_upserts" =>
+  protected val stages: Seq[Stage] = Seq(
+    stage("ingest_upserts") { (spark, conf) =>
       // first delivery creates the table; later ones merge. A delivery
       // with no upserts file set is a valid (empty) day.
       if (!exists(spark, conf.upsertsDir)) ()
@@ -106,20 +98,20 @@ object LakeDag {
       else
         LakeTable.merge(spark, conf.tableRoot,
           spark.read.parquet(conf.upsertsDir), conf.orderCol)
-
+    },
     // every post-ingest stage no-ops while the table doesn't exist yet:
     // a FIRST delivery with an empty upserts dir is a valid (empty) day
     // per the ingest contract, and it must leave the whole chain green —
     // crashing in LakeTable.manifest's require would wedge the DAG until
     // data arrives, with retries unable to fix anything
-    case "apply_deletes" =>
+    stage("apply_deletes") { (spark, conf) =>
       // O(|tombstones|) merge-on-read vectors; reads subtract immediately,
       // compact_maintenance folds them into the data files
       if (exists(spark, conf.deletesDir) && tableExists(spark, conf.tableRoot))
         LakeTable.deleteMor(spark, conf.tableRoot,
           spark.read.parquet(conf.deletesDir))
-
-    case "compact_maintenance" =>
+    },
+    stage("compact_maintenance") { (spark, conf) =>
       if (tableExists(spark, conf.tableRoot)) {
         LakeTable.compactDeletes(spark, conf.tableRoot)
         LakeTable.compactSmallFiles(spark, conf.tableRoot,
@@ -132,8 +124,8 @@ object LakeDag {
           LakeTable.optimizeZOrderAuto(spark, conf.tableRoot,
             conf.zOrderCols)
       }
-
-    case "compact_metadata" =>
+    },
+    stage("compact_metadata") { (spark, conf) =>
       // the METADATA analog of compact_maintenance (see maxRefsPerManifest):
       // threshold-gated so quiet days publish nothing, idempotent (a
       // compacted table sits at its segment floor — below any threshold —
@@ -150,16 +142,16 @@ object LakeDag {
             LakeTable.minSegments(m) - 1 + conf.maxRefsPerManifest)
           LakeTable.compactMetadata(spark, conf.tableRoot)
       }
-
-    case "refresh_views" =>
+    },
+    stage("refresh_views") { (spark, conf) =>
       if (!tableExists(spark, conf.tableRoot)) ()
       else if (!tableExists(spark, conf.viewRoot))
         MaterializedView.init(spark, conf.tableRoot, conf.viewRoot,
           conf.groupCols, conf.sumCols)
       else
         MaterializedView.refresh(spark, conf.tableRoot, conf.viewRoot)
-
-    case "vacuum_retention" =>
+    },
+    stage("vacuum_retention") { (spark, conf) =>
       if (tableExists(spark, conf.tableRoot))
         LakeTable.vacuum(spark, conf.tableRoot, conf.keepVersions)
       // the view retires through ITS OWN vacuum: same keep-newest-k over
@@ -168,8 +160,8 @@ object LakeDag {
       // base delivery, and an unswept marker dir grows forever
       if (tableExists(spark, conf.viewRoot))
         MaterializedView.vacuum(spark, conf.viewRoot, conf.keepVersions)
-
-    case "audit_report" =>
+    },
+    stage("audit_report") { (spark, conf) =>
       // reconcile STORAGE against the SERVED view: table row count (from
       // metadata when exact — zero files opened — else a scan) must equal
       // the view's cnt total, or the mismatch ships in the report. A
@@ -229,78 +221,6 @@ object LakeDag {
           "ndv_groups", "cardinality_ok")
         .coalesce(1)
         .write.mode("overwrite").parquet(conf.reportDir)
-
-    case other =>
-      throw new IllegalArgumentException(
-        s"unknown stage '$other'; chain = ${stageChain.mkString(", ")}")
-  }
-
-  /** Render the Airflow DAG artifact — one `SparkSubmitOperator` per
-    * stage, the coin twin's retry policy, `@daily` schedule. LakeDagSpec
-    * asserts `orchestration/lake_maintenance_dag.py` equals this output.
-    */
-  def renderAirflowDag(
-      jarPath: String = "{{ var.value.graft_jar_path }}",
-      mainClass: String = "graft.orchestration.LakeStageRunner"
-  ): String = {
-    val tasks = stageChain.map { stage =>
-      s"""$stage = SparkSubmitOperator(
-         |    task_id="$stage",
-         |    application=JAR_PATH,
-         |    java_class=MAIN_CLASS,
-         |    application_args=[
-         |        "--stage", "$stage",
-         |        "--ds", "{{ ds }}",
-         |        "--input-root", INPUT_ROOT,
-         |        "--lake-root", LAKE_ROOT,
-         |    ],
-         |    dag=dag,
-         |)
-         |""".stripMargin
-    }.mkString("\n")
-    s"""# GENERATED by graft.orchestration.LakeDag.renderAirflowDag — do not
-       |# edit by hand; regenerate via `sbt "runMain
-       |# graft.orchestration.LakeStageRunner --render-dag
-       |# orchestration/lake_maintenance_dag.py"`. LakeDagSpec asserts this
-       |# file matches the generator output.
-       |#
-       |# Scheduler twin of the keyed-lake-table maintenance cycle: ingest
-       |# the delivery's upserts and tombstones, bound file counts, advance
-       |# the incremental materialized views off the change feed, enforce
-       |# version retention, reconcile storage against the served view.
-       |from datetime import timedelta
-       |
-       |from airflow import DAG
-       |from airflow.providers.apache.spark.operators.spark_submit import (
-       |    SparkSubmitOperator,
-       |)
-       |from airflow.utils.dates import days_ago
-       |
-       |JAR_PATH = "$jarPath"
-       |MAIN_CLASS = "$mainClass"
-       |INPUT_ROOT = "{{ var.value.graft_lake_input_root }}"
-       |LAKE_ROOT = "{{ var.value.graft_lake_root }}"
-       |
-       |default_args = {
-       |    "owner": "data-platform",
-       |    "depends_on_past": False,
-       |    "retries": $retries,
-       |    "retry_delay": timedelta(minutes=$retryDelayMinutes),
-       |    "email_on_failure": False,
-       |}
-       |
-       |dag = DAG(
-       |    dag_id="graft_lake_maintenance",
-       |    description="Keyed lake table maintenance: ingest, compact, refresh views, retention, audit",
-       |    schedule_interval="@daily",
-       |    start_date=days_ago(1),
-       |    catchup=False,
-       |    default_args=default_args,
-       |    tags=["graft", "lake", "maintenance"],
-       |)
-       |
-       |$tasks
-       |${stageChain.mkString(" >> ")}
-       |""".stripMargin
-  }
+    }
+  )
 }

@@ -60,6 +60,21 @@ class CorpusDagSpec extends SparkTestBase {
       .select($"doc_id").as[Long].collect() shouldBe Array(40L)
   }
 
+  test("every corpus stage job is labelled by its stage") {
+    val root = java.nio.file.Files.createTempDirectory("corpus_dag_labels").toString
+    writeDelivery(s"$root/in/d1", Seq((10L, "alpha beta gamma delta"), (11L, "alpha beta gamma delta"),
+      (20L, "one two three four five")))
+    val c = CorpusDag.StageConf("2026-08-13", s"$root/in/d1", s"$root/lake")
+    val labels = CorpusDag.stageChain.flatMap { stage =>
+      val (_, p) = QueryProfile.measure(spark)(CorpusDag.runStage(spark, stage, c))
+      p.jobs.map(j => stage -> QueryProfile.phase(j.label))
+    }
+    labels should not be empty
+    labels.foreach { case (stage, phase) =>
+      withClue(s"$stage: ") { phase shouldBe s"corpus:$stage" }
+    }
+  }
+
   test("compact_index bounds the band-table fileset; probe results byte-identical before/after") {
     val root = java.nio.file.Files.createTempDirectory("corpus_dag_compact").toString
     def parquetFiles(dir: String): Seq[String] = {

@@ -59,6 +59,24 @@ class LakeDagSpec extends SparkTestBase {
     LakeTable.manifest(spark, conf2.tableRoot).dvFiles shouldBe empty
   }
 
+  test("every lake stage job is labelled: by its stage, or by an engine phase inside it") {
+    val root = java.nio.file.Files.createTempDirectory("lake_dag_labels").toString
+    val c1 = LakeDag.StageConf("2026-08-13", s"$root/in", s"$root/lake")
+    writeUpserts(c1.upsertsDir, Seq((1L, "HIGH", 10.0), (2L, "LOW", 20.0), (3L, "HIGH", 30.0)))
+    val c2 = c1.copy(ds = "2026-08-14")
+    writeUpserts(c2.upsertsDir, Seq((2L, "LOW", 25.0), (4L, "LOW", 40.0)))
+    Seq(3L).toDF("o_orderkey").write.mode("overwrite").parquet(c2.deletesDir)
+    val phases = Seq(c1, c2).flatMap(c => LakeDag.stageChain.flatMap { stage =>
+      val (_, p) = QueryProfile.measure(spark)(LakeDag.runStage(spark, stage, c))
+      p.jobs.map(j => stage -> QueryProfile.phase(j.label))
+    })
+    // a bare call site (`parquet at …`) has no `area:step` head
+    phases.foreach { case (stage, phase) =>
+      withClue(s"$stage: ") { phase should fullyMatch regex "[a-z]+:[a-z_-]+" }
+    }
+    phases.map(_._2) should contain allOf ("lake:audit_report", "lake:write", "mv:delta")
+  }
+
   test("retrying a delivery converges: table content identical, view never double-applies") {
     val root = java.nio.file.Files.createTempDirectory("lake_dag_retry").toString
     val conf = LakeDag.StageConf("2026-08-13", s"$root/in", s"$root/lake")

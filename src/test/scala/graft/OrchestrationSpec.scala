@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.CoinOps
-import graft.orchestration.{CoinDag, CoinStageRunner}
+import graft.orchestration.{CoinDag, Dag}
 import graft.sources.CoinSources
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.col
@@ -84,6 +84,12 @@ class OrchestrationSpec extends SparkTestBase {
       .count() shouldBe servedCount
   }
 
+  test("StageConf rejects a malformed ds before any stage writes under it") {
+    an[IllegalArgumentException] should be thrownBy
+      CoinDag.StageConf("20260113", "/tmp/r", "/tmp/b", "/tmp/l", "/tmp/s")
+    an[IllegalArgumentException] should be thrownBy coinConf("/tmp/w", "2026-01-13T00:00")
+  }
+
   test("SLA stage fails a late scheduled run but passes a manual one") {
     val work = Files.createTempDirectory("graft-orch-sla").toString
     val base = CoinDag.StageConf(dt, work, work, work, work,
@@ -96,7 +102,7 @@ class OrchestrationSpec extends SparkTestBase {
   }
 
   test("runner arg parsing and unknown-stage rejection") {
-    CoinStageRunner.parseArgs(Array("--stage", "validate", "--ds", "2026-01-13")) shouldBe
+    Dag.parseArgs(Array("--stage", "validate", "--ds", "2026-01-13")) shouldBe
       Map("stage" -> "validate", "ds" -> "2026-01-13")
     val work = Files.createTempDirectory("graft-orch-bad").toString
     intercept[IllegalArgumentException] {
